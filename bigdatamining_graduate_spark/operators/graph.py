@@ -765,8 +765,8 @@ def _adj_apply_delta(
     # this helper exists to keep in place (first-draft A/B: full_outer
     # variant measured q270 12.5 → 14.5 s SLOWER).  Removed endpoints
     # always exist in adj0 (they are t0 edges), so only added edges can
-    # mint nodes adj0 has never seen — unioned in via a broadcast
-    # anti-join on the delta side.
+    # mint nodes adj0 has never seen — unioned in via an anti-join whose
+    # strategy AQE picks (no hint: the t0 node set is corpus-sized).
     edited = (
         adj0.join(F.broadcast(per_rm), "s", "left")
         .join(F.broadcast(per_ad), "s", "left")
@@ -780,9 +780,9 @@ def _adj_apply_delta(
         )
         .filter(F.size("nbrs") > 0)
     )
-    new_nodes = per_ad.join(
-        F.broadcast(adj0.select("s")), "s", "left_anti"
-    ).select("s", F.sort_array(F.col("ad")).alias("nbrs"))
+    new_nodes = per_ad.join(adj0.select("s"), "s", "left_anti").select(
+        "s", F.sort_array(F.col("ad")).alias("nbrs")
+    )
     return local_checkpoint(edited.unionByName(new_nodes), eager=False)
 
 

@@ -13,6 +13,9 @@ validation on load, documentation, and schemas for the CSV/stream readers.
 
 from __future__ import annotations
 
+import os
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -137,16 +140,35 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+#: session -> {(path, st_mtime_ns, st_size): the schema Spark inferred}
+_inferred: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+
+
+def stored_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    session and file version: inference runs a Spark job, so later reads
+    of an unchanged file reuse it.  The key is the file's (or table
+    directory's) path, mtime and size; a rewrite changes it."""
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    cache = _inferred.setdefault(spark, {})
+    if key not in cache:
+        cache[key] = spark.read.parquet(path).schema
+    return cache[key]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table. Plain ``spark.read.parquet`` so Catalyst
-    gets full pushdown/pruning against the parquet scan."""
+    gets full pushdown/pruning against the parquet scan; the schema is
+    passed explicitly once inferred (:func:`stored_schema`)."""
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     # the driver hands us ITS session — pin correctness confs on it
     from ..session import ensure_runtime_confs
 
     ensure_runtime_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    df = spark.read.schema(stored_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_events_ts(df)
     return df

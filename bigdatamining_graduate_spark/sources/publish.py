@@ -39,6 +39,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _pointer(root: str) -> str:
@@ -84,10 +85,12 @@ def current_version(root: str) -> int:
         return int(f.read().strip())
 
 
-def read_current(spark: SparkSession, root: str, store: str) -> DataFrame:
+def read_current(
+    spark: SparkSession, root: str, store: str, schema: StructType | None = None
+) -> DataFrame:
     """Resolve ``store`` through the pointer — the only read path a
     publish-protocol consumer uses."""
-    return read_version(spark, root, store, current_version(root))
+    return read_version(spark, root, store, current_version(root), schema)
 
 
 def gc_versions(root: str, retain: int = 2) -> dict:
@@ -127,11 +130,17 @@ def gc_versions(root: str, retain: int = 2) -> dict:
 
 
 def read_version(
-    spark: SparkSession, root: str, store: str, version: int
+    spark: SparkSession,
+    root: str,
+    store: str,
+    version: int,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """TIME-TRAVEL read: pin ``store`` at an explicit published
     version.  Version directories are immutable, so any reader can
     reproduce any past snapshot exactly until the GC cadence collects
     it — the lakehouse ``VERSION AS OF`` primitive, and what makes the
-    q272 version-diff (change-data-feed) read possible."""
-    return spark.read.parquet(os.path.join(root, store, f"v{version}"))
+    q272 version-diff (change-data-feed) read possible.  A caller that
+    knows the store's ``schema`` passes it, which skips inference."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(os.path.join(root, store, f"v{version}"))

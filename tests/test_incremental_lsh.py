@@ -329,33 +329,39 @@ def test_incremental_components_label_store_roundtrip(spark, tmp_path):
 
 def test_stream_store_replay_idempotent(spark, tmp_path):
     """The q230 sink contract (ADVICE r8): every micro-batch lands in its
-    own batch-id-keyed subdirectory with mode=overwrite, so a REPLAYED
-    batch (Spark may retry a foreachBatch micro-batch after failure)
-    overwrites its previous attempt instead of double-appending.  This
-    pins the pattern itself — write the same batch twice, read the store
-    back, exactly one copy — and that the drained stream's emission is
-    deterministic across full re-runs."""
-    import os
+    own batch-id-keyed subdirectory, so a REPLAYED batch (Spark may
+    retry a foreachBatch micro-batch after failure) replaces its
+    previous attempt instead of double-appending.  This pins the
+    staged-stream harness that q230 publishes through — publish the
+    same batch id twice, read the sink back, exactly one copy — and
+    that the drained stream's emission is deterministic across full
+    re-runs."""
+    from bigdatamining_graduate_spark.streaming.jobs import (
+        StagedStream,
+        stream_incremental_lsh_pairs,
+    )
 
-    store = str(tmp_path / "pairs_out")
+    stream = StagedStream(spark, str(tmp_path))
     batch = spark.range(100).select(
         F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
     )
-    batch.write.mode("overwrite").parquet(os.path.join(store, "batch0"))
-    # the retry: same batch id, same payload — must overwrite, not add
-    batch.write.mode("overwrite").parquet(os.path.join(store, "batch0"))
-    back = spark.read.option("recursiveFileLookup", "true").parquet(store)
-    assert back.count() == 100
+
+    def handle(t):
+        return {"pairs_out": t.batch}
+
+    stream.run_trigger(handle, batch, 0)
+    # the retry: same batch id, same payload — must replace, not add
+    stream.run_trigger(handle, batch, 0)
+    assert stream.read("pairs_out").count() == 100
     # a second batch lands beside it, both visible to the reader
-    batch.write.mode("overwrite").parquet(os.path.join(store, "batch1"))
+    stream.run_trigger(handle, batch, 1)
     assert (
-        spark.read.option("recursiveFileLookup", "true").parquet(store).count()
+        spark.read.option("recursiveFileLookup", "true")
+        .parquet(str(tmp_path / "pairs_out"))
+        .count()
         == 200
     )
 
-    from bigdatamining_graduate_spark.streaming.jobs import (
-        stream_incremental_lsh_pairs,
-    )
 
     r1 = stream_incremental_lsh_pairs(spark, SF_SMOKE, THRESH)
     r2 = stream_incremental_lsh_pairs(spark, SF_SMOKE, THRESH)

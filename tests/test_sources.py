@@ -389,3 +389,38 @@ def test_manifest_prunes_files_and_stays_lossless(spark, tmp_path):
         .collect()
     }
     assert got == expected
+
+
+def test_catalog_reuses_inferred_schema(spark, tmp_path):
+    """``load_table`` infers a fixture's schema once per session and file
+    version: a second load launches no Spark job and returns the same
+    schema; rewriting the file makes the next load infer again."""
+    import os
+    import shutil
+
+    from bigdatamining_graduate_spark.sources.catalog import (
+        load_table,
+        stored_schema,
+        table_path,
+    )
+
+    sf = str(tmp_path)
+    path = table_path(sf, "region")
+    spark.createDataFrame([(0, "AFRICA")], "r_regionkey int, r_name string").write.parquet(path)
+    first = load_table(spark, sf, "region").schema
+    sc = spark.sparkContext
+    sc.setJobGroup("catalog-second-load", "second load")
+    try:
+        second = load_table(spark, sf, "region").schema
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup("catalog-second-load") == []
+    assert second == first == spark.read.parquet(path).schema
+
+    shutil.rmtree(path)
+    spark.createDataFrame(
+        [(0, "AFRICA", "x")], "r_regionkey int, r_name string, r_comment string"
+    ).write.parquet(path)
+    assert os.path.isdir(path)
+    assert stored_schema(spark, path).fieldNames() == ["r_regionkey", "r_name", "r_comment"]
+    assert load_table(spark, sf, "region").columns == ["r_regionkey", "r_name", "r_comment"]

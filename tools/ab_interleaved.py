@@ -18,20 +18,36 @@ Usage:
 
 <module> is the dotted module under bigdatamining_graduate_spark, e.g.
 ``operators.graph`` or ``streaming.jobs``.  The tool leaves the NEW
-variant in place on exit.  Modules that re-export the swapped symbols
-(plans.queries imports operators at module level) are reloaded too.
+variant in place on exit.  On every swap the whole package is imported
+afresh (every loaded ``bigdatamining_graduate_spark`` module is dropped
+and ``plans.queries`` re-imported), so a module that bound a swapped
+symbol with ``from X import f`` binds the new variant too.
 """
 import argparse
 import importlib
+import importlib.util
 import json
+import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdatamining_graduate_spark.session import get_spark  # noqa: E402
-from bigdatamining_graduate_spark.checkpoints import release_checkpoints  # noqa: E402
+
+PKG = "bigdatamining_graduate_spark"
+
+
+def fresh_package():
+    """Drop every loaded package module and import ``plans.queries``
+    (and with it the package) again; returns (queries, checkpoints)."""
+    for name in [m for m in sys.modules if m == PKG or m.startswith(PKG + ".")]:
+        del sys.modules[name]
+    return (
+        importlib.import_module(f"{PKG}.plans.queries"),
+        importlib.import_module(f"{PKG}.checkpoints"),
+    )
 
 
 def main() -> None:
@@ -50,26 +66,25 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    modname = f"bigdatamining_graduate_spark.{args.module}"
-    mod = importlib.import_module(modname)
-    target_path = mod.__file__
+    target_path = importlib.import_module(f"{PKG}.{args.module}").__file__
     variants = {"old": args.old_path, "new": args.new_path}
 
-    import bigdatamining_graduate_spark.plans.queries as QM
-
+    QM, CK = fresh_package()
     res = {v: {n: [] for n in args.names} for v in variants}
     # warmup once (smallest fixture, not measured)
     QM.QUERIES["q01_pricing_summary"](spark, "/root/testdata/sf0.001").write.format(
         "noop"
     ).mode("overwrite").save()
-    release_checkpoints()
+    CK.release_checkpoints()
     for rep in range(args.reps):
         for v, src in variants.items():
             shutil.copy(src, target_path)
-            importlib.reload(mod)
-            # plans.queries holds module-level references to the
-            # operator modules; rebind them so the swap takes effect
-            importlib.reload(QM)
+            # a same-size variant copied within the same second would
+            # otherwise pass the bytecode cache's mtime+size check
+            pyc = importlib.util.cache_from_source(target_path)
+            if os.path.exists(pyc):
+                os.remove(pyc)
+            QM, CK = fresh_package()
             for n in args.names:
                 spark.sparkContext.setJobDescription(f"ab[{v}] rep{rep}: {n}")
                 t0 = time.perf_counter()
@@ -77,7 +92,7 @@ def main() -> None:
                     "overwrite"
                 ).save()
                 dt = time.perf_counter() - t0
-                release_checkpoints()
+                CK.release_checkpoints()
                 res[v][n].append(round(dt, 2))
     shutil.copy(args.new_path, target_path)
     out = {
