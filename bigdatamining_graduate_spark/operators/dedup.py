@@ -22,6 +22,8 @@ by construction.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -1530,93 +1532,65 @@ def ppjoin_pairs_sql() -> str:
 # tombstoned rows, rewrite to few large files, and PROVE by hash that the
 # next refresh reads back identical results from the vacuumed store.
 # At 100 TB this is the OPTIMIZE+VACUUM of a transactional table format
-# (Delta/Iceberg); the directory-swap below is the same two-phase shape
-# (write compacted snapshot, atomically retarget readers, drop the old).
+# (Delta/Iceberg), committed through the same version-pointer protocol
+# (``sources/publish.py``).
 
 
 def vacuum_parquet_store(
     spark,
-    store_dir: str,
+    root: str,
+    stores: dict[str, tuple[str, ...]],
     tombstones: DataFrame | None = None,
-    key_cols: tuple[str, ...] = (),
-    target_files: int = 1,
-    range_cluster_cols: tuple[str, ...] = (),
-) -> dict:
-    """Tombstone GC + small-file compaction for a persisted parquet
-    store.  Drops every row whose ``key_cols`` value appears in
-    ``tombstones`` (anti-join per key column — a pair store passes both
-    endpoint columns), rewrites the survivors to ``target_files`` files
-    in a temp directory, then swaps it in (rename-swap: the reader
-    never sees a half-written store).  Returns the audit dict
-    ``{files_before, files_after, rows_before, rows_after}``.
+    layout: dict[str, Callable[[DataFrame], DataFrame]] | None = None,
+) -> dict[str, dict]:
+    """Tombstone GC + small-file compaction for the persisted stores
+    under the publish root ``root``.  ``stores`` maps each store to
+    vacuum to its key columns: every row whose key value appears in
+    ``tombstones`` is dropped (anti-join per key column — a pair store
+    passes both endpoint columns; no keys means compaction only).  The
+    survivors of every store are written as the next version and
+    committed with ONE pointer flip, so dependent stores flip together
+    and a crash leaves the last committed version readable; old
+    versions then go to :func:`~..sources.publish.gc_versions`.
+    Returns ``{store: {files_before, files_after, rows_before,
+    rows_after}}``.
 
-    Scale: one scan + anti-join(s) + one write — O(|store|), run on the
-    compaction cadence, never per-refresh; ``target_files`` maps to the
-    file-size target of OPTIMIZE (here 1, at scale |store| / 1 GB).
-
-    ``range_cluster_cols``: when set, the compacted rewrite is
-    ``repartitionByRange`` on these columns instead of ``coalesce`` —
-    compaction must PRESERVE the layout a pruned-read store depends on
-    (q251's token-clustered postings: losing the clustering would keep
-    every row but break file skipping)."""
-    import glob as _glob
+    Scale: one scan + anti-join(s) + one write per store — O(|store|),
+    run on the compaction cadence, never per-refresh.  ``layout`` maps
+    a store to the partitioning of its rewrite; the default is one file
+    (at scale |store| / 1 GB, the file-size target of OPTIMIZE).  A
+    store whose pruned reads depend on its layout keeps it through
+    compaction (q269's token-clustered postings pass
+    ``repartitionByRange``: a ``coalesce`` would keep every row but
+    break file skipping)."""
     import os
-    import shutil
 
-    def _files() -> int:
-        return len(
-            _glob.glob(os.path.join(store_dir, "**", "*.parquet"), recursive=True)
-        )
+    from ..sources import publish
 
-    df = spark.read.option("recursiveFileLookup", "true").parquet(store_dir)
-    rows_before = df.count()
-    files_before = _files()
-    out = df
-    if tombstones is not None:
-        tomb_col = tombstones.columns[0]
-        for kc in key_cols:
-            out = out.join(
-                tombstones.select(F.col(tomb_col).alias(kc)), kc, "left_anti"
-            )
-    tmp = store_dir.rstrip("/") + ".vacuum_tmp"
-    compacted = (
-        out.repartitionByRange(target_files, *range_cluster_cols)
-        if range_cluster_cols
-        else out.coalesce(target_files)
-    )
-    compacted.write.mode("overwrite").parquet(tmp)
-    rows_after = spark.read.parquet(tmp).count()
-    old = store_dir.rstrip("/") + ".vacuum_old"
-    os.rename(store_dir, old)
-    os.rename(tmp, store_dir)
-    shutil.rmtree(old)
-    return {
-        "files_before": files_before,
-        "files_after": _files(),
-        "rows_before": rows_before,
-        "rows_after": rows_after,
-    }
+    def _files(store: str) -> int:
+        return sum(n.endswith(".parquet") for n in os.listdir(publish.live_dir(root, store)))
 
-
-def swap_parquet_store(
-    df: DataFrame, store_dir: str, target_files: int = 1
-) -> None:
-    """Atomically replace ``store_dir`` with ``df`` — write-to-temp +
-    rename-swap, the same two-phase shape :func:`vacuum_parquet_store`
-    uses, for callers whose replacement is a COMPUTED rewrite (weight
-    decrements, refit re-assignments) rather than a pure anti-join.  A
-    reader never sees a half-written store.  The materializing write
-    reads the OLD store if ``df``'s lineage scans it (the rename happens
-    after), so chained swaps must be ordered dependents-first."""
-    import os
-    import shutil
-
-    tmp = store_dir.rstrip("/") + ".swap_tmp"
-    df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-    old = store_dir.rstrip("/") + ".swap_old"
-    os.rename(store_dir, old)
-    os.rename(tmp, store_dir)
-    shutil.rmtree(old)
+    version = publish.begin_version(root)
+    audits = {}
+    for store, key_cols in stores.items():
+        live = publish.read_current(spark, root, store)
+        out = live
+        for kc in key_cols if tombstones is not None else ():
+            tomb = tombstones.select(F.col(tombstones.columns[0]).alias(kc))
+            out = out.join(tomb, kc, "left_anti")
+        shape = (layout or {}).get(store, lambda df: df.coalesce(1))
+        publish.write_store_version(shape(out.select(*live.columns)), root, store, version)
+        written = publish.read_version(spark, root, store, version, live.schema)
+        audits[store] = {
+            "files_before": _files(store),
+            "rows_before": live.count(),
+            "rows_after": written.count(),
+        }
+    publish.commit_version(root, version)
+    publish.gc_versions(root)
+    for store in stores:
+        audits[store]["files_after"] = _files(store)
+    return audits
 
 
 def vacuumed_refresh_pairs(
@@ -1639,29 +1613,33 @@ def vacuumed_refresh_pairs(
     base×base pair set of the remaining corpus, and the vacuumed
     signature store its signature set.  Asserted file/row shrinkage is
     pinned in ``tests/test_store_vacuum.py``."""
+    from ..sources.publish import publish_version, read_current
     from ..staging import staging_dir
 
-    stage = stage_dir or staging_dir(prefix="bdm_vacuum_")
-    import os
-
-    sig_dir = os.path.join(stage, "sig_store")
-    pair_dir = os.path.join(stage, "pair_store")
+    root = stage_dir or staging_dir(prefix="bdm_vacuum_")
     remaining = docs.filter(~_incr_deleted_flag())
     t0 = docs.filter(~_incr_delta_flag())
     # the t0 signatures feed BOTH store writes — materialize once
     sig_t0 = local_checkpoint(minhash_signatures(t0), eager=False)
     pairs_t0 = lsh_candidate_pairs(sig_t0, threshold).select("doc_a", "doc_b")
     # simulate refresh-loop accretion: many small files per store
-    sig_t0.repartition(8).write.mode("overwrite").parquet(sig_dir)
-    pairs_t0.repartition(8).write.mode("overwrite").parquet(pair_dir)
+    publish_version(
+        root,
+        1,
+        {"sig_store": sig_t0.repartition(8), "pair_store": pairs_t0.repartition(8)},
+    )
     tombstones = docs.filter(_incr_deleted_flag()).select("doc_id")
-    vacuum_parquet_store(spark, sig_dir, tombstones, ("doc_id",))
-    vacuum_parquet_store(spark, pair_dir, tombstones, ("doc_a", "doc_b"))
+    vacuum_parquet_store(
+        spark,
+        root,
+        {"sig_store": ("doc_id",), "pair_store": ("doc_a", "doc_b")},
+        tombstones,
+    )
     return incremental_lsh_pairs(
         remaining,
         threshold,
-        base_sig=spark.read.parquet(sig_dir),
-        carried_pairs=spark.read.parquet(pair_dir),
+        base_sig=read_current(spark, root, "sig_store", sig_t0.schema),
+        carried_pairs=read_current(spark, root, "pair_store", pairs_t0.schema),
     )
 
 
@@ -1729,12 +1707,11 @@ def atomic_published_refresh(
     """Cross-store ATOMIC PUBLISH on the dedup store pair (q271 —
     VERDICT r10 #6): the signature + pair stores are DEPENDENT (a pair
     row only means something against the signature snapshot it was
-    derived from), yet every swap so far is per-store — q267 proves
-    mixed state is servable, this proves readers never see it.  The
-    lifecycle: publish v1 (t0 signatures + pairs) under a
-    manifest-pointer root, run the deletion cycle computing v2 of BOTH
-    stores from the v1 reads, publish v2 with ONE pointer flip
-    (``sources/publish.py`` — both directories fully written first),
+    derived from) — q267 proves mixed state is servable, this proves
+    readers never see it.  The lifecycle: publish v1 (t0 signatures +
+    pairs) under a manifest-pointer root, vacuum the deletion slice out
+    of BOTH stores as v2 with ONE pointer flip (``sources/publish.py``
+    — both directories fully written first),
     then run the next insert refresh resolving both stores THROUGH the
     pointer.
 
@@ -1750,42 +1727,38 @@ def atomic_published_refresh(
     Reference anchor: extends q235/q267 (``hw3/hw3.py:125-172``)."""
     from ..sources.publish import current_version, read_current
 
-    root = _publish_deletion_cycle(spark, docs, threshold, root)
+    root, schema = _publish_deletion_cycle(spark, docs, threshold, root)
     # next insert refresh resolves both stores through the pointer
     remaining = docs.filter(~_incr_deleted_flag())
     ver = current_version(root)
     return incremental_lsh_pairs(
         remaining,
         threshold,
-        base_sig=read_current(spark, root, "sig"),
-        carried_pairs=read_current(spark, root, "pair"),
+        base_sig=read_current(spark, root, "sig", schema["sig"]),
+        carried_pairs=read_current(spark, root, "pair", schema["pair"]),
     ).withColumn("published_version", F.lit(ver).cast("long"))
 
 
 def _publish_deletion_cycle(
     spark, docs: DataFrame, threshold: float, root: str | None
-) -> str:
-    """The shared q271/q272 store history: publish v1 (t0 signatures +
-    pairs), run the deletion cycle deriving v2 of BOTH stores from the
-    v1 reads, publish v2 with one pointer flip.  Returns the root."""
-    from ..sources.publish import publish_version, read_current
+) -> tuple[str, dict]:
+    """The shared q271/q272/q276 store history: publish v1 (t0
+    signatures + pairs), then vacuum the deletion slice out of BOTH
+    stores as v2 with one pointer flip.  Returns the root and the
+    stores' schemas."""
+    from ..sources.publish import publish_version
     from ..staging import staging_dir
 
     root = root or staging_dir(prefix="bdm_publish_")
     t0 = docs.filter(~_incr_delta_flag())
     sig_t0 = local_checkpoint(minhash_signatures(t0), eager=False)
     pairs_t0 = lsh_candidate_pairs(sig_t0, threshold).select("doc_a", "doc_b")
-    publish_version(root, 1, {"sig": sig_t0, "pair": pairs_t0})
+    publish_version(root, 1, {"sig": sig_t0.coalesce(1), "pair": pairs_t0.coalesce(1)})
     tomb = docs.filter(_incr_deleted_flag()).select("doc_id")
-    sig_v2 = read_current(spark, root, "sig").join(tomb, "doc_id", "left_anti")
-    pair_v2 = (
-        read_current(spark, root, "pair")
-        .join(tomb.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_anti")
-        .join(tomb.select(F.col("doc_id").alias("doc_b")), "doc_b", "left_anti")
-        .select("doc_a", "doc_b")
+    vacuum_parquet_store(
+        spark, root, {"sig": ("doc_id",), "pair": ("doc_a", "doc_b")}, tomb
     )
-    publish_version(root, 2, {"sig": sig_v2, "pair": pair_v2})
-    return root
+    return root, {"sig": sig_t0.schema, "pair": pairs_t0.schema}
 
 
 def gc_published_refresh(
@@ -1814,17 +1787,15 @@ def gc_published_refresh(
     the retention cadence; the refresh materialization is the same
     write the un-versioned path performs.  Reference anchor: extends
     q271/q272 (``hw3/hw3.py:125-172``)."""
-    import os
-    import re
-
     from ..sources.publish import (
         gc_versions,
         publish_version,
         read_current,
         read_version,
+        versions,
     )
 
-    root = _publish_deletion_cycle(spark, docs, threshold, root)
+    root, schema = _publish_deletion_cycle(spark, docs, threshold, root)
     remaining = docs.filter(~_incr_deleted_flag())
     # sign the arrival batch ONCE (round 11, guide §1.2): the same
     # checkpointed signature table feeds the refresh (via sig_all) and
@@ -1834,33 +1805,24 @@ def gc_published_refresh(
         minhash_signatures(remaining.filter(_incr_delta_flag())),
         eager=False,
     )
-    sig_v2 = read_version(spark, root, "sig", 2)
+    sig_v2 = read_version(spark, root, "sig", 2, schema["sig"])
     refreshed = incremental_lsh_pairs(
         remaining,
         threshold,
         sig_all=sig_v2.withColumn("is_delta", F.lit(False)).unionByName(
             sig_batch.withColumn("is_delta", F.lit(True))
         ),
-        carried_pairs=read_version(spark, root, "pair", 2),
+        carried_pairs=read_version(spark, root, "pair", 2, schema["pair"]),
     )
     sig_v3 = sig_v2.unionByName(sig_batch)
-    publish_version(root, 3, {"sig": sig_v3, "pairs_result": refreshed})
+    publish_version(
+        root, 3, {"sig": sig_v3.coalesce(1), "pairs_result": refreshed.coalesce(1)}
+    )
     audit = gc_versions(root, retain=2)
     assert ("pair", 1) in audit["removed"], audit
-    pair_versions = len(
-        [
-            v
-            for v in os.listdir(os.path.join(root, "pairs_result"))
-            if re.fullmatch(r"v\d+", v)
-        ]
-        + [
-            v
-            for v in os.listdir(os.path.join(root, "pair"))
-            if re.fullmatch(r"v\d+", v)
-        ]
-    )
+    pair_versions = len(versions(root, "pairs_result")) + len(versions(root, "pair"))
     return (
-        read_current(spark, root, "pairs_result")
+        read_current(spark, root, "pairs_result", refreshed.schema)
         .withColumn("published_version", F.lit(3).cast("long"))
         .withColumn("versions_kept", F.lit(pair_versions).cast("long"))
     )
@@ -1906,9 +1868,11 @@ def published_version_diff(
     reference has no versioning of any kind."""
     from ..sources.publish import read_version
 
-    root = _publish_deletion_cycle(spark, docs, threshold, root)
-    v1 = read_version(spark, root, "pair", 1)
-    v2 = read_version(spark, root, "pair", 2).withColumn("in2", F.lit(1))
+    root, schema = _publish_deletion_cycle(spark, docs, threshold, root)
+    v1 = read_version(spark, root, "pair", 1, schema["pair"])
+    v2 = read_version(spark, root, "pair", 2, schema["pair"]).withColumn(
+        "in2", F.lit(1)
+    )
     return v1.join(v2, ["doc_a", "doc_b"], "left").select(
         "doc_a",
         "doc_b",
@@ -2015,19 +1979,20 @@ def triggered_vacuum_refresh(
     the pair store's O(|store|) rewrite until it actually pays for
     itself.  Reference anchor: extends q234/q235
     (``hw3/hw3.py:125-172`` refresh discipline)."""
-    import os
-
+    from ..sources.publish import publish_version, read_current
     from ..staging import staging_dir
 
-    stage = stage_dir or staging_dir(prefix="bdm_triggered_vacuum_")
-    sig_dir = os.path.join(stage, "sig_store")
-    pair_dir = os.path.join(stage, "pair_store")
+    root = stage_dir or staging_dir(prefix="bdm_triggered_vacuum_")
     remaining = docs.filter(~_incr_deleted_flag())
     t0 = docs.filter(~_incr_delta_flag())
     sig_t0 = local_checkpoint(minhash_signatures(t0), eager=False)
     pairs_t0 = lsh_candidate_pairs(sig_t0, threshold).select("doc_a", "doc_b")
-    sig_t0.repartition(8).write.mode("overwrite").parquet(sig_dir)
-    pairs_t0.repartition(8).write.mode("overwrite").parquet(pair_dir)
+    publish_version(
+        root,
+        1,
+        {"sig_store": sig_t0.repartition(8), "pair_store": pairs_t0.repartition(8)},
+    )
+    schema = {"sig_store": sig_t0.schema, "pair_store": pairs_t0.schema}
     tombstones = docs.filter(_incr_deleted_flag()).select("doc_id")
 
     def dead_bp(df: DataFrame, keys: tuple[str, ...]) -> int:
@@ -2043,18 +2008,21 @@ def triggered_vacuum_refresh(
 
     fired = {}
     for store, keys, bar in (
-        (sig_dir, ("doc_id",), SIG_FIRE_BP),
-        (pair_dir, ("doc_a", "doc_b"), PAIR_FIRE_BP),
+        ("sig_store", ("doc_id",), SIG_FIRE_BP),
+        ("pair_store", ("doc_a", "doc_b"), PAIR_FIRE_BP),
     ):
-        bp = dead_bp(spark.read.parquet(store), keys)
-        fired[store] = bp >= bar
-        if fired[store]:
-            vacuum_parquet_store(spark, store, tombstones, keys)
-    sig_read = spark.read.parquet(sig_dir)
-    if not fired[sig_dir]:  # unvacuumed store: tombstone-filter at read
+        bp = dead_bp(read_current(spark, root, store, schema[store]), keys)
+        if bp >= bar:
+            fired[store] = keys
+    # one commit for every store whose flag fired; the others stay live
+    # at v1
+    if fired:
+        vacuum_parquet_store(spark, root, fired, tombstones)
+    sig_read = read_current(spark, root, "sig_store", schema["sig_store"])
+    if "sig_store" not in fired:  # unvacuumed store: tombstone-filter at read
         sig_read = sig_read.join(tombstones, "doc_id", "left_anti")
-    pair_read = spark.read.parquet(pair_dir)
-    if not fired[pair_dir]:
+    pair_read = read_current(spark, root, "pair_store", schema["pair_store"])
+    if "pair_store" not in fired:
         pair_read = pair_read.join(
             tombstones.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_anti"
         ).join(

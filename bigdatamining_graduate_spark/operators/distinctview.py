@@ -201,7 +201,7 @@ def vacuumed_distinct_view(
     Flink/Delta retract-record shape on duplicate counts), the VACUUM
     nets the store to one row per surviving pair (zero-netted pairs —
     users whose last event of a type died — physically drop) and
-    rename-swaps 5 file sets to 1, and the NEXT insert refresh merges
+    commits 5 file sets as 1, and the NEXT insert refresh merges
     the arrival batch onto the vacuumed store read back from parquet.
 
     The serve carries an ``n_store_rows`` audit column — the RAW store
@@ -221,16 +221,15 @@ def vacuumed_distinct_view(
     aggregation with per-slice conditional counts (the q257
     ``agg_partials`` discipline); the six file-set writes then filter a
     checkpointed aux-sized frame instead of re-scanning the corpus
-    (6 corpus scans → 1).  Store layout, net algebra and the
-    rename-swap are unchanged."""
-    import os
+    (6 corpus scans → 1).  Store layout and net algebra are
+    unchanged."""
+    from functools import reduce
 
     from ..checkpoints import local_checkpoint
+    from ..sources.publish import publish_version, read_current
     from ..staging import staging_dir
-    from .dedup import swap_parquet_store
 
-    stage = stage_dir or staging_dir(prefix="bdm_dcv_vacuum_")
-    store_dir = os.path.join(stage, "aux_store")
+    root = stage_dir or staging_dir(prefix="bdm_dcv_vacuum_")
     arr = arrival_flag()
     dead = deleted_flag()
     sub = (
@@ -248,25 +247,31 @@ def vacuumed_distinct_view(
         ),
         eager=False,
     )
-    # accretion: four positive partial appends (sub-slices, salt "dcvv")
-    for i in range(4):
+    # accretion: four positive partial file sets (sub-slices, salt
+    # "dcvv") and, from the deletion cycle, one negative retraction file
+    # set — all in v1 before its commit (a union keeps each input's files)
+    file_sets = [
         parts.filter(F.col(f"s{i}") > 0).select(
             *KEYS, F.col(f"s{i}").cast("long").alias("refcount")
-        ).write.mode("append").parquet(store_dir)
-    # deletion cycle: one negative retraction file
-    parts.filter(F.col("d") > 0).select(
-        *KEYS, (-F.col("d")).cast("long").alias("refcount")
-    ).write.mode("append").parquet(store_dir)
-    # vacuum: net combine, drop zero-netted pairs, rename-swap
+        )
+        for i in range(4)
+    ] + [
+        parts.filter(F.col("d") > 0).select(
+            *KEYS, (-F.col("d")).cast("long").alias("refcount")
+        )
+    ]
+    accreted = reduce(DataFrame.unionByName, file_sets)
+    publish_version(root, 1, {"aux_store": accreted})
+    # vacuum: net combine, drop zero-netted pairs, published as v2
     net = (
-        spark.read.parquet(store_dir)
+        read_current(spark, root, "aux_store", accreted.schema)
         .groupBy(*KEYS)
         .agg(F.sum("refcount").cast("long").alias("refcount"))
         .filter(F.col("refcount") > 0)
     )
-    swap_parquet_store(net, store_dir)
+    publish_version(root, 2, {"aux_store": net.coalesce(1)})
     # next insert refresh off the vacuumed store
-    aux0 = spark.read.parquet(store_dir)
+    aux0 = read_current(spark, root, "aux_store", net.schema)
     raw_rows = aux0.groupBy("event_type").agg(
         F.count("*").alias("n_store_rows")
     )

@@ -1430,8 +1430,9 @@ def upsert_aware_triangles_sql() -> str:
 # Unlike the LSH/IVF stores, the edge store's vacuum is NOT a pure anti-join
 # — a deleted order only decrements surviving edges' support counts — so the
 # rewrite is computed (w −= deleted-order support, kill rows at 0) and
-# swapped in via the shared rename-swap.  The triangle-count store is
-# rewritten with the destroyed-triangle attribution.  The proof: the NEXT
+# committed as the next store version (``sources/publish.py``) together
+# with the triangle-count store, rewritten with the destroyed-triangle
+# attribution.  The proof: the NEXT
 # q246 arrival refresh, reading the vacuumed stores back from parquet,
 # hash-matches the full recompute over the post-delete corpus.
 
@@ -1448,7 +1449,7 @@ def vacuumed_triangle_refresh(
     VACUUMED — edge weights decremented by the deleted orders' support
     with zero-support edges physically dropped, triangle counts
     decremented by the exact destroyed-triangle attribution, both
-    rewritten compacted via the atomic rename-swap — and the NEXT
+    rewritten compacted and committed together as v2 — and the NEXT
     arrival refresh (q246's incremental path) runs reading the vacuumed
     stores back from parquet.
 
@@ -1456,24 +1457,25 @@ def vacuumed_triangle_refresh(
     corpus AND over the post-delete base, emitting tri_new = full −
     base per node — so the driver hash-match proves the weight algebra,
     the destruction attribution, the store rewrite, AND the post-vacuum
-    refresh in one identity.  Swap order is load-bearing: the
-    triangle-store rewrite's lineage reads the OLD edge store (the
-    destroyed attribution lives in the t0 graph), so it swaps first.
-    File shrinkage and vacuumed == unvacuumed equality are pinned in
+    refresh in one identity.  Both rewrites read the t0 graph from v1,
+    which no publish overwrites, so their write order is free.  File
+    shrinkage and vacuumed == unvacuumed equality are pinned in
     ``tests/test_incremental_triangles.py``.
 
     Scale: the vacuum is one |deleted|-bounded aggregation + store-sized
     joins + one write per store, run on the compaction cadence; the
     refresh stays O(|new edges| · degree).  Output: (node, deg,
     tri_cnt, tri_new).  Reference anchor: extension of q110."""
-    import os
-
+    from ..sources.publish import (
+        commit_version,
+        publish_version,
+        read_current,
+        read_version,
+        write_store_version,
+    )
     from ..staging import staging_dir
-    from .dedup import swap_parquet_store
 
-    stage = stage_dir or staging_dir(prefix="bdm_tri_vacuum_")
-    edge_dir = os.path.join(stage, "edge_store")
-    tri_dir = os.path.join(stage, "tri_store")
+    root = stage_dir or staging_dir(prefix="bdm_tri_vacuum_")
 
     delta = _tri_delta_flag()
     deleted = _tri_deleted_flag()
@@ -1487,13 +1489,12 @@ def vacuumed_triangle_refresh(
     # from the SAME baskets instead of re-scanning the 10% slice
     # (round 12, see _grouped_baskets)
     bk = local_checkpoint(_grouped_baskets(_kp(base_li)), eager=False)
-    _weighted_pairs_from_baskets(bk).repartition(8).write.mode(
-        "overwrite"
-    ).parquet(edge_dir)
-    store = spark.read.parquet(edge_dir)
-    pairs_triangle_counts(store.select("pa", "pb")).select(
-        "node", "tri_cnt"
-    ).repartition(8).write.mode("overwrite").parquet(tri_dir)
+    edges = _weighted_pairs_from_baskets(bk)
+    write_store_version(edges.repartition(8), root, "edge_store", 1)
+    store = read_version(spark, root, "edge_store", 1, edges.schema)
+    tri = pairs_triangle_counts(store.select("pa", "pb")).select("node", "tri_cnt")
+    write_store_version(tri.repartition(8), root, "tri_store", 1)
+    commit_version(root, 1)
 
     # deletion cycle: support decrements against the persisted store.
     # cd feeds the kill test AND the weight rewrite; removed feeds the
@@ -1527,7 +1528,7 @@ def vacuumed_triangle_refresh(
         removed, store.select("pa", "pb"), broadcast_marked=False
     )
     updated_tri = (
-        spark.read.parquet(tri_dir)
+        read_current(spark, root, "tri_store", tri.schema)
         .join(destroyed, "node", "left")
         .select(
             "node",
@@ -1537,16 +1538,21 @@ def vacuumed_triangle_refresh(
         )
         .filter(F.col("tri_cnt") > 0)
     )
-    # tri store FIRST: its rewrite reads the old edge store (t0 graph)
-    swap_parquet_store(updated_tri, tri_dir)
-    swap_parquet_store(updated_edges, edge_dir)
+    # both rewrites derive from v1 (the t0 graph) and flip together
+    publish_version(
+        root,
+        2,
+        {"tri_store": updated_tri.coalesce(1), "edge_store": updated_edges.coalesce(1)},
+    )
 
     # the NEXT arrival refresh, off the vacuumed stores
     remaining = lineitem.filter(delta | ~deleted)
     return incremental_triangles(
         remaining,
-        edge_store=spark.read.parquet(edge_dir).select("pa", "pb"),
-        tri_store=spark.read.parquet(tri_dir),
+        edge_store=read_current(
+            spark, root, "edge_store", updated_edges.schema
+        ).select("pa", "pb"),
+        tri_store=read_current(spark, root, "tri_store", updated_tri.schema),
     )
 
 

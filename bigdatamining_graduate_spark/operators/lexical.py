@@ -470,10 +470,10 @@ def vacuumed_bm25_refresh(
     small files — per-batch accretion) and the FULL-VOCAB tf store
     (q251's range-clustered-on-token layout), apply a deletion cycle
     (the q229 tombstone slice, salt "idel"), VACUUM both stores —
-    tombstoned postings anti-joined out, files compacted,
-    rename-swapped — then run the NEXT q242 insert refresh reading the
-    VACUUMED stores back from parquet, with the SERVING read still
-    pruned to the query terms' posting lists.
+    tombstoned postings anti-joined out, files compacted, both
+    committed with one pointer flip — then run the NEXT q242 insert
+    refresh reading the VACUUMED stores back from parquet, with the
+    SERVING read still pruned to the query terms' posting lists.
 
     The compaction detail that matters: the tf store's rewrite is
     ``repartitionByRange`` on token, NOT ``coalesce`` — q251's pruned
@@ -493,42 +493,36 @@ def vacuumed_bm25_refresh(
     the query terms' lists + the dl-store aggregate.  Reference
     anchor: ``FinalProject/BDM_Final.py`` (TF-IDF rebuilt per run;
     extension — no persisted index, no deletes)."""
-    import os
-
+    from ..sources.publish import publish_version, read_current
     from ..staging import staging_dir
     from .dedup import vacuum_parquet_store
 
-    stage = stage_dir or staging_dir(prefix="bdm_bm25_vac_")
-    dl_dir = os.path.join(stage, "dl_store")
-    tf_dir = os.path.join(stage, "tf_store")
+    root = stage_dir or staging_dir(prefix="bdm_bm25_vac_")
 
     delta = _incr_delta_flag()
     deleted = _incr_deleted_flag()
     t0_tok = local_checkpoint(_doc_tokens(docs.filter(~delta)), eager=False)
+    dl0, tf0 = _dl_from_tokens(t0_tok), _tf_all_from_tokens(t0_tok)
     # accretion: many small files per store (what a refresh loop leaves)
-    _dl_from_tokens(t0_tok).repartition(8).write.mode("overwrite").parquet(
-        dl_dir
-    )
-    _tf_all_from_tokens(t0_tok).repartitionByRange(8, "token").write.mode(
-        "overwrite"
-    ).parquet(tf_dir)
+    t0_stores = {"dl_store": dl0.repartition(8), "tf_store": tf0.repartitionByRange(8, "token")}
+    publish_version(root, 1, t0_stores)
     tombstones = docs.filter(deleted).select("doc_id")
-    vacuum_parquet_store(spark, dl_dir, tombstones, ("doc_id",))
     vacuum_parquet_store(
         spark,
-        tf_dir,
+        root,
+        {"dl_store": ("doc_id",), "tf_store": ("doc_id",)},
         tombstones,
-        ("doc_id",),
-        target_files=4,
-        range_cluster_cols=("token",),
+        layout={"tf_store": lambda df: df.repartitionByRange(4, "token")},
     )
     # next insert refresh off the vacuumed stores: only the surviving
     # batch is ever tokenized
     batch_tok = local_checkpoint(
         _doc_tokens(docs.filter(delta & ~deleted)), eager=False
     )
-    dl = spark.read.parquet(dl_dir).unionByName(_dl_from_tokens(batch_tok))
-    tf_store = spark.read.parquet(tf_dir)
+    dl = read_current(spark, root, "dl_store", dl0.schema).unionByName(
+        _dl_from_tokens(batch_tok)
+    )
+    tf_store = read_current(spark, root, "tf_store", tf0.schema)
     batch_tf = _tf_all_from_tokens(batch_tok)
     vocab_row = (
         tf_store.unionByName(batch_tf)

@@ -871,7 +871,7 @@ def vacuumed_phash_refresh(
     (the accretion a per-batch refresh loop produces), apply a deletion
     cycle (the q229 tombstone slice), VACUUM both stores
     (:func:`~bigdatamining_graduate_spark.operators.dedup.vacuum_parquet_store`:
-    tombstoned rows anti-joined out, files compacted, rename-swapped),
+    tombstoned rows anti-joined out, files compacted, committed),
     then run the NEXT insert refresh (q252's incremental path) reading
     the VACUUMED stores back from parquet.
 
@@ -889,9 +889,8 @@ def vacuumed_phash_refresh(
     compaction cadence; the refresh stays O(|batch| payload bytes);
     the corpus never re-fingerprints.  Reference anchor: extension of
     q143."""
-    import os
-
     from ..checkpoints import local_checkpoint
+    from ..sources.publish import publish_version, read_current
     from ..staging import staging_dir
     from .dedup import (
         _incr_deleted_flag,
@@ -899,26 +898,30 @@ def vacuumed_phash_refresh(
         vacuum_parquet_store,
     )
 
-    stage = stage_dir or staging_dir(prefix="bdm_phash_vacuum_")
-    sig_dir = os.path.join(stage, "phash_store")
-    pair_dir = os.path.join(stage, "pair_store")
+    root = stage_dir or staging_dir(prefix="bdm_phash_vacuum_")
     remaining = docs.filter(~_incr_deleted_flag())
     t0 = docs.filter(~_incr_delta_flag())
     ph_t0 = local_checkpoint(
         payload_phash(with_binary_payload(t0)), eager=False
     )
+    pairs_t0 = _pairs_from_phash(ph_t0)
     # simulate refresh-loop accretion: many small files per store
-    ph_t0.repartition(8).write.mode("overwrite").parquet(sig_dir)
-    _pairs_from_phash(ph_t0).repartition(8).write.mode("overwrite").parquet(
-        pair_dir
+    publish_version(
+        root,
+        1,
+        {"phash_store": ph_t0.repartition(8), "pair_store": pairs_t0.repartition(8)},
     )
     tombstones = docs.filter(_incr_deleted_flag()).select("doc_id")
-    vacuum_parquet_store(spark, sig_dir, tombstones, ("doc_id",))
-    vacuum_parquet_store(spark, pair_dir, tombstones, ("doc_a", "doc_b"))
+    vacuum_parquet_store(
+        spark,
+        root,
+        {"phash_store": ("doc_id",), "pair_store": ("doc_a", "doc_b")},
+        tombstones,
+    )
     return incremental_phash_pairs(
         with_binary_payload(remaining),
-        phash_store=spark.read.parquet(sig_dir),
-        pair_store=spark.read.parquet(pair_dir),
+        phash_store=read_current(spark, root, "phash_store", ph_t0.schema),
+        pair_store=read_current(spark, root, "pair_store", pairs_t0.schema),
     )
 
 

@@ -1383,9 +1383,9 @@ def vacuumed_ivf_refresh(
     and the postings/assignment table written as MANY small files (the
     accretion a per-batch refresh loop produces) — takes a deletion
     cycle (the 10% tombstone slice), the postings store is VACUUMED
-    (tombstoned rows physically dropped, files rewritten compacted via
-    :func:`..operators.dedup.vacuum_parquet_store`'s atomic
-    rename-swap), and the NEXT insert refresh (q233's incremental path)
+    (tombstoned rows physically dropped, files rewritten compacted and
+    committed by :func:`..operators.dedup.vacuum_parquet_store`), and
+    the NEXT insert refresh (q233's incremental path)
     runs reading the vacuumed index back from parquet.
 
     The DuckDB oracle is the full frozen assignment over the remaining
@@ -1399,33 +1399,34 @@ def vacuumed_ivf_refresh(
 
     Scale: vacuum is one postings scan + anti-join + one write on the
     compaction cadence; the refresh itself stays O(|batch|·k)."""
-    import os
-    from ..staging import staging_dir
-
     from ..checkpoints import local_checkpoint
+    from ..sources.publish import publish_version, read_current
+    from ..staging import staging_dir
     from .dedup import vacuum_parquet_store
 
-    stage = stage_dir or staging_dir(prefix="bdm_ivf_vacuum_")
-    stats_dir = os.path.join(stage, "stats_store")
-    seed_dir = os.path.join(stage, "seed_store")
-    assign_dir = os.path.join(stage, "assign_store")
+    root = stage_dir or staging_dir(prefix="bdm_ivf_vacuum_")
     base = embeddings.filter(~_ivf_delta_flag())
     stats = local_checkpoint(ivf_quant_stats(base), eager=False)
     seeds = local_checkpoint(ivf_seeds(base, stats), eager=False)
-    stats.write.mode("overwrite").parquet(stats_dir)
-    seeds.write.mode("overwrite").parquet(seed_dir)
     # simulate refresh-loop accretion: the postings table as 8 small files
-    ivf_assign(base, stats, seeds).repartition(8).write.mode(
-        "overwrite"
-    ).parquet(assign_dir)
+    assign = ivf_assign(base, stats, seeds)
+    publish_version(
+        root,
+        1,
+        {
+            "stats_store": stats,
+            "seed_store": seeds,
+            "assign_store": assign.repartition(8),
+        },
+    )
     tombstones = embeddings.filter(_ivf_deleted_flag()).select("vec_id")
-    vacuum_parquet_store(spark, assign_dir, tombstones, ("vec_id",))
+    vacuum_parquet_store(spark, root, {"assign_store": ("vec_id",)}, tombstones)
     remaining = embeddings.filter(~_ivf_deleted_flag())
     return incremental_ivf_assign(
         remaining,
-        stats_store=spark.read.parquet(stats_dir),
-        seed_store=spark.read.parquet(seed_dir),
-        base_assign=spark.read.parquet(assign_dir),
+        stats_store=read_current(spark, root, "stats_store", stats.schema),
+        seed_store=read_current(spark, root, "seed_store", seeds.schema),
+        base_assign=read_current(spark, root, "assign_store", assign.schema),
     )
 
 
@@ -1447,11 +1448,12 @@ def vacuumed_ivf_refresh_sql() -> str:
 # vector store closes it").  retrained_ivf_refresh below is the closed loop:
 # a drifted arrival wave lands under the frozen quantizer, the trigger is
 # read back from the maintained postings store, and WHEN IT FIRES the
-# quantizer is refit over the current corpus, the index swapped atomically
-# (the q235 rename-swap), and maintenance CONTINUES under the new quantizer
-# for the next wave.  The oracle is the full recompute under the refit
-# quantizer — it hash-matches ONLY if the refit actually happened, so the
-# driver check proves the trigger consumption itself, every round.
+# quantizer is refit over the current corpus, the index replaced by one
+# version commit (``sources/publish.py``), and maintenance CONTINUES under
+# the new quantizer for the next wave.  The oracle is the full recompute
+# under the refit quantizer — it hash-matches ONLY if the refit actually
+# happened, so the driver check proves the trigger consumption itself,
+# every round.
 
 _IVF_WAVE_SALT = "iivfw"
 #: the deterministic distribution shift applied to arriving vectors —
@@ -1498,14 +1500,6 @@ def ivf_drifted_embeddings(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def _swap_parquet_store(df: DataFrame, store_dir: str, target_files: int = 1) -> None:
-    """Atomic rename-swap (the q235 two-phase shape) — delegates to the
-    shared store-lifecycle helper in :mod:`..operators.dedup`."""
-    from .dedup import swap_parquet_store
-
-    swap_parquet_store(df, store_dir, target_files)
-
-
 def retrained_ivf_refresh(
     spark, embeddings: DataFrame, stage_dir: str | None = None
 ) -> DataFrame:
@@ -1513,22 +1507,22 @@ def retrained_ivf_refresh(
     runs when q234's trigger fires:
 
     1. **t0 build**: quantizer (stats + seeds) frozen on the base
-       corpus, postings table assigned under it — all three persisted.
+       corpus, postings table assigned under it — all three written as
+       store version v1.
     2. **Wave-1 arrival** (drifted distribution): assigned under the
-       FROZEN quantizer read from the store, appended to the postings
-       table — the q233 refresh, mid-drift.
+       FROZEN quantizer into the postings table's v1 before it is
+       committed — the q233 refresh, mid-drift.
     3. **Trigger read**: q234's drift/overload audit over the
        maintained postings store.  The flags COLLECT to the driver —
        ≤ n_cells rows (8 here), the same O(1)-row control-scalar class
        as the CC convergence checks — because retrain-or-not is a
        control-flow decision, not a data transform.
-    4. **Refit + atomic swap** (only when fired): new stats + seeds
-       over the CURRENT corpus (base ∪ drifted wave 1), full
-       re-assignment under the new quantizer, all three stores swapped
-       via rename (q235's two-phase shape — readers never see a
-       half-written index).
-    5. **Wave-2 arrival**: assigned under whatever quantizer the stores
-       NOW hold — maintenance continues through the swap.
+    4. **Refit** (only when fired): new stats + seeds over the CURRENT
+       corpus (base ∪ drifted wave 1), full re-assignment under the new
+       quantizer, all three stores written as v2.
+    5. **Wave-2 arrival**: assigned under the quantizer v2 holds into
+       v2's postings, and v2 is committed once — readers see the v1
+       index or the complete v2 index, never a half-written one.
 
     The DuckDB oracle is the full assignment of the final corpus under
     the quantizer frozen on (base ∪ drifted wave 1) — i.e. it assumes
@@ -1541,18 +1535,14 @@ def retrained_ivf_refresh(
 
     Scale: the refit is one corpus re-quantization on the RETRAIN
     cadence (trigger-gated, not per-batch); per-batch work stays
-    O(|batch|·k); the swap is O(1) renames.  Reference anchor:
+    O(|batch|·k); the swap is one pointer flip.  Reference anchor:
     ``hw3/hw3.py:125-172`` (extension — the reference has no vector
     index and never retrains)."""
-    import os
-
     from ..checkpoints import local_checkpoint
+    from ..sources.publish import publish_version, read_current
     from ..staging import staging_dir
 
-    stage = stage_dir or staging_dir(prefix="bdm_ivf_retrain_")
-    stats_dir = os.path.join(stage, "stats_store")
-    seed_dir = os.path.join(stage, "seed_store")
-    assign_dir = os.path.join(stage, "assign_store")
+    root = stage_dir or staging_dir(prefix="bdm_ivf_retrain_")
 
     delta = _ivf_delta_flag()
     wave2 = _ivf_wave2_flag()
@@ -1564,48 +1554,49 @@ def retrained_ivf_refresh(
     wave1 = cur.filter(delta & ~wave2)
     wave2_df = cur.filter(wave2)
 
-    # 1. t0 index build, persisted (quantizer frozen on the base corpus)
-    stats0 = local_checkpoint(ivf_quant_stats(base), eager=False)
-    seeds0 = local_checkpoint(ivf_seeds(base, stats0), eager=False)
-    stats0.write.mode("overwrite").parquet(stats_dir)
-    seeds0.write.mode("overwrite").parquet(seed_dir)
-    ivf_assign(base, stats0, seeds0).withColumn(
-        "src", F.lit("carried")
-    ).write.mode("overwrite").parquet(assign_dir)
+    def assigned(df, stats, seeds, src):
+        return ivf_assign(df, stats, seeds).withColumn("src", F.lit(src))
 
-    # 2. wave-1 refresh under the frozen quantizer, appended to the store
-    st0 = spark.read.parquet(stats_dir)
-    sd0 = spark.read.parquet(seed_dir)
-    ivf_assign(wave1, st0, sd0).withColumn("src", F.lit("fresh")).write.mode(
-        "append"
-    ).parquet(assign_dir)
+    # 1.+2. v1: the t0 index (quantizer frozen on the base corpus) with
+    # the wave-1 refresh under that frozen quantizer in its postings
+    stats = local_checkpoint(ivf_quant_stats(base), eager=False)
+    seeds = local_checkpoint(ivf_seeds(base, stats), eager=False)
+    carried = assigned(base, stats, seeds, "carried")
+    publish_version(
+        root,
+        1,
+        {
+            "stats_store": stats,
+            "seed_store": seeds,
+            "assign_store": carried.unionByName(assigned(wave1, stats, seeds, "fresh")),
+        },
+    )
 
     # 3. the trigger, read off the maintained store; ≤ n_cells rows collect
-    maintained = spark.read.parquet(assign_dir)
+    maintained = read_current(spark, root, "assign_store", carried.schema)
     flags = ivf_retrain_trigger(cur, assign=maintained).collect()
     fired = any(r["retrain"] == 1 for r in flags)
 
     if fired:
-        # 4. refit over the current corpus + atomic three-store swap
+        # 4. refit over the current corpus: all three stores in v2
         corpus1 = local_checkpoint(base.unionByName(wave1), eager=False)
-        stats1 = local_checkpoint(ivf_quant_stats(corpus1), eager=False)
-        seeds1 = local_checkpoint(ivf_seeds(corpus1, stats1), eager=False)
-        _swap_parquet_store(stats1, stats_dir)
-        _swap_parquet_store(seeds1, seed_dir)
-        _swap_parquet_store(
-            ivf_assign(corpus1, stats1, seeds1).withColumn(
-                "src", F.lit("refit")
-            ),
-            assign_dir,
-        )
-
-    # 5. wave-2 refresh under whatever quantizer the stores now hold
-    st = spark.read.parquet(stats_dir)
-    sd = spark.read.parquet(seed_dir)
-    ivf_assign(wave2_df, st, sd).withColumn("src", F.lit("fresh")).write.mode(
-        "append"
-    ).parquet(assign_dir)
-    return spark.read.parquet(assign_dir).select("vec_id", "cell", "d2", "src")
+        stats = local_checkpoint(ivf_quant_stats(corpus1), eager=False)
+        seeds = local_checkpoint(ivf_seeds(corpus1, stats), eager=False)
+        v2 = {
+            "stats_store": stats.coalesce(1),
+            "seed_store": seeds.coalesce(1),
+            "assign_store": assigned(corpus1, stats, seeds, "refit").coalesce(1),
+        }
+    else:
+        # no refit: v2 rewrites the postings and keeps the v1 quantizer
+        v2 = {"assign_store": maintained}
+    # 5. wave-2 refresh under the quantizer v2 holds, committed with it
+    fresh2 = assigned(wave2_df, stats, seeds, "fresh")
+    v2["assign_store"] = v2["assign_store"].unionByName(fresh2)
+    publish_version(root, 2, v2)
+    return read_current(spark, root, "assign_store", carried.schema).select(
+        "vec_id", "cell", "d2", "src"
+    )
 
 
 def retrained_ivf_refresh_sql() -> str:

@@ -12274,7 +12274,7 @@ def q235_store_vacuum_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     are built as many small files (the accretion a per-batch refresh
     loop produces), a deletion cycle tombstones the q229 slice, both
     stores are VACUUMED (tombstoned rows physically dropped, files
-    rewritten compacted via an atomic rename-swap — the
+    rewritten compacted as the next committed version — the
     OPTIMIZE+VACUUM shape of a transactional table format), and the
     NEXT insert refresh runs reading the vacuumed stores back from
     parquet. The DuckDB oracle is the full incremental recompute over
@@ -12390,8 +12390,8 @@ def q239_ivf_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quantizer stats, seed centroids, postings table written as MANY
     small files — per-batch refresh accretion) takes a deletion cycle
     (the q236 tombstone slice), the postings store is VACUUMED
-    (tombstoned rows physically dropped, files compacted via the same
-    atomic rename-swap q235 uses), and the NEXT insert refresh (q233's
+    (tombstoned rows physically dropped, files compacted through the
+    same version commit q235 uses), and the NEXT insert refresh (q233's
     incremental path) runs reading the vacuumed index back from
     parquet.  The DuckDB oracle is the full frozen assignment over the
     remaining corpus — the SAME identity q236 proves via its in-plan
@@ -12811,9 +12811,9 @@ def q249_ivf_retrain_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect — the documented O(1)-row control-scalar class, because
     retrain-or-not is control flow); when it fires, the quantizer is
     REFIT over the current corpus and all three stores (stats, seeds,
-    postings) swap atomically via q235's rename-swap; a second arrival
-    wave then continues maintenance under the NEW quantizer read from
-    the swapped stores.
+    postings) are written as the next version and committed with one
+    pointer flip; a second arrival wave is assigned under the NEW
+    quantizer into that same version before its commit.
 
     The DuckDB oracle is the full assignment of the final corpus under
     the REFIT quantizer — it hash-matches only if the trigger fired
@@ -12825,7 +12825,7 @@ def q249_ivf_retrain_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tests/test_incremental_ivf.py``.
 
     Scale: refit runs on the trigger cadence, not per batch — one
-    corpus re-quantization + O(1) renames; per-batch work stays
+    corpus re-quantization + one pointer flip; per-batch work stays
     O(|batch|·k) with the centroid table broadcast.  Reference anchor:
     ``hw3/hw3.py:125-172`` (extension — the reference has no vector
     index and never retrains)."""
@@ -12847,9 +12847,9 @@ def q250_triangle_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts with zero-support edges physically dropped (the weighted
     store's GC is a computed rewrite, not a pure anti-join — an edge
     dies only with its LAST supporting order), triangle counts
-    decremented by the exact destroyed-triangle attribution — each
-    swapped in atomically (q235's rename-swap; the tri store swaps
-    first because its rewrite reads the t0 edge graph).  The NEXT q246
+    decremented by the exact destroyed-triangle attribution — both
+    rewrites derive from the t0 version and are committed together as
+    the next version (``sources/publish.py``).  The NEXT q246
     arrival refresh then runs off the vacuumed stores read back from
     parquet.
 
@@ -13018,8 +13018,8 @@ def q256_phash_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     here): the t0 signature + pair stores are built as many small
     files (refresh-loop accretion), a deletion cycle tombstones the
     10% slice, the vacuum anti-joins the tombstoned rows out of BOTH
-    stores and compacts them (rename-swap — a reader never sees a
-    half-written store), and the NEXT q252 insert refresh runs off the
+    stores and compacts them (one version commit — a reader never sees
+    a half-written store), and the NEXT q252 insert refresh runs off the
     vacuumed stores read back from parquet.  Chunk collisions and
     hamming are pairwise, so the vacuumed pair store IS the base×base
     pair set of the remaining corpus — hence vacuumed refresh == the
@@ -13160,7 +13160,7 @@ def q261_agg_view_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     retracted algebraically), and the vacuum compacts to one NET row
     per group: sums telescope exactly, emptied groups drop, dirty
     groups recompute max from their remaining rows only, and the
-    compacted view swaps in atomically (rename-swap).  The NEXT q257
+    compacted view is committed as the next version.  The NEXT q257
     insert refresh then runs off the vacuumed store read back from
     parquet.
 
@@ -13832,16 +13832,13 @@ def scd2_horizon_compact(
     """The q273 lifecycle: build the t0 history store (8-file
     accretion), HORIZON-COMPACT it — drop every version that closed at
     or before (day frontier − {hz} days), keeping all open rows and all
-    recent history; rewrite + rename-swap — then run the next q262
+    recent history; rewrite as the next version — then run the next q262
     merge off the compacted store.  Factored so the planted test can
     inject a stage dir and pin shrinkage + PIT-serving equivalence."""
-    import os
-
-    from ..operators.dedup import swap_parquet_store
+    from ..sources.publish import publish_version, read_current
     from ..staging import staging_dir
 
-    stage = stage_dir or staging_dir(prefix="bdm_scd2_hz_")
-    store_dir = os.path.join(stage, "scd2_store")
+    root = stage_dir or staging_dir(prefix="bdm_scd2_hz_")
     cut = ev.agg(
         (F.date_trunc("DAY", F.max("ts")) - F.expr("INTERVAL 6 DAYS")).alias(
             "cut"
@@ -13854,11 +13851,10 @@ def scd2_horizon_compact(
     ev2 = ev.crossJoin(F.broadcast(cut))
     t0 = ev2.filter(F.col("ts") <= F.col("cut")).drop("cut", "hz_us")
     batch = ev2.filter(F.col("ts") > F.col("cut")).drop("cut", "hz_us")
-    _scd2_history(t0).repartition(8).write.mode("overwrite").parquet(
-        store_dir
-    )
+    hist = _scd2_history(t0)
+    publish_version(root, 1, {"scd2_store": hist.repartition(8)})
     kept = (
-        spark.read.parquet(store_dir)
+        read_current(spark, root, "scd2_store", hist.schema)
         .crossJoin(F.broadcast(cut.select("hz_us")))
         .filter(
             F.col("valid_to_us").isNull()
@@ -13866,8 +13862,8 @@ def scd2_horizon_compact(
         )
         .drop("hz_us")
     )
-    swap_parquet_store(kept, store_dir)
-    return scd2_merge(spark.read.parquet(store_dir), batch)
+    publish_version(root, 2, {"scd2_store": kept.coalesce(1)})
+    return scd2_merge(read_current(spark, root, "scd2_store", hist.schema), batch)
 
 
 @register(
@@ -13933,11 +13929,11 @@ def q273_scd2_horizon_compaction(
     q268 forgets USERS on request, this prunes everyone's DEEP history
     on a cadence): versions that closed at or before the retention
     horizon (day frontier − 14 days) are dropped from the persisted
-    store — open rows and recent history survive — the store rewrites
-    + rename-swaps, and the NEXT q262 merge runs off the compacted
-    store.  The design fact this proves: the merge only ever needs
-    each user's CURRENT row, and compaction never drops a current row,
-    so history pruning and the merge loop commute.  Point-in-time
+    store — open rows and recent history survive — the store is
+    rewritten as the next version, and the NEXT q262 merge runs off the
+    compacted store.  The design fact this proves: the merge only ever
+    needs each user's CURRENT row, and compaction never drops a current
+    row, so history pruning and the merge loop commute.  Point-in-time
     serving (q217) stays exact for every as-of timestamp AFTER the
     horizon — pinned with store shrinkage in
     ``tests/test_store_vacuum.py``.
@@ -14026,7 +14022,7 @@ def q269_bm25_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     #4 — the last store family without a GC cell; q235/q239/q250/q256/
     q261 covered dedup/IVF/graph/phash/OLAP): the q242 dl/tf postings
     stores accrete small files, a deletion cycle tombstones the "idel"
-    slice, both stores vacuum (anti-join + compaction + rename-swap),
+    slice, both stores vacuum (anti-join + compaction + one commit),
     and the next q242 insert refresh runs off the vacuumed stores —
     with the tf store's compaction REPRESERVING q251's range-clustered
     token layout so the pruned serving read survives GC (PushedFilters
@@ -14062,17 +14058,15 @@ def scd2_gdpr_erase(spark: SparkSession, ev: DataFrame, stage_dir: str | None = 
     """The q268 lifecycle, factored so the planted test can inject a
     stage dir and inspect the physical store: build the t0 history
     store as MANY small files (per-merge accretion), ERASE the
-    requested users (whole per-user histories anti-joined out +
-    file compaction + rename-swap via
-    :func:`~..operators.dedup.vacuum_parquet_store`), then run the
-    next q262 merge off the erased store read back from parquet."""
-    import os
-
+    requested users (whole per-user histories anti-joined out + file
+    compaction via :func:`~..operators.dedup.vacuum_parquet_store`,
+    then the pre-erasure version collected), then run the next q262
+    merge off the erased store read back from parquet."""
     from ..operators.dedup import vacuum_parquet_store
+    from ..sources.publish import gc_versions, publish_version, read_current
     from ..staging import staging_dir
 
-    stage = stage_dir or staging_dir(prefix="bdm_scd2_gdpr_")
-    store_dir = os.path.join(stage, "scd2_store")
+    root = stage_dir or staging_dir(prefix="bdm_scd2_gdpr_")
     cut = ev.agg(
         (F.date_trunc("DAY", F.max("ts")) - F.expr("INTERVAL 6 DAYS")).alias(
             "cut"
@@ -14081,13 +14075,15 @@ def scd2_gdpr_erase(spark: SparkSession, ev: DataFrame, stage_dir: str | None = 
     ev2 = ev.crossJoin(F.broadcast(cut))
     t0 = ev2.filter(F.col("ts") <= F.col("cut")).drop("cut")
     batch = ev2.filter(F.col("ts") > F.col("cut")).drop("cut")
-    _scd2_history(t0).repartition(8).write.mode("overwrite").parquet(
-        store_dir
-    )
+    hist = _scd2_history(t0)
+    publish_version(root, 1, {"scd2_store": hist.repartition(8)})
     erased = ev.select("user_id").distinct().filter(_gdpr_erased_flag())
-    vacuum_parquet_store(spark, store_dir, erased, ("user_id",))
+    vacuum_parquet_store(spark, root, {"scd2_store": ("user_id",)}, erased)
+    # an erasure is not time-travelable: collect the pre-erasure version
+    gc_versions(root, retain=1)
     return scd2_merge(
-        spark.read.parquet(store_dir), batch.filter(~_gdpr_erased_flag())
+        read_current(spark, root, "scd2_store", hist.schema),
+        batch.filter(~_gdpr_erased_flag()),
     )
 
 
@@ -14152,8 +14148,9 @@ def q268_scd2_gdpr_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
     refresh loop — is rewritten WITHOUT those users' rows (whole
     per-user histories drop in one anti-join: per-user independence,
     the same property q265 leans on, makes erasure bounded and exact),
-    compacted 8→1 files, and rename-swapped so readers never see a
-    half-erased store.  The NEXT q262 merge then runs off the erased
+    compacted 8→1 files, and committed as one version so readers never
+    see a half-erased store; the pre-erasure version is then
+    physically removed.  The NEXT q262 merge then runs off the erased
     store read back from parquet, with the arrival batch likewise
     survivor-filtered (erasure covers in-flight events, not just
     history).
@@ -14381,8 +14378,8 @@ def q286_distinct_view_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     on refcounts): four positive partial file sets + one negative
     retraction file accrete in the persisted store, the vacuum nets
     them to one row per surviving pair (zero-netted pairs — users whose
-    last event of a type died — physically drop), rename-swaps 5 file
-    sets to 1, and the next insert refresh merges the arrival batch
+    last event of a type died — physically drop), commits 5 file sets
+    as 1, and the next insert refresh merges the arrival batch
     onto the vacuumed store read back from parquet.  The
     ``n_store_rows`` audit column (raw store rows per type) equals the
     surviving pair count ONLY if the net actually ran — a skipped

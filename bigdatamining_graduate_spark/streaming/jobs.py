@@ -1674,15 +1674,16 @@ def stream_published_store(
         current_version,
         publish_version,
         read_current,
+        version_name,
     )
     from ..staging import staging_dir
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # the stage is the publish root: sink "sig" holds the versions v<N>
+    # the stage is the publish root: sink "sig" holds the store's versions
     root = staging_dir(prefix="bdm_stream_publish_")
     # v0: the committed EMPTY store — batch 0's functional predecessor
     empty = DD.minhash_signatures(docs.limit(0))
-    publish_version(root, 0, {"sig": empty})
+    publish_version(root, 0, {"sig": empty.coalesce(1)})
 
     def handle(t: Trigger) -> dict[str, Output]:
         # version bid + 1 = the batch ∪ version bid, read by explicit pin
@@ -1712,7 +1713,7 @@ def stream_published_store(
         STREAM_LSH_BATCHES,
         root,
         handle,
-        dirname=lambda bid: f"v{bid + 1}",
+        dirname=lambda bid: version_name(bid + 1),
         on_publish=flip,
     )
     ver = current_version(root)

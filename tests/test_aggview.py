@@ -149,7 +149,9 @@ def test_vacuum_compacts_and_drops_emptied_groups(spark, tmp_path):
 
     assert_matches(out, ORACLE["q261_agg_view_vacuum"], SF_SMOKE)
 
-    store = os.path.join(stage, "view_store")
+    from bigdatamining_graduate_spark.sources.publish import live_dir
+
+    store = live_dir(stage, "view_store")
     files = glob.glob(os.path.join(store, "*.parquet"))
     assert len(files) == 1, f"store not compacted: {len(files)} files"
     kept = spark.read.parquet(store)

@@ -250,15 +250,19 @@ def test_ivf_vacuum_shrinks_store_and_preserves_semantics(spark, tmp_path):
     from bigdatamining_graduate_spark.operators.dedup import (
         vacuum_parquet_store,
     )
+    from bigdatamining_graduate_spark.sources.publish import live_dir, publish_version
 
     emb = _emb(spark)
     base = emb.filter(~S._ivf_delta_flag())
     stats = S.ivf_quant_stats(base)
     seeds = S.ivf_seeds(base, stats)
-    assign_dir = str(tmp_path / "assign_store")
-    S.ivf_assign(base, stats, seeds).repartition(8).write.parquet(assign_dir)
+    root = str(tmp_path / "root")
+    publish_version(root, 1, {"assign_store": S.ivf_assign(base, stats, seeds).repartition(8)})
     tomb = emb.filter(S._ivf_deleted_flag()).select("vec_id")
-    audit = vacuum_parquet_store(spark, assign_dir, tomb, ("vec_id",))
+    audit = vacuum_parquet_store(spark, root, {"assign_store": ("vec_id",)}, tomb)[
+        "assign_store"
+    ]
+    assign_dir = live_dir(root, "assign_store")
     assert audit["files_before"] == 8 and audit["files_after"] == 1
     assert audit["rows_after"] < audit["rows_before"]
     # no tombstoned vec_id survives the vacuum

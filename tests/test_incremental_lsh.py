@@ -623,6 +623,7 @@ def test_vacuumed_phash_refresh_and_shrinkage(spark, tmp_path):
     from bigdatamining_graduate_spark.operators import multimodal as MM
     from bigdatamining_graduate_spark.plans.queries import ORACLE
     from bigdatamining_graduate_spark.sources.catalog import load_table
+    from bigdatamining_graduate_spark.sources.publish import live_dir
 
     from .oracle import assert_matches
 
@@ -634,9 +635,9 @@ def test_vacuumed_phash_refresh_and_shrinkage(spark, tmp_path):
     assert_matches(out, ORACLE["q256_phash_store_vacuum"], sf)
 
     for store, keys in (("phash_store", ("doc_id",)), ("pair_store", ("doc_a", "doc_b"))):
-        files = glob.glob(os.path.join(stage, store, "*.parquet"))
+        files = glob.glob(os.path.join(live_dir(stage, store), "*.parquet"))
         assert len(files) == 1, f"{store} not compacted: {len(files)} files"
-        kept = spark.read.parquet(os.path.join(stage, store))
+        kept = spark.read.parquet(live_dir(stage, store))
         for k in keys:
             n_dead = kept.filter(DD._incr_deleted_flag(k)).count()
             assert n_dead == 0, f"{store}.{k} kept {n_dead} tombstoned rows"

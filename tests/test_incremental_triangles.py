@@ -208,8 +208,10 @@ def test_triangle_store_vacuum_shrinks_and_preserves_semantics(spark, tmp_path):
     os.makedirs(stage)
     out = G.vacuumed_triangle_refresh(spark, li, stage_dir=stage)
 
+    from bigdatamining_graduate_spark.sources.publish import live_dir
+
     def nfiles(d):
-        return len(glob.glob(os.path.join(stage, d, "*.parquet")))
+        return len(glob.glob(os.path.join(live_dir(stage, d), "*.parquet")))
 
     assert nfiles("edge_store") == 1
     assert nfiles("tri_store") == 1
@@ -224,7 +226,7 @@ def test_triangle_store_vacuum_shrinks_and_preserves_semantics(spark, tmp_path):
     )
     got_edges = sorted(
         (r.pa, r.pb, r.w)
-        for r in spark.read.parquet(os.path.join(stage, "edge_store")).collect()
+        for r in spark.read.parquet(live_dir(stage, "edge_store")).collect()
     )
     assert got_edges == exp_edges
     # the deletion actually killed at least one edge

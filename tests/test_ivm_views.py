@@ -379,7 +379,9 @@ def test_distinct_vacuum_shrinks_store(spark):
     stage = staging_dir(prefix="bdm_dcv_vac_test_")
     out = DV.vacuumed_distinct_view(spark, ev, stage_dir=stage)
     out.collect()  # drive the lifecycle
-    store_dir = os.path.join(stage, "aux_store")
+    from bigdatamining_graduate_spark.sources.publish import live_dir
+
+    store_dir = live_dir(stage, "aux_store")
     files = glob.glob(os.path.join(store_dir, "part-*.parquet"))
     assert len(files) == 1, f"vacuum left {len(files)} files"
     survivors = (

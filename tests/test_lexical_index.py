@@ -25,6 +25,7 @@ from bigdatamining_graduate_spark.operators.dedup import (
     _incr_delta_flag,
     vacuum_parquet_store,
 )
+from bigdatamining_graduate_spark.sources.publish import live_dir, publish_version
 
 from .conftest import SF_SMOKE
 
@@ -93,12 +94,19 @@ def test_store_vacuum_preserves_search(spark, tmp_path):
     dropped, files compacted to 1), then searched — identical to the
     in-plan delete-aware result."""
     docs = _docs(spark)
-    dl_dir, tf_dir = str(tmp_path / "dl"), str(tmp_path / "tf")
-    LX.doc_lengths(docs).repartition(4).write.parquet(dl_dir)
-    LX.term_postings(docs).repartition(4).write.parquet(tf_dir)
+    root = str(tmp_path / "root")
+    publish_version(
+        root,
+        1,
+        {
+            "dl": LX.doc_lengths(docs).repartition(4),
+            "tf": LX.term_postings(docs).repartition(4),
+        },
+    )
     tomb = docs.filter(_incr_deleted_flag()).select("doc_id")
-    a1 = vacuum_parquet_store(spark, dl_dir, tomb, ("doc_id",))
-    a2 = vacuum_parquet_store(spark, tf_dir, tomb, ("doc_id",))
+    audits = vacuum_parquet_store(spark, root, {"dl": ("doc_id",), "tf": ("doc_id",)}, tomb)
+    a1, a2 = audits["dl"], audits["tf"]
+    dl_dir, tf_dir = live_dir(root, "dl"), live_dir(root, "tf")
     assert a1["files_before"] == 4 and a1["files_after"] == 1
     assert a2["rows_after"] <= a2["rows_before"]
     vacuumed = LX._bm25_from_stores(
@@ -240,8 +248,8 @@ def test_vacuumed_full_vocab_refresh_lifecycle(spark, tmp_path):
     docs = _docs(spark)
     out = LX.vacuumed_bm25_refresh(spark, docs, stage_dir=str(tmp_path))
     rows = out.collect()  # forces the lifecycle (stores written+vacuumed)
-    dl_dir = os.path.join(str(tmp_path), "dl_store")
-    tf_dir = os.path.join(str(tmp_path), "tf_store")
+    dl_dir = live_dir(str(tmp_path), "dl_store")
+    tf_dir = live_dir(str(tmp_path), "tf_store")
 
     def n_files(d):
         return len(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))

@@ -21,6 +21,7 @@ import os
 from pyspark.sql import functions as F
 
 from bigdatamining_graduate_spark.operators import dedup as DD
+from bigdatamining_graduate_spark.sources import publish as PB
 
 from .conftest import SF_SMOKE
 
@@ -47,8 +48,9 @@ def test_vacuum_shrinks_and_preserves(spark, tmp_path):
     gone, surviving rows are byte-identical."""
     docs = _docs(spark)
     sig = DD.minhash_signatures(docs.filter(~DD._incr_delta_flag()))
-    store = str(tmp_path / "sig_store")
-    sig.repartition(8).write.parquet(store)
+    root = str(tmp_path / "root")
+    PB.publish_version(root, 1, {"sig_store": sig.repartition(8)})
+    store = PB.live_dir(root, "sig_store")
     before_files = _n_files(store)
     assert before_files >= 8
     tomb = docs.filter(DD._incr_deleted_flag()).select("doc_id")
@@ -57,11 +59,13 @@ def test_vacuum_shrinks_and_preserves(spark, tmp_path):
     expected = sorted(
         r.doc_id for r in sig.join(tomb, "doc_id", "left_anti").collect()
     )
-    audit = DD.vacuum_parquet_store(spark, store, tomb, ("doc_id",))
+    audit = DD.vacuum_parquet_store(spark, root, {"sig_store": ("doc_id",)}, tomb)[
+        "sig_store"
+    ]
     assert audit["files_before"] == before_files
     assert audit["files_after"] == 1
     assert audit["rows_after"] == audit["rows_before"] - n_tomb_in_store
-    back = spark.read.parquet(store)
+    back = spark.read.parquet(PB.live_dir(root, "sig_store"))
     assert sorted(r.doc_id for r in back.collect()) == expected
     assert back.join(tomb, "doc_id", "left_semi").count() == 0
 
@@ -98,15 +102,15 @@ def test_label_store_compaction_lossless(spark, tmp_path):
     pure small-file compaction and must be a byte-identical rewrite."""
     docs = _docs(spark)
     labels = DD.delete_aware_components(docs, THRESH)
-    store = str(tmp_path / "label_store")
-    labels.repartition(8).write.parquet(store)
+    root = str(tmp_path / "root")
+    PB.publish_version(root, 1, {"label_store": labels.repartition(8)})
     expected = sorted(
         (r.doc_id, r.component, r.csize) for r in labels.collect()
     )
-    audit = DD.vacuum_parquet_store(spark, store)
+    audit = DD.vacuum_parquet_store(spark, root, {"label_store": ()})["label_store"]
     assert audit["files_after"] == 1
     assert audit["rows_after"] == audit["rows_before"]
-    back = spark.read.parquet(store)
+    back = spark.read.parquet(PB.live_dir(root, "label_store"))
     assert sorted((r.doc_id, r.component, r.csize) for r in back.collect()) == expected
 
 
@@ -125,13 +129,13 @@ def test_triggered_vacuum_fires_selectively_and_matches(spark, tmp_path):
     os.makedirs(stage)
     out = DD.triggered_vacuum_refresh(spark, docs, THRESH, stage_dir=stage)
 
-    sig_files = glob.glob(os.path.join(stage, "sig_store", "*.parquet"))
-    pair_files = glob.glob(os.path.join(stage, "pair_store", "*.parquet"))
+    sig_files = glob.glob(os.path.join(PB.live_dir(stage, "sig_store"), "*.parquet"))
+    pair_files = glob.glob(os.path.join(PB.live_dir(stage, "pair_store"), "*.parquet"))
     assert len(sig_files) == 1, "signature store should have fired + compacted"
     assert len(pair_files) == 8, "pair store should have stayed accreted"
     # the unvacuumed pair store still physically holds dead rows...
     dead_kept = (
-        spark.read.parquet(os.path.join(stage, "pair_store"))
+        spark.read.parquet(PB.live_dir(stage, "pair_store"))
         .filter(DD._incr_deleted_flag("doc_a") | DD._incr_deleted_flag("doc_b"))
         .count()
     )
@@ -159,7 +163,7 @@ def test_scd2_gdpr_erase_physically_removes_user_history(spark, tmp_path):
     n_erased = erased.count()
     assert n_erased > 0  # the fixture genuinely erases someone
     out = Q.scd2_gdpr_erase(spark, ev, stage_dir=str(tmp_path))
-    store_dir = str(tmp_path / "scd2_store")
+    store_dir = PB.live_dir(str(tmp_path), "scd2_store")
     # compaction: the 8-file accretion rewrote to the target (1 file)
     assert _n_files(store_dir) == 1
     # physical erasure: the raw store bytes hold no erased-user rows
@@ -202,7 +206,7 @@ def test_scd2_horizon_compaction_prunes_and_serves(spark, tmp_path):
         ).alias("hz")
     ).collect()[0]["hz"]
     out = Q.scd2_horizon_compact(spark, ev, stage_dir=str(tmp_path))
-    store_dir = str(tmp_path / "scd2_store")
+    store_dir = PB.live_dir(str(tmp_path), "scd2_store")
     raw = spark.read.parquet(store_dir)
     # pruning is real on this fixture AND physical in the bytes
     full_hist = Q._scd2_history(ev.crossJoin(

@@ -1,75 +1,81 @@
 #!/usr/bin/env python
-"""Interleaved same-session A/B for a module rewrite (rounds 11-12).
+"""Interleaved same-session A/B of two checkouts of the engine.
 
-Single-session benchmark numbers on this box swing up to 2x (cold
+Single-session benchmark numbers on a shared box swing up to 2x (cold
 codegen, page cache, checkpoint first-materialization), so a plain
 before/after pair of runs cannot decide a 10-25% question.  This tool
-alternates VARIANTS of one module inside ONE JVM/session (file swap +
-importlib.reload), N reps each, and reports per-query medians — drift
-affects both variants equally, so the sign of the difference is
-trustworthy.  Round 11 used it to adjudicate the _attributed_delta_counts
-rewrite (kept: two-join adjacency attach; rejected: exploded-probe +
-regroup, 10-24% slower); round 12 uses it for the stream-handler
-checkpoint question (VERDICT r11 #1) and the graph/IVM rewrites.
+runs both VARIANTS of the package inside ONE JVM/session, N reps each,
+alternating which variant goes first, and reports per-query medians —
+drift affects both variants equally, so the sign of the difference is
+trustworthy.
 
 Usage:
-    python tools/ab_interleaved.py <module> <old_path> <new_path> \
-        <qname> [<qname> ...] [--reps N]
+    python tools/ab_interleaved.py <old_root> <qname> [<qname> ...] \
+        [--new-root DIR] [--reps N] [--sf DIR]
 
-<module> is the dotted module under bigdatamining_graduate_spark, e.g.
-``operators.graph`` or ``streaming.jobs``.  The tool leaves the NEW
-variant in place on exit.  On every swap the whole package is imported
-afresh (every loaded ``bigdatamining_graduate_spark`` module is dropped
-and ``plans.queries`` re-imported), so a module that bound a swapped
-symbol with ``from X import f`` binds the new variant too.
+<old_root> is a second checkout of the repository holding the old
+variant — a ``git worktree`` of the parent commit, or the parent
+unpacked with ``git archive HEAD~1 | tar -x -C DIR``; ``--new-root``
+defaults to the checkout this tool lives in.  A change may span any
+number of modules, and the tool never edits either tree.  On every
+swap the other root leaves ``sys.path``, this root goes first, and every
+loaded ``bigdatamining_graduate_spark`` module is dropped and
+``plans.queries`` re-imported, so each variant runs only its own code
+in this Python process.
+
+Python UDF workers import from the working tree (the directory the tool
+is started from), not from the variant's root: code that runs inside a
+Python/pandas UDF is the same in both variants, so a change confined to
+UDF bodies cannot be A/B'd this way.
+
+An A/A run (both roots at the same commit) gives the noise floor.
 """
 import argparse
 import importlib
-import importlib.util
 import json
 import os
-import shutil
+import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from bigdatamining_graduate_spark.session import get_spark  # noqa: E402
-
 PKG = "bigdatamining_graduate_spark"
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def fresh_package():
-    """Drop every loaded package module and import ``plans.queries``
+def fresh_package(root: str, roots: set[str]):
+    """Put ``root`` first on ``sys.path`` with no other of ``roots`` on
+    it, drop every loaded package module and import ``plans.queries``
     (and with it the package) again; returns (queries, checkpoints)."""
+    root = os.path.realpath(root)
+    sys.path[:] = [p for p in sys.path if os.path.realpath(p or ".") not in roots]
+    sys.path.insert(0, root)
+    importlib.invalidate_caches()
     for name in [m for m in sys.modules if m == PKG or m.startswith(PKG + ".")]:
         del sys.modules[name]
-    return (
-        importlib.import_module(f"{PKG}.plans.queries"),
-        importlib.import_module(f"{PKG}.checkpoints"),
-    )
+    queries = importlib.import_module(f"{PKG}.plans.queries")
+    if not os.path.realpath(queries.__file__).startswith(root + os.sep):
+        raise RuntimeError(f"{queries.__file__} was not imported from {root}")
+    return queries, importlib.import_module(f"{PKG}.checkpoints")
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("module")
-    ap.add_argument("old_path")
-    ap.add_argument("new_path")
+    ap.add_argument("old_root")
     ap.add_argument("names", nargs="+")
+    ap.add_argument("--new-root", default=HERE)
     ap.add_argument("--reps", type=int, default=4)
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    spark = get_spark(
+    variants = {"old": os.path.realpath(args.old_root), "new": os.path.realpath(args.new_root)}
+    roots = set(variants.values())
+    QM, CK = fresh_package(variants["new"], roots)
+    spark = importlib.import_module(f"{PKG}.session").get_spark(
         app_name="ab-interleaved",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    target_path = importlib.import_module(f"{PKG}.{args.module}").__file__
-    variants = {"old": args.old_path, "new": args.new_path}
-
-    QM, CK = fresh_package()
     res = {v: {n: [] for n in args.names} for v in variants}
     # warmup once (smallest fixture, not measured)
     QM.QUERIES["q01_pricing_summary"](spark, "/root/testdata/sf0.001").write.format(
@@ -77,14 +83,9 @@ def main() -> None:
     ).mode("overwrite").save()
     CK.release_checkpoints()
     for rep in range(args.reps):
-        for v, src in variants.items():
-            shutil.copy(src, target_path)
-            # a same-size variant copied within the same second would
-            # otherwise pass the bytecode cache's mtime+size check
-            pyc = importlib.util.cache_from_source(target_path)
-            if os.path.exists(pyc):
-                os.remove(pyc)
-            QM, CK = fresh_package()
+        order = ("old", "new") if rep % 2 == 0 else ("new", "old")
+        for v in order:
+            QM, CK = fresh_package(variants[v], roots)
             for n in args.names:
                 spark.sparkContext.setJobDescription(f"ab[{v}] rep{rep}: {n}")
                 t0 = time.perf_counter()
@@ -94,12 +95,8 @@ def main() -> None:
                 dt = time.perf_counter() - t0
                 CK.release_checkpoints()
                 res[v][n].append(round(dt, 2))
-    shutil.copy(args.new_path, target_path)
-    out = {
-        v: {n: sorted(ts)[len(ts) // 2] for n, ts in d.items()}
-        for v, d in res.items()
-    }
-    print(json.dumps({"medians": out, "raw": res}))
+    out = {v: {n: statistics.median(ts) for n, ts in d.items()} for v, d in res.items()}
+    print(json.dumps({"roots": variants, "medians": out, "raw": res}))
 
 
 if __name__ == "__main__":

@@ -95,7 +95,7 @@ NOTES = {
     "q224_lsh_rerank_topk": "LSH bucket equi-join + exact rerank window",
     "q225_bloom_prefilter": "32-row bloom broadcast, 4 probes/user",
     "q226_prefixspan_patterns": "PrefixSpan fit over (user,day) seqs",
-    "q249_ivf_retrain_refresh": "drift-triggered refit + rename-swap",
+    "q249_ivf_retrain_refresh": "drift-triggered refit + version commit",
     "q250_triangle_store_vacuum": "weighted-edge GC rewrite + refresh",
     "q251_full_vocab_bm25": "token-IN pushed to range-clustered store",
     "q252_incremental_phash_pairs": "batch-only fingerprint + chunk join",
@@ -107,7 +107,7 @@ NOTES = {
     "q258_delete_aware_agg_view": "decimal retraction + bounded max re-scan",
     "q259_upsert_aware_agg_view": "retract old + add new, counts conserved",
     "q260_stream_agg_view": "partials per trigger, combine-on-read",
-    "q261_agg_view_vacuum": "retraction partials netted, rename-swap",
+    "q261_agg_view_vacuum": "retraction partials netted, version commit",
     "q262_scd2_incremental_merge": "seed-from-current-row window merge",
     "q263_derived_quarterly_view": "monthly->quarterly partial re-combine",
     "q264_stream_scd2_merge": "chained store_v{bid} functional merges",
@@ -118,7 +118,7 @@ NOTES = {
     "q270_upsert_aware_triangles": "one-pass support net, 2 delta kernels",
     "q271_atomic_cross_store_publish": "2-store refresh, 1 pointer flip",
     "q272_published_version_diff": "v1 vs v2 store join, no corpus access",
-    "q273_scd2_horizon_compaction": "retention filter + swap + merge",
+    "q273_scd2_horizon_compaction": "retention filter + version commit + merge",
     "q274_maintained_quarterly_view": "merge + lattice re-derivation chained",
     "q275_stream_published_store": "3 per-trigger pointer commits + serve",
     "q276_publish_version_gc": "v3 publish, retain-2 GC, pointer read",
