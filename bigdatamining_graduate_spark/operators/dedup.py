@@ -27,7 +27,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..checkpoints import local_checkpoint, release_previous
+from ..checkpoints import fixpoint, local_checkpoint
 from ..functions import text as TX
 from ..functions.hashing import (
     affine_minhash_exprs,
@@ -314,6 +314,30 @@ def _band_cols(j: int) -> list[str]:
     return [f"mh{i}" for i in range(j * LSH_ROWS, (j + 1) * LSH_ROWS)]
 
 
+def _minhash_mins_sql() -> str:
+    """``min(h_0) AS mh0, ...`` over ``gram`` — :func:`minhash_signatures`."""
+    mixed = affine_minhash_exprs_sql(portable_hash64_sql("gram"), MINHASH_K)
+    return ",\n        ".join(f"min({mixed[i]}) AS mh{i}" for i in range(MINHASH_K))
+
+
+def _band_union_sql(*extra_cols: str) -> str:
+    """One (doc_id[, extra...], band, bh) SELECT per band over ``sig``,
+    UNION ALL'd — :func:`signature_bands`."""
+    lead = "".join(f"{c}, " for c in extra_cols)
+    return "\n      UNION ALL ".join(
+        f"SELECT doc_id, {lead}{j} AS band,"
+        f" md5(concat_ws('|', {', '.join(_band_cols(j))})) AS bh FROM sig"
+        for j in range(LSH_BANDS)
+    )
+
+
+def _agree_sql() -> str:
+    """How many of the K signature slots ``sa`` and ``sb`` share."""
+    return " + ".join(
+        f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)" for i in range(MINHASH_K)
+    )
+
+
 def signature_bands(sig: DataFrame, *extra_cols: str) -> DataFrame:
     """(doc_id[, extra...], band, bh): one row per (doc, band) with the
     band's md5 bucket hash — the LSH bucket key every pair generator
@@ -384,17 +408,9 @@ def lsh_candidate_pairs(sig: DataFrame, threshold: float) -> DataFrame:
 
 
 def minhash_lsh_pairs_sql(threshold: float) -> str:
-    mixed = affine_minhash_exprs_sql(portable_hash64_sql("gram"), MINHASH_K)
-    mins = ",\n        ".join(
-        f"min({mixed[i]}) AS mh{i}" for i in range(MINHASH_K)
-    )
-    band_selects = "\n      UNION ALL ".join(
-        f"SELECT doc_id, {j} AS band, md5(concat_ws('|', {', '.join(_band_cols(j))})) AS bh FROM sig"
-        for j in range(LSH_BANDS)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)" for i in range(MINHASH_K)
-    )
+    mins = _minhash_mins_sql()
+    band_selects = _band_union_sql()
+    agree = _agree_sql()
     return f"""
     WITH grams AS ({doc_grams_sql()}),
     sig AS (SELECT doc_id, {mins} FROM grams GROUP BY doc_id),
@@ -583,23 +599,13 @@ def filter_pairs_by_signature(
 
 def incremental_lsh_pairs_sql(threshold: float) -> str:
     """DuckDB twin of :func:`incremental_lsh_pairs` (in-plan store)."""
-    mixed = affine_minhash_exprs_sql(portable_hash64_sql("gram"), MINHASH_K)
-    mins = ",\n        ".join(
-        f"min({mixed[i]}) AS mh{i}" for i in range(MINHASH_K)
-    )
+    mins = _minhash_mins_sql()
     flag = (
         f"({portable_hash64_sql('cast(doc_id as varchar)', 'ilsh')}"
         f" % {INCR_LSH_BUCKETS}) >= {INCR_LSH_HIST}"
     )
-    band_selects = "\n      UNION ALL ".join(
-        f"SELECT doc_id, is_delta, {j} AS band,"
-        f" md5(concat_ws('|', {', '.join(_band_cols(j))})) AS bh FROM sig"
-        for j in range(LSH_BANDS)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)"
-        for i in range(MINHASH_K)
-    )
+    band_selects = _band_union_sql("is_delta")
+    agree = _agree_sql()
     return f"""
     WITH grams AS ({doc_grams_sql()}),
     sig AS (
@@ -818,19 +824,9 @@ def upsert_aware_lsh_pairs_sql(threshold: float) -> str:
         f"SELECT doc_id, CASE WHEN {flag('doc_id')} THEN text ||"
         f" '{INCR_UPD_SUFFIX}' ELSE text END AS text FROM documents"
     )
-    mixed = affine_minhash_exprs_sql(portable_hash64_sql("gram"), MINHASH_K)
-    mins = ",\n        ".join(
-        f"min({mixed[i]}) AS mh{i}" for i in range(MINHASH_K)
-    )
-    band_selects = "\n      UNION ALL ".join(
-        f"SELECT doc_id, {j} AS band,"
-        f" md5(concat_ws('|', {', '.join(_band_cols(j))})) AS bh FROM sig"
-        for j in range(LSH_BANDS)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)"
-        for i in range(MINHASH_K)
-    )
+    mins = _minhash_mins_sql()
+    band_selects = _band_union_sql()
+    agree = _agree_sql()
     return f"""
     WITH t1 AS ({t1_docs}),
     grams AS ({doc_grams_sql(table="t1")}),
@@ -1236,10 +1232,11 @@ def neardup_components(
     the graph diameter — near-dup clusters are small and dense, so a
     handful of rounds. Scale properties: edges are materialized ONCE
     (``localCheckpoint``; swap for reliable ``checkpoint`` on a cluster)
-    so the expensive pair pipeline never re-runs inside the loop; each
-    round's plan is constant-size (labels re-checkpointed); convergence
-    is detected with a single scalar ``sum(comp)`` action — the label sum
-    strictly decreases until fixpoint, so no change-join is needed. This
+    so the expensive pair pipeline never re-runs inside the loop; the
+    rounds run on ``checkpoints.fixpoint`` with ``sum(comp)`` as measure,
+    so each round is one scalar job that also materializes that round's
+    lazily checkpointed labels — the label sum strictly decreases until
+    the fixpoint, so no change-join is needed. This
     is the standard MapReduce-CC shape (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC'14 — hash-to-min variant).
     """
@@ -1256,7 +1253,7 @@ def neardup_components(
     # neighbour) comes straight off the edge list as one aggregation, so
     # diameter-1 components (the common dup-cluster shape) need only the
     # single confirming loop round.
-    labels = local_checkpoint(
+    labels = (
         edges.groupBy("src")
         .agg(F.min("dst").alias("mn"))
         .select(
@@ -1264,29 +1261,21 @@ def neardup_components(
             F.least(F.col("src"), F.col("mn")).alias("comp"),
         )
     )
-    prev_sum = labels.agg(F.sum("comp")).collect()[0][0]
-    for _ in range(max_rounds):
+
+    def relabel(labels: DataFrame, _: int) -> DataFrame:
         nb_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")
             .agg(F.min("comp").alias("nb_comp"))
         )
-        prev_labels = labels
-        labels = local_checkpoint(
-            labels.join(nb_min, labels.node == nb_min.src, "left")
-            .select(
-                "node",
-                F.least(F.col("comp"), F.coalesce("nb_comp", "comp")).alias("comp"),
-            )
+        return labels.join(nb_min, labels.node == nb_min.src, "left").select(
+            "node",
+            F.least(F.col("comp"), F.coalesce("nb_comp", "comp")).alias("comp"),
         )
-        # round i's blocks are dead once round i+1 materialized (eager)
-        release_previous(prev_labels)
-        cur_sum = labels.agg(F.sum("comp")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError(f"neardup_components: no fixpoint in {max_rounds} rounds")
+
+    labels = fixpoint(
+        relabel, labels, max_rounds, measure=lambda l: l.agg(F.sum("comp")).first()[0]
+    )
     clustered = labels.select(
         F.col("node").alias(id_col),
         F.col("comp").alias("component"),
@@ -1647,10 +1636,7 @@ def vacuumed_refresh_pairs_sql(threshold: float) -> str:
     """DuckDB twin: the full incremental-LSH recompute over the
     REMAINING corpus (documents minus the deletion slice) — the
     identity the vacuumed-store refresh must reproduce."""
-    mixed = affine_minhash_exprs_sql(portable_hash64_sql("gram"), MINHASH_K)
-    mins = ",\n        ".join(
-        f"min({mixed[i]}) AS mh{i}" for i in range(MINHASH_K)
-    )
+    mins = _minhash_mins_sql()
     delta = (
         f"({portable_hash64_sql('cast(doc_id as varchar)', 'ilsh')}"
         f" % {INCR_LSH_BUCKETS}) >= {INCR_LSH_HIST}"
@@ -1659,15 +1645,8 @@ def vacuumed_refresh_pairs_sql(threshold: float) -> str:
         f"({portable_hash64_sql('cast(doc_id as varchar)', 'idel')}"
         f" % {INCR_DEL_BUCKETS}) = 0"
     )
-    band_selects = "\n      UNION ALL ".join(
-        f"SELECT doc_id, is_delta, {j} AS band,"
-        f" md5(concat_ws('|', {', '.join(_band_cols(j))})) AS bh FROM sig"
-        for j in range(LSH_BANDS)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)"
-        for i in range(MINHASH_K)
-    )
+    band_selects = _band_union_sql("is_delta")
+    agree = _agree_sql()
     return f"""
     WITH remaining AS (
       SELECT doc_id, text FROM documents WHERE NOT {deleted}
@@ -1886,10 +1865,7 @@ def published_version_diff_sql(threshold: float) -> str:
     """DuckDB twin: the t0 pair set with each pair labeled by whether
     the deletion cycle killed it — the logical diff the physical
     version directories must reproduce."""
-    mixed = affine_minhash_exprs_sql(portable_hash64_sql("gram"), MINHASH_K)
-    mins = ",\n        ".join(
-        f"min({mixed[i]}) AS mh{i}" for i in range(MINHASH_K)
-    )
+    mins = _minhash_mins_sql()
     delta = (
         f"(({portable_hash64_sql('cast(doc_id as varchar)', 'ilsh')}"
         f" % {INCR_LSH_BUCKETS}) >= {INCR_LSH_HIST})"
@@ -1901,15 +1877,8 @@ def published_version_diff_sql(threshold: float) -> str:
             f" % {INCR_DEL_BUCKETS}) = 0)"
         )
 
-    band_selects = "\n      UNION ALL ".join(
-        f"SELECT doc_id, {j} AS band,"
-        f" md5(concat_ws('|', {', '.join(_band_cols(j))})) AS bh FROM sig"
-        for j in range(LSH_BANDS)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)"
-        for i in range(MINHASH_K)
-    )
+    band_selects = _band_union_sql()
+    agree = _agree_sql()
     return f"""
     WITH t0 AS (SELECT doc_id, text FROM documents WHERE NOT {delta}),
     grams AS ({doc_grams_sql(table="t0")}),

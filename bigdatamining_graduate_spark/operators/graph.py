@@ -18,9 +18,11 @@ engine. Two design decisions carry the scale and correctness story:
   of (order, part) ON the order key — an equi-join whose fanout is
   C(basket size, 2), bounded by the basket, never an all-pairs join.
 
-Iteration shape mirrors the CC loop: edges materialized once
-(``localCheckpoint``), each round is one join + one aggregation with a
-constant-size plan, ranks re-checkpointed per round. The oracle unrolls
+Iteration shape: edges materialized once (``localCheckpoint``), each
+round one join + one aggregation, and the rounds driven by
+``checkpoints.fixpoint``, which cuts lineage only when the unrolled plan
+grows past its node bound — every loop in this module (and the CC loop
+in ``dedup``) shares that one policy. The oracle unrolls
 the same recurrence as K chained CTEs (aggregates are not allowed in a
 recursive CTE member, and K is a fixed constant anyway).
 """
@@ -30,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoints import local_checkpoint, release_previous
+from ..checkpoints import fixpoint, local_checkpoint
 
 DAMP_NUM = 85          # damping 0.85 as an exact fraction
 DAMP_DEN = 100
@@ -107,43 +109,46 @@ def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     return edges.join(deg, "src")
 
 
-def integer_pagerank(
-    lineitem: DataFrame, n_iter: int = N_ITER, ckpt_every: int = 2
-) -> DataFrame:
+def _support_edges(lineitem: DataFrame, min_support: int) -> DataFrame:
+    """(src, dst) both directions of every co-purchase pair seen in >=
+    ``min_support`` orders — the graph LPA, k-core and BFS iterate over.
+    The support floor is the q110 density dial: on the raw catalog-dense
+    graph LPA collapses to one global community; edges that co-occur in
+    >= min_support orders carry actual affinity."""
+    pairs = (
+        _basket_pairs(_kp(lineitem))
+        .groupBy("pa", "pb")
+        .agg(F.count("*").alias("w"))
+        .filter(F.col("w") >= min_support)
+    )
+    return pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionByName(
+        pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
+    )
+
+
+def integer_pagerank(lineitem: DataFrame, n_iter: int = N_ITER) -> DataFrame:
     """(node, rank_mass) after ``n_iter`` exact-integer PageRank rounds
     over the co-purchase graph. The symmetric edge list means every node
-    has in- and out-edges, so no dangling-mass handling is needed.
-
-    ``ckpt_every`` sets the materialization cadence: checkpointing every
-    round pays a full write+read of the rank table per iteration, while
-    never checkpointing lets the plan grow unboundedly (analysis/codegen
-    blow-up). Two rounds per checkpoint is the measured sweet spot
-    (sf0.1 median-of-3: 8.4 s -> 5.6 s vs every-round); the cadence
-    cannot change values — each round's integer arithmetic is exact, so
-    only WHERE the pipeline is cut varies."""
+    has in- and out-edges, so no dangling-mass handling is needed. Each
+    round's integer arithmetic is exact, so where ``fixpoint`` cuts the
+    lineage cannot change values."""
     edges = local_checkpoint(copurchase_edges(lineitem))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     n = nodes.count()
     base = (DAMP_DEN - DAMP_NUM) * TOTAL_MASS // (DAMP_DEN * n)
-    ranks = local_checkpoint(
-        nodes.select("node", F.lit(TOTAL_MASS // n).cast("long").alias("r"))
-    )
-    prev_ckpt = ranks
     contrib = F.expr(f"({DAMP_NUM} * r) div ({DAMP_DEN} * deg)")
-    for i in range(n_iter):
-        ranks = (
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
+        return (
             edges.join(ranks, edges.src == ranks.node)
             .select("dst", contrib.alias("c"))
             .groupBy("dst")
             .agg((F.lit(base) + F.sum("c")).cast("long").alias("r"))
             .select(F.col("dst").alias("node"), "r")
         )
-        if (i + 1) % ckpt_every == 0 or i == n_iter - 1:
-            ranks = local_checkpoint(ranks)
-            # the prior checkpoint's blocks are dead once this one
-            # materialized (eager) — free them instead of waiting for GC
-            release_previous(prev_ckpt)
-            prev_ckpt = ranks
+
+    ranks = nodes.select("node", F.lit(TOTAL_MASS // n).cast("long").alias("r"))
+    ranks = fixpoint(step, ranks, n_iter)
     return ranks.select("node", F.col("r").alias("rank_mass"))
 
 
@@ -380,40 +385,27 @@ def label_propagation(
     Shape per round: one equi-join (edges ⋈ labels on src) + one
     (dst, label) count + one per-dst argmax — ``max(struct(c, -lbl))``
     picks highest count then smallest label without a window sort.
-    Edges are materialized once; labels re-checkpoint per round to keep
-    the plan constant-size (the CC/PageRank loop discipline)."""
-    # support-thresholded pairs (the q110 density dial): on the raw
-    # catalog-dense graph LPA collapses to one global community; edges
-    # that co-occur in >= min_support orders carry actual affinity
-    pairs = (
-        _basket_pairs(_kp(lineitem))
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= min_support)
-    )
-    edges = local_checkpoint(
-        pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionByName(
-            pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-        )
-    )
+    Edges are materialized once; the rounds run on ``fixpoint``, whose
+    plan-size bound leaves the default three rounds as one uncut plan."""
+    edges = local_checkpoint(_support_edges(lineitem, min_support))
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
-    prev_ckpt = None
-    for _ in range(n_rounds):
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
         votes = (
             edges.join(labels, edges.src == labels.node)
             .select("dst", "lbl")
             .groupBy("dst", "lbl")
             .agg(F.count("*").alias("c"))
         )
-        labels = local_checkpoint(
+        return (
             votes.groupBy("dst")
             .agg(F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("nl"))).alias("m"))
             .select(F.col("dst").alias("node"), (-F.col("m.nl")).alias("lbl"))
         )
-        release_previous(prev_ckpt)
-        prev_ckpt = labels
+
+    labels = fixpoint(step, labels, n_rounds)
     return labels.select("node", F.col("lbl").alias("community"))
 
 
@@ -475,41 +467,27 @@ def kcore(
 
     SYNCHRONOUS peeling: each round removes ALL nodes whose current
     degree < k simultaneously, so the fixed point is a pure function of
-    the graph (sequential peeling is order-dependent). The loop runs to
-    convergence with a scalar count per round (the CC/PageRank loop
-    discipline — the only driver-side data is one integer) and ASSERTS
-    convergence within ``max_rounds``; the DuckDB twin unrolls exactly
-    ``max_rounds`` stages, which is the same fixed point because peeling
-    rounds after convergence are no-ops. Each round is two hash-aggs +
-    one semi-join on a shrinking edge list, checkpointed."""
-    pairs = (
-        _basket_pairs(_kp(lineitem))
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= min_support)
-    )
-    edges = local_checkpoint(
-        pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionByName(
-            pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
+    the graph (sequential peeling is order-dependent). The rounds run on
+    ``fixpoint`` with the edge count as measure: peel until one peel
+    leaves the count unchanged (the only driver-side data is one integer
+    per round), raising if that takes more than ``max_rounds`` peels; the
+    DuckDB twin unrolls exactly ``max_rounds`` stages, which is the same
+    fixed point because peeling rounds after convergence are no-ops.
+    Each round is one hash-agg + two semi-joins on a shrinking edge
+    list."""
+    edges = _support_edges(lineitem, min_support)
+
+    def peel(edges: DataFrame, _: int) -> DataFrame:
+        keep = (
+            edges.groupBy("src")
+            .agg(F.count("*").alias("deg"))
+            .filter(F.col("deg") >= k)
+            .select("src")
         )
-    )
-    for _ in range(max_rounds):
-        deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-        keep = deg.filter(F.col("deg") >= k).select("src")
-        n_drop = deg.count() - keep.count()  # scalar convergence check
-        if n_drop == 0:
-            break
         kd = keep.select(F.col("src").alias("dst"))
-        prev_edges = edges
-        edges = local_checkpoint(
-            edges.join(keep, "src", "left_semi").join(kd, "dst", "left_semi")
-        )
-        release_previous(prev_edges)
-    else:
-        raise RuntimeError(
-            f"k-core did not converge within {max_rounds} rounds — raise "
-            "KCORE_MAX_ROUNDS (and regenerate the oracle) for this graph"
-        )
+        return edges.join(keep, "src", "left_semi").join(kd, "dst", "left_semi")
+
+    edges = fixpoint(peel, edges, max_rounds, measure=lambda e: e.count())
     return (
         edges.groupBy("src")
         .agg(F.count("*").alias("core_deg"))
@@ -572,8 +550,10 @@ def bfs_hops(
     inexpressible in one Spark SQL statement (no recursive CTE), so the
     engine's answer is the Pregel-style frontier loop: each level is one
     equi-join (edges x frontier) + DISTINCT + one LEFT-ANTI join against
-    the visited set, checkpointed per level (the CC/PageRank loop
-    discipline — constant-size plan, no lineage growth).
+    the visited set. The state is the visited set alone, hop included;
+    level ``h`` expands the frontier ``hop = h - 1``. Each level
+    references the visited set three times, so the plan triples per hop
+    and ``fixpoint`` cuts it once it passes the node bound.
 
     The seed is the smallest node id IN the edge set — computed from the
     data (a broadcast 1-row aggregate), never hard-coded, so every SF
@@ -583,50 +563,33 @@ def bfs_hops(
     Scale: the anti-join visited set grows to at most |V| keys, and each
     level touches only frontier-incident edges — the standard
     hop-bounded BFS on a 1000-executor graph; ``max_hops`` is the
-    latency dial (hop-k neighborhoods, not whole-graph closure).
-    Early-exits on an empty frontier via a scalar count (the only
-    driver-side data); the unrolled DuckDB twin matches because empty
-    levels stay empty.
+    latency dial (hop-k neighborhoods, not whole-graph closure). All
+    ``max_hops`` levels are always planned, with no per-level count: an
+    empty frontier yields empty levels after it, which the unrolled
+    DuckDB twin also relies on.
 
     Reference parity: the reference's graph homework (hw5) stops at
     connected components; hop-distance completes the traversal layer
     next to components (q71) / PageRank (q107) / triangles (q110) /
     communities (q169) / cores (q170).
     """
-    pairs = (
-        _basket_pairs(_kp(lineitem))
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= min_support)
-    )
-    edges = local_checkpoint(
-        pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionByName(
-            pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-        )
-    )
+    edges = local_checkpoint(_support_edges(lineitem, min_support))
     seed = edges.agg(F.min("src").alias("node"))
-    visited = local_checkpoint(seed.select("node", F.lit(0).alias("hop")))
-    frontier = visited.select("node")
-    for h in range(1, max_hops + 1):
-        nxt = local_checkpoint(
-            edges.join(
-                frontier.withColumnRenamed("node", "f_node"),
-                edges.src == F.col("f_node"),
-            )
+
+    def expand(visited: DataFrame, h: int) -> DataFrame:
+        frontier = visited.filter(F.col("hop") == h - 1).select(
+            F.col("node").alias("f_node")
+        )
+        nxt = (
+            edges.join(frontier, edges.src == F.col("f_node"))
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .select("node", F.lit(h).alias("hop"))
         )
-        if nxt.count() == 0:  # scalar convergence check only
-            break
-        prev_visited = visited
-        visited = local_checkpoint(visited.unionByName(nxt))
-        # the union checkpoint subsumes the old visited set; the frontier
-        # (= nxt) stays live for the next round's expansion join
-        release_previous(prev_visited)
-        frontier = nxt.select("node")
-    return visited
+        return visited.unionByName(nxt)
+
+    return fixpoint(expand, seed.select("node", F.lit(0).alias("hop")), max_hops)
 
 
 def bfs_hops_sql(

@@ -99,3 +99,74 @@ def test_scoped_release_spares_callers_blocks(spark):
     # releasing an empty delta is a no-op
     assert CK.release_new_since(CK.tracked_ids()) == 0
     CK.release_checkpoints()
+
+
+def test_fixpoint_linear_recurrence_runs_uncut(spark):
+    """A plan that grows by one node a round stays one uncut plan below
+    the bound: no checkpoint is taken and the rounds compose."""
+    CK.release_checkpoints()
+    out = CK.fixpoint(
+        lambda s, i: s.select((F.col("id") + i).alias("id")), spark.range(5), 4
+    )
+    assert CK.tracked_count() == 0
+    assert CK._plan_nodes(out) <= CK.PLAN_NODE_BOUND
+    assert sorted(r.id for r in out.collect()) == [10, 11, 12, 13, 14]
+
+
+def test_fixpoint_cuts_a_three_reference_recurrence(spark):
+    """BFS-shaped: each round references the state three times, so the
+    uncut plan triples per round; the returned state's plan stays under
+    the bound, at most two loop checkpoints are ever held, and none are
+    left after release."""
+    CK.release_checkpoints()
+    held = []
+
+    def step(s, i):
+        held.append(CK.tracked_count())
+        grown = s.filter(F.col("hop") == i - 1).select(
+            (F.col("node") + 1).alias("node"), F.lit(i).alias("hop")
+        )
+        new = grown.join(s.select("node"), "node", "left_anti")
+        return s.unionByName(new)
+
+    start = spark.range(1).select(F.col("id").alias("node"), F.lit(0).alias("hop"))
+    out = CK.fixpoint(step, start, 8)
+    assert CK._plan_nodes(out) <= CK.PLAN_NODE_BOUND
+    assert CK.tracked_count() >= 1  # the loop did cut
+    assert max(held) <= 2
+    assert sorted((r.node, r.hop) for r in out.collect()) == [(h, h) for h in range(9)]
+    CK.release_checkpoints()
+    assert _n_persistent(spark) == 0
+
+
+def test_fixpoint_measure_stops_when_it_repeats(spark):
+    """Halving 0..7 shrinks the distinct count 8 -> 4 -> 2 -> 1 -> 1: the
+    loop stops on round 4, the first that repeats the count, holding at
+    most two loop checkpoints while it runs."""
+    CK.release_checkpoints()
+    rounds, held = [], []
+
+    def halve(s, i):
+        rounds.append(i)
+        return s.select((F.col("id") / 2).cast("long").alias("id")).distinct()
+
+    def count(s):
+        held.append(CK.tracked_count())
+        return s.count()
+
+    out = CK.fixpoint(halve, spark.range(8), 10, measure=count)
+    assert rounds == [1, 2, 3, 4]
+    assert [r.id for r in out.collect()] == [0]
+    assert max(held) <= 2
+    assert CK.tracked_count() == 1  # only the returned state
+    CK.release_checkpoints()
+    assert _n_persistent(spark) == 0
+
+
+def test_fixpoint_measure_raises_when_rounds_run_out(spark):
+    CK.release_checkpoints()
+    halve = lambda s, i: s.select((F.col("id") / 2).cast("long").alias("id")).distinct()
+    with pytest.raises(RuntimeError, match="after 2 rounds"):
+        CK.fixpoint(halve, spark.range(8), 2, measure=lambda s: s.count())
+    CK.release_checkpoints()
+    assert _n_persistent(spark) == 0

@@ -24,3 +24,10 @@ def test_citations_are_actually_collected():
     assert "hw3/hw3.py" in cites
     assert "FinalProject/BDM_Final.py" in cites
     assert len(cites) >= 10
+
+
+def test_fabricated_citation_still_fails():
+    # spelled in two pieces so this file does not itself cite it
+    fake = "hw4/" + "BDM_HW4.py"
+    assert not check_citations.resolves(fake)
+    assert check_citations.resolves("hw3/hw3.py")

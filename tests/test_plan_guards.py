@@ -11,7 +11,7 @@ import re
 
 from bigdatamining_graduate_spark.plans.queries import QUERIES
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, SWEEP_PLANS, build_query
 
 #: queries whose nested-loop/cartesian is intentional and documented
 ALLOWED = {
@@ -64,21 +64,18 @@ ALLOWED = {
 }
 
 
-_PLAN_CACHE: dict[str, str] = {}
+def _formatted(spark, name: str) -> str:
+    """Formatted physical plan of one registered query, explained ONCE
+    per test session (recorded by the registry sweep, see ``conftest``)."""
+    if name not in SWEEP_PLANS:
+        build_query(spark, name)
+    return SWEEP_PLANS[name]
 
 
 def _all_plans(spark) -> dict[str, str]:
-    """Formatted physical plan per registered query, explained ONCE per
-    test session and shared by every whole-registry guard below."""
-    if not _PLAN_CACHE:
-        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-        for name, fn in sorted(QUERIES.items()):
-            _PLAN_CACHE[name] = (
-                fn(spark, SF_SMOKE)._jdf.queryExecution().explainString(mode)
-            )
-    return _PLAN_CACHE
+    """Formatted plan per registered query, shared by every
+    whole-registry guard below."""
+    return {name: _formatted(spark, name) for name in sorted(QUERIES)}
 
 
 def test_no_accidental_cross_joins(spark):
@@ -128,12 +125,7 @@ def test_boilerplate_flagback_is_broadcast(spark):
     """q86's flag-back join (line stream x boilerplate set) must stay a
     BroadcastHashJoin — if it ever degrades to sort-merge, the widest
     relation in the plan re-shuffles (SCALE.md q86 note)."""
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    plan = (
-        QUERIES["q86_boilerplate_lines"](spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .explainString(mode)
-    )
+    plan = _formatted(spark, "q86_boilerplate_lines")
     assert "BroadcastHashJoin" in plan, plan
 
 
@@ -141,12 +133,7 @@ def test_star_join_stays_broadcast(spark):
     """q06's three dimension joins (customer→nation→region side) must all
     plan as BroadcastHashJoin — a sort-merge fallback means the fact
     table re-shuffles per dim (SCALE.md §2)."""
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    plan = (
-        QUERIES["q06_revenue_by_nation"](spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .explainString(mode)
-    )
+    plan = _formatted(spark, "q06_revenue_by_nation")
     assert plan.count("BroadcastHashJoin") >= 3, plan
     assert "SortMergeJoin" not in plan, plan
 
@@ -187,11 +174,6 @@ def test_runtime_bloom_filter_injects_on_selective_fact_join(spark):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
-
-
-def _formatted(spark, name):
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return QUERIES[name](spark, SF_SMOKE)._jdf.queryExecution().explainString(mode)
 
 
 def test_q157_is_scan_only(spark):

@@ -10,6 +10,10 @@ drift impossible to re-introduce: it extracts every ``hwN/...`` /
 and asserts each resolves under ``/root/reference/`` — or is one of the
 checkout's documented missing blobs (``/root/reference/.MISSING_LARGE_BLOBS``).
 
+Where the reference checkout is absent, citations resolve against
+``tools/reference_paths.txt``, a committed snapshot of the reference
+paths confirmed to exist; a path missing from it still fails.
+
 Run standalone (exit 1 on dangling citations) or via
 ``tests/test_citations.py`` in the normal pytest sweep.
 """
@@ -21,6 +25,7 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 REFERENCE = Path("/root/reference")
+SNAPSHOT = Path(__file__).with_name("reference_paths.txt")
 
 # A citation is a reference-relative path like hw3/hw3.py or
 # FinalProject/BDM_Final.py (extensions the reference actually contains;
@@ -64,16 +69,28 @@ def collect_citations() -> dict[str, list[str]]:
     return sites
 
 
+def snapshot_paths() -> set[str]:
+    """The committed reference path list (``#`` lines are comments)."""
+    lines = SNAPSHOT.read_text().splitlines()
+    return {ln for ln in lines if ln.strip() and not ln.startswith("#")}
+
+
+def resolves(cite: str) -> bool:
+    """Whether ``cite`` names a reference file: in the checkout when it
+    is present, else in the committed snapshot."""
+    if REFERENCE.is_dir():
+        return (REFERENCE / cite).exists()
+    return cite in snapshot_paths()
+
+
 def dangling() -> dict[str, list[str]]:
     """Citations that resolve to no file and are not documented-missing."""
     allowed_missing = missing_blobs()
-    bad: dict[str, list[str]] = {}
-    for cite, where in collect_citations().items():
-        if cite in allowed_missing:
-            continue
-        if not (REFERENCE / cite).exists():
-            bad[cite] = where
-    return bad
+    return {
+        cite: where
+        for cite, where in collect_citations().items()
+        if cite not in allowed_missing and not resolves(cite)
+    }
 
 
 def main() -> int:

@@ -19,28 +19,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdatamining_graduate_spark.session import get_spark  # noqa: E402
 
-#: streaming + iterative/model-fitting queries EXECUTE work at plan-build
-#: time (stream drains, ML fits, CC loops) — audited by their batch/loop
-#: structure elsewhere; explain() here would run the whole job.
-SKIP_PREFIXES = (
-    "q32", "q33", "q34", "q35", "q36", "q37", "q38", "q47", "q48",
-    "q57", "q65", "q67", "q71", "q76", "q78", "q84", "q89", "q90", "q91",
-    "q102", "q104", "q107", "q110", "q122", "q125", "q133", "q136", "q137",
-    "q165", "q166",  # sink round-trips: the write action runs at plan-build
-    "q167",  # bucketed-table round-trip: saveAsTable runs at plan-build
-    "q169", "q170",  # iterative LPA / k-core: rounds run at plan-build
-    "q228",  # incremental CC: base labeling + contraction loop run at plan-build
-    "q229",  # delete-aware CC: prev labeling + bounded reclose run at plan-build
-    "q230",  # streaming LSH maintenance: the stream drains at plan-build
-    "q232",  # upsert CC: two-phase reclose+contract loops run at plan-build
-    "q235",  # store vacuum: builds, vacuums, and swaps stores at plan-build
-    "q238",  # streaming IVF maintenance: the stream drains at plan-build
-    "q239",  # IVF store vacuum: builds, vacuums, and swaps stores at plan-build
-    "q245",  # streaming BM25 maintenance: the stream drains at plan-build
-    "q246",  # incremental triangles: base closure + checkpoints run at plan-build
-    "q247",  # delete-aware triangles: t0 closure + checkpoints run at plan-build
-    "q248",  # streaming triangles: the stream drains at plan-build
-)
+#: build-phase queries: explain() would run their whole job, so no row
+from gen_expected_scans import SKIP_PREFIXES  # noqa: E402
 
 
 def summarize(plan: str) -> dict[str, object]:
