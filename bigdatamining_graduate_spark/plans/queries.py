@@ -12365,8 +12365,8 @@ def q238_stream_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a replayed bootstrap rewrites byte-identical stores); every
     batch is assigned to the persisted centroids read back from the
     store, O(|batch|·k) per trigger.  Each batch's assignments land in
-    a batch-id-keyed subdirectory with mode=overwrite (the idempotent
-    sink foreachBatch's exactly-once contract requires), and the
+    one committed store version per batch id (a replayed committed
+    batch is skipped: foreachBatch's exactly-once contract), and the
     handler ASSERTS each emitted row's hash slice equals its
     micro-batch id.  The accumulated emission across the drained
     stream equals the full batch assignment under the batch-0-frozen
@@ -12697,7 +12697,7 @@ def q245_stream_incremental_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     mtime-pinned micro-batches as the streaming LSH job (salt "slsh" —
     one stream event feeds both index families), a foreachBatch
     handler appends each batch's dl rows and term postings to
-    persisted stores (batch-id-keyed overwrite subdirectories —
+    persisted stores (one committed version per batch id —
     idempotent under replay; per-row slice == batch id asserted), and
     after the drain the fixed-term query runs off the accumulated
     stores.  The DuckDB oracle is the full batch BM25 over the whole
@@ -12783,7 +12783,7 @@ def q248_stream_incremental_triangles(spark: SparkSession, sf_dir: str) -> DataF
     stores (its prefix graph's full closure + initial edge set), every
     later batch appends only its truly-new edges and emits per-node
     delta counts through the shared attribution kernel, each trigger
-    into an idempotent batch-id-keyed overwrite sink with a per-row
+    into an idempotent one-version-per-batch-id sink with a per-row
     slice==batch-id assertion.  The drained output carries the
     PER-TRIGGER breakdown (d0/d1/d2), and the DuckDB oracle recomputes
     the full q110 pipeline over the three PREFIX graphs with d_k =
@@ -12992,8 +12992,8 @@ def q255_stream_incremental_phash(spark: SparkSession, sf_dir: str) -> DataFrame
     LSH/BM25 jobs (salt "slsh" — one crawl stream feeds all index
     families), a foreachBatch handler fingerprints ONLY the arriving
     payloads, joins them against the accumulated signature store, and
-    grows both stores by one batch-id-keyed subdirectory per trigger
-    (mode=overwrite — idempotent under replay).  The handler asserts
+    grows both stores by one committed version per trigger
+    (idempotent under replay).  The handler asserts
     exactly-once emission (a pair is discovered at its LATER endpoint's
     trigger, never twice); the drained pair store must equal the full
     batch q143 recompute with first_seen provenance — exactly the
@@ -13130,8 +13130,8 @@ def q260_stream_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q257's OLAP-view maintenance run as an ACTUAL stream: lineitem
     arrives in three order-sliced micro-batches (salt "sagv"), the
     foreachBatch handler appends ONE mergeable partial-aggregate file
-    set per trigger (batch-id-keyed, mode=overwrite — idempotent under
-    replay), asserting per-trigger slice fidelity and row-count
+    set per trigger (one committed version per batch id — idempotent
+    under replay), asserting per-trigger slice fidelity and row-count
     conservation; the view is served by combine-on-read over the
     accumulated store.  The drained serve must equal the full batch
     rollup with first_seen = earliest contributing micro-batch —
@@ -13984,7 +13984,7 @@ def q271_atomic_cross_store_publish(
 ) -> DataFrame:
     """Cross-store ATOMIC PUBLISH (VERDICT r10 #6): the dependent
     sig+pair store pair refreshes under a manifest-pointer commit —
-    both new versions fully written, ONE ``os.replace`` flip, readers
+    both new versions fully written, ONE pointer flip, readers
     resolve every store through the pointer and can never observe a
     half-published refresh.  See ``sources/publish.py`` for the
     protocol and :func:`~..operators.dedup.atomic_published_refresh`

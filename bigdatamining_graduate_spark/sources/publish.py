@@ -20,6 +20,14 @@ them before it builds (:func:`begin_version`); after it, the old
 versions are garbage for :func:`gc_versions`, which never removes a
 store's live version.
 
+A staged stream's root is a publish root too: trigger ``bid`` writes
+version ``bid + 1`` of each sink it feeds and commits it only once its
+observed checks pass (``streaming/jobs.py``).  An APPEND sink holds one
+delta per committed version, so every committed version of it is live
+and it is read whole with :func:`read_committed`.  A stream root is
+therefore never passed to :func:`gc_versions`, which keeps only each
+store's newest committed version outside its window.
+
 At 100 TB the pointer file is object-store metadata (a conditional-put
 key); the data writes are the same parquet directories.  Crash points
 are pinned in ``tests/test_publish.py`` and, for every store-lifecycle
@@ -140,6 +148,20 @@ def read_version(
     schema-inference job."""
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(_version_dir(root, store, version))
+
+
+def read_committed(
+    spark: SparkSession, root: str, store: str, schema: StructType | None = None
+) -> DataFrame | None:
+    """APPEND-sink read: every committed version of ``store`` at once
+    (each is one trigger's delta, so all are live), or None before its
+    first commit.  Versions past ``CURRENT`` are never read."""
+    done = current_version(root) if os.path.exists(_pointer(root)) else -1
+    paths = [_version_dir(root, store, v) for v in versions(root, store) if v <= done]
+    if not paths:
+        return None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
 
 
 def gc_versions(root: str, retain: int = 2) -> dict:

@@ -17,7 +17,10 @@ through :func:`run_staged_stream`, whose contract is:
 * Staging: the input is sliced once into ``n`` single-file micro-batches
   (:func:`_stage_batches`) and streamed with ``maxFilesPerTrigger=1``
   under an ``availableNow`` trigger; the stream's schema is the staged
-  DataFrame's, so no schema inference runs.
+  DataFrame's, so no schema inference runs.  The slices and the
+  stream's Spark checkpoint live in a scratch directory of their own,
+  removed once the stream has drained: only the published sinks
+  outlive the call.
 * One action per output: the handler returns the DataFrames the trigger
   writes, by sink name.  Every invariant is an aggregate attached with
   :meth:`Trigger.observe` to a frame inside those writes' plans, so the
@@ -27,17 +30,20 @@ through :func:`run_staged_stream`, whose contract is:
   checkpoints only; and under any but the first child of a union over
   the micro-batch they are never reported, which the gate below
   catches as a missing metric.
-* Observation-gated publish: each output is written to
-  ``<stage>/<sink>/_tmp_batch<bid>``, which readers never list (Spark
-  skips ``_``-prefixed paths).  Once every write is done the observed
-  metrics are read: a missing or null metric, a non-zero ``bad_*``
-  violation count or a failed :meth:`Trigger.require` raises, the
-  temporary outputs are removed and nothing is published.  Otherwise
-  each output is ``os.replace``d into ``<stage>/<sink>/batch<bid>``.
-* Replay: Spark may rerun a micro-batch.  The rerun rewrites its own
-  temporary outputs and, at publish, first removes the copy an earlier
-  attempt left under ``batch<bid>``, so each batch id holds exactly one
-  copy.
+* Observation-gated publish: the stream's root is a publish root
+  (``sources/publish.py``) and trigger ``bid`` builds its version
+  ``bid + 1``: each output is written as that version of its sink,
+  past ``CURRENT``, where no reader looks.  Once every write is done
+  the observed metrics are read: a missing or null metric, a non-zero
+  ``bad_*`` violation count or a failed :meth:`Trigger.require` raises,
+  the uncommitted version is removed and nothing is published.
+  Otherwise one pointer flip commits every output of the trigger.
+* Replay: Spark may rerun a micro-batch.  A batch id whose version is
+  already committed returns without running its handler (the batch-id
+  dedup of an exactly-once ``foreachBatch`` sink), so committed
+  versions stay immutable and each batch id is published once.  A
+  rerun of a batch that never committed first removes what the failed
+  attempt left past ``CURRENT``.
 """
 
 from __future__ import annotations
@@ -54,6 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..session import ensure_runtime_confs
+from ..sources import publish
 from ..sources.catalog import load_table, normalize_events_ts, stored_schema, table_path
 
 _sink_ids = itertools.count()
@@ -103,79 +110,57 @@ def count_off(flag: Column, bid: int) -> Column:
     return F.count_if(F.coalesce(flag != F.lit(bid), F.lit(True)))
 
 
-def _batch_dir(bid: int) -> str:
-    return f"batch{bid}"
-
-
 class StagedStream:
-    """The sinks of one staged stream: sink ``name``'s output of batch
-    ``bid`` is published at ``<stage>/<name>/batch<bid>``.  Sinks are
-    read back with the schema they were written with."""
+    """The sinks of one staged stream, kept under the publish root
+    ``root``: sink ``name``'s output of batch ``bid`` is version
+    ``bid + 1`` of store ``name``.  Sinks are read back with the schema
+    they were written with."""
 
-    def __init__(self, spark: SparkSession, stage: str, dirname=_batch_dir):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
-        self.stage = stage
-        self.dirname = dirname
+        self.root = root
         self.schemas: dict[str, StructType] = {}
         #: bid -> the metrics observed in that trigger's last attempt
         self.metrics: dict[int, dict] = {}
 
-    def path(self, sink: str, bid: int, tmp: bool = False) -> str:
-        name = ("_tmp_" if tmp else "") + self.dirname(bid)
-        return os.path.join(self.stage, sink, name)
-
     def read(self, sink: str, bid: int | None = None) -> DataFrame | None:
         """Batch ``bid``'s published output of ``sink``, or with no
         ``bid`` every published batch; None before the first publish."""
-        root = os.path.join(self.stage, sink)
-        if bid is not None:
-            path = self.path(sink, bid)
-            return self.spark.read.schema(self.schemas[sink]).parquet(path)
-        if not os.path.isdir(root) or all(d.startswith("_") for d in os.listdir(root)):
-            return None
-        return (
-            self.spark.read.schema(self.schemas[sink])
-            .option("recursiveFileLookup", "true")
-            .parquet(root)
-        )
+        if bid is None:
+            return publish.read_committed(self.spark, self.root, sink, self.schemas.get(sink))
+        return publish.read_version(self.spark, self.root, sink, bid + 1, self.schemas[sink])
 
     def run_trigger(
         self,
         handle: Callable[["Trigger"], dict[str, "Output"]],
         batch: DataFrame,
         bid: int,
-        on_publish: Callable[[int], None] | None = None,
     ) -> None:
         """Write, check and publish one micro-batch (the body of the
         stream's ``foreachBatch``; see :func:`run_staged_stream`)."""
         from ..checkpoints import release_new_since, tracked_ids
 
+        version = bid + 1
+        if version < publish.begin_version(self.root):
+            return  # a replay of a committed batch
         ledger = tracked_ids()
         trig = Trigger(self, batch, bid)
-        written: list[str] = []
         try:
             for sink, out in handle(trig).items():
                 out = out() if callable(out) else out
-                written.append(sink)
-                out.write.mode("overwrite").parquet(self.path(sink, bid, tmp=True))
+                publish.write_store_version(out, self.root, sink, version)
                 self.schemas[sink] = out.schema
             failed = trig.failures()
             if failed:
                 raise AssertionError(
                     f"stream batch {bid} not published: {'; '.join(failed)}"
                 )
+            publish.commit_version(self.root, version)
         except BaseException:
-            for sink in written:
-                shutil.rmtree(self.path(sink, bid, tmp=True), ignore_errors=True)
+            publish.begin_version(self.root)  # removes the uncommitted version
             raise
         finally:
             release_new_since(ledger)
-        for sink in written:
-            dst = self.path(sink, bid)
-            shutil.rmtree(dst, ignore_errors=True)  # a replayed batch's copy
-            os.replace(self.path(sink, bid, tmp=True), dst)
-        if on_publish is not None:
-            on_publish(bid)
 
 
 class Trigger:
@@ -195,9 +180,8 @@ class Trigger:
     def staged(self, sink: str) -> DataFrame:
         """This trigger's own, not yet published, output of ``sink`` —
         for an output derived from one written earlier in the trigger."""
-        return self.stream.spark.read.schema(self.stream.schemas[sink]).parquet(
-            self.stream.path(sink, self.bid, tmp=True)
-        )
+        s = self.stream
+        return publish.read_version(s.spark, s.root, sink, self.bid + 1, s.schemas[sink])
 
     def observe(self, df: DataFrame, **metrics: Column) -> DataFrame:
         """``df`` with named aggregates attached, read after the writes.
@@ -245,39 +229,39 @@ def run_staged_stream(
     df: DataFrame,
     batch_flag: Column,
     n: int,
-    stage: str,
+    root: str,
     handle: Callable[[Trigger], dict[str, Output]],
-    dirname: Callable[[int], str] = _batch_dir,
-    on_publish: Callable[[int], None] | None = None,
 ) -> StagedStream:
-    """Stage ``df`` as ``n`` micro-batches under ``stage`` (see
-    :func:`_stage_batches`), drain them as a stream and publish each
-    trigger's outputs only after its observed checks pass (module
+    """Stage ``df`` as ``n`` micro-batches (see :func:`_stage_batches`),
+    drain them as a stream and publish each trigger's outputs under the
+    publish root ``root`` only after its observed checks pass (module
     docstring).  ``handle(trigger)`` returns ``{sink: output}``; outputs
     are written in that order, and an output given as a zero-argument
     callable is built after the earlier ones are written, so it may read
-    them through :meth:`Trigger.staged`.  ``dirname`` names a batch's
-    directory in each sink; ``on_publish(bid)`` runs after a publish.
-    Checkpoints a handler takes are released once its trigger ends."""
+    them through :meth:`Trigger.staged`.  The staged slices and the
+    stream's checkpoint are removed once the stream ends; checkpoints a
+    handler takes are released once its trigger ends."""
+    from ..staging import staging_dir
+
     spark = df.sparkSession
-    indir = os.path.join(stage, "in")
-    os.makedirs(indir)
-    _stage_batches(df, batch_flag, n, indir, stage)
-    stream = StagedStream(spark, stage, dirname)
-
-    def drive(batch: DataFrame, bid: int) -> None:
-        stream.run_trigger(handle, batch, int(bid), on_publish)
-
-    q = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(indir)
-        .writeStream.foreachBatch(drive)
-        .option("checkpointLocation", os.path.join(stage, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = StagedStream(spark, root)
+    scratch = staging_dir(prefix="bdm_stream_in_")
+    try:
+        indir = os.path.join(scratch, "in")
+        os.makedirs(indir)
+        _stage_batches(df, batch_flag, n, indir, scratch)
+        q = (
+            spark.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(indir)
+            .writeStream.foreachBatch(lambda b, bid: stream.run_trigger(handle, b, int(bid)))
+            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
     return stream
 
 
@@ -1234,8 +1218,8 @@ def stream_incremental_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONLY its truly-new edges to the store and emits its per-node delta
     counts via the shared attribution kernel
     (``graph._attributed_delta_counts`` — marked = this batch's new
-    edges, graph = the accumulated edge set), each trigger writing to
-    its own batch directory (:func:`run_staged_stream`; a trigger
+    edges, graph = the accumulated edge set), each trigger writing its
+    own version of each sink (:func:`run_staged_stream`; a trigger
     publishes only once each arriving row's observed order-hash slice
     equals its micro-batch id).  After the drain,
     per-node totals and the PER-TRIGGER breakdown (d0/d1/d2) read off
@@ -1506,13 +1490,14 @@ def stream_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     thirds of the fixture span — exact integer arithmetic, so the DuckDB
     twin derives the identical slicing), and each trigger MERGEs the
     arriving batch into the persisted history store via the q262
-    merge-from-current-row step.  State is versioned PER BATCH ID
-    (``store/batch{bid}`` = merge(``store/batch{bid-1}``, batch) — the
-    functional state-chaining shape Structured Streaming's own state
-    store uses): a replayed micro-batch recomputes its version from its
-    predecessor and overwrites it, which is what makes a NON-idempotent
-    operation (merge) idempotent under the foreachBatch replay contract
-    — batch-id-keyed blind writes (the q230 pattern) would double-merge.
+    merge-from-current-row step.  State is one store VERSION per batch
+    (``store`` v{bid+1} = merge(v{bid}, batch) — the functional
+    state-chaining shape Structured Streaming's own state store uses):
+    a micro-batch replayed after its commit is skipped, and one replayed
+    before it recomputes its version from the committed predecessor,
+    which is what makes a NON-idempotent operation (merge) idempotent
+    under the foreachBatch replay contract — blind appends would
+    double-merge.
     Each trigger checks slice fidelity and the batch user count in one
     scalar job, then observes the SCD2 invariant during the write:
     every batch user has a re-derived current row, and every stored
@@ -1562,9 +1547,9 @@ def stream_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         if t.bid == 0:
             merged = _scd2_history(t.batch).withColumn("src", F.lit("merged"))
         else:
-            # store/batch{bid} = merge(store/batch{bid-1}, batch): a replay
-            # recomputes its version from its predecessor, so the
-            # non-idempotent merge stays idempotent
+            # store v{bid+1} = merge(v{bid}, batch): a replay recomputes
+            # its version from its predecessor, so the non-idempotent
+            # merge stays idempotent
             merged = scd2_merge(t.read("store", t.bid - 1), t.batch)
         # the batch users' current rows are exactly the re-derived
         # ("merged") ones; every stored user keeps exactly one
@@ -1583,7 +1568,7 @@ def stream_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = run_staged_stream(
         ev, bid_of("ts"), 3, staging_dir(prefix="bdm_stream_scd2_"), handle
     )
-    final = stream.read("store", 2)
+    final = publish.read_current(spark, stream.root, "store", stream.schemas["store"])
     return final.select(
         "user_id",
         "version",
@@ -1647,16 +1632,15 @@ def stream_published_store(
     signature-store version through the manifest pointer — version
     ``bid + 1`` is computed functionally from version ``bid`` read by
     EXPLICIT pin (``read_version``, never ``read_current``), so a
-    replayed micro-batch recomputes and overwrites ITS OWN version
-    instead of double-appending (q264's state-chaining discipline
-    expressed in publish-protocol versions; Spark's foreachBatch
-    exactly-once contract).  Readers between any two triggers resolve
-    the pointer to a complete committed snapshot — never a
-    half-ingested one.
+    micro-batch replayed before its commit recomputes ITS OWN version
+    instead of double-appending (q264's state-chaining discipline;
+    Spark's foreachBatch exactly-once contract).  Readers between any
+    two triggers resolve the pointer to a complete committed snapshot —
+    never a half-ingested one.
 
-    Per-trigger checks: the version written holds every signature that
+    Per-trigger check: the version written holds every signature that
     arrived so far (observed during its write, before the pointer
-    moves), and the pointer advanced to ``bid + 1``.  After the drain, serving runs the LSH
+    moves).  After the drain, serving runs the LSH
     pair pipeline off the pointer-resolved store; since the three
     batches partition the corpus, the result must equal the full-batch
     q26 recompute — the DuckDB oracle — plus the pinned final version
@@ -1669,21 +1653,14 @@ def stream_published_store(
     state.  Reference anchor: ``hw3/hw3.py:125-172`` (extension — the
     reference has zero streaming and no versioning)."""
     from ..operators import dedup as DD
-    from ..sources.publish import (
-        commit_version,
-        current_version,
-        publish_version,
-        read_current,
-        version_name,
-    )
     from ..staging import staging_dir
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # the stage is the publish root: sink "sig" holds the store's versions
+    # the stream's publish root: sink "sig" holds the store's versions
     root = staging_dir(prefix="bdm_stream_publish_")
     # v0: the committed EMPTY store — batch 0's functional predecessor
     empty = DD.minhash_signatures(docs.limit(0))
-    publish_version(root, 0, {"sig": empty.coalesce(1)})
+    publish.publish_version(root, 0, {"sig": empty.coalesce(1)})
 
     def handle(t: Trigger) -> dict[str, Output]:
         # version bid + 1 = the batch ∪ version bid, read by explicit pin
@@ -1701,23 +1678,9 @@ def stream_published_store(
         )
         return {"sig": sig.coalesce(1)}
 
-    def flip(bid: int) -> None:
-        commit_version(root, bid + 1)
-        got = current_version(root)
-        if got != bid + 1:
-            raise AssertionError(f"trigger {bid}: pointer at {got}, expected {bid + 1}")
-
-    run_staged_stream(
-        docs,
-        _stream_lsh_batch_flag(),
-        STREAM_LSH_BATCHES,
-        root,
-        handle,
-        dirname=lambda bid: version_name(bid + 1),
-        on_publish=flip,
-    )
-    ver = current_version(root)
-    sig = read_current(spark, root, "sig", schema=empty.schema)
+    run_staged_stream(docs, _stream_lsh_batch_flag(), STREAM_LSH_BATCHES, root, handle)
+    ver = publish.current_version(root)
+    sig = publish.read_current(spark, root, "sig", schema=empty.schema)
     return DD.lsh_candidate_pairs(sig, threshold).withColumn(
         "published_version", F.lit(ver).cast("long")
     )
@@ -1742,11 +1705,11 @@ def stream_session_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-microsecond thirds of the fixture span, exact integer
     arithmetic — the q264 slicing), and each trigger merges the
     arriving batch into the persisted session store via the q282
-    merge-from-final-session step.  State is versioned PER BATCH ID
-    (``store/batch{bid}`` = merge(``store/batch{bid-1}``, batch) — the q264
-    functional state-chaining shape), so a replayed micro-batch
-    recomputes its version from its predecessor and overwrites it:
-    the non-idempotent merge becomes idempotent under the foreachBatch
+    merge-from-final-session step.  State is one store VERSION per batch
+    (``store`` v{bid+1} = merge(v{bid}, batch) — the q264 functional
+    state-chaining shape), so a micro-batch replayed before its commit
+    recomputes its version from the committed predecessor: the
+    non-idempotent merge becomes idempotent under the foreachBatch
     replay contract.  Each trigger checks slice fidelity in one scalar
     job and observes the frontier invariant during its write (after
     the merge, the store's latest session ends exactly one gap after
@@ -1801,8 +1764,8 @@ def stream_session_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         if t.bid == 0:
             merged = full_sessions_derived(t.batch)
         else:
-            # store/batch{bid} = merge(store/batch{bid-1}, batch): idempotent
-            # under replay even though the merge itself is not
+            # store v{bid+1} = merge(v{bid}, batch): idempotent under
+            # replay even though the merge itself is not
             batch_rows = t.batch.select(
                 "user_id", F.unix_micros("ts").alias("tus"), "event_id"
             )
@@ -1819,7 +1782,7 @@ def stream_session_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = run_staged_stream(
         ev, bid_of("ts"), 3, staging_dir(prefix="bdm_stream_sessions_"), handle
     )
-    final = stream.read("store", 2)
+    final = publish.read_current(spark, stream.root, "store", stream.schemas["store"])
     arrived = F.least(
         F.lit(2).cast("long"),
         F.expr(

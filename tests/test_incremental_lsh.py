@@ -329,13 +329,12 @@ def test_incremental_components_label_store_roundtrip(spark, tmp_path):
 
 def test_stream_store_replay_idempotent(spark, tmp_path):
     """The q230 sink contract (ADVICE r8): every micro-batch lands in its
-    own batch-id-keyed subdirectory, so a REPLAYED batch (Spark may
-    retry a foreachBatch micro-batch after failure) replaces its
-    previous attempt instead of double-appending.  This pins the
-    staged-stream harness that q230 publishes through — publish the
-    same batch id twice, read the sink back, exactly one copy — and
-    that the drained stream's emission is deterministic across full
-    re-runs."""
+    own committed store version, so a REPLAYED batch (Spark may retry a
+    foreachBatch micro-batch after failure) is skipped instead of
+    double-appending.  This pins the staged-stream harness that q230
+    publishes through — publish the same batch id twice, read the sink
+    back, exactly one copy — and that the drained stream's emission is
+    deterministic across full re-runs."""
     from bigdatamining_graduate_spark.streaming.jobs import (
         StagedStream,
         stream_incremental_lsh_pairs,
@@ -355,12 +354,7 @@ def test_stream_store_replay_idempotent(spark, tmp_path):
     assert stream.read("pairs_out").count() == 100
     # a second batch lands beside it, both visible to the reader
     stream.run_trigger(handle, batch, 1)
-    assert (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(str(tmp_path / "pairs_out"))
-        .count()
-        == 200
-    )
+    assert stream.read("pairs_out").count() == 200
 
 
     r1 = stream_incremental_lsh_pairs(spark, SF_SMOKE, THRESH)

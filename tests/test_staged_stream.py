@@ -1,7 +1,9 @@
 """The staged-stream harness (`streaming.jobs.run_staged_stream`): a
-trigger's outputs are published only after its observed checks pass,
-a failed or unobservable check publishes nothing, and a replayed batch
-id leaves exactly one copy."""
+trigger's outputs are committed through the store protocol
+(`sources/publish.py`) as version ``bid + 1`` only after its observed
+checks pass; a failed or unobservable check or a crashed commit leaves
+readers on the previous version, and a replayed committed batch id runs
+no handler and leaves exactly one copy."""
 
 from __future__ import annotations
 
@@ -10,6 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from bigdatamining_graduate_spark.sources import publish as PB
 from bigdatamining_graduate_spark.streaming import jobs as SJ
 
 
@@ -29,18 +32,19 @@ def test_planted_violation_fails_trigger_and_publishes_nothing(spark, tmp_path):
     with pytest.raises(Exception, match="bad_planted = 1"):
         SJ.run_staged_stream(df, F.col("id") % 3, 3, stage, handle)
     root = os.path.join(stage, "out")
-    # batch 0 was published; nothing of batch 1 is left, not even its tmp
-    assert sorted(os.listdir(root)) == ["batch0"]
+    # batch 0 was published; nothing of batch 1 is left, not even uncommitted
+    assert sorted(os.listdir(root)) == ["v1"]
+    assert PB.current_version(stage) == 1
     got = _read_all(spark, root)
     assert got.count() == 30
     assert got.filter(F.col("id") % 3 != 0).count() == 0
 
 
-def test_tmp_outputs_are_invisible_to_readers(spark, tmp_path):
-    root = str(tmp_path / "sink")
-    spark.range(5).write.parquet(os.path.join(root, "batch0"))
-    spark.range(7).write.parquet(os.path.join(root, "_tmp_batch1"))
-    assert _read_all(spark, root).count() == 5
+def test_version_past_current_is_invisible_to_readers(spark, tmp_path):
+    stream = SJ.StagedStream(spark, str(tmp_path))
+    stream.run_trigger(lambda t: {"out": t.batch}, spark.range(5), 0)
+    PB.write_store_version(spark.range(7), str(tmp_path), "out", 2)
+    assert stream.read("out").count() == 5
 
 
 def test_missing_metric_raises(spark, tmp_path, monkeypatch):
@@ -54,8 +58,8 @@ def test_missing_metric_raises(spark, tmp_path, monkeypatch):
 
     with pytest.raises(AssertionError, match="never observed"):
         stream.run_trigger(handle, spark.range(10), 0)
-    assert not os.path.exists(os.path.join(str(tmp_path), "out", "batch0"))
-    assert not os.path.exists(os.path.join(str(tmp_path), "out", "_tmp_batch0"))
+    assert not os.path.exists(os.path.join(str(tmp_path), "out", "v1"))
+    assert not os.path.exists(os.path.join(str(tmp_path), "CURRENT"))
 
 
 def test_failed_requirement_raises(spark, tmp_path):
@@ -75,16 +79,45 @@ def test_failed_requirement_raises(spark, tmp_path):
 
 def test_replayed_batch_leaves_one_copy(spark, tmp_path):
     stream = SJ.StagedStream(spark, str(tmp_path))
+    calls = []
 
     def handle(t):
+        calls.append(t.bid)
         return {"out": t.observe(t.batch, bad_none=F.count_if(F.lit(False)))}
 
     batch = spark.range(100)
     stream.run_trigger(handle, batch, 0)
     # Spark may rerun a micro-batch: same id, same payload
     stream.run_trigger(handle, batch, 0)
-    assert sorted(os.listdir(os.path.join(str(tmp_path), "out"))) == ["batch0"]
+    assert calls == [0]  # a committed batch id runs no handler
+    assert sorted(os.listdir(os.path.join(str(tmp_path), "out"))) == ["v1"]
     assert stream.read("out").count() == 100
     stream.run_trigger(handle, batch, 1)
     assert stream.read("out").count() == 200
     assert stream.read("out", 1).count() == 100
+
+
+def test_crashed_commit_keeps_readers_on_previous_trigger(spark, tmp_path, monkeypatch):
+    root = str(tmp_path)
+    stream = SJ.StagedStream(spark, root)
+
+    def handle(t):
+        return {"out": t.batch}
+
+    stream.run_trigger(handle, spark.range(10), 0)
+
+    def crash(r, version):
+        raise RuntimeError(f"crashed before committing v{version}")
+
+    monkeypatch.setattr(PB, "commit_version", crash)
+    with pytest.raises(RuntimeError, match="crashed before committing v2"):
+        stream.run_trigger(handle, spark.range(10, 15), 1)
+    monkeypatch.undo()
+    assert PB.current_version(root) == 1
+    assert PB.versions(root, "out") == [1]
+    assert stream.read("out").count() == 10
+    # the rerun of batch 1 publishes
+    stream.run_trigger(handle, spark.range(10, 15), 1)
+    assert PB.current_version(root) == 2
+    assert stream.read("out").count() == 15
+    assert stream.read("out", 1).count() == 5

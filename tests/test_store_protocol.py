@@ -7,6 +7,8 @@ readable and the next publish on the same root succeeds.
   crashed at its replacing commit: each store must read back exactly
   the rows it held at the last successful commit, and one more publish
   must succeed without exposing anything the crash left behind;
+* q275's staged stream, whose triggers commit through the same
+  pointer, is crashed at its second trigger's commit;
 * at the protocol level: a crash before the commit, a crash after the
   commit but before GC, and a stale uncommitted version left by an
   earlier crash;
@@ -121,6 +123,35 @@ def test_crash_at_replacing_commit_keeps_last_committed(spark, tmp_path, monkeyp
     )
     for store, rows in committed.items():
         assert _rows(PB.read_current(spark, root, store)) == rows, store
+    _assert_nothing_left_over(root)
+
+
+def test_stream_commit_crash_keeps_previous_trigger(spark, tmp_path, monkeypatch):
+    """q275: a crash at trigger 2's commit leaves the signature store at
+    exactly trigger 1's rows, with no uncommitted version left behind."""
+    from bigdatamining_graduate_spark.streaming import jobs as SJ
+
+    committed: dict[int, list[str]] = {}
+    roots: list[str] = []
+    real_commit = PB.commit_version
+
+    def commit_or_crash(r, version):
+        if version == 2:
+            raise Crash(f"crashed before committing v{version}")
+        real_commit(r, version)
+        roots.append(r)
+        committed[version] = _rows(PB.read_current(spark, r, "sig"))
+
+    monkeypatch.setattr(PB, "commit_version", commit_or_crash)
+    with pytest.raises(Exception, match="crashed before committing v2"):
+        SJ.stream_published_store(spark, SF_SMOKE)
+    monkeypatch.undo()
+
+    root = roots[-1]
+    assert sorted(committed) == [0, 1]
+    assert len(committed[1]) > len(committed[0])
+    assert PB.current_version(root) == 1
+    assert _rows(PB.read_current(spark, root, "sig")) == committed[1]
     _assert_nothing_left_over(root)
 
 
