@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdatamining_graduate_spark.operators import aggview as AV
@@ -186,3 +187,25 @@ def test_quarterly_derivation_roundtrip(spark, tmp_path):
         "max_price",
     ) == got
     assert got and all(g[0].count("-Q") == 1 for g in got)
+
+
+#: injected-store cases: the maintained view run off a PERSISTED t0
+#: store must equal the in-plan one-pass derivation
+STORE_CASES = {
+    "q258": (AV.delete_aware_agg_view, lambda li: AV.agg_partials(li)),
+    "q274": (
+        AV.maintained_quarterly_view,
+        lambda li: AV.agg_partials(li.filter(~AV.arrival_flag())),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(STORE_CASES))
+def test_store_roundtrip(spark, tmp_path, case):
+    view, t0_store = STORE_CASES[case]
+    li = _load(spark)
+    derived = view(li)
+    t0_store(li).write.parquet(str(tmp_path / "store"))
+    injected = view(li, view_store=spark.read.parquet(str(tmp_path / "store")))
+    got = _rows_key(derived, *derived.columns)
+    assert got and _rows_key(injected, *derived.columns) == got

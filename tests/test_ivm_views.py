@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -392,3 +393,23 @@ def test_distinct_vacuum_shrinks_store(spark):
         .count()
     )
     assert spark.read.parquet(store_dir).count() == survivors
+
+
+@pytest.mark.parametrize(
+    "view",
+    [JV.delete_ripple_join_view, JV.upsert_ripple_join_view],
+    ids=["q280", "q285"],
+)
+def test_join_store_roundtrip(spark, tmp_path, view):
+    """q280/q285: maintenance off the PERSISTED t0 join view equals the
+    in-plan derivation."""
+    from bigdatamining_graduate_spark.sources.catalog import load_table
+
+    orders = load_table(spark, SF_SMOKE, "orders")
+    customer = load_table(spark, SF_SMOKE, "customer")
+    JV.join_view_rows(orders, customer).write.parquet(str(tmp_path / "jv"))
+    injected = view(
+        orders, customer, view_store=spark.read.parquet(str(tmp_path / "jv"))
+    )
+    derived = sorted(map(tuple, view(orders, customer).collect()))
+    assert derived and sorted(map(tuple, injected.collect())) == derived
