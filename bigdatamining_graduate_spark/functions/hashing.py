@@ -35,6 +35,17 @@ def portable_hash64_sql(expr: str, salt: str = "") -> str:
     return f"cast('0x' || substr(md5({salted}), 1, {HASH_HEX_CHARS}) as bigint)"
 
 
+def hash_bucket(col: str, salt: str, n: int) -> Column:
+    """Deterministic slice id 0..n-1 of column ``col`` (salted) — the
+    hash slices that cut arrival, deletion and revision batches."""
+    return portable_hash64(F.col(col).cast("string"), salt=salt) % n
+
+
+def hash_bucket_sql(col: str, salt: str, n: int) -> str:
+    """DuckDB twin of :func:`hash_bucket`."""
+    return f"({portable_hash64_sql(f'cast({col} as varchar)', salt)} % {n})"
+
+
 #: Mersenne prime 2^31-1: affine MinHash mixing stays inside 62 bits, so
 #: products never overflow a signed int64 in EITHER engine (DuckDB errors
 #: on bigint overflow; Spark would silently wrap — both avoided).

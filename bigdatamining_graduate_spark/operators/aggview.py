@@ -9,20 +9,20 @@ The view is a monthly sales rollup over ``lineitem``:
 and the maintained object is the PHYSICAL view store — the thing a
 production pipeline refreshes instead of re-scanning 100 TB per query.
 The design leans on Spark's own aggregation model: COUNT/SUM partials
-are mergeable state (the map-side-combine algebra), so
-
-* **insert** is a union of partials + one |groups|-sized combine —
-  never a corpus re-scan;
-* **delete/upsert** subtract exact decimal partials; MAX is NOT
-  self-maintainable under retraction, so affected groups recompute it
-  from THEIR remaining rows only (the q229/q247 bounded-recompute
-  discipline applied to an aggregate);
-* **stream** appends one partial-aggregate file set per micro-batch
-  (append-only mergeable state — the Flink/Delta retract-stream shape)
-  and serves by combine-on-read;
-* **vacuum** compacts accreted partials — including NEGATIVE retraction
-  partials from a deletion cycle — into one net row per group, dropping
-  emptied groups and recomputing max for retraction-dirty groups.
+are mergeable state (the map-side-combine algebra), so a change to the
+view is a signed DELTA of partials (the counting algorithm of Gupta,
+Mumick and Subrahmanian, as generalised by DBSP): an insert is +1, a
+delete −1, an upsert −old +new.  :func:`weigh` gives partials their
+weight — COUNT/SUM scale, and MAX, which cannot be retracted, turns
+NULL — and ONE :func:`apply` nets a store with its deltas: an
+associative combine per group that drops emptied groups and takes each
+dirty (retracted) group's max from a bounded recompute.  Every cell is
+an input shape of that one function — insert (q257), delete (q258),
+upsert (q259), stream serve (q260: append-only partials, combined on
+read), vacuum (q261: the accreted positive and NEGATIVE partials
+compacted to one net row per group) and the lattice edge (q263, q274)
+— whether the store is the in-plan one-pass derivation or an injected
+or persisted store.
 
 Money/quantity arithmetic stays in exact decimals end-to-end (the
 SURVEY §7.4 risk-7 rule): decimal partial sums are associative, so
@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import portable_hash64, portable_hash64_sql
+from ..functions.hashing import hash_bucket, hash_bucket_sql
 
 
 def _N():
@@ -68,57 +68,40 @@ UPD_PRICE_DELTA = 100.0
 STREAM_AGV_BATCHES = 3  # lineitem arrives as 3 hash-sliced micro-batches
 
 
-def _flag(col: str, salt: str):
-    return portable_hash64(F.col(col).cast("string"), salt=salt) % AGV_BUCKETS
-
-
-def _flag_sql(col: str, salt: str) -> str:
-    return (
-        f"({portable_hash64_sql(f'cast({col} as varchar)', salt)}"
-        f" % {AGV_BUCKETS})"
-    )
-
-
 def arrival_flag(col: str = "l_orderkey"):
     """True for rows of ARRIVING orders (20% hash slice, salt "iagv")."""
-    return _flag(col, "iagv") >= AGV_INS_HIST
+    return hash_bucket(col, "iagv", AGV_BUCKETS) >= AGV_INS_HIST
 
 
 def arrival_flag_sql(col: str = "l_orderkey") -> str:
-    return f"({_flag_sql(col, 'iagv')} >= {AGV_INS_HIST})"
+    return f"({hash_bucket_sql(col, 'iagv', AGV_BUCKETS)} >= {AGV_INS_HIST})"
 
 
 def deleted_flag(col: str = "l_orderkey"):
     """True for rows of DELETED orders (10% hash slice, salt "dagv")."""
-    return _flag(col, "dagv") == AGV_DEL_BUCKET
+    return hash_bucket(col, "dagv", AGV_BUCKETS) == AGV_DEL_BUCKET
 
 
 def deleted_flag_sql(col: str = "l_orderkey") -> str:
-    return f"({_flag_sql(col, 'dagv')} = {AGV_DEL_BUCKET})"
+    return f"({hash_bucket_sql(col, 'dagv', AGV_BUCKETS)} = {AGV_DEL_BUCKET})"
 
 
 def updated_flag(col: str = "l_orderkey"):
     """True for rows of REVISED orders (10% hash slice, salt "uagv")."""
-    return _flag(col, "uagv") == AGV_UPD_BUCKET
+    return hash_bucket(col, "uagv", AGV_BUCKETS) == AGV_UPD_BUCKET
 
 
 def updated_flag_sql(col: str = "l_orderkey") -> str:
-    return f"({_flag_sql(col, 'uagv')} = {AGV_UPD_BUCKET})"
+    return f"({hash_bucket_sql(col, 'uagv', AGV_BUCKETS)} = {AGV_UPD_BUCKET})"
 
 
 def stream_batch_flag(col: str = "l_orderkey"):
     """Micro-batch id 0..2 per order (salt "sagv")."""
-    return (
-        portable_hash64(F.col(col).cast("string"), salt="sagv")
-        % STREAM_AGV_BATCHES
-    )
+    return hash_bucket(col, "sagv", STREAM_AGV_BATCHES)
 
 
 def stream_batch_sql(col: str = "l_orderkey") -> str:
-    return (
-        f"({portable_hash64_sql(f'cast({col} as varchar)', 'sagv')}"
-        f" % {STREAM_AGV_BATCHES})"
-    )
+    return hash_bucket_sql(col, "sagv", STREAM_AGV_BATCHES)
 
 
 # -- partial-aggregate algebra ------------------------------------------------
@@ -162,21 +145,69 @@ def agg_partials(li: DataFrame, *extra_keys) -> DataFrame:
     )
 
 
-def combine_partials(parts: DataFrame, *extra) -> DataFrame:
-    """Associative merge of partials: one |groups|-sized combine (sum
-    the sums, max the maxes) — the map-side-combine algebra run
-    store-side.  The ONE copy of the merge algebra: every maintenance
-    cell (q257 merge, q260 serve, q261 vacuum net) routes through it,
-    passing its provenance aggregates via ``extra``.  Under retraction
-    partials the summed columns net correctly (negative rows cancel);
-    MAX does not — retraction rows carry NULL max_price (ignored by
-    ``F.max``) and the caller re-derives dirty groups (q261)."""
-    return parts.groupBy(*VIEW_KEYS).agg(
+def weigh(parts: DataFrame, w) -> DataFrame:
+    """``parts`` as a signed delta of weight ``w`` (an int, or an int
+    Column evaluated per row): +1 inserts the partials, −1 retracts
+    them, and 0 is a slice the store holds and the same pass retracts
+    (the two net in place).  COUNT/SUM scale by the weight — exact
+    decimals, so a retraction cancels to the cent; MAX cannot be
+    retracted, so below +1 ``max_price`` turns NULL, which marks the
+    group dirty for :func:`apply`.  Slice-tag columns pass through."""
+    w = F.lit(w) if isinstance(w, int) else w
+    return parts.withColumns({
+        "n_rows": (F.col("n_rows") * w).cast("long"),
+        "sum_qty": (F.col("sum_qty") * w).cast(SUM_QTY_DEC),
+        "revenue": (F.col("revenue") * w).cast(REVENUE_DEC),
+        "max_price": F.when(w == 1, F.col("max_price")),
+    })
+
+
+def apply(parts: DataFrame, remax: DataFrame | None, *extra) -> DataFrame:
+    """The view's ONE netting rule: an associative combine of ``parts``
+    — a store's partials unioned with signed deltas (:func:`weigh`) —
+    per view group, the map-side-combine algebra run store-side.
+    COUNT and the exact decimal SUMs add (retractions cancel), MAX
+    maxes, and groups netting to ``n_rows = 0`` drop.  A group holding
+    a NULL-max (retracted) partial is ``dirty``: MAX is not self-
+    maintainable, so its max is the per-group max of ``remax`` — rows
+    (keys, max_price) over what survives: the live slices' partials
+    in-plan, a bounded semi-join over the surviving rows with a
+    persisted store (the q229/q247 bounded-recompute discipline).
+    ``remax`` is None where the combine's own max already is the
+    surviving one: every retracted slice netted in place (weight 0),
+    so only live partials carry a max.  ``extra`` are the cell's
+    provenance aggregates over the same union.
+
+    Every cell routes through it: insert (q257), delete (q258), upsert
+    (q259), stream serve (q260), vacuum (q261) and the lattice edge
+    (q263, q274)."""
+    keys = list(VIEW_KEYS)
+    net = parts.groupBy(*keys).agg(
         F.sum("n_rows").cast("long").alias("n_rows"),
         F.sum("sum_qty").cast(SUM_QTY_DEC).alias("sum_qty"),
         F.sum("revenue").cast(REVENUE_DEC).alias("revenue"),
         F.max("max_price").alias("max_price"),
+        F.max(F.col("max_price").isNull()).alias("dirty"),
         *extra,
+    ).filter(F.col("n_rows") > 0)
+    if remax is None:
+        return net
+    live = remax.groupBy(*keys).agg(F.max("max_price").alias("live_max"))
+    return net.join(live, keys, "left").withColumn(
+        "max_price",
+        F.when(F.col("dirty"), F.col("live_max")).otherwise(F.col("max_price")),
+    ).drop("live_max")
+
+
+def _remax(rows: DataFrame, touched: DataFrame) -> DataFrame:
+    """The surviving ``rows`` of the groups ``touched`` names, as (keys,
+    max_price) — the bounded semi-join a persisted store's dirty groups
+    recompute their max from."""
+    keys = list(VIEW_KEYS)
+    return (
+        _with_keys(rows)
+        .join(touched.select(*keys), keys, "left_semi")
+        .select(*keys, F.col("l_extendedprice").alias("max_price"))
     )
 
 
@@ -220,55 +251,46 @@ def _view_sql(table: str, src_expr: str) -> str:
 
 # -- insert (q257) ------------------------------------------------------------
 
+def _with_arrivals(li: DataFrame, view_store: DataFrame | None) -> DataFrame:
+    """The t0 store's partials ∪ the arrival batch's, tagged ``arr``:
+    the injected store plus the batch, or — with no store — ONE corpus
+    scan grouped by (keys, arrival slice) whose non-arrival rows are
+    the in-plan t0 store (round 11: the base/batch split previously
+    cost two scans, guide §1.2)."""
+    if view_store is None:
+        return agg_partials(li, arrival_flag().alias("arr"))
+    batch = agg_partials(li.filter(arrival_flag()))
+    return view_store.withColumn("arr", F.lit(False)).unionByName(
+        batch.withColumn("arr", F.lit(True))
+    )
+
+
 def incremental_agg_view(
     li: DataFrame, view_store: DataFrame | None = None
 ) -> DataFrame:
     """INSERT maintenance (q257 — the q227 arrival shape on the OLAP
-    view): the 20% arrival batch aggregates to partials, and the
-    maintained view is one associative combine of store ∪ batch
-    partials — O(|groups| + |batch|), never a corpus re-scan.  COUNT and
-    the exact decimal SUMs merge by addition, MAX by max; provenance is
+    view): the 20% arrival batch aggregates to +1 partials, and the
+    maintained view is :func:`apply` over store ∪ batch —
+    O(|groups| + |batch|), never a corpus re-scan.  Provenance is
     'carried' (store-only group), 'new' (batch-only), 'merged' (both).
 
     The DuckDB oracle is the full rollup over the whole corpus with the
     same provenance split — the driver hash-match proves merge ==
     recompute every round.  ``view_store`` injects the persisted t0
-    view (roundtrip test); default derives BOTH side's partials from
-    ONE corpus scan grouped by (keys, arrival slice) — round 11, the
-    base/batch split previously cost two scans (guide §1.2)."""
-    if view_store is not None:
-        store = view_store
-        dv = agg_partials(li.filter(arrival_flag()))
-        tagged = store.withColumn("in_store", F.lit(1)).withColumn(
-            "in_batch", F.lit(0)
-        ).unionByName(
-            dv.withColumn("in_store", F.lit(0)).withColumn("in_batch", F.lit(1))
-        )
-    else:
-        parts = agg_partials(li, arrival_flag().alias("arr"))
-        tagged = parts.select(
-            *VIEW_KEYS,
-            "n_rows",
-            "sum_qty",
-            "revenue",
-            "max_price",
-            F.when(F.col("arr"), F.lit(0)).otherwise(F.lit(1)).alias("in_store"),
-            F.when(F.col("arr"), F.lit(1)).otherwise(F.lit(0)).alias("in_batch"),
-        )
-    merged = combine_partials(
-        tagged,
-        F.max("in_store").alias("in_store"),
-        F.max("in_batch").alias("in_batch"),
+    view (roundtrip test); default derives both sides in one scan
+    (:func:`_with_arrivals`)."""
+    net = apply(
+        _with_arrivals(li, view_store),
+        None,
+        F.max("arr").alias("in_batch"),
+        F.min("arr").alias("batch_only"),
     )
-    return _as_output(
-        merged.withColumn(
-            "src",
-            F.when(F.col("in_store") + F.col("in_batch") == 2, "merged")
-            .when(F.col("in_batch") == 1, "new")
-            .otherwise("carried"),
-        ),
-        "src",
+    src = (
+        F.when(F.col("batch_only"), "new")
+        .when(F.col("in_batch"), "merged")
+        .otherwise("carried")
     )
+    return _as_output(net.withColumn("src", src), "src")
 
 
 def incremental_agg_view_sql(table: str = "lineitem") -> str:
@@ -283,96 +305,40 @@ def incremental_agg_view_sql(table: str = "lineitem") -> str:
 
 # -- delete (q258) ------------------------------------------------------------
 
-def apply_retractions(
-    store: DataFrame,
-    dead_partials: DataFrame,
-    remaining_rows: DataFrame | None,
-    remax: DataFrame | None = None,
-) -> DataFrame:
-    """Subtract the dead rows' exact partials (pre-aggregated by the
-    caller, who also owns their materialization) from the store and
-    recompute MAX for the affected groups only: COUNT/SUM retract by
-    decimal subtraction (exact), groups emptied by the retraction drop
-    out (n_rows = 0), and — since MAX is not self-maintainable under
-    deletion — each affected group re-scans ITS remaining rows for the
-    new max (semi-join bounded, the q229 discipline).  A caller that
-    already holds per-group surviving maxima (the round-11 one-pass
-    partials) passes them as ``remax`` and skips the row re-scan."""
-    dd = dead_partials
-    keys = list(VIEW_KEYS)
-    carried = store.join(dd.select(*keys), keys, "left_anti")
-    adj = (
-        store.alias("s")
-        .join(dd.alias("d"), keys)
-        .select(
-            *keys,
-            (F.col("s.n_rows") - F.col("d.n_rows")).cast("long").alias("n_rows"),
-            (F.col("s.sum_qty") - F.col("d.sum_qty"))
-            .cast(SUM_QTY_DEC)
-            .alias("sum_qty"),
-            (F.col("s.revenue") - F.col("d.revenue"))
-            .cast(REVENUE_DEC)
-            .alias("revenue"),
-        )
-        .filter(F.col("n_rows") > 0)
-    )
-    if remax is None:
-        remax = (
-            _with_keys(remaining_rows)
-            .join(dd.select(*keys), keys, "left_semi")
-            .groupBy(*keys)
-            .agg(F.max("l_extendedprice").alias("max_price"))
-        )
-    return carried.unionByName(adj.join(remax, keys))
-
-
 def delete_aware_agg_view(
     li: DataFrame, view_store: DataFrame | None = None
 ) -> DataFrame:
     """DELETE maintenance (q258 — the q229 tombstone shape on the OLAP
     view): the 10% deleted-order slice retracts from the persisted view
-    by exact decimal subtraction; MAX recomputes for affected groups
-    from their remaining rows only (:func:`apply_retractions`).  The
-    DuckDB oracle is the full rollup over the remaining corpus (with
-    'adjusted'/'carried' provenance), so the driver hash-match proves
-    subtraction + bounded max-recompute == recompute.  ``view_store``
-    injects the persisted t0 view (roundtrip test); the default path
-    derives store/dead/surviving-max partials from ONE corpus scan
-    grouped by (keys, deleted slice) — round 11, previously three
-    scans (guide §1.2): the store is the associative combine over both
-    slices, the retraction is the deleted slice, and the surviving
-    per-group max is the live slice's partial max (max over a
+    as −1 partials through :func:`apply` — exact decimal subtraction,
+    emptied groups drop, and MAX recomputes for the dirty groups from
+    their remaining rows only.  The DuckDB oracle is the full rollup
+    over the remaining corpus (with 'adjusted'/'carried' provenance:
+    adjusted ⇔ dirty), so the driver hash-match proves subtraction +
+    bounded max-recompute == recompute.  ``view_store`` injects the
+    persisted t0 view (roundtrip test); the default path derives store
+    and retraction from ONE corpus scan grouped by (keys, deleted
+    slice) — round 11, previously three scans (guide §1.2): a deleted
+    slice is a store partial retracted in the same pass (weight 0), so
+    the live slices' partial max is the surviving max (max over a
     partition of rows is the partition-wise max — no row re-scan)."""
     from ..checkpoints import local_checkpoint
 
-    keys = list(VIEW_KEYS)
-    if view_store is not None:
-        store = local_checkpoint(view_store, eager=False)
-        dd = local_checkpoint(
-            agg_partials(li.filter(deleted_flag())), eager=False
-        )
-        out = apply_retractions(store, dd, li.filter(~deleted_flag()))
-    else:
+    if view_store is None:
         parts = local_checkpoint(
             agg_partials(li, deleted_flag().alias("dead")), eager=False
         )
-        store = combine_partials(parts)
-        dd = local_checkpoint(
-            parts.filter(F.col("dead")).drop("dead"), eager=False
+        net = apply(weigh(parts, F.when(F.col("dead"), 0).otherwise(1)), None)
+    else:
+        gone = local_checkpoint(
+            agg_partials(li.filter(deleted_flag())), eager=False
         )
-        remax = (
-            parts.filter(~F.col("dead"))
-            .select(*keys, "max_price")
+        net = apply(
+            view_store.unionByName(weigh(gone, -1)),
+            _remax(li.filter(~deleted_flag()), gone),
         )
-        out = apply_retractions(store, dd, None, remax=remax)
-    dd_keys = dd.select(*VIEW_KEYS).withColumn("touched", F.lit(1))
-    return _as_output(
-        out.join(dd_keys, list(VIEW_KEYS), "left").withColumn(
-            "src",
-            F.when(F.col("touched") == 1, "adjusted").otherwise("carried"),
-        ),
-        "src",
-    )
+    src = F.when(F.col("dirty"), "adjusted").otherwise("carried")
+    return _as_output(net.withColumn("src", src), "src")
 
 
 def delete_aware_agg_view_sql(table: str = "lineitem") -> str:
@@ -408,21 +374,22 @@ def upsert_aware_agg_view(
     """UPSERT maintenance (q259 — the q231 revision shape on the OLAP
     view): a deterministic 10% order slice is revised between snapshots
     (quantity +5, price +100 — exact-in-double increments, so decimals
-    stay lossless).  Group keys are revision-stable, so the maintained
-    view subtracts the revised rows' OLD partials and adds their NEW
-    partials in one pass (n_rows provably unchanged — an UPDATE is a
-    retraction + insertion of equal cardinality); MAX recomputes for
-    affected groups from their t1 rows (bounded semi-join).
+    stay lossless).  Group keys are revision-stable, so an UPDATE is
+    the signed delta −old +new of equal cardinality (n_rows provably
+    unchanged), netted through :func:`apply`; the retraction dirties
+    the revised groups, whose max recomputes from their t1 rows
+    (bounded semi-join).
 
     The DuckDB oracle is the full rollup over the t1 corpus with
     'revised'/'carried' provenance — hash-match proves the retract+add
     algebra.  ``view_store`` injects the persisted t0 view (roundtrip
-    test); the default path derives store/old/new/t1-max partials from
-    ONE corpus scan grouped by (keys, revised slice) with dual
-    old-value/new-value aggregates per row — round 11, previously four
-    scans (guide §1.2).  Exactness carries: the per-row revised values
-    are the same expressions the t1 projection applied, and every
-    combine is associative decimal/max algebra."""
+    test); the default path is ONE scan of the t1 rows grouped by
+    (keys, revised slice) — round 11, previously four scans (guide
+    §1.2): a revised slice's store partial, its −old and its +new net
+    in place to the slice's t1 partial, so the combine's max is the t1
+    max with no row re-scan.  Exactness carries: the per-row revised
+    values are the same expressions the t1 projection applied, and
+    every combine is associative decimal/max algebra."""
     changed = updated_flag()
     t1 = li.withColumn(
         "l_quantity",
@@ -437,90 +404,21 @@ def upsert_aware_agg_view(
     )
     from ..checkpoints import local_checkpoint
 
-    keys = list(VIEW_KEYS)
-    if view_store is not None:
-        store = local_checkpoint(view_store, eager=False)
-        old = local_checkpoint(agg_partials(li.filter(changed)), eager=False)
-        new = local_checkpoint(agg_partials(t1.filter(changed)), eager=False)
-        remax = (
-            _with_keys(t1)
-            .join(old.select(*keys), keys, "left_semi")
-            .groupBy(*keys)
-            .agg(F.max("l_extendedprice").alias("max_price"))
-        )
-    else:
-        N = _N()
-        new_price = F.col("l_extendedprice") + F.lit(UPD_PRICE_DELTA)
+    if view_store is None:
         parts = local_checkpoint(
-            _with_keys(li)
-            .groupBy(*keys, changed.alias("chg"))
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.sum(N.dec(F.col("l_quantity")))
-                .cast(SUM_QTY_DEC)
-                .alias("sum_qty"),
-                F.sum(N.revenue(F.col("l_extendedprice"), F.col("l_discount")))
-                .cast(REVENUE_DEC)
-                .alias("revenue"),
-                F.max("l_extendedprice").alias("max_price"),
-                F.sum(N.dec(F.col("l_quantity") + F.lit(UPD_QTY_DELTA)))
-                .cast(SUM_QTY_DEC)
-                .alias("sum_qty_new"),
-                F.sum(N.revenue(new_price, F.col("l_discount")))
-                .cast(REVENUE_DEC)
-                .alias("revenue_new"),
-                F.max(new_price).alias("max_price_new"),
-            ),
-            eager=False,
+            agg_partials(t1, changed.alias("chg")), eager=False
         )
-        store = combine_partials(parts)
-        old = parts.filter(F.col("chg")).select(
-            *keys, "n_rows", "sum_qty", "revenue", "max_price"
+        remax = None
+    else:
+        old = local_checkpoint(agg_partials(li.filter(changed)), eager=False)
+        delta = weigh(old, -1).unionByName(agg_partials(t1.filter(changed)))
+        parts = view_store.withColumn("chg", F.lit(False)).unionByName(
+            delta.withColumn("chg", F.lit(True))
         )
-        new = parts.filter(F.col("chg")).select(
-            *keys,
-            "n_rows",
-            F.col("sum_qty_new").alias("sum_qty"),
-            F.col("revenue_new").alias("revenue"),
-            F.col("max_price_new").alias("max_price"),
-        )
-        # per-group max over the t1 rows: revised rows contribute their
-        # shifted max, unrevised rows their original — one combine of
-        # the same partials, no row re-scan
-        remax = parts.groupBy(*keys).agg(
-            F.max(
-                F.when(F.col("chg"), F.col("max_price_new")).otherwise(
-                    F.col("max_price")
-                )
-            ).alias("max_price")
-        )
-    carried = store.join(old.select(*keys), keys, "left_anti").withColumn(
-        "src", F.lit("carried")
-    )
-    revised = (
-        store.alias("s")
-        .join(old.alias("o"), keys)
-        .join(new.alias("n"), keys)
-        .select(
-            *keys,
-            F.col("s.n_rows").cast("long").alias("n_rows"),
-            (F.col("s.sum_qty") - F.col("o.sum_qty") + F.col("n.sum_qty"))
-            .cast(SUM_QTY_DEC)
-            .alias("sum_qty"),
-            (F.col("s.revenue") - F.col("o.revenue") + F.col("n.revenue"))
-            .cast(REVENUE_DEC)
-            .alias("revenue"),
-        )
-        .join(remax, keys)
-        .withColumn("src", F.lit("revised"))
-    )
-    return _as_output(
-        carried.select(*keys, "n_rows", "sum_qty", "revenue", "max_price", "src")
-        .unionByName(
-            revised.select(*keys, "n_rows", "sum_qty", "revenue", "max_price", "src")
-        ),
-        "src",
-    )
+        remax = _remax(t1, old)
+    net = apply(parts, remax, F.max("chg").alias("chg"))
+    src = F.when(F.col("chg"), "revised").otherwise("carried")
+    return _as_output(net.withColumn("src", src), "src")
 
 
 def upsert_aware_agg_view_sql(table: str = "lineitem") -> str:
@@ -581,60 +479,30 @@ def vacuumed_agg_view(
     t0 = li.filter(~arrival_flag())
     # ONE t0 scan produces per-(keys, sub-slice, deleted) partials; every
     # accreted file set, the retraction partials, and the surviving
-    # per-group maxima are associative combines of it (round 11 — the
-    # accretion loop alone previously re-scanned the corpus four times,
-    # guide §1.2)
-    sub = portable_hash64(F.col("l_orderkey").cast("string"), salt="vagv") % 4
+    # per-group maxima are slices of it (round 11 — the accretion loop
+    # alone previously re-scanned the corpus four times, guide §1.2)
     slices = local_checkpoint(
-        agg_partials(t0, sub.alias("sub"), deleted_flag().alias("dead")),
+        agg_partials(
+            t0,
+            hash_bucket("l_orderkey", "vagv", 4).alias("sub"),
+            deleted_flag().alias("dead"),
+        ),
         eager=False,
     )
     # accretion: four positive partial file sets (sub-slices, salt
-    # "vagv"); each is the sub-slice's combine — row-identical to the
-    # direct per-slice aggregate, reading cached partials not the corpus
-    positive = [
-        combine_partials(slices.filter(F.col("sub") == i)).withColumn(
-            "is_retract", F.lit(0)
-        )
-        for i in range(4)
-    ]
-    # deletion cycle: retraction partials (restricted to t0 orders)
-    retract = combine_partials(slices.filter(F.col("dead"))).select(
-        *VIEW_KEYS,
-        (-F.col("n_rows")).cast("long").alias("n_rows"),
-        (-F.col("sum_qty")).cast(SUM_QTY_DEC).alias("sum_qty"),
-        (-F.col("revenue")).cast(REVENUE_DEC).alias("revenue"),
-        F.lit(None).cast("double").alias("max_price"),
-        F.lit(1).alias("is_retract"),
-    )
-    # every file set lands in v1 before its commit (a union keeps each
-    # input's files)
-    accreted = reduce(DataFrame.unionByName, positive + [retract])
+    # "vagv") and the deletion cycle's −1 retraction partials — every
+    # file set lands in v1 before its commit (a union keeps each input's
+    # files)
+    file_sets = [slices.filter(F.col("sub") == i) for i in range(4)]
+    file_sets.append(weigh(slices.filter(F.col("dead")), -1))
+    accreted = reduce(DataFrame.unionByName, file_sets).drop("sub", "dead")
     publish_version(root, 1, {"view_store": accreted})
-    # vacuum: net combine + dirty-group max recovery, published as v2
-    parts = read_current(spark, root, "view_store", accreted.schema)
-    net = combine_partials(parts, F.max("is_retract").alias("dirty")).filter(
-        F.col("n_rows") > 0
-    )
-    keys = list(VIEW_KEYS)
-    # surviving max per dirty group = combine of the live slices' partial
-    # maxima (max over a partition of rows is the partition-wise max)
-    remax = (
-        slices.filter(~F.col("dead"))
-        .groupBy(*keys)
-        .agg(F.max("max_price").alias("max_price"))
-        .join(net.filter(F.col("dirty") == 1).select(*keys), keys, "left_semi")
-    )
-    clean = net.filter(F.col("dirty") == 0).select(
-        *keys, "n_rows", "sum_qty", "revenue", "max_price"
-    )
-    repaired = (
-        net.filter(F.col("dirty") == 1)
-        .drop("max_price", "dirty")
-        .join(remax, keys)
-        .select(*keys, "n_rows", "sum_qty", "revenue", "max_price")
-    )
-    net_view = clean.unionByName(repaired)
+    # vacuum: the net of the accreted store, dirty groups' max from the
+    # live slices' partial maxima, published as v2
+    net_view = apply(
+        read_current(spark, root, "view_store", accreted.schema),
+        slices.filter(~F.col("dead")),
+    ).drop("dirty")
     publish_version(root, 2, {"view_store": net_view.coalesce(1)})
     # next insert refresh off the vacuumed store
     remaining = li.filter(~(deleted_flag() & ~arrival_flag()))
@@ -655,19 +523,54 @@ def vacuumed_agg_view_sql(table: str = "lineitem") -> str:
     return incremental_agg_view_sql(remaining)
 
 
-# -- lattice derivability (q263) ------------------------------------------------
+# -- lattice derivability (q263, q274) ------------------------------------------
+
+def _quarterly(monthly: DataFrame, *flags: str) -> DataFrame:
+    """The lattice edge month -> quarter: :func:`apply` over the
+    monthly partials re-keyed to their quarter — COUNT/SUM partials
+    re-combine by addition (exact decimals: associativity is what makes
+    the edge exact, not approximate) and MAX by max.  ``flags`` are
+    boolean provenance columns, OR-ed up the edge."""
+    quarter = F.concat(
+        F.substring("ship_month", 1, 4),
+        F.lit("-Q"),
+        ((F.substring("ship_month", 6, 2).cast("int") + 2) / 3)
+        .cast("int")
+        .cast("string"),
+    )
+    net = apply(
+        monthly.withColumn("ship_month", quarter),
+        None,
+        *[F.max(f).alias(f) for f in flags],
+    )
+    return _as_output(net, *flags).withColumnRenamed(
+        "ship_month", "ship_quarter"
+    )
+
+
+def _quarterly_sql(table: str, src: str) -> str:
+    """DuckDB twin: the quarterly rollup DIRECTLY from the corpus, with
+    ``src`` (a provenance select item, or empty) appended."""
+    return f"""
+    SELECT strftime(l_shipdate, '%Y') || '-Q' ||
+           cast((cast(strftime(l_shipdate, '%m') as int) + 2) // 3 as varchar)
+             AS ship_quarter,
+           l_returnflag,{_view_aggs_sql()}{src}
+    FROM {table}
+    GROUP BY 1, 2
+    """
+
 
 def derived_quarterly_view(
     li: DataFrame, view_store: DataFrame | None = None
 ) -> DataFrame:
     """Cube-lattice derivability (q263): the QUARTERLY rollup answered
-    from the persisted MONTHLY view — never from the corpus.  COUNT/SUM
-    partials re-combine by addition (exact decimals — associativity is
-    what makes the lattice edge exact, not approximate) and MAX by max,
-    so coarsening the granularity is one |monthly groups|-sized combine:
-    the classic OLAP view-based query-answering claim, proven here by
-    the DuckDB oracle computing the quarterly rollup DIRECTLY from
-    lineitem — the driver hash-match is the derivability proof.
+    from the persisted MONTHLY view — never from the corpus — through
+    the lattice edge :func:`_quarterly`, so coarsening the granularity
+    is one |monthly groups|-sized combine: the classic OLAP view-based
+    query-answering claim, proven here by the DuckDB oracle computing
+    the quarterly rollup DIRECTLY from lineitem — the driver hash-match
+    is the derivability proof.
 
     ``view_store`` injects the persisted monthly view (roundtrip test);
     default derives it in-plan (one corpus scan to build the view, then
@@ -677,24 +580,7 @@ def derived_quarterly_view(
     quarterly (or yearly — same edge, coarser) query costs |months ×
     flags| rows instead of a corpus re-scan.  Reference anchor:
     extension of ``hw2/BDM_hw2_final.py:203-206``."""
-    monthly = view_store if view_store is not None else agg_partials(li)
-    quarter = F.concat(
-        F.substring("ship_month", 1, 4),
-        F.lit("-Q"),
-        ((F.substring("ship_month", 6, 2).cast("int") + 2) / 3)
-        .cast("int")
-        .cast("string"),
-    )
-    return (
-        monthly.withColumn("ship_quarter", quarter)
-        .groupBy("ship_quarter", "l_returnflag")
-        .agg(
-            F.sum("n_rows").cast("long").alias("n_rows"),
-            F.sum("sum_qty").cast("double").alias("sum_qty"),
-            F.sum("revenue").cast("double").alias("revenue"),
-            F.max("max_price").alias("max_price"),
-        )
-    )
+    return _quarterly(view_store if view_store is not None else agg_partials(li))
 
 
 def maintained_quarterly_view(
@@ -702,12 +588,12 @@ def maintained_quarterly_view(
 ) -> DataFrame:
     """TWO-LEVEL lattice maintenance (q274): the q257 insert refresh
     and the q263 derivability edge CHAINED — the arrival batch merges
-    into the persisted monthly view (one :func:`combine_partials`),
-    and the quarterly view re-derives from the REFRESHED monthly
-    partials, never from the corpus.  This is the consistency claim a
-    real view hierarchy needs: after maintenance, every coarser view
-    derived from the maintained store equals the direct recompute over
-    the new corpus — maintenance and derivability COMMUTE (both are
+    into the persisted monthly view (one :func:`apply`), and the
+    quarterly view re-derives from the REFRESHED monthly partials,
+    never from the corpus.  This is the consistency claim a real view
+    hierarchy needs: after maintenance, every coarser view derived from
+    the maintained store equals the direct recompute over the new
+    corpus — maintenance and derivability COMMUTE (both are
     exact-decimal partial algebra, which is the whole reason the store
     holds decimals).
 
@@ -719,84 +605,32 @@ def maintained_quarterly_view(
     chained maintenance, not just one level.
 
     ``view_store`` injects the persisted monthly view (roundtrip
-    test); default derives it in-plan from the base slice.
+    test); default derives it in-plan from the base slice, in the same
+    one scan as q257 (:func:`_with_arrivals`).
 
     Scale: the merge is |monthly groups|+|batch|-sized, the derivation
     |monthly groups|-sized — corpus never re-touched; at 100 TB this
     chain is the nightly view-refresh DAG in one plan.  Reference
     anchor: extension of ``hw2/BDM_hw2_final.py:203-206``."""
-    if view_store is not None:
-        tagged = view_store.withColumn("in_batch", F.lit(0)).unionByName(
-            agg_partials(li.filter(arrival_flag())).withColumn(
-                "in_batch", F.lit(1)
-            )
-        )
-    else:
-        # one corpus scan grouped by (keys, arrival) replaces the
-        # base/batch double scan (round 11, guide §1.2)
-        tagged = agg_partials(li, arrival_flag().alias("arr")).select(
-            *VIEW_KEYS,
-            "n_rows",
-            "sum_qty",
-            "revenue",
-            "max_price",
-            F.col("arr").cast("int").alias("in_batch"),
-        )
-    monthly = combine_partials(tagged, F.max("in_batch").alias("in_batch"))
-    quarter = F.concat(
-        F.substring("ship_month", 1, 4),
-        F.lit("-Q"),
-        ((F.substring("ship_month", 6, 2).cast("int") + 2) / 3)
-        .cast("int")
-        .cast("string"),
+    monthly = apply(
+        _with_arrivals(li, view_store), None, F.max("arr").alias("arr")
     )
-    return (
-        monthly.withColumn("ship_quarter", quarter)
-        .groupBy("ship_quarter", "l_returnflag")
-        .agg(
-            F.sum("n_rows").cast("long").alias("n_rows"),
-            F.sum("sum_qty").cast("double").alias("sum_qty"),
-            F.sum("revenue").cast("double").alias("revenue"),
-            F.max("max_price").alias("max_price"),
-            F.max("in_batch").alias("in_batch"),
-        )
-        .select(
-            "ship_quarter",
-            "l_returnflag",
-            "n_rows",
-            "sum_qty",
-            "revenue",
-            "max_price",
-            F.when(F.col("in_batch") == 1, F.lit("touched"))
-            .otherwise(F.lit("carried"))
-            .alias("src"),
-        )
-    )
+    src = F.when(F.col("arr"), "touched").otherwise("carried")
+    return _quarterly(monthly, "arr").withColumn("src", src).drop("arr")
 
 
 def maintained_quarterly_view_sql(table: str = "lineitem") -> str:
     """DuckDB twin: the quarterly rollup directly from the corpus with
     the per-quarter maintenance-footprint provenance."""
-    return f"""
-    SELECT strftime(l_shipdate, '%Y') || '-Q' ||
-           cast((cast(strftime(l_shipdate, '%m') as int) + 2) // 3 as varchar)
-             AS ship_quarter,
-           l_returnflag,{_view_aggs_sql()},
+    return _quarterly_sql(
+        table,
+        f""",
            CASE WHEN bool_or({arrival_flag_sql()})
-                THEN 'touched' ELSE 'carried' END AS src
-    FROM {table}
-    GROUP BY 1, 2
-    """
+                THEN 'touched' ELSE 'carried' END AS src""",
+    )
 
 
 def derived_quarterly_view_sql(table: str = "lineitem") -> str:
     """DuckDB twin: the quarterly rollup computed DIRECTLY from the
     corpus — the identity the monthly-view derivation must reproduce."""
-    return f"""
-    SELECT strftime(l_shipdate, '%Y') || '-Q' ||
-           cast((cast(strftime(l_shipdate, '%m') as int) + 2) // 3 as varchar)
-             AS ship_quarter,
-           l_returnflag,{_view_aggs_sql()}
-    FROM {table}
-    GROUP BY 1, 2
-    """
+    return _quarterly_sql(table, "")

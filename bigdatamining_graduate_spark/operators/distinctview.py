@@ -11,11 +11,16 @@ COUNTED auxiliary store:
 
     aux(event_type, user_id, refcount)   — |distinct pairs|-sized
 
-maintained by pure signed-count algebra: arrivals add ``+n`` partials,
-deletions add ``-n`` partials, one (type, user)-keyed combine nets
-them, pairs netting to 0 drop.  Serving is a |aux|-sized rollup:
-``n_users = count(pairs)``, ``n_events = sum(refcount)`` — the event
-corpus is never re-scanned.
+maintained by pure signed-count algebra (the counting algorithm of
+Gupta, Mumick and Subrahmanian): arrivals are ``+n`` deltas, deletions
+``-n`` deltas, and ONE :func:`apply` nets the store with them by a
+(type, user)-keyed combine — pairs netting to 0 are the lost users,
+which a vacuum drops.  ONE :func:`serve` is the |aux|-sized per-type
+rollup: ``n_users = count(live pairs)``, ``n_events = sum(refcount)``
+— the event corpus is never re-scanned.  Both cells run through the
+pair: the maintenance cycle (q281) and the post-vacuum refresh (q286,
+which adds only its store audit), off an in-plan, injected or
+persisted store alike.
 
 The per-type provenance exposes exactly the hard part: ``users_lost``
 counts users whose refcount hit 0 (their last event died) and
@@ -40,38 +45,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import portable_hash64, portable_hash64_sql
+from ..functions.hashing import hash_bucket, hash_bucket_sql
 
 DCV_BUCKETS = 10
 DCV_INS_HIST = 8   # salt "dcvi": buckets 0-7 = t0 store, 8-9 arriving (20%)
 DCV_DEL_BUCKET = 0  # salt "dcvd": bucket 0 of t0 events deleted (10%)
 
 
-def _bucket(col: str, salt: str):
-    return portable_hash64(F.col(col).cast("string"), salt=salt) % DCV_BUCKETS
-
-
-def _bucket_sql(col: str, salt: str) -> str:
-    return (
-        f"({portable_hash64_sql(f'cast({col} as varchar)', salt)}"
-        f" % {DCV_BUCKETS})"
-    )
-
-
 def arrival_flag(col: str = "event_id"):
-    return _bucket(col, "dcvi") >= DCV_INS_HIST
+    return hash_bucket(col, "dcvi", DCV_BUCKETS) >= DCV_INS_HIST
 
 
 def arrival_sql(col: str = "event_id") -> str:
-    return f"({_bucket_sql(col, 'dcvi')} >= {DCV_INS_HIST})"
+    return f"({hash_bucket_sql(col, 'dcvi', DCV_BUCKETS)} >= {DCV_INS_HIST})"
 
 
 def deleted_flag(col: str = "event_id"):
-    return _bucket(col, "dcvd") == DCV_DEL_BUCKET
+    return hash_bucket(col, "dcvd", DCV_BUCKETS) == DCV_DEL_BUCKET
 
 
 def deleted_sql(col: str = "event_id") -> str:
-    return f"({_bucket_sql(col, 'dcvd')} = {DCV_DEL_BUCKET})"
+    return f"({hash_bucket_sql(col, 'dcvd', DCV_BUCKETS)} = {DCV_DEL_BUCKET})"
 
 
 KEYS = ("event_type", "user_id")
@@ -84,13 +78,42 @@ def refcount_partials(ev: DataFrame, sign: int) -> DataFrame:
     )
 
 
+def apply(signed: DataFrame) -> DataFrame:
+    """The view's ONE refcount netting rule: ``signed`` is the t0 aux
+    store (``in_t0`` = 1) unioned with signed (type, user) deltas
+    (``in_t0`` = 0) — +n arrivals, −n deletions, as partials or as
+    event rows of weight ±1 — netted by one (type, user) combine into
+    aux1(event_type, user_id, refcount, in_t0).  Pairs netting to 0
+    stay: :func:`serve` reports them as lost, a vacuum drops them."""
+    return signed.groupBy(*KEYS).agg(
+        F.sum("refcount").cast("long").alias("refcount"),
+        F.max("in_t0").alias("in_t0"),
+    )
+
+
+def serve(aux1: DataFrame) -> DataFrame:
+    """The |aux|-sized per-type rollup of a netted aux store:
+    ``n_users`` = live pairs, ``n_events`` = their refcounts, with the
+    distinctness transitions — ``users_gained`` (live, not in t0) and
+    ``users_lost`` (netted to 0, in t0)."""
+    live = F.col("refcount") > 0
+    return aux1.groupBy("event_type").agg(
+        F.count(F.when(live, 1)).alias("n_users"),
+        F.coalesce(F.sum(F.when(live, F.col("refcount"))), F.lit(0))
+        .cast("long")
+        .alias("n_events"),
+        F.count(F.when(live & (F.col("in_t0") == 0), 1)).alias("users_gained"),
+        F.count(F.when(~live & (F.col("in_t0") == 1), 1)).alias("users_lost"),
+    )
+
+
 def maintained_distinct_view(
     ev: DataFrame, aux_store: DataFrame | None = None
 ) -> DataFrame:
     """One insert + delete maintenance cycle (q281) on the distinct-
-    count view: t0 aux store ∪ arrival ``+n`` partials ∪ deletion
-    ``-n`` partials, netted by one (type, user) combine; serving rolls
-    the aux up per type with distinctness-transition provenance.
+    count view: t0 aux store ∪ arrival ``+n`` deltas ∪ deletion ``-n``
+    deltas, netted by :func:`apply`; :func:`serve` rolls the aux up per
+    type with distinctness-transition provenance.
 
     The deletion slice is a 10 % hash slice of t0 EVENTS (not users —
     so most touched users survive with a lower refcount, and only
@@ -98,58 +121,30 @@ def maintained_distinct_view(
     count as lost).  ``aux_store`` injects the persisted t0 aux
     (roundtrip test); default derives it in-plan.
 
-    One-pass maintenance (round 12, guide §1.2/§2.3): with a persisted
-    store, the +batch and −dead partials come from ONE scan of the
-    event corpus (per-row sign, one (type, user) partial aggregation)
-    instead of two; the signed-union-then-net algebra is unchanged.
-    Without a store the t0 partials fold into the same scan — the
-    whole cycle is one groupBy with conditional aggregates (3 scans +
-    3-way union → 1 scan; oracle-verified hash-identical)."""
+    One-pass maintenance (round 12, guide §1.2/§2.3): the deltas are
+    the arriving and deleted event rows themselves, weighted ±1, so
+    apply's one (type, user) aggregation is the only pass over the
+    event corpus.  Without a store the t0 events join the same pass as
+    +1 store rows — a deleted t0 event's +1 and −1 net in place — so
+    the whole cycle is one groupBy (3 scans + 3-way union → 1 scan;
+    oracle-verified hash-identical)."""
     arr = arrival_flag()
     dead = deleted_flag()
     if aux_store is None:
-        # per-row refcount contribution: batch +1; surviving t0 +1;
-        # deleted t0 +1 (aux0) − 1 (retraction) = 0.  in_t0 ⇔ the pair
-        # has ANY t0 event (aux0 membership), deleted or not.
-        aux1 = ev.groupBy(*KEYS).agg(
-            F.sum(F.when(arr | ~dead, 1).otherwise(0))
-            .cast("long")
-            .alias("refcount"),
-            F.max(F.when(~arr, 1).otherwise(0)).alias("in_t0"),
+        signed = ev.select(
+            *KEYS,
+            F.when(arr | ~dead, 1).otherwise(0).alias("refcount"),
+            F.when(~arr, 1).otherwise(0).alias("in_t0"),
         )
     else:
         signed = aux_store.withColumn("in_t0", F.lit(1)).unionByName(
-            ev.filter(arr | dead)
-            .groupBy(*KEYS)
-            .agg(
-                F.sum(F.when(arr, 1).otherwise(-1))
-                .cast("long")
-                .alias("refcount")
+            ev.filter(arr | dead).select(
+                *KEYS,
+                F.when(arr, 1).otherwise(-1).alias("refcount"),
+                F.lit(0).alias("in_t0"),
             )
-            .withColumn("in_t0", F.lit(0))
         )
-        aux1 = signed.groupBy(*KEYS).agg(
-            F.sum("refcount").cast("long").alias("refcount"),
-            F.max("in_t0").alias("in_t0"),
-        )
-    return (
-        aux1.groupBy("event_type")
-        .agg(
-            F.count(F.when(F.col("refcount") > 0, 1)).alias("n_users"),
-            F.coalesce(
-                F.sum(F.when(F.col("refcount") > 0, F.col("refcount"))),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("n_events"),
-            F.count(
-                F.when((F.col("refcount") > 0) & (F.col("in_t0") == 0), 1)
-            ).alias("users_gained"),
-            F.count(
-                F.when((F.col("refcount") == 0) & (F.col("in_t0") == 1), 1)
-            ).alias("users_lost"),
-        )
-    )
+    return serve(apply(signed))
 
 
 def maintained_distinct_view_sql(table: str = "events") -> str:
@@ -221,8 +216,8 @@ def vacuumed_distinct_view(
     aggregation with per-slice conditional counts (the q257
     ``agg_partials`` discipline); the six file-set writes then filter a
     checkpointed aux-sized frame instead of re-scanning the corpus
-    (6 corpus scans → 1).  Store layout and net algebra are
-    unchanged."""
+    (6 corpus scans → 1).  The vacuum's net and the refresh are both
+    :func:`apply`; the refresh serves through :func:`serve`."""
     from functools import reduce
 
     from ..checkpoints import local_checkpoint
@@ -232,9 +227,7 @@ def vacuumed_distinct_view(
     root = stage_dir or staging_dir(prefix="bdm_dcv_vacuum_")
     arr = arrival_flag()
     dead = deleted_flag()
-    sub = (
-        portable_hash64(F.col("event_id").cast("string"), salt="dcvv") % 4
-    )
+    sub = hash_bucket("event_id", "dcvv", 4)
     t0_sub = lambda i: (~arr) & (sub == i)  # noqa: E731
     parts = local_checkpoint(
         ev.groupBy(*KEYS).agg(
@@ -262,12 +255,15 @@ def vacuumed_distinct_view(
     ]
     accreted = reduce(DataFrame.unionByName, file_sets)
     publish_version(root, 1, {"aux_store": accreted})
-    # vacuum: net combine, drop zero-netted pairs, published as v2
+    # vacuum: the net of the accreted store, zero-netted pairs dropped,
+    # published as v2
     net = (
-        read_current(spark, root, "aux_store", accreted.schema)
-        .groupBy(*KEYS)
-        .agg(F.sum("refcount").cast("long").alias("refcount"))
+        apply(
+            read_current(spark, root, "aux_store", accreted.schema)
+            .withColumn("in_t0", F.lit(1))
+        )
         .filter(F.col("refcount") > 0)
+        .drop("in_t0")
     )
     publish_version(root, 2, {"aux_store": net.coalesce(1)})
     # next insert refresh off the vacuumed store
@@ -275,24 +271,11 @@ def vacuumed_distinct_view(
     raw_rows = aux0.groupBy("event_type").agg(
         F.count("*").alias("n_store_rows")
     )
-    signed = aux0.withColumn("in_t0", F.lit(1)).unionByName(
-        parts.filter(F.col("b") > 0)
-        .select(*KEYS, F.col("b").cast("long").alias("refcount"))
-        .withColumn("in_t0", F.lit(0))
+    batch = parts.filter(F.col("b") > 0).select(
+        *KEYS, F.col("b").cast("long").alias("refcount"), F.lit(0).alias("in_t0")
     )
-    aux1 = signed.groupBy(*KEYS).agg(
-        F.sum("refcount").cast("long").alias("refcount"),
-        F.max("in_t0").alias("in_t0"),
-    )
-    return (
-        aux1.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_users"),
-            F.sum("refcount").cast("long").alias("n_events"),
-            F.count(F.when(F.col("in_t0") == 0, 1)).alias("users_gained"),
-        )
-        .join(raw_rows, "event_type")
-    )
+    aux1 = apply(aux0.withColumn("in_t0", F.lit(1)).unionByName(batch))
+    return serve(aux1).drop("users_lost").join(raw_rows, "event_type")
 
 
 def vacuumed_distinct_view_sql(table: str = "events") -> str:

@@ -22,20 +22,27 @@ for the first time when its customer lands — referential integrity
 resolving late is what makes join-view IVM more than two independent
 appends (pinned with a planted fixture in ``tests/test_ivm_views.py``).
 
-DELETE ripples the other way (:func:`delete_ripple_join_view`): erasing
-a customer retracts EVERY view row of that customer — an anti-join on
-the erased keys, the q253 two-anti-filter discipline — while erasing an
-order retracts only its own row.  The oracle recomputes the surviving
-join directly from surviving base rows.
+Retraction has ONE rule, :func:`apply`: the stored rows a cycle hits
+leave, the rows it derives enter, and the result is the rollup of
+surviving ∪ added with every group a row left or entered labelled
+``adjusted``.  DELETE (q280) ripples from the dimension: erasing a
+customer retracts EVERY view row of that customer, erasing an order
+only its own row (the q253 two-anti-filter discipline).  UPSERT (q285)
+retracts the revised entities' rows and re-adds them revised — a
+re-segmented customer MOVES its rows between groups.  The in-plan
+default and an injected or persisted store differ only in how the
+retracted rows are selected (:func:`_t0_store`): by a flag test on the
+store's own key columns, or by the cycle's key sets.
 
 Scale: every maintenance term shuffles (or broadcasts) a delta slice;
 the stored view moves verbatim.  At 100 TB the t0 view is the persisted
-store (``view_store`` injects it for the roundtrip test; the in-plan
+store (``view_store`` injects it for the roundtrip tests; the in-plan
 default derives it as the driver-contract stand-in).  Round-12 note:
-with NO injected store the four slice-joins are the same physical join
-cut four ways, so the in-plan paths collapse them into ONE flagged
-join (guide §1.2/§2.4; the roundtrip tests pin derived == injected, so
-the delta-sided store paths stay exercised and equivalent).
+with NO injected store the slice-joins are the same physical join cut
+several ways, so the in-plan paths collapse them into ONE flagged or
+materialized join (guide §1.2/§2.4; the roundtrip tests pin derived ==
+injected, so the delta-sided store paths stay exercised and
+equivalent).
 
 Reference anchor: extension of the J-family star joins
 (``hw2/BDM_hw2_final.py:176-199`` — the reference re-joins from scratch
@@ -44,10 +51,12 @@ every run; it has no persisted view and no delta maintenance).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import portable_hash64, portable_hash64_sql
+from ..functions.hashing import hash_bucket, hash_bucket_sql
 
 
 def _N():
@@ -66,47 +75,36 @@ JV_ORD_DEAD = 0    # salt "jdo": bucket 0 = deleted order (10%)
 JV_CUST_DEAD = 0   # salt "jdc": bucket 0 = erased customer (10%)
 
 
-def _bucket(col: str, salt: str):
-    return portable_hash64(F.col(col).cast("string"), salt=salt) % JV_BUCKETS
-
-
-def _bucket_sql(col: str, salt: str) -> str:
-    return (
-        f"({portable_hash64_sql(f'cast({col} as varchar)', salt)}"
-        f" % {JV_BUCKETS})"
-    )
-
-
 def order_arrival_flag(col: str = "o_orderkey"):
-    return _bucket(col, "jvo") >= JV_ORD_HIST
+    return hash_bucket(col, "jvo", JV_BUCKETS) >= JV_ORD_HIST
 
 
 def order_arrival_sql(col: str = "o_orderkey") -> str:
-    return f"({_bucket_sql(col, 'jvo')} >= {JV_ORD_HIST})"
+    return f"({hash_bucket_sql(col, 'jvo', JV_BUCKETS)} >= {JV_ORD_HIST})"
 
 
 def cust_arrival_flag(col: str = "c_custkey"):
-    return _bucket(col, "jvc") >= JV_CUST_HIST
+    return hash_bucket(col, "jvc", JV_BUCKETS) >= JV_CUST_HIST
 
 
 def cust_arrival_sql(col: str = "c_custkey") -> str:
-    return f"({_bucket_sql(col, 'jvc')} >= {JV_CUST_HIST})"
+    return f"({hash_bucket_sql(col, 'jvc', JV_BUCKETS)} >= {JV_CUST_HIST})"
 
 
 def order_dead_flag(col: str = "o_orderkey"):
-    return _bucket(col, "jdo") == JV_ORD_DEAD
+    return hash_bucket(col, "jdo", JV_BUCKETS) == JV_ORD_DEAD
 
 
 def order_dead_sql(col: str = "o_orderkey") -> str:
-    return f"({_bucket_sql(col, 'jdo')} = {JV_ORD_DEAD})"
+    return f"({hash_bucket_sql(col, 'jdo', JV_BUCKETS)} = {JV_ORD_DEAD})"
 
 
 def cust_dead_flag(col: str = "c_custkey"):
-    return _bucket(col, "jdc") == JV_CUST_DEAD
+    return hash_bucket(col, "jdc", JV_BUCKETS) == JV_CUST_DEAD
 
 
 def cust_dead_sql(col: str = "c_custkey") -> str:
-    return f"({_bucket_sql(col, 'jdc')} = {JV_CUST_DEAD})"
+    return f"({hash_bucket_sql(col, 'jdc', JV_BUCKETS)} = {JV_CUST_DEAD})"
 
 
 #: view row payload (what the denormalized store persists per order)
@@ -121,18 +119,78 @@ def join_view_rows(orders: DataFrame, customer: DataFrame) -> DataFrame:
     ).select(*_VIEW_COLS, "o_totalprice")
 
 
-def _rollup(view: DataFrame) -> DataFrame:
-    """Driver-sized audit rollup of a maintained view: per
-    (segment, status, src) row counts + exact revenue."""
+def _rollup(view: DataFrame, *by: str) -> DataFrame:
+    """Driver-sized audit rollup of a maintained view: per (segment,
+    status, *by) row counts + exact revenue."""
     N = _N()
     return (
-        view.groupBy("c_mktsegment", "o_orderstatus", "src")
+        view.groupBy("c_mktsegment", "o_orderstatus", *by)
         .agg(
             F.count("*").alias("n_orders"),
             F.countDistinct("c_custkey").alias("n_customers"),
             N.exact_sum(F.col("o_totalprice")).alias("sum_totalprice"),
         )
     )
+
+
+def apply(store: DataFrame, gone, added: DataFrame | None) -> DataFrame:
+    """The view's ONE maintenance rule under retraction: the stored
+    rows matching the predicate ``gone`` leave, the ``added`` rows
+    enter, and the result is the rollup of surviving ∪ added with each
+    group labelled ``adjusted`` when a row left or entered it, else
+    ``carried`` — the label a refresh scheduler invalidates by.  The
+    stored view rows are never recomputed: the retraction is a filter
+    of the store and the labels come from the |moved rows|-sided group
+    sets.  ``store`` is read twice (the caller materializes it)."""
+    group = ["c_mktsegment", "o_orderstatus"]
+    cols = ["c_custkey", *group, "o_totalprice"]
+    rows = store.filter(~gone).select(*cols)
+    moved = store.filter(gone).select(*group)
+    if added is not None:
+        rows = rows.unionByName(added.select(*cols))
+        moved = moved.unionByName(added.select(*group))
+    touched = moved.distinct().withColumn("touched", F.lit(True))
+    return _rollup(rows).join(touched, group, "left").select(
+        *group,
+        F.when(F.col("touched"), "adjusted").otherwise("carried").alias("src"),
+        "n_orders",
+        "n_customers",
+        "sum_totalprice",
+    )
+
+
+def _t0_store(
+    orders: DataFrame,
+    customer: DataFrame,
+    view_store: DataFrame | None,
+    order_flag,
+    cust_flag,
+):
+    """The materialized t0 view and the predicate selecting the rows a
+    cycle retracts: those whose order or customer key the cycle hits.
+    A persisted store meets the cycle's feed as key sets, tagged onto
+    its rows by two left joins.  The in-plan default derives the store
+    from the base tables, where the hit sets are pure functions of the
+    store's OWN key columns — so membership is a flag test on one
+    materialized store scan (round 12, guide §1.2/§2.4; the q253
+    anti-filters-ARE-the-maintenance discipline, oracle-verified
+    hash-identical)."""
+    from ..checkpoints import local_checkpoint
+
+    if view_store is None:
+        store = join_view_rows(orders, customer)
+        return local_checkpoint(store, eager=False), order_flag | cust_flag
+    store = view_store.join(
+        orders.filter(order_flag).select("o_orderkey", F.lit(1).alias("__o")),
+        "o_orderkey",
+        "left",
+    ).join(
+        customer.filter(cust_flag).select("c_custkey", F.lit(1).alias("__c")),
+        "c_custkey",
+        "left",
+    )
+    gone = F.col("__o").isNotNull() | F.col("__c").isNotNull()
+    return local_checkpoint(store, eager=False), gone
 
 
 def _flagged_join(orders: DataFrame, customer: DataFrame) -> DataFrame:
@@ -178,21 +236,18 @@ def incremental_join_view(
         view = _flagged_join(orders, customer).select(
             *_VIEW_COLS, "o_totalprice", _src_case().alias("src")
         )
-        return _rollup(view)
+        return _rollup(view, "src")
     o0 = orders.filter(~order_arrival_flag())
     do = orders.filter(order_arrival_flag())
     c0 = customer.filter(~cust_arrival_flag())
     dc = customer.filter(cust_arrival_flag())
-    terms = [
+    view = reduce(DataFrame.unionByName, [
         view_store.withColumn("src", F.lit("base")),
         join_view_rows(do, c0).withColumn("src", F.lit("d_orders")),
         join_view_rows(o0, dc).withColumn("src", F.lit("d_cust")),
         join_view_rows(do, dc).withColumn("src", F.lit("d_both")),
-    ]
-    view = terms[0]
-    for t in terms[1:]:
-        view = view.unionByName(t)
-    return _rollup(view)
+    ])
+    return _rollup(view, "src")
 
 
 def incremental_join_view_sql(
@@ -225,87 +280,20 @@ def delete_ripple_join_view(
     tables — deleted orders retract their own view row; erased
     customers retract EVERY view row of that customer (the dimension-
     side ripple, which is what distinguishes join-view deletion from
-    per-row tombstoning).  Both retractions are key anti-joins against
-    the stored view — the view rows are never recomputed, and the
-    surviving-group provenance (``adjusted`` ⇔ the group lost at least
-    one row) is derived from a |deleted-keys|-sided semi-join.
+    per-row tombstoning).  Both retractions select stored view rows by
+    key (:func:`_t0_store`) and :func:`apply` drops them — the view
+    rows are never recomputed, and the surviving-group provenance
+    (``adjusted`` ⇔ the group lost at least one row) comes from the
+    retracted rows' groups.
 
     The oracle recomputes the rollup from surviving base rows with the
     same bool_or provenance, so the hash-match proves
-    anti-join-on-keys == row-level re-filter.
-
-    With a persisted ``view_store`` the retractions are key anti-joins
-    against it (the deletion feed is a key set).  The in-plan default
-    derives the store from the base tables, where the dead-key sets are
-    pure functions of the store's OWN key columns — so the anti/semi-
-    joins reduce to flag filters on one materialized store scan (round
-    12, guide §1.2/§2.4: 5 joins + 8 scans → 1 join + 2 scans; the
-    q253 anti-filters-ARE-the-maintenance discipline, oracle-verified
-    hash-identical)."""
-    from ..checkpoints import local_checkpoint
-
-    if view_store is None:
-        # dead flags evaluated on the store's own keys: every store
-        # o_orderkey/c_custkey comes from orders/customer, so the key
-        # anti-join == the flag filter, row for row
-        store = local_checkpoint(
-            join_view_rows(orders, customer).withColumn(
-                "__dead", order_dead_flag() | cust_dead_flag()
-            ),
-            eager=False,
-        )
-        surviving = store.filter(~F.col("__dead")).drop("__dead")
-        retracted = (
-            store.filter(F.col("__dead"))
-            .select("c_mktsegment", "o_orderstatus")
-            .distinct()
-            .withColumn("touched", F.lit(1))
-        )
-        out = _rollup(surviving.withColumn("src", F.lit("x"))).drop("src")
-        return out.join(
-            retracted, ["c_mktsegment", "o_orderstatus"], "left"
-        ).select(
-            "c_mktsegment",
-            "o_orderstatus",
-            F.when(F.col("touched") == 1, "adjusted")
-            .otherwise("carried")
-            .alias("src"),
-            "n_orders",
-            "n_customers",
-            "sum_totalprice",
-        )
-    # consumed three times (surviving + two retraction semi-joins):
-    # materialize the injected store once (q258 discipline)
-    store = local_checkpoint(view_store.drop("src"), eager=False)
-    dead_o = orders.filter(order_dead_flag()).select("o_orderkey")
-    dead_c = customer.filter(cust_dead_flag()).select("c_custkey")
-    surviving = store.join(dead_o, "o_orderkey", "left_anti").join(
-        dead_c, "c_custkey", "left_anti"
+    retraction-by-key == row-level re-filter.  ``view_store`` injects
+    the persisted t0 view (roundtrip test)."""
+    store, gone = _t0_store(
+        orders, customer, view_store, order_dead_flag(), cust_dead_flag()
     )
-    retracted = (
-        store.join(dead_o, "o_orderkey", "left_semi")
-        .select("c_mktsegment", "o_orderstatus")
-        .unionByName(
-            store.join(dead_c, "c_custkey", "left_semi").select(
-                "c_mktsegment", "o_orderstatus"
-            )
-        )
-        .distinct()
-        .withColumn("touched", F.lit(1))
-    )
-    out = _rollup(surviving.withColumn("src", F.lit("x"))).drop("src")
-    return out.join(
-        retracted, ["c_mktsegment", "o_orderstatus"], "left"
-    ).select(
-        "c_mktsegment",
-        "o_orderstatus",
-        F.when(F.col("touched") == 1, "adjusted")
-        .otherwise("carried")
-        .alias("src"),
-        "n_orders",
-        "n_customers",
-        "sum_totalprice",
-    )
+    return apply(store, gone, None)
 
 
 def delete_ripple_join_view_sql(
@@ -342,19 +330,31 @@ UPD_PRICE_DELTA = 50.0
 
 
 def order_rev_flag(col: str = "o_orderkey"):
-    return _bucket(col, "juo") == JV_ORD_REV
+    return hash_bucket(col, "juo", JV_BUCKETS) == JV_ORD_REV
 
 
 def order_rev_sql(col: str = "o_orderkey") -> str:
-    return f"({_bucket_sql(col, 'juo')} = {JV_ORD_REV})"
+    return f"({hash_bucket_sql(col, 'juo', JV_BUCKETS)} = {JV_ORD_REV})"
 
 
 def cust_rev_flag(col: str = "c_custkey"):
-    return _bucket(col, "juc") == JV_CUST_REV
+    return hash_bucket(col, "juc", JV_BUCKETS) == JV_CUST_REV
 
 
 def cust_rev_sql(col: str = "c_custkey") -> str:
-    return f"({_bucket_sql(col, 'juc')} = {JV_CUST_REV})"
+    return f"({hash_bucket_sql(col, 'juc', JV_BUCKETS)} = {JV_CUST_REV})"
+
+
+def _revised_price(rev):
+    return F.when(rev, F.col("o_totalprice") + F.lit(UPD_PRICE_DELTA)).otherwise(
+        F.col("o_totalprice")
+    )
+
+
+def _resegmented(rev):
+    return F.when(rev, F.concat(F.lit("R_"), F.col("c_mktsegment"))).otherwise(
+        F.col("c_mktsegment")
+    )
 
 
 def upsert_ripple_join_view(
@@ -368,143 +368,40 @@ def upsert_ripple_join_view(
     re-segmented to ``R_<segment>``) ripples to EVERY view row of that
     customer, MOVING them between rollup groups: the old segment's
     group loses rows it never saw change, the new segment's group
-    appears.  Maintenance is delta-sided: drop the revised entities'
-    stored rows by key anti-joins, re-derive replacements from the two
-    delta joins (revised orders x t1 customers; unrevised orders x
-    revised customers — disjoint by construction, so nothing double
-    counts), and mark ``adjusted`` every group that lost OR gained a
-    row (both ends of a move).
+    appears.  Maintenance is delta-sided through :func:`apply`: the
+    revised entities' stored rows retract by key, their t1 rows enter,
+    and every group that lost OR gained a row is ``adjusted`` (both
+    ends of a move).
 
     The DuckDB oracle computes the full t1 join with old/new-segment
     provenance from the same flags, so the driver hash-match proves
-    retract + two-sided re-derivation == recompute, group moves
-    included.  Scale: O(|store| anti-join + |revised slices| joins);
-    the view is never rebuilt.
+    retract + re-derivation == recompute, group moves included.
+    Scale: O(|store| + |revised slices| joins); the view is never
+    rebuilt.
 
-    With a persisted ``view_store`` the maintenance is the delta-sided
-    retract + two-sided re-derivation above.  The in-plan default has
-    no persisted store — there surviving ∪ readded is algebraically the
-    full t1 join (surviving = t1 rows of unrevised pairs; r1 ∪ r2 = t1
-    rows of revised pairs, disjoint by construction), and touched is
-    the revised rows' (seg0 ∪ seg1, status) set — so round 12 computes
-    ONE flagged t1 join consumed by both (guide §1.2/§2.4: 6 joins +
-    24 scans → 2 joins + 2 scans, oracle-verified hash-identical)."""
-    from ..checkpoints import local_checkpoint
-
+    With a persisted ``view_store`` the t1 rows re-derive from two
+    delta joins (revised orders x t1 customers; unrevised orders x
+    revised customers — disjoint by construction, so nothing double
+    counts).  The in-plan default has no persisted store: a revised
+    pair's t1 row is its stored row revised in place (keys never
+    change), so one materialized join serves both sides (round 12,
+    guide §1.2/§2.4: 6 joins + 24 scans → 1 join + 2 scans,
+    oracle-verified hash-identical)."""
     o_rev = order_rev_flag()
     c_rev = cust_rev_flag()
+    store, gone = _t0_store(orders, customer, view_store, o_rev, c_rev)
     if view_store is None:
-        j = local_checkpoint(
-            orders.withColumn("__ro", o_rev)
-            .withColumn(
-                "o_totalprice",
-                F.when(
-                    F.col("__ro"),
-                    F.col("o_totalprice") + F.lit(UPD_PRICE_DELTA),
-                ).otherwise(F.col("o_totalprice")),
-            )
-            .join(
-                customer.withColumn("__rc", c_rev)
-                .withColumn("__seg0", F.col("c_mktsegment"))
-                .withColumn(
-                    "c_mktsegment",
-                    F.when(
-                        F.col("__rc"),
-                        F.concat(F.lit("R_"), F.col("c_mktsegment")),
-                    ).otherwise(F.col("c_mktsegment")),
-                ),
-                orders["o_custkey"] == customer["c_custkey"],
-            )
-            .select(
-                "c_custkey",
-                "c_mktsegment",
-                "__seg0",
-                "o_orderstatus",
-                "o_totalprice",
-                (F.col("__ro") | F.col("__rc")).alias("__rev"),
-            ),
-            eager=False,
+        added = store.filter(gone).withColumns({
+            "o_totalprice": _revised_price(o_rev),
+            "c_mktsegment": _resegmented(c_rev),
+        })
+    else:
+        t1_o = orders.withColumn("o_totalprice", _revised_price(o_rev))
+        t1_c = customer.withColumn("c_mktsegment", _resegmented(c_rev))
+        added = join_view_rows(t1_o.filter(o_rev), t1_c).unionByName(
+            join_view_rows(t1_o.filter(~o_rev), t1_c.filter(c_rev))
         )
-        touched = (
-            j.filter("__rev")
-            .select("c_mktsegment", "o_orderstatus")
-            .unionByName(
-                j.filter("__rev").select(
-                    F.col("__seg0").alias("c_mktsegment"), "o_orderstatus"
-                )
-            )
-            .distinct()
-            .withColumn("touched", F.lit(1))
-        )
-        out = _rollup(j.withColumn("src", F.lit("x"))).drop("src")
-        return out.join(
-            touched, ["c_mktsegment", "o_orderstatus"], "left"
-        ).select(
-            "c_mktsegment",
-            "o_orderstatus",
-            F.when(F.col("touched") == 1, "adjusted")
-            .otherwise("carried")
-            .alias("src"),
-            "n_orders",
-            "n_customers",
-            "sum_totalprice",
-        )
-    t1_o = orders.withColumn(
-        "o_totalprice",
-        F.when(
-            o_rev, F.col("o_totalprice") + F.lit(UPD_PRICE_DELTA)
-        ).otherwise(F.col("o_totalprice")),
-    )
-    t1_c = customer.withColumn(
-        "c_mktsegment",
-        F.when(
-            c_rev, F.concat(F.lit("R_"), F.col("c_mktsegment"))
-        ).otherwise(F.col("c_mktsegment")),
-    )
-    store = local_checkpoint(view_store, eager=False)
-    rev_o_keys = orders.filter(o_rev).select("o_orderkey")
-    rev_c_keys = customer.filter(c_rev).select("c_custkey")
-    surviving = store.join(rev_o_keys, "o_orderkey", "left_anti").join(
-        rev_c_keys, "c_custkey", "left_anti"
-    )
-    # disjoint delta joins: (revised orders x all t1 customers) and
-    # (unrevised orders x revised customers)
-    r1 = join_view_rows(t1_o.filter(order_rev_flag()), t1_c)
-    r2 = join_view_rows(
-        t1_o.filter(~order_rev_flag()), t1_c.filter(cust_rev_flag())
-    )
-    readded = r1.unionByName(r2)
-    removed_groups = (
-        store.join(rev_o_keys, "o_orderkey", "left_semi")
-        .select("c_mktsegment", "o_orderstatus")
-        .unionByName(
-            store.join(rev_c_keys, "c_custkey", "left_semi").select(
-                "c_mktsegment", "o_orderstatus"
-            )
-        )
-    )
-    touched = (
-        removed_groups.unionByName(
-            readded.select("c_mktsegment", "o_orderstatus")
-        )
-        .distinct()
-        .withColumn("touched", F.lit(1))
-    )
-    out = _rollup(
-        surviving.unionByName(readded).withColumn("src", F.lit("x"))
-    ).drop("src")
-    return out.join(
-        touched, ["c_mktsegment", "o_orderstatus"], "left"
-    ).select(
-        "c_mktsegment",
-        "o_orderstatus",
-        F.when(F.col("touched") == 1, "adjusted")
-        .otherwise("carried")
-        .alias("src"),
-        "n_orders",
-        "n_customers",
-        "sum_totalprice",
-    )
+    return apply(store, gone, added)
 
 
 def upsert_ripple_join_view_sql(

@@ -1464,8 +1464,8 @@ def stream_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         handle,
     )
     parts = stream.read("view")
-    served = AV.combine_partials(
-        parts, F.min("arrived").cast("long").alias("first_seen")
+    served = AV.apply(
+        parts, None, F.min("arrived").cast("long").alias("first_seen")
     )
     return AV._as_output(served, "first_seen")
 

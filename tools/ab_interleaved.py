@@ -28,9 +28,11 @@ is started from), not from the variant's root: code that runs inside a
 Python/pandas UDF is the same in both variants, so a change confined to
 UDF bodies cannot be A/B'd this way.
 
-Before timing, each named query runs once per variant on the sf0.001
-fixture beside ``--sf`` (untimed, checkpoints released), so the medians
-exclude first-run JIT/codegen cost.
+Before timing, each named query runs once per variant on the ``--sf``
+fixture itself (untimed, checkpoints released), so the medians exclude
+both first-run JIT/codegen cost and the first read of the measured
+fixture, which would otherwise land on whichever variant goes first in
+rep 0.
 
 An A/A run (both roots at the same commit) gives the noise floor.
 """
@@ -81,11 +83,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     res = {v: {n: [] for n in args.names} for v in variants}
-    warm_sf = os.path.join(os.path.dirname(os.path.abspath(args.sf)), "sf0.001")
-    for v in variants:  # untimed first runs on the smallest fixture
+    for v in variants:  # untimed first runs on the measured fixture
         QM, CK = fresh_package(variants[v], roots)
         for n in args.names:
-            QM.QUERIES[n](spark, warm_sf).write.format("noop").mode("overwrite").save()
+            QM.QUERIES[n](spark, args.sf).write.format("noop").mode("overwrite").save()
             CK.release_checkpoints()
     for rep in range(args.reps):
         order = ("old", "new") if rep % 2 == 0 else ("new", "old")
