@@ -325,6 +325,9 @@ def delete_aware_agg_view(
     from ..checkpoints import local_checkpoint
 
     if view_store is None:
+        # materialized like the persisted store it stands in for: the
+        # serving plan reads the store, not the corpus (the scan audit
+        # in tests/expected_scans.json pins 0 corpus scans)
         parts = local_checkpoint(
             agg_partials(li, deleted_flag().alias("dead")), eager=False
         )
@@ -405,6 +408,7 @@ def upsert_aware_agg_view(
     from ..checkpoints import local_checkpoint
 
     if view_store is None:
+        # materialized like the persisted store it stands in for (q258)
         parts = local_checkpoint(
             agg_partials(t1, changed.alias("chg")), eager=False
         )
