@@ -20,9 +20,10 @@ dirty (retracted) group's max from a bounded recompute.  Every cell is
 an input shape of that one function — insert (q257), delete (q258),
 upsert (q259), stream serve (q260: append-only partials, combined on
 read), vacuum (q261: the accreted positive and NEGATIVE partials
-compacted to one net row per group) and the lattice edge (q263, q274)
-— whether the store is the in-plan one-pass derivation or an injected
-or persisted store.
+compacted to one net row per group) and the two-level lattice refresh
+(q274) — whether the store is the in-plan one-pass derivation or an
+injected or persisted store.  The month -> quarter lattice edge (q263,
+q274) is one shared rollup of netted partials.
 
 Money/quantity arithmetic stays in exact decimals end-to-end (the
 SURVEY §7.4 risk-7 rule): decimal partial sums are associative, so
@@ -178,9 +179,11 @@ def apply(parts: DataFrame, remax: DataFrame | None, *extra) -> DataFrame:
     so only live partials carry a max.  ``extra`` are the cell's
     provenance aggregates over the same union.
 
-    Every cell routes through it: insert (q257), delete (q258), upsert
-    (q259), stream serve (q260), vacuum (q261) and the lattice edge
-    (q263, q274)."""
+    Every maintenance cell routes through it: insert (q257), delete
+    (q258), upsert (q259), stream serve (q260), vacuum (q261) and the
+    two-level lattice refresh (q274).  The lattice edge itself
+    (:func:`_quarterly`, q263/q274) carries no delta, so it is a plain
+    rollup of the netted partials."""
     keys = list(VIEW_KEYS)
     net = parts.groupBy(*keys).agg(
         F.sum("n_rows").cast("long").alias("n_rows"),
@@ -501,8 +504,9 @@ def vacuumed_agg_view(
     file_sets.append(weigh(slices.filter(F.col("dead")), -1))
     accreted = reduce(DataFrame.unionByName, file_sets).drop("sub", "dead")
     publish_version(root, 1, {"view_store": accreted})
-    # vacuum: the net of the accreted store, dirty groups' max from the
-    # live slices' partial maxima, published as v2
+    # vacuum: the net of the accreted store, published as v2; a dirty
+    # group's surviving max is its live slices' partial max (max over a
+    # partition of rows is the partition-wise max)
     net_view = apply(
         read_current(spark, root, "view_store", accreted.schema),
         slices.filter(~F.col("dead")),
@@ -530,11 +534,12 @@ def vacuumed_agg_view_sql(table: str = "lineitem") -> str:
 # -- lattice derivability (q263, q274) ------------------------------------------
 
 def _quarterly(monthly: DataFrame, *flags: str) -> DataFrame:
-    """The lattice edge month -> quarter: :func:`apply` over the
-    monthly partials re-keyed to their quarter — COUNT/SUM partials
-    re-combine by addition (exact decimals: associativity is what makes
-    the edge exact, not approximate) and MAX by max.  ``flags`` are
-    boolean provenance columns, OR-ed up the edge."""
+    """The lattice edge month -> quarter over monthly partials: COUNT/
+    SUM re-combine by addition (exact decimals — associativity is what
+    makes the edge exact, not approximate) and MAX by max, one
+    |monthly groups|-sized combine.  ``flags`` are boolean provenance
+    columns, OR-ed up the edge.  Nothing retracts across the edge, so
+    it needs no netting and rolls up straight to output doubles."""
     quarter = F.concat(
         F.substring("ship_month", 1, 4),
         F.lit("-Q"),
@@ -542,13 +547,16 @@ def _quarterly(monthly: DataFrame, *flags: str) -> DataFrame:
         .cast("int")
         .cast("string"),
     )
-    net = apply(
-        monthly.withColumn("ship_month", quarter),
-        None,
-        *[F.max(f).alias(f) for f in flags],
-    )
-    return _as_output(net, *flags).withColumnRenamed(
-        "ship_month", "ship_quarter"
+    return (
+        monthly.withColumn("ship_quarter", quarter)
+        .groupBy("ship_quarter", "l_returnflag")
+        .agg(
+            F.sum("n_rows").cast("long").alias("n_rows"),
+            F.sum("sum_qty").cast("double").alias("sum_qty"),
+            F.sum("revenue").cast("double").alias("revenue"),
+            F.max("max_price").alias("max_price"),
+            *[F.max(f).alias(f) for f in flags],
+        )
     )
 
 
@@ -570,11 +578,11 @@ def derived_quarterly_view(
 ) -> DataFrame:
     """Cube-lattice derivability (q263): the QUARTERLY rollup answered
     from the persisted MONTHLY view — never from the corpus — through
-    the lattice edge :func:`_quarterly`, so coarsening the granularity
-    is one |monthly groups|-sized combine: the classic OLAP view-based
-    query-answering claim, proven here by the DuckDB oracle computing
-    the quarterly rollup DIRECTLY from lineitem — the driver hash-match
-    is the derivability proof.
+    the lattice edge :func:`_quarterly` (shared with q274), so
+    coarsening the granularity is one |monthly groups|-sized combine:
+    the classic OLAP view-based query-answering claim, proven here by
+    the DuckDB oracle computing the quarterly rollup DIRECTLY from
+    lineitem — the driver hash-match is the derivability proof.
 
     ``view_store`` injects the persisted monthly view (roundtrip test);
     default derives it in-plan (one corpus scan to build the view, then
@@ -620,7 +628,15 @@ def maintained_quarterly_view(
         _with_arrivals(li, view_store), None, F.max("arr").alias("arr")
     )
     src = F.when(F.col("arr"), "touched").otherwise("carried")
-    return _quarterly(monthly, "arr").withColumn("src", src).drop("arr")
+    return _quarterly(monthly, "arr").select(
+        "ship_quarter",
+        "l_returnflag",
+        "n_rows",
+        "sum_qty",
+        "revenue",
+        "max_price",
+        src.alias("src"),
+    )
 
 
 def maintained_quarterly_view_sql(table: str = "lineitem") -> str:

@@ -131,6 +131,9 @@ def maintained_distinct_view(
     arr = arrival_flag()
     dead = deleted_flag()
     if aux_store is None:
+        # per-row refcount contribution: batch +1; surviving t0 +1;
+        # deleted t0 +1 (aux0) − 1 (retraction) = 0.  in_t0 ⇔ the pair
+        # has ANY t0 event (aux0 membership), deleted or not.
         signed = ev.select(
             *KEYS,
             F.when(arr | ~dead, 1).otherwise(0).alias("refcount"),

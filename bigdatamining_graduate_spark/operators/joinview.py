@@ -165,32 +165,33 @@ def _t0_store(
     view_store: DataFrame | None,
     order_flag,
     cust_flag,
-):
-    """The materialized t0 view and the predicate selecting the rows a
-    cycle retracts: those whose order or customer key the cycle hits.
-    A persisted store meets the cycle's feed as key sets, tagged onto
-    its rows by two left joins.  The in-plan default derives the store
-    from the base tables, where the hit sets are pure functions of the
-    store's OWN key columns — so membership is a flag test on one
-    materialized store scan (round 12, guide §1.2/§2.4; the q253
-    anti-filters-ARE-the-maintenance discipline, oracle-verified
-    hash-identical)."""
+) -> DataFrame:
+    """The materialized t0 view with each row tagged ``__o``/``__c``
+    when the cycle hits its order/customer key — ``__o | __c`` selects
+    the rows :func:`apply` retracts.  A persisted store meets the
+    cycle's feed as key sets, tagged onto its rows by two left joins.
+    The in-plan default derives the store from the base tables, where
+    the hit sets are pure functions of the store's OWN key columns — so
+    membership is a flag test on one materialized store scan (round 12,
+    guide §1.2/§2.4; the q253 anti-filters-ARE-the-maintenance
+    discipline, oracle-verified hash-identical)."""
     from ..checkpoints import local_checkpoint
 
     if view_store is None:
-        store = join_view_rows(orders, customer)
-        return local_checkpoint(store, eager=False), order_flag | cust_flag
-    store = view_store.join(
-        orders.filter(order_flag).select("o_orderkey", F.lit(1).alias("__o")),
-        "o_orderkey",
-        "left",
-    ).join(
-        customer.filter(cust_flag).select("c_custkey", F.lit(1).alias("__c")),
-        "c_custkey",
-        "left",
-    )
-    gone = F.col("__o").isNotNull() | F.col("__c").isNotNull()
-    return local_checkpoint(store, eager=False), gone
+        store = join_view_rows(orders, customer).withColumns(
+            {"__o": order_flag, "__c": cust_flag}
+        )
+    else:
+        o_keys = orders.filter(order_flag).select("o_orderkey")
+        c_keys = customer.filter(cust_flag).select("c_custkey")
+        store = (
+            view_store.join(
+                o_keys.withColumn("__o", F.lit(True)), "o_orderkey", "left"
+            )
+            .join(c_keys.withColumn("__c", F.lit(True)), "c_custkey", "left")
+            .fillna(False, subset=["__o", "__c"])
+        )
+    return local_checkpoint(store, eager=False)
 
 
 def _flagged_join(orders: DataFrame, customer: DataFrame) -> DataFrame:
@@ -290,10 +291,10 @@ def delete_ripple_join_view(
     same bool_or provenance, so the hash-match proves
     retraction-by-key == row-level re-filter.  ``view_store`` injects
     the persisted t0 view (roundtrip test)."""
-    store, gone = _t0_store(
+    store = _t0_store(
         orders, customer, view_store, order_dead_flag(), cust_dead_flag()
     )
-    return apply(store, gone, None)
+    return apply(store, F.col("__o") | F.col("__c"), None)
 
 
 def delete_ripple_join_view_sql(
@@ -389,11 +390,12 @@ def upsert_ripple_join_view(
     oracle-verified hash-identical)."""
     o_rev = order_rev_flag()
     c_rev = cust_rev_flag()
-    store, gone = _t0_store(orders, customer, view_store, o_rev, c_rev)
+    store = _t0_store(orders, customer, view_store, o_rev, c_rev)
+    gone = F.col("__o") | F.col("__c")
     if view_store is None:
         added = store.filter(gone).withColumns({
-            "o_totalprice": _revised_price(o_rev),
-            "c_mktsegment": _resegmented(c_rev),
+            "o_totalprice": _revised_price(F.col("__o")),
+            "c_mktsegment": _resegmented(F.col("__c")),
         })
     else:
         t1_o = orders.withColumn("o_totalprice", _revised_price(o_rev))
