@@ -317,7 +317,7 @@ def delete_aware_agg_view(
     emptied groups drop, and MAX recomputes for the dirty groups from
     their remaining rows only.  The DuckDB oracle is the full rollup
     over the remaining corpus (with 'adjusted'/'carried' provenance:
-    adjusted ⇔ dirty), so the driver hash-match proves subtraction +
+    adjusted ⇔ dirty), so the oracle hash-match proves subtraction +
     bounded max-recompute == recompute.  ``view_store`` injects the
     persisted t0 view (roundtrip test); the default path derives store
     and retraction from ONE corpus scan grouped by (keys, deleted
@@ -582,7 +582,7 @@ def derived_quarterly_view(
     coarsening the granularity is one |monthly groups|-sized combine:
     the classic OLAP view-based query-answering claim, proven here by
     the DuckDB oracle computing the quarterly rollup DIRECTLY from
-    lineitem — the driver hash-match is the derivability proof.
+    lineitem — the oracle hash-match is the derivability proof.
 
     ``view_store`` injects the persisted monthly view (roundtrip test);
     default derives it in-plan (one corpus scan to build the view, then

@@ -120,7 +120,7 @@ def join_view_rows(orders: DataFrame, customer: DataFrame) -> DataFrame:
 
 
 def _rollup(view: DataFrame, *by: str) -> DataFrame:
-    """Driver-sized audit rollup of a maintained view: per (segment,
+    """Small audit rollup of a maintained view: per (segment,
     status, *by) row counts + exact revenue."""
     N = _N()
     return (
