@@ -310,6 +310,32 @@ def test_upsert_aware_equals_full_recompute(spark):
     assert got == expected
 
 
+def test_upsert_aware_store_roundtrip_weighted(spark, tmp_path):
+    """q270 through PERSISTED stores — the weighted t0 edge store and
+    the t0 count store derived from it, injected, must give the in-plan
+    result: the revised slice's support delta is the same whichever
+    store the query reads."""
+    li = _li(spark)
+    edges = G._weighted_pairs(li)
+    edges.write.parquet(str(tmp_path / "edges"))
+    G.pairs_triangle_counts(edges.select("pa", "pb")).select(
+        "node", "tri_cnt"
+    ).write.parquet(str(tmp_path / "tris"))
+    roundtrip = G.upsert_aware_triangles(
+        li,
+        edge_store=spark.read.parquet(str(tmp_path / "edges")),
+        tri_store=spark.read.parquet(str(tmp_path / "tris")),
+    )
+    key = lambda df: sorted(  # noqa: E731
+        (r.node, r.deg, r.tri_cnt, r.tri_created, r.tri_destroyed)
+        for r in df.collect()
+    )
+    got = key(roundtrip)
+    assert got == key(G.upsert_aware_triangles(li))
+    # the revision is live at this fixture: both directions move
+    assert any(r[3] for r in got) and any(r[4] for r in got)
+
+
 def test_adj_apply_delta_equals_rebuild(spark):
     """Round-12 internals pin: the per-node array-edit t1 adjacency
     (G._adj_apply_delta) must equal the from-scratch t1 build
