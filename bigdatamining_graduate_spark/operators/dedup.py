@@ -18,6 +18,12 @@ Scale notes: the inverted-index Jaccard join caps gram document-frequency
 signal; dropping them bounds the join fanout (standard practice, e.g.
 "stop-shingles"). MinHash bands and SimHash chunks bound pair generation
 by construction.
+
+Maintenance: every cell that keeps the LSH pair store current (insert
+q227, upsert q231, the store lifecycle q235/q267/q271/q276, stream
+q230) is one :func:`~.zset.pair_apply` with bands as keys and
+``sig_match`` as score; every cell of the component store (q228 q229
+q232) is one :func:`components_apply`.
 """
 
 from __future__ import annotations
@@ -32,9 +38,11 @@ from ..functions import text as TX
 from ..functions.hashing import (
     affine_minhash_exprs,
     affine_minhash_exprs_sql,
+    hash_bucket,
     portable_hash64,
     portable_hash64_sql,
 )
+from .zset import drop_touching, pair_apply, score_pairs
 
 # sketch geometry (shared by Spark operators and SQL twins)
 MINHASH_K = 16
@@ -341,21 +349,15 @@ def _agree_sql() -> str:
 def signature_bands(sig: DataFrame, *extra_cols: str) -> DataFrame:
     """(doc_id[, extra...], band, bh): one row per (doc, band) with the
     band's md5 bucket hash — the LSH bucket key every pair generator
-    equi-joins on."""
+    equi-joins on.  The explode is one SQL expression, parsed JVM-side:
+    the same Column tree built in Python costs ~50 py4j calls per use."""
+    bands = ", ".join(
+        f"named_struct('band', {j}, 'bh',"
+        f" md5(concat_ws('|', {', '.join(_band_cols(j))})))"
+        for j in range(LSH_BANDS)
+    )
     return sig.select(
-        "doc_id",
-        *extra_cols,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.md5(F.concat_ws("|", *_band_cols(j))).alias("bh"),
-                    )
-                    for j in range(LSH_BANDS)
-                ]
-            )
-        ).alias("b"),
+        "doc_id", *extra_cols, F.expr(f"explode(array({bands}))").alias("b")
     ).select("doc_id", *extra_cols, "b.band", "b.bh")
 
 
@@ -373,20 +375,7 @@ def lsh_candidate_pairs(sig: DataFrame, threshold: float) -> DataFrame:
     registered with the checkpoint ledger; the caller frees them via
     ``checkpoints.release_checkpoints()`` after consuming the result."""
     sig = local_checkpoint(sig, eager=False)
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.md5(F.concat_ws("|", *_band_cols(j))).alias("bh"),
-                    )
-                    for j in range(LSH_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band", "b.bh")
+    bands = signature_bands(sig)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(b, ["band", "bh"])
@@ -394,17 +383,7 @@ def lsh_candidate_pairs(sig: DataFrame, threshold: float) -> DataFrame:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(MINHASH_K)])
-    sb = sig.select(F.col("doc_id").alias("doc_b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(MINHASH_K)])
-    agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(MINHASH_K)
-    ) / float(MINHASH_K)
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", agree.alias("sig_match"))
-        .filter(F.col("sig_match") >= threshold)
-    )
+    return score_pairs(cand, sig, _sig_match(threshold))
 
 
 def minhash_lsh_pairs_sql(threshold: float) -> str:
@@ -444,12 +423,51 @@ def _incr_delta_flag(id_col: str = "doc_id"):
     )
 
 
+def _lsh_keys(sig: DataFrame) -> DataFrame:
+    """:func:`~.zset.pair_apply` keys: one row per (doc, band) bucket,
+    the signature kept for the in-join score."""
+    return signature_bands(sig, *[c for c in sig.columns if c != "doc_id"])
+
+
+def _sig_match(threshold: float):
+    """:func:`~.zset.pair_apply` score: estimated Jaccard (the fraction
+    of equal signature slots) as ``sig_match``, kept at >= threshold."""
+
+    # one SQL expression, parsed JVM-side: the equivalent Column tree
+    # costs ~80 py4j calls to build on every call
+    agree = " + ".join(
+        f"CASE WHEN mh{i}_a = mh{i}_b THEN 1 ELSE 0 END" for i in range(MINHASH_K)
+    )
+
+    def score(pairs: DataFrame) -> DataFrame:
+        return pairs.withColumn(
+            "sig_match", F.expr(f"({agree}) / CAST({MINHASH_K} AS DOUBLE)")
+        ).filter(F.col("sig_match") >= threshold)
+
+    return score
+
+
+def _signed_slices(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(all, base, batch) signatures of the q227 arrival split from ONE
+    checkpointed signing pass over ``docs`` — every consumer reads the
+    same blocks, and no slice is signed twice (round 11, guide §1.2)."""
+    sig = local_checkpoint(
+        minhash_signatures(docs).withColumn("is_delta", _incr_delta_flag()),
+        eager=False,
+    )
+    delta = F.col("is_delta")
+    return (
+        sig.drop("is_delta"),
+        sig.filter(~delta).drop("is_delta"),
+        sig.filter(delta).drop("is_delta"),
+    )
+
+
 def incremental_lsh_pairs(
     docs: DataFrame,
     threshold: float,
     base_sig: DataFrame | None = None,
     carried_pairs: DataFrame | None = None,
-    sig_all: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental near-dup maintenance — the daily-crawl-refresh shape a
     100 TB pipeline hits: an INCOMING batch (deterministic hash slice,
@@ -469,7 +487,8 @@ def incremental_lsh_pairs(
     ``tests/test_incremental_lsh.py`` pins merged == full by hash, and
     the component closure over merged pairs == closure over full pairs
     (the q203/q209 "incremental == full" discipline applied to q26/q71,
-    VERDICT r7 #6). Returns (doc_a, doc_b, sig_match, src).
+    VERDICT r7 #6). Returns (doc_a, doc_b, sig_match, src).  The split
+    is :func:`~.zset.pair_apply` with nothing gone.
 
     Scale: the batch band table is |batch|-sized; both pair joins are
     bucket-key equi-joins (never all-pairs); the only store-sized
@@ -479,122 +498,25 @@ def incremental_lsh_pairs(
 
     ``base_sig`` / ``carried_pairs`` inject a PERSISTED store (the
     roundtrip test); by default both are derived in-plan from ``docs``.
-    ``sig_all`` injects an already-materialized flagged signature table
-    (doc_id, mh0.., is_delta) so a caller that signed the corpus for its
-    own store derivation (q228) never signs it a second time (round 11,
-    guide §1.2).
     """
-    if sig_all is not None:
-        pass
-    elif base_sig is not None:
+    if base_sig is None:
+        sig, base_sig, batch_sig = _signed_slices(docs)
+    else:
         # persisted-store path: sign ONLY the batch; the store is read,
-        # never re-signed (and the full-corpus plan is never built —
-        # ADVICE r8: the old unconditional construction checkpointed a
-        # plan the branch below then discarded, leaving a dangling
-        # ledger entry)
-        sig_all = (
-            base_sig.withColumn("is_delta", F.lit(False))
-            .unionByName(
-                local_checkpoint(
-                    minhash_signatures(docs.filter(_incr_delta_flag())),
-                    eager=False,
-                ).withColumn("is_delta", F.lit(True))
-            )
+        # never re-signed
+        batch_sig = local_checkpoint(
+            minhash_signatures(docs.filter(_incr_delta_flag())), eager=False
         )
+        sig = base_sig.unionByName(batch_sig)
+    score = _sig_match(threshold)
+    if carried_pairs is None:
+        # the t0 store: every base row arriving into an empty store
+        carried_pairs = pair_apply(
+            base_sig, None, None, base_sig, _lsh_keys, score
+        ).drop("src")
     else:
-        sig_all = local_checkpoint(
-            minhash_signatures(docs).withColumn(
-                "is_delta", _incr_delta_flag()
-            ),
-            eager=False,
-        )
-    bands = sig_all.select(
-        "doc_id",
-        "is_delta",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.md5(F.concat_ws("|", *_band_cols(j))).alias("bh"),
-                    )
-                    for j in range(LSH_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "is_delta", "b.band", "b.bh")
-    if carried_pairs is not None:
-        carried = carried_pairs.select("doc_a", "doc_b")
-    else:
-        bb = bands.filter(~F.col("is_delta"))
-        a, b = bb.alias("a"), bb.alias("b")
-        carried = (
-            a.join(b, ["band", "bh"])
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .distinct()
-        )
-    d, x = bands.filter(F.col("is_delta")).alias("d"), bands.alias("x")
-    fresh = (
-        d.join(x, ["band", "bh"])
-        .filter(F.col("d.doc_id") != F.col("x.doc_id"))
-        .select(
-            F.least(F.col("d.doc_id"), F.col("x.doc_id")).alias("doc_a"),
-            F.greatest(F.col("d.doc_id"), F.col("x.doc_id")).alias("doc_b"),
-        )
-        .distinct()
-    )
-    cand = carried.withColumn("src", F.lit("carried")).unionByName(
-        fresh.withColumn("src", F.lit("fresh"))
-    )
-    sa = sig_all.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(MINHASH_K)],
-    )
-    sb = sig_all.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(MINHASH_K)],
-    )
-    agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(MINHASH_K)
-    ) / float(MINHASH_K)
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", agree.alias("sig_match"), "src")
-        .filter(F.col("sig_match") >= threshold)
-    )
-
-
-def filter_pairs_by_signature(
-    cand: DataFrame, sig: DataFrame, threshold: float
-) -> DataFrame:
-    """Attach estimated Jaccard (fraction of equal signature
-    components) to candidate pairs and keep those >= threshold.
-    ``cand`` needs (doc_a, doc_b [, extra cols]); extras pass through."""
-    extra = [c for c in cand.columns if c not in ("doc_a", "doc_b")]
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(MINHASH_K)],
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(MINHASH_K)],
-    )
-    agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(MINHASH_K)
-    ) / float(MINHASH_K)
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", agree.alias("sig_match"), *extra)
-        .filter(F.col("sig_match") >= threshold)
-    )
+        carried_pairs = carried_pairs.select("doc_a", "doc_b")
+    return pair_apply(sig, carried_pairs, None, batch_sig, _lsh_keys, score)
 
 
 def incremental_lsh_pairs_sql(threshold: float) -> str:
@@ -636,6 +558,76 @@ def incremental_lsh_pairs_sql(threshold: float) -> str:
     """
 
 
+def components_apply(
+    labels: DataFrame,
+    pairs: DataFrame | None = None,
+    gone=None,
+    added: DataFrame | None = None,
+    fresh: DataFrame | None = None,
+) -> DataFrame:
+    """The one maintenance step of the near-dup COMPONENT store: the t0
+    labeling (doc_id, component) advanced to (doc_id, component, csize)
+    without re-running connected components over the full pair graph.
+    Components holding a ``gone`` doc (a predicate over ``doc_id``)
+    re-close over their surviving members and the t0 ``pairs`` among
+    them — a deletion can SPLIT a component; ``added`` docs enter as
+    singletons; the result then closes under the ``fresh`` pairs on the
+    CONTRACTION graph (current labels as nodes, fresh pairs mapped
+    through them as edges).  The t1 pair graph is the surviving pairs ∪
+    fresh, so this equals a full recompute; the work is bounded by the
+    components touching a gone doc plus |labels| + |fresh|.  q228
+    passes no ``gone``, q229 no ``fresh``, q232 both (a revised doc is
+    gone and added)."""
+    labels = labels.select("doc_id", "component")
+    if gone is not None:
+        hit = labels.filter(gone).select("component").distinct()
+        aff = labels.filter(~gone).join(hit, "component").select("doc_id")
+        aff_pairs = pairs.join(
+            aff.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_semi"
+        ).join(aff.select(F.col("doc_id").alias("doc_b")), "doc_b", "left_semi")
+        reclosed = neardup_components(aff, aff_pairs).select("doc_id", "component")
+        labels = (
+            labels.join(hit, "component", "left_anti")
+            .select("doc_id", "component")
+            .unionByName(reclosed)
+        )
+    if added is not None:
+        labels = labels.unionByName(
+            added.select("doc_id", F.col("doc_id").alias("component"))
+        )
+    if fresh is not None:
+        lbl = local_checkpoint(labels, eager=False)
+        la = lbl.select(
+            F.col("doc_id").alias("doc_a"), F.col("component").alias("ca")
+        )
+        lb = lbl.select(
+            F.col("doc_id").alias("doc_b"), F.col("component").alias("cb")
+        )
+        cedges = (
+            fresh.join(la, "doc_a")
+            .join(lb, "doc_b")
+            .filter(F.col("ca") != F.col("cb"))
+            .select(F.col("ca").alias("doc_a"), F.col("cb").alias("doc_b"))
+            .distinct()
+        )
+        cnodes = lbl.select(F.col("component").alias("doc_id")).distinct()
+        merged = neardup_components(cnodes, cedges, id_col="doc_id").select(
+            F.col("doc_id").alias("component"),
+            F.col("component").alias("new_comp"),
+        )
+        labels = lbl.join(merged, "component").select(
+            "doc_id", F.col("new_comp").alias("component")
+        )
+    return labels.select(
+        "doc_id",
+        "component",
+        F.count("*")
+        .over(Window.partitionBy("component"))
+        .cast("long")
+        .alias("csize"),
+    )
+
+
 def incremental_components(
     docs: DataFrame,
     threshold: float,
@@ -655,8 +647,9 @@ def incremental_components(
     are fresh pairs mapped through the current labeling.  The iterative
     min-label loop therefore runs on a graph bounded by |affected
     components| + |batch| — independent of corpus size — and the final
-    labeling is provably equal to a full recompute.  csize is
-    recomputed per final label (one count shuffle).
+    labeling is provably equal to a full recompute
+    (:func:`components_apply` with nothing gone).  csize is recomputed
+    per final label (one count shuffle).
 
     The equality claim is DRIVER-CHECKED, not just unit-tested: q228's
     DuckDB oracle is the FULL recursive-CTE closure over carried ∪
@@ -668,69 +661,18 @@ def incremental_components(
     :func:`neardup_components` over the base slice only.
     """
     delta = _incr_delta_flag()
-    base_docs = docs.filter(~delta)
-    sig_all = None
+    # one signing pass feeds the base-labels derivation AND the fresh
+    # pairs (round 11, guide §1.2)
+    sig, base_sig, batch_sig = _signed_slices(docs)
     if base_labels is None:
-        # sign the base corpus ONCE (round 11, guide §1.2): the same
-        # checkpointed signature table feeds the base-labels derivation
-        # here AND — flagged and unioned with the batch signatures —
-        # the fresh-pair generation below, instead of each path
-        # re-running the n-gram/minhash pass over the corpus.
-        base_sig = local_checkpoint(
-            minhash_signatures(base_docs), eager=False
+        base_labels = neardup_components(
+            docs.filter(~delta), lsh_candidate_pairs(base_sig, threshold)
         )
-        base_pairs = lsh_candidate_pairs(base_sig, threshold)
-        base_labels = neardup_components(base_docs, base_pairs).select(
-            "doc_id", "component"
-        )
-        sig_all = base_sig.withColumn("is_delta", F.lit(False)).unionByName(
-            local_checkpoint(
-                minhash_signatures(docs.filter(delta)), eager=False
-            ).withColumn("is_delta", F.lit(True))
-        )
-    fresh = (
-        incremental_lsh_pairs(docs, threshold, sig_all=sig_all)
-        .filter(F.col("src") == "fresh")
-        .select("doc_a", "doc_b")
-    )
-    # current labeling of store ∪ batch: batch docs start as singletons
-    lbl = local_checkpoint(
-        base_labels.unionByName(
-            docs.filter(delta).select(
-                "doc_id", F.col("doc_id").alias("component")
-            )
-        ),
-        eager=False,
-    )
-    # contraction edges: fresh pairs mapped through the current labels
-    la = lbl.select(
-        F.col("doc_id").alias("doc_a"), F.col("component").alias("ca")
-    )
-    lb = lbl.select(
-        F.col("doc_id").alias("doc_b"), F.col("component").alias("cb")
-    )
-    cedges = (
-        fresh.join(la, "doc_a")
-        .join(lb, "doc_b")
-        .filter(F.col("ca") != F.col("cb"))
-        .select(F.col("ca").alias("doc_a"), F.col("cb").alias("doc_b"))
-        .distinct()
-    )
-    cnodes = lbl.select(F.col("component").alias("doc_id")).distinct()
-    merged = neardup_components(cnodes, cedges, id_col="doc_id").select(
-        F.col("doc_id").alias("component"),
-        F.col("component").alias("new_comp"),
-    )
-    out = lbl.join(merged, "component").select(
-        "doc_id", F.col("new_comp").alias("component")
-    )
-    return out.select(
-        "doc_id",
-        "component",
-        F.count("*")
-        .over(Window.partitionBy("component"))
-        .cast("long")
-        .alias("csize"),
+    fresh = pair_apply(
+        sig, None, None, batch_sig, _lsh_keys, _sig_match(threshold)
+    ).select("doc_a", "doc_b")
+    return components_apply(
+        base_labels, added=docs.filter(delta).select("doc_id"), fresh=fresh
     )
 
 
@@ -743,10 +685,17 @@ INCR_UPD_SUFFIX = " revised snapshot content"
 def _incr_updated_flag(id_col: str = "doc_id"):
     """True for documents whose CONTENT changed between snapshots
     (deterministic 10% hash slice, own salt)."""
-    return (
-        portable_hash64(F.col(id_col).cast("string"), salt="iupd")
-        % INCR_UPD_BUCKETS
-        == 0
+    return hash_bucket(id_col, "iupd", INCR_UPD_BUCKETS) == 0
+
+
+def _revised(docs: DataFrame) -> DataFrame:
+    """The t1 snapshot of the revision slice: every changed doc's text
+    gains :data:`INCR_UPD_SUFFIX` (q231, q254)."""
+    return docs.withColumn(
+        "text",
+        F.when(
+            _incr_updated_flag(), F.concat(F.col("text"), F.lit(INCR_UPD_SUFFIX))
+        ).otherwise(F.col("text")),
     )
 
 
@@ -780,37 +729,18 @@ def upsert_aware_lsh_pairs(
     is |changed|-sided.  ``pair_store`` injects the persisted t0 pairs
     (roundtrip test); default derives them in-plan.
     """
-    changed = _incr_updated_flag()
-    t1 = docs.withColumn(
-        "text",
-        F.when(changed, F.concat(F.col("text"), F.lit(INCR_UPD_SUFFIX)))
-        .otherwise(F.col("text")),
-    )
     if pair_store is None:
-        pair_store = lsh_candidate_pairs(
-            minhash_signatures(docs), threshold
-        ).select("doc_a", "doc_b")
-    chg_a = _incr_updated_flag("doc_a")
-    chg_b = _incr_updated_flag("doc_b")
-    carried = pair_store.filter(~chg_a & ~chg_b)
-    sig_t1 = local_checkpoint(minhash_signatures(t1), eager=False)
-    bands_all = signature_bands(sig_t1).alias("x")
-    bands_chg = (
-        signature_bands(sig_t1.filter(_incr_updated_flag())).alias("d")
+        pair_store = lsh_candidate_pairs(minhash_signatures(docs), threshold)
+    sig_t1 = local_checkpoint(minhash_signatures(_revised(docs)), eager=False)
+    return pair_apply(
+        sig_t1,
+        pair_store,
+        _incr_updated_flag,
+        sig_t1.filter(_incr_updated_flag()),
+        _lsh_keys,
+        _sig_match(threshold),
+        fresh="refreshed",
     )
-    fresh = (
-        bands_chg.join(bands_all, ["band", "bh"])
-        .filter(F.col("d.doc_id") != F.col("x.doc_id"))
-        .select(
-            F.least(F.col("d.doc_id"), F.col("x.doc_id")).alias("doc_a"),
-            F.greatest(F.col("d.doc_id"), F.col("x.doc_id")).alias("doc_b"),
-        )
-        .distinct()
-    )
-    cand = carried.withColumn("src", F.lit("carried")).unionByName(
-        fresh.withColumn("src", F.lit("refreshed"))
-    )
-    return filter_pairs_by_signature(cand, sig_t1, threshold)
 
 
 def upsert_aware_lsh_pairs_sql(threshold: float) -> str:
@@ -847,6 +777,22 @@ def upsert_aware_lsh_pairs_sql(threshold: float) -> str:
     """
 
 
+def _t0_components(docs, threshold, prev_labels, pair_store):
+    """The t0 label and pair stores of q229/q232, checkpointed: the
+    injected ones, else derived in-plan from ``docs``."""
+    if pair_store is None:
+        pair_store = lsh_candidate_pairs(
+            minhash_signatures(docs), threshold
+        ).select("doc_a", "doc_b")
+    pair_store = local_checkpoint(pair_store, eager=False)
+    if prev_labels is None:
+        prev_labels = neardup_components(docs, pair_store)
+    return (
+        local_checkpoint(prev_labels.select("doc_id", "component"), eager=False),
+        pair_store,
+    )
+
+
 def upsert_aware_components(
     docs: DataFrame,
     threshold: float,
@@ -880,83 +826,17 @@ def upsert_aware_components(
     ``changed_flag`` inject a crafted change set (the split+merge unit
     test)."""
     changed = _incr_updated_flag() if changed_flag is None else changed_flag
-    if pair_store is None:
-        pair_store = lsh_candidate_pairs(
-            minhash_signatures(docs), threshold
-        ).select("doc_a", "doc_b")
-    pair_store = local_checkpoint(pair_store, eager=False)
-    if prev_labels is None:
-        prev_labels = neardup_components(docs, pair_store).select(
-            "doc_id", "component"
-        )
-    prev_labels = local_checkpoint(prev_labels, eager=False)
-    if changed_flag is None:
-        carried = pair_store.filter(
-            ~_incr_updated_flag("doc_a") & ~_incr_updated_flag("doc_b")
-        )
-    else:
-        chg_ids = docs.filter(changed).select("doc_id")
-        carried = pair_store.join(
-            chg_ids.select(F.col("doc_id").alias("doc_a")),
-            "doc_a",
-            "left_anti",
-        ).join(
-            chg_ids.select(F.col("doc_id").alias("doc_b")),
-            "doc_b",
-            "left_anti",
-        )
-    if fresh_pairs is not None:
-        fresh = fresh_pairs.select("doc_a", "doc_b")
-    else:
-        fresh = (
-            upsert_aware_lsh_pairs(docs, threshold, pair_store=pair_store)
-            .filter(F.col("src") == "refreshed")
-            .select("doc_a", "doc_b")
-        )
-    # phase 1: bounded reclose of change-affected components
-    affected = prev_labels.filter(changed).select("component").distinct()
-    keep = prev_labels.join(affected, "component", "left_anti").select(
-        "doc_id", "component"
-    )
-    aff_docs = prev_labels.join(affected, "component").select("doc_id")
-    aff_pairs = carried.join(
-        aff_docs.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_semi"
-    ).join(
-        aff_docs.select(F.col("doc_id").alias("doc_b")), "doc_b", "left_semi"
-    )
-    reclosed = neardup_components(aff_docs, aff_pairs).select(
-        "doc_id", "component"
-    )
-    lbl1 = local_checkpoint(keep.unionByName(reclosed), eager=False)
-    # phase 2: contraction closure under the fresh edges
-    la = lbl1.select(
-        F.col("doc_id").alias("doc_a"), F.col("component").alias("ca")
-    )
-    lb = lbl1.select(
-        F.col("doc_id").alias("doc_b"), F.col("component").alias("cb")
-    )
-    cedges = (
-        fresh.join(la, "doc_a")
-        .join(lb, "doc_b")
-        .filter(F.col("ca") != F.col("cb"))
-        .select(F.col("ca").alias("doc_a"), F.col("cb").alias("doc_b"))
-        .distinct()
-    )
-    cnodes = lbl1.select(F.col("component").alias("doc_id")).distinct()
-    merged = neardup_components(cnodes, cedges, id_col="doc_id").select(
-        F.col("doc_id").alias("component"),
-        F.col("component").alias("new_comp"),
-    )
-    out = lbl1.join(merged, "component").select(
-        "doc_id", F.col("new_comp").alias("component")
-    )
-    return out.select(
-        "doc_id",
-        "component",
-        F.count("*")
-        .over(Window.partitionBy("component"))
-        .cast("long")
-        .alias("csize"),
+    prev_labels, pair_store = _t0_components(docs, threshold, prev_labels, pair_store)
+    if fresh_pairs is None:
+        fresh_pairs = upsert_aware_lsh_pairs(
+            docs, threshold, pair_store=pair_store
+        ).filter(F.col("src") == "refreshed")
+    return components_apply(
+        prev_labels,
+        pair_store,
+        gone=changed,
+        added=prev_labels.filter(changed).select("doc_id"),
+        fresh=fresh_pairs.select("doc_a", "doc_b"),
     )
 
 
@@ -975,11 +855,7 @@ INCR_DEL_BUCKETS = 10  # doc_id hash bucket 0 (salt "idel") = deleted
 def _incr_deleted_flag(id_col: str = "doc_id"):
     """True for documents DELETED from the corpus (deterministic 10%
     hash slice, own salt — independent of the q227 batch split)."""
-    return (
-        portable_hash64(F.col(id_col).cast("string"), salt="idel")
-        % INCR_DEL_BUCKETS
-        == 0
-    )
+    return hash_bucket(id_col, "idel", INCR_DEL_BUCKETS) == 0
 
 
 def delete_aware_components(
@@ -1012,41 +888,8 @@ def delete_aware_components(
     and the deterministic hash slice.
     """
     deleted = _incr_deleted_flag() if deleted_flag is None else deleted_flag
-    if pair_store is None:
-        pair_store = lsh_candidate_pairs(
-            minhash_signatures(docs), threshold
-        ).select("doc_a", "doc_b")
-    pair_store = local_checkpoint(pair_store, eager=False)
-    if prev_labels is None:
-        prev_labels = neardup_components(docs, pair_store).select(
-            "doc_id", "component"
-        )
-    prev_labels = local_checkpoint(prev_labels, eager=False)
-    affected = (
-        prev_labels.filter(deleted).select("component").distinct()
-    )
-    remaining = prev_labels.filter(~deleted)
-    keep = remaining.join(affected, "component", "left_anti").select(
-        "doc_id", "component"
-    )
-    aff_docs = remaining.join(affected, "component").select("doc_id")
-    ra = aff_docs.select(F.col("doc_id").alias("doc_a"))
-    rb = aff_docs.select(F.col("doc_id").alias("doc_b"))
-    aff_pairs = pair_store.join(ra, "doc_a", "left_semi").join(
-        rb, "doc_b", "left_semi"
-    )
-    reclosed = neardup_components(aff_docs, aff_pairs).select(
-        "doc_id", "component"
-    )
-    out = keep.unionByName(reclosed)
-    return out.select(
-        "doc_id",
-        "component",
-        F.count("*")
-        .over(Window.partitionBy("component"))
-        .cast("long")
-        .alias("csize"),
-    )
+    prev_labels, pair_store = _t0_components(docs, threshold, prev_labels, pair_store)
+    return components_apply(prev_labels, pair_store, gone=deleted)
 
 
 def delete_aware_components_sql(threshold: float) -> str:
@@ -1602,34 +1445,38 @@ def vacuumed_refresh_pairs(
     base×base pair set of the remaining corpus, and the vacuumed
     signature store its signature set.  Asserted file/row shrinkage is
     pinned in ``tests/test_store_vacuum.py``."""
-    from ..sources.publish import publish_version, read_current
     from ..staging import staging_dir
 
     root = stage_dir or staging_dir(prefix="bdm_vacuum_")
-    remaining = docs.filter(~_incr_deleted_flag())
-    t0 = docs.filter(~_incr_delta_flag())
-    # the t0 signatures feed BOTH store writes — materialize once
-    sig_t0 = local_checkpoint(minhash_signatures(t0), eager=False)
-    pairs_t0 = lsh_candidate_pairs(sig_t0, threshold).select("doc_a", "doc_b")
     # simulate refresh-loop accretion: many small files per store
+    return _refresh_after_deletion(spark, docs, threshold, root, files=8)
+
+
+def _publish_t0_stores(
+    docs: DataFrame, threshold: float, root: str, files: int
+) -> dict:
+    """The one t0 build of the LSH store lifecycle cells (q235, q267
+    and the q271/q272/q276 deletion cycle): sign the t0 (non-arrival)
+    slice once, derive its pair store, and publish both as v1 of
+    ``sig_store`` / ``pair_store`` under ``root``, each written as
+    ``files`` files (8 is the small-file accretion a per-batch refresh
+    loop leaves, 1 a compacted store).  Returns the stores' schemas."""
+    from ..sources.publish import publish_version
+
+    sig_t0 = local_checkpoint(
+        minhash_signatures(docs.filter(~_incr_delta_flag())), eager=False
+    )
+    pairs_t0 = lsh_candidate_pairs(sig_t0, threshold).select("doc_a", "doc_b")
+    stores = {"sig_store": sig_t0, "pair_store": pairs_t0}
     publish_version(
         root,
         1,
-        {"sig_store": sig_t0.repartition(8), "pair_store": pairs_t0.repartition(8)},
+        {
+            k: df.repartition(files) if files > 1 else df.coalesce(1)
+            for k, df in stores.items()
+        },
     )
-    tombstones = docs.filter(_incr_deleted_flag()).select("doc_id")
-    vacuum_parquet_store(
-        spark,
-        root,
-        {"sig_store": ("doc_id",), "pair_store": ("doc_a", "doc_b")},
-        tombstones,
-    )
-    return incremental_lsh_pairs(
-        remaining,
-        threshold,
-        base_sig=read_current(spark, root, "sig_store", sig_t0.schema),
-        carried_pairs=read_current(spark, root, "pair_store", pairs_t0.schema),
-    )
+    return {k: df.schema for k, df in stores.items()}
 
 
 def vacuumed_refresh_pairs_sql(threshold: float) -> str:
@@ -1704,40 +1551,47 @@ def atomic_published_refresh(
     Scale: identical data movement to q235 (the writes and anti-joins
     are the same); the protocol adds one metadata write per publish.
     Reference anchor: extends q235/q267 (``hw3/hw3.py:125-172``)."""
-    from ..sources.publish import current_version, read_current
-
-    root, schema = _publish_deletion_cycle(spark, docs, threshold, root)
-    # next insert refresh resolves both stores through the pointer
-    remaining = docs.filter(~_incr_deleted_flag())
-    ver = current_version(root)
-    return incremental_lsh_pairs(
-        remaining,
-        threshold,
-        base_sig=read_current(spark, root, "sig", schema["sig"]),
-        carried_pairs=read_current(spark, root, "pair", schema["pair"]),
-    ).withColumn("published_version", F.lit(ver).cast("long"))
-
-
-def _publish_deletion_cycle(
-    spark, docs: DataFrame, threshold: float, root: str | None
-) -> tuple[str, dict]:
-    """The shared q271/q272/q276 store history: publish v1 (t0
-    signatures + pairs), then vacuum the deletion slice out of BOTH
-    stores as v2 with one pointer flip.  Returns the root and the
-    stores' schemas."""
-    from ..sources.publish import publish_version
+    from ..sources.publish import current_version
     from ..staging import staging_dir
 
     root = root or staging_dir(prefix="bdm_publish_")
-    t0 = docs.filter(~_incr_delta_flag())
-    sig_t0 = local_checkpoint(minhash_signatures(t0), eager=False)
-    pairs_t0 = lsh_candidate_pairs(sig_t0, threshold).select("doc_a", "doc_b")
-    publish_version(root, 1, {"sig": sig_t0.coalesce(1), "pair": pairs_t0.coalesce(1)})
+    out = _refresh_after_deletion(spark, docs, threshold, root, files=1)
+    return out.withColumn("published_version", F.lit(current_version(root)).cast("long"))
+
+
+def _publish_deletion_cycle(
+    spark, docs: DataFrame, threshold: float, root: str | None, files: int = 1
+) -> tuple[str, dict]:
+    """The shared q235/q271/q272/q276 store history: publish v1 (t0
+    signatures + pairs, :func:`_publish_t0_stores`), then vacuum the
+    deletion slice out of BOTH stores as v2 with one pointer flip.
+    Returns the root and the stores' schemas."""
+    from ..staging import staging_dir
+
+    root = root or staging_dir(prefix="bdm_publish_")
+    schema = _publish_t0_stores(docs, threshold, root, files)
     tomb = docs.filter(_incr_deleted_flag()).select("doc_id")
     vacuum_parquet_store(
-        spark, root, {"sig": ("doc_id",), "pair": ("doc_a", "doc_b")}, tomb
+        spark, root, {"sig_store": ("doc_id",), "pair_store": ("doc_a", "doc_b")}, tomb
     )
-    return root, {"sig": sig_t0.schema, "pair": pairs_t0.schema}
+    return root, schema
+
+
+def _refresh_after_deletion(
+    spark, docs: DataFrame, threshold: float, root: str, files: int
+) -> DataFrame:
+    """The deletion cycle, then the next insert refresh over the
+    remaining corpus reading both vacuumed stores through the pointer
+    (q235, q271)."""
+    from ..sources.publish import read_current
+
+    root, schema = _publish_deletion_cycle(spark, docs, threshold, root, files)
+    return incremental_lsh_pairs(
+        docs.filter(~_incr_deleted_flag()),
+        threshold,
+        base_sig=read_current(spark, root, "sig_store", schema["sig_store"]),
+        carried_pairs=read_current(spark, root, "pair_store", schema["pair_store"]),
+    )
 
 
 def gc_published_refresh(
@@ -1777,29 +1631,33 @@ def gc_published_refresh(
     root, schema = _publish_deletion_cycle(spark, docs, threshold, root)
     remaining = docs.filter(~_incr_deleted_flag())
     # sign the arrival batch ONCE (round 11, guide §1.2): the same
-    # checkpointed signature table feeds the refresh (via sig_all) and
-    # the v3 signature-store publish — the old path signed the batch
-    # twice (inside incremental_lsh_pairs and again for sig_v3)
+    # checkpointed signature table feeds the refresh and the v3
+    # signature-store publish
     sig_batch = local_checkpoint(
         minhash_signatures(remaining.filter(_incr_delta_flag())),
         eager=False,
     )
-    sig_v2 = read_version(spark, root, "sig", 2, schema["sig"])
-    refreshed = incremental_lsh_pairs(
-        remaining,
-        threshold,
-        sig_all=sig_v2.withColumn("is_delta", F.lit(False)).unionByName(
-            sig_batch.withColumn("is_delta", F.lit(True))
-        ),
-        carried_pairs=read_version(spark, root, "pair", 2, schema["pair"]),
+    sig_v3 = read_version(
+        spark, root, "sig_store", 2, schema["sig_store"]
+    ).unionByName(sig_batch)
+    refreshed = pair_apply(
+        sig_v3,
+        read_version(spark, root, "pair_store", 2, schema["pair_store"]),
+        None,
+        sig_batch,
+        _lsh_keys,
+        _sig_match(threshold),
     )
-    sig_v3 = sig_v2.unionByName(sig_batch)
     publish_version(
-        root, 3, {"sig": sig_v3.coalesce(1), "pairs_result": refreshed.coalesce(1)}
+        root,
+        3,
+        {"sig_store": sig_v3.coalesce(1), "pairs_result": refreshed.coalesce(1)},
     )
     audit = gc_versions(root, retain=2)
-    assert ("pair", 1) in audit["removed"], audit
-    pair_versions = len(versions(root, "pairs_result")) + len(versions(root, "pair"))
+    assert ("pair_store", 1) in audit["removed"], audit
+    pair_versions = len(versions(root, "pairs_result")) + len(
+        versions(root, "pair_store")
+    )
     return (
         read_current(spark, root, "pairs_result", refreshed.schema)
         .withColumn("published_version", F.lit(3).cast("long"))
@@ -1810,7 +1668,7 @@ def gc_published_refresh(
 def gc_published_refresh_sql(threshold: float) -> str:
     """DuckDB twin: the q235 refresh identity + the pinned committed
     version (3) and pinned retained-version count (2: pairs_result has
-    only v3, pair has only v2 after GC) — red if either the publish or
+    only v3, pair_store has only v2 after GC) — red if either the publish or
     the GC does not actually run."""
     return (
         f"SELECT doc_a, doc_b, sig_match, src,"
@@ -1848,8 +1706,8 @@ def published_version_diff(
     from ..sources.publish import read_version
 
     root, schema = _publish_deletion_cycle(spark, docs, threshold, root)
-    v1 = read_version(spark, root, "pair", 1, schema["pair"])
-    v2 = read_version(spark, root, "pair", 2, schema["pair"]).withColumn(
+    v1 = read_version(spark, root, "pair_store", 1, schema["pair_store"])
+    v2 = read_version(spark, root, "pair_store", 2, schema["pair_store"]).withColumn(
         "in2", F.lit(1)
     )
     return v1.join(v2, ["doc_a", "doc_b"], "left").select(
@@ -1948,20 +1806,12 @@ def triggered_vacuum_refresh(
     the pair store's O(|store|) rewrite until it actually pays for
     itself.  Reference anchor: extends q234/q235
     (``hw3/hw3.py:125-172`` refresh discipline)."""
-    from ..sources.publish import publish_version, read_current
+    from ..sources.publish import read_current
     from ..staging import staging_dir
 
     root = stage_dir or staging_dir(prefix="bdm_triggered_vacuum_")
     remaining = docs.filter(~_incr_deleted_flag())
-    t0 = docs.filter(~_incr_delta_flag())
-    sig_t0 = local_checkpoint(minhash_signatures(t0), eager=False)
-    pairs_t0 = lsh_candidate_pairs(sig_t0, threshold).select("doc_a", "doc_b")
-    publish_version(
-        root,
-        1,
-        {"sig_store": sig_t0.repartition(8), "pair_store": pairs_t0.repartition(8)},
-    )
-    schema = {"sig_store": sig_t0.schema, "pair_store": pairs_t0.schema}
+    schema = _publish_t0_stores(docs, threshold, root, files=8)
     tombstones = docs.filter(_incr_deleted_flag()).select("doc_id")
 
     def dead_bp(df: DataFrame, keys: tuple[str, ...]) -> int:
@@ -1992,11 +1842,7 @@ def triggered_vacuum_refresh(
         sig_read = sig_read.join(tombstones, "doc_id", "left_anti")
     pair_read = read_current(spark, root, "pair_store", schema["pair_store"])
     if "pair_store" not in fired:
-        pair_read = pair_read.join(
-            tombstones.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_anti"
-        ).join(
-            tombstones.select(F.col("doc_id").alias("doc_b")), "doc_b", "left_anti"
-        )
+        pair_read = drop_touching(pair_read, tombstones)
     return incremental_lsh_pairs(
         remaining, threshold, base_sig=sig_read, carried_pairs=pair_read
     )

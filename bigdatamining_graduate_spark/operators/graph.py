@@ -25,6 +25,13 @@ grows past its node bound — every loop in this module (and the CC loop
 in ``dedup``) shares that one policy. The oracle unrolls
 the same recurrence as K chained CTEs (aggregates are not allowed in a
 recursive CTE member, and K is a fixed constant anyway).
+
+Maintenance of the co-purchase edge store (insert q246, delete q247,
+stream q248, vacuum q250, upsert q270) is one signed-support net,
+:func:`_edge_apply`: an edge is born or dies when its support crosses 0.
+The per-node triangle counts then net through :func:`_tri_net`
+(carried − destroyed + created), the changed triangles counted by the
+attribution kernel :func:`_attributed_delta_counts`.
 """
 
 from __future__ import annotations
@@ -33,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoints import fixpoint, local_checkpoint
+from ..functions.hashing import hash_bucket
 
 DAMP_NUM = 85          # damping 0.85 as an exact fraction
 DAMP_DEN = 100
@@ -647,13 +655,7 @@ INCR_TRI_HIST = 8  # l_orderkey hash buckets 0-7 = base orders, 8-9 = batch
 
 
 def _tri_delta_flag(col: str = "l_orderkey"):
-    from ..functions.hashing import portable_hash64
-
-    return (
-        portable_hash64(F.col(col).cast("string"), salt="itri")
-        % INCR_TRI_BUCKETS
-        >= INCR_TRI_HIST
-    )
+    return hash_bucket(col, "itri", INCR_TRI_BUCKETS) >= INCR_TRI_HIST
 
 
 def _tri_delta_sql(col: str = "l_orderkey") -> str:
@@ -839,6 +841,80 @@ def _attributed_delta_counts(
     return td, deg
 
 
+def _edge_apply(store: DataFrame, delta: DataFrame):
+    """The one signed-support net of the weighted edge store (pa, pb, w)
+    under a per-edge support change ``delta`` (pa, pb, d; one row per
+    edge): (t1, born, dead) = the t1 store (pa, pb, w) and the (pa, pb)
+    edges whose support crosses 0 upward or down to it.  Arrivals are
+    d > 0, erasures d < 0, a revision both; an edge set nets at unit
+    support.  Only the delta's edges are merged — a delta-sized join,
+    checkpointed, that born and dead read; t1 is the store without
+    them plus their survivors."""
+    touched = local_checkpoint(
+        delta.join(store, ["pa", "pb"], "left").select(
+            "pa",
+            "pb",
+            F.coalesce(F.col("w"), F.lit(0)).alias("w0"),
+            (F.coalesce(F.col("w"), F.lit(0)) + F.col("d")).alias("w1"),
+        ),
+        eager=False,
+    )
+    t1 = (
+        store.join(touched.select("pa", "pb"), ["pa", "pb"], "left_anti")
+        .select("pa", "pb", "w")
+        .unionByName(
+            touched.filter(F.col("w1") > 0).select(
+                "pa", "pb", F.col("w1").cast("long").alias("w")
+            )
+        )
+    )
+    born = touched.filter((F.col("w0") == 0) & (F.col("w1") > 0)).select("pa", "pb")
+    dead = touched.filter((F.col("w0") > 0) & (F.col("w1") <= 0)).select("pa", "pb")
+    return t1, born, dead
+
+
+def _unit(edges: DataFrame, name: str) -> DataFrame:
+    """A canonical edge SET as unit support (column ``name``)."""
+    return edges.select("pa", "pb", F.lit(1).cast("long").alias(name))
+
+
+def _edge_degrees(edges: DataFrame) -> DataFrame:
+    """(node, deg) over a canonical edge set — one count pass."""
+    return (
+        edges.select(F.col("pa").alias("node"))
+        .unionByName(edges.select(F.col("pb").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").cast("long").alias("deg"))
+    )
+
+
+def _tri_net(
+    carried: DataFrame, deg: DataFrame | None, **deltas: tuple[int, DataFrame]
+) -> DataFrame:
+    """The one per-node triangle net: ``carried`` (node, tri_cnt) plus
+    each ``name=(sign, (node, td))`` delta (created +1, destroyed −1),
+    reported as column ``name``; kept where the count is > 0 and joined
+    to ``deg`` when given.  A destroying delta only touches counted
+    nodes, so it joins LEFT; a creating one joins full-outer."""
+    out = carried.select("node", F.col("tri_cnt").alias("_base"))
+    net = F.coalesce(F.col("_base"), F.lit(0))
+    for name, (sign, td) in deltas.items():
+        out = out.join(
+            td.select("node", F.col("td").alias(name)),
+            "node",
+            "left" if sign < 0 else "full_outer",
+        )
+        net = net + sign * F.coalesce(F.col(name), F.lit(0))
+    out = out.select(
+        "node",
+        net.cast("long").alias("tri_cnt"),
+        *[F.coalesce(F.col(n), F.lit(0)).cast("long").alias(n) for n in deltas],
+    ).filter(F.col("tri_cnt") > 0)
+    if deg is None:
+        return out
+    return out.join(deg, "node").select("node", "deg", "tri_cnt", *deltas)
+
+
 def incremental_triangles(
     lineitem: DataFrame,
     edge_store: DataFrame | None = None,
@@ -849,8 +925,8 @@ def incremental_triangles(
     edge store and per-node triangle-count store.  At support 1 the
     arrival algebra is exact: every co-purchase edge comes from some
     order, and each order is base xor batch, so the new-edge set is
-    pairs(batch orders) ∖ edge-store — one anti-join, and full edges =
-    store ∪ new.  (Support > 1 would additionally merge per-edge order
+    pairs(batch orders) ∖ edge-store — the born edges of the unit-
+    support net (:func:`_edge_apply`), and full edges = store ∪ new.  (Support > 1 would additionally merge per-edge order
     counts — additive, the q243 subtractability class — not modeled
     here.)
 
@@ -879,10 +955,10 @@ def incremental_triangles(
     anchor: extension of q110 (``hw0``'s reference has no graphs);
     algorithm per Suri & Vassilvitskii WWW'11 adapted to deltas."""
     delta = _tri_delta_flag()
-    base_li = lineitem.filter(~delta)
-    batch_li = lineitem.filter(delta)
     base_pairs = local_checkpoint(
-        edge_store if edge_store is not None else _copurchase_pairs(base_li),
+        edge_store
+        if edge_store is not None
+        else _copurchase_pairs(lineitem.filter(~delta)),
         eager=False,
     )
     # the q250 store-derivation trick: the carried triangle counts come
@@ -893,31 +969,13 @@ def incremental_triangles(
         tri_store
         if tri_store is not None
         else pairs_triangle_counts(base_pairs).select("node", "tri_cnt")
-    ).select("node", F.col("tri_cnt").alias("tri_base"))
-    e_new = local_checkpoint(
-        _copurchase_pairs(batch_li).join(
-            base_pairs, ["pa", "pb"], "left_anti"
-        ),
-        eager=False,
     )
-    full_edges = local_checkpoint(
-        base_pairs.unionByName(e_new), eager=False
+    full_edges, e_new, _dead = _edge_apply(
+        _unit(base_pairs, "w"),
+        _unit(_copurchase_pairs(lineitem.filter(delta)), "d"),
     )
     tri_new, deg = _attributed_delta_counts(e_new, full_edges)
-    tri_new = tri_new.select("node", F.col("td").alias("tri_new"))
-    out = (
-        carried.join(tri_new, "node", "full_outer")
-        .select(
-            "node",
-            (
-                F.coalesce(F.col("tri_base"), F.lit(0))
-                + F.coalesce(F.col("tri_new"), F.lit(0))
-            ).cast("long").alias("tri_cnt"),
-            F.coalesce(F.col("tri_new"), F.lit(0)).cast("long").alias("tri_new"),
-        )
-        .filter(F.col("tri_cnt") > 0)
-    )
-    return out.join(deg, "node").select("node", "deg", "tri_cnt", "tri_new")
+    return _tri_net(carried, deg, tri_new=(1, tri_new))
 
 
 def _tri_sql_pipeline(pred: str, sfx: str, p_expr: str = "l_partkey") -> str:
@@ -984,13 +1042,7 @@ INCR_TRD_BUCKETS = 10  # l_orderkey hash bucket 0 (salt below) = deleted
 
 
 def _tri_deleted_flag(col: str = "l_orderkey"):
-    from ..functions.hashing import portable_hash64
-
-    return (
-        portable_hash64(F.col(col).cast("string"), salt="itrd")
-        % INCR_TRD_BUCKETS
-        == 0
-    )
+    return hash_bucket(col, "itrd", INCR_TRD_BUCKETS) == 0
 
 
 def _tri_deleted_sql(col: str = "l_orderkey") -> str:
@@ -1002,22 +1054,11 @@ def _tri_deleted_sql(col: str = "l_orderkey") -> str:
     )
 
 
-def _weighted_pairs_from_op(op: DataFrame) -> DataFrame:
-    """(pa, pb, w) from (k, p) order-part rows — factored so q270 can
-    pair REVISED order content (remapped part nodes) with the same
-    plan (per-basket combination kernel, see :func:`_basket_pairs`)."""
-    return (
-        _basket_pairs(op)
-        .groupBy("pa", "pb")
-        .agg(F.count("*").cast("long").alias("w"))
-    )
-
-
 def _weighted_pairs(lineitem: DataFrame) -> DataFrame:
     """(pa, pb, w): canonical co-purchase edges with their supporting-
     order counts — the WEIGHTED edge-store row format deletion needs
     (an edge dies only when its LAST supporting order does)."""
-    return _weighted_pairs_from_op(_kp(lineitem))
+    return _weighted_pairs_from_baskets(_grouped_baskets(_kp(lineitem)))
 
 
 def _weighted_pairs_from_baskets(bk: DataFrame) -> DataFrame:
@@ -1028,6 +1069,31 @@ def _weighted_pairs_from_baskets(bk: DataFrame) -> DataFrame:
         .groupBy("pa", "pb")
         .agg(F.count("*").cast("long").alias("w"))
     )
+
+
+def _t0_graph(lineitem, edge_store, tri_store, flag):
+    """(weighted edge store, the flagged orders' baskets, carried
+    per-node counts) at t0 for q247/q270, the stores checkpointed.
+
+    In-plan, ONE corpus grouping serves the weighted store AND the
+    slice (round 12, guide §1.2/§2.4: every order-slice flag is a
+    function of the order key, so the slice's baskets are a filter over
+    the checkpointed grouping, not a second scan and shuffle of the 10%
+    slice).  The carried counts derive from the materialized weighted
+    store (the q250 trick — no second corpus pairing; see
+    incremental_triangles)."""
+    if edge_store is None:
+        bk = local_checkpoint(_grouped_baskets(_kp(lineitem)), eager=False)
+        store = local_checkpoint(_weighted_pairs_from_baskets(bk), eager=False)
+        sliced = bk.filter(flag("k"))
+    else:
+        store = local_checkpoint(edge_store, eager=False)
+        sliced = local_checkpoint(
+            _grouped_baskets(_kp(lineitem.filter(flag()))), eager=False
+        )
+    if tri_store is None:
+        tri_store = pairs_triangle_counts(store.select("pa", "pb"))
+    return store, sliced, tri_store.select("node", "tri_cnt")
 
 
 def delete_aware_triangles(
@@ -1042,10 +1108,11 @@ def delete_aware_triangles(
     that co-purchased the pair — so the edge store is WEIGHTED
     (pa, pb, w = supporting-order count; the support>1 upgrade q246's
     docstring flagged), and deletion kills an edge only when the
-    deleted orders account for ALL of its support: removed = deleted-
-    order pair counts equi-joined to the store WHERE cd == w — one
-    |deleted|-bounded aggregation + one store join, never a re-pairing
-    of the remaining corpus.  Destroyed triangles are the t0 triangles
+    deleted orders account for ALL of its support: the support net
+    (:func:`_edge_apply`, d = −deleted-order pair counts) marks an edge
+    dead when its support reaches 0 — one |deleted|-bounded
+    aggregation + one store join, never a re-pairing of the remaining
+    corpus.  Destroyed triangles are the t0 triangles
     touching ≥ 1 removed edge, counted exactly once by q246's
     smallest-removed-edge attribution over the t0 adjacency arrays;
     per-node tri_cnt = carried − destroyed, deg from the surviving
@@ -1059,60 +1126,24 @@ def delete_aware_triangles(
 
     Scale: O(|deleted-order pairs|) + store-sized joins + per-removed-
     edge intersections; the corpus-sized closure never re-runs."""
-    if edge_store is None:
-        # ONE corpus grouping serves the weighted store AND the
-        # deleted-slice support counts (round 12, guide §1.2/§2.4: the
-        # deletion flag is a function of the order key, so the deleted
-        # slice's pair-gen is a filter over the checkpointed baskets —
-        # the old plan re-scanned and re-shuffled the 10% slice)
-        bk = local_checkpoint(_grouped_baskets(_kp(lineitem)), eager=False)
-        store = local_checkpoint(_weighted_pairs_from_baskets(bk), eager=False)
-        cd_src = bk.filter(_tri_deleted_flag("k"))
-    else:
-        store = local_checkpoint(edge_store, eager=False)
-        cd_src = _grouped_baskets(_kp(lineitem.filter(_tri_deleted_flag())))
-    # carried counts derive from the materialized weighted store (the
-    # q250 trick — no second corpus pairing; see incremental_triangles)
-    carried = (
-        tri_store
-        if tri_store is not None
-        else pairs_triangle_counts(store.select("pa", "pb")).select(
-            "node", "tri_cnt"
-        )
-    ).select("node", F.col("tri_cnt").alias("tri_base"))
-    cd = _weighted_pairs_from_baskets(cd_src).select(
-        "pa", "pb", F.col("w").alias("cd")
+    store, cd_src, carried = _t0_graph(
+        lineitem, edge_store, tri_store, _tri_deleted_flag
     )
-    removed = local_checkpoint(
-        store.join(cd, ["pa", "pb"]).filter(F.col("cd") == F.col("w")).select("pa", "pb"),
-        eager=False,
-    )
-    survivors = store.join(removed, ["pa", "pb"], "left_anti").select("pa", "pb")
-    survivors = local_checkpoint(survivors, eager=False)
-    deg = (
-        survivors.select(F.col("pa").alias("node"))
-        .unionByName(survivors.select(F.col("pb").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("deg"))
+    survivors, _born, removed = _edge_apply(
+        store,
+        _weighted_pairs_from_baskets(cd_src).select(
+            "pa", "pb", (-F.col("w")).alias("d")
+        ),
     )
     # destroyed triangles counted in the t0 graph (the graph they lived
     # in); the helper's degrees are t0 degrees — discarded, q247's deg
-    # comes from the SURVIVING edges above
+    # comes from the SURVIVING edges
     destroyed, _t0_deg = _attributed_delta_counts(
         removed, store.select("pa", "pb"), broadcast_marked=False
     )
-    out = (
-        carried.join(destroyed, "node", "left")
-        .select(
-            "node",
-            (
-                F.col("tri_base") - F.coalesce(F.col("td"), F.lit(0))
-            ).cast("long").alias("tri_cnt"),
-            F.coalesce(F.col("td"), F.lit(0)).cast("long").alias("tri_removed"),
-        )
-        .filter(F.col("tri_cnt") > 0)
+    return _tri_net(
+        carried, _edge_degrees(survivors), tri_removed=(-1, destroyed)
     )
-    return out.join(deg, "node").select("node", "deg", "tri_cnt", "tri_removed")
 
 
 def delete_aware_triangles_sql() -> str:
@@ -1135,13 +1166,7 @@ _TRI_REMAP_OFFSET = 10_000_000  # remapped part-node id offset (> any partkey)
 
 
 def _tri_revised_flag(col: str = "l_orderkey"):
-    from ..functions.hashing import portable_hash64
-
-    return (
-        portable_hash64(F.col(col).cast("string"), salt="itru")
-        % INCR_TRU_BUCKETS
-        == 0
-    )
+    return hash_bucket(col, "itru", INCR_TRU_BUCKETS) == 0
 
 
 def _tri_revised_sql(col: str = "l_orderkey") -> str:
@@ -1225,31 +1250,9 @@ def upsert_aware_triangles(
     the q247 broadcast caveat applies to both directions).  Reference
     anchor: extends q110/q246/q247 (Suri & Vassilvitskii WWW'11,
     adapted to bidirectional deltas)."""
-    revised = _tri_revised_flag()
-    if edge_store is None:
-        # ONE corpus grouping serves the weighted store AND both sides
-        # of the revised-slice delta (round 12, guide §1.2/§2.4: the
-        # revision flag is a function of the order key, so the revised
-        # baskets are a filter over the checkpointed grouping — the old
-        # plan re-scanned and re-shuffled the 10% slice twice, once per
-        # content version)
-        bk = local_checkpoint(_grouped_baskets(_kp(lineitem)), eager=False)
-        store = local_checkpoint(_weighted_pairs_from_baskets(bk), eager=False)
-        rev_bk = bk.filter(_tri_revised_flag("k"))
-    else:
-        store = local_checkpoint(edge_store, eager=False)
-        rev_bk = local_checkpoint(
-            _grouped_baskets(_kp(lineitem.filter(revised))), eager=False
-        )
-    # carried counts derive from the materialized weighted store (the
-    # q250 trick — no second corpus pairing; see incremental_triangles)
-    carried = (
-        tri_store
-        if tri_store is not None
-        else pairs_triangle_counts(store.select("pa", "pb")).select(
-            "node", "tri_cnt"
-        )
-    ).select("node", F.col("tri_cnt").alias("tri_base"))
+    store, rev_bk, carried = _t0_graph(
+        lineitem, edge_store, tri_store, _tri_revised_flag
+    )
     c_old = _weighted_pairs_from_baskets(rev_bk).select(
         "pa", "pb", F.col("w").alias("co")
     )
@@ -1276,24 +1279,7 @@ def upsert_aware_triangles(
         )
         .filter(F.col("d") != 0)
     )
-    merged = local_checkpoint(
-        store.join(delta, ["pa", "pb"], "full_outer").select(
-            "pa",
-            "pb",
-            F.coalesce(F.col("w"), F.lit(0)).alias("w0"),
-            (
-                F.coalesce(F.col("w"), F.lit(0))
-                + F.coalesce(F.col("d"), F.lit(0))
-            ).alias("w1"),
-        ),
-        eager=False,
-    )
-    removed = merged.filter(
-        (F.col("w0") > 0) & (F.col("w1") <= 0)
-    ).select("pa", "pb")
-    added = merged.filter(
-        (F.col("w0") == 0) & (F.col("w1") > 0)
-    ).select("pa", "pb")
+    _t1, added, removed = _edge_apply(store, delta)
     # ONE edge-set shuffle builds the t0 adjacency; the t1 adjacency is
     # its per-node array edit under the delta-sized removed/added sets
     # (round 12 — the old plan re-shuffled the full t1 edge set into a
@@ -1302,29 +1288,15 @@ def upsert_aware_triangles(
     destroyed, _t0_deg = _attributed_delta_counts(
         removed, broadcast_marked=False, adj=adj0
     )
-    destroyed = destroyed.select("node", F.col("td").alias("tdst"))
     adj1 = _adj_apply_delta(adj0, removed, added)
     created, deg = _attributed_delta_counts(
         added, broadcast_marked=False, adj=adj1
     )
-    created = created.select("node", F.col("td").alias("tcr"))
-    out = (
-        carried.join(destroyed, "node", "full_outer")
-        .join(created, "node", "full_outer")
-        .select(
-            "node",
-            (
-                F.coalesce(F.col("tri_base"), F.lit(0))
-                - F.coalesce(F.col("tdst"), F.lit(0))
-                + F.coalesce(F.col("tcr"), F.lit(0))
-            ).cast("long").alias("tri_cnt"),
-            F.coalesce(F.col("tcr"), F.lit(0)).cast("long").alias("tri_created"),
-            F.coalesce(F.col("tdst"), F.lit(0)).cast("long").alias("tri_destroyed"),
-        )
-        .filter(F.col("tri_cnt") > 0)
-    )
-    return out.join(deg, "node").select(
-        "node", "deg", "tri_cnt", "tri_created", "tri_destroyed"
+    return _tri_net(
+        carried,
+        deg,
+        tri_created=(1, created),
+        tri_destroyed=(-1, destroyed),
     )
 
 
@@ -1459,48 +1431,24 @@ def vacuumed_triangle_refresh(
     write_store_version(tri.repartition(8), root, "tri_store", 1)
     commit_version(root, 1)
 
-    # deletion cycle: support decrements against the persisted store.
-    # cd feeds the kill test AND the weight rewrite; removed feeds the
-    # anti-join and the attribution kernel's four marked-set references
-    # — checkpoint both so the deleted-slice pair-gen runs once, not
-    # six times (round-11 recomputed-subtree sweep, guide §2.4)
-    cd = local_checkpoint(
-        _weighted_pairs_from_baskets(
-            bk.filter(_tri_deleted_flag("k"))
-        ).select("pa", "pb", F.col("w").alias("cd")),
-        eager=False,
-    )
-    removed = local_checkpoint(
-        store.join(cd, ["pa", "pb"])
-        .filter(F.col("cd") == F.col("w"))
-        .select("pa", "pb"),
-        eager=False,
-    )
-    updated_edges = (
-        store.join(cd, ["pa", "pb"], "left")
-        .select(
-            "pa",
-            "pb",
-            (F.col("w") - F.coalesce(F.col("cd"), F.lit(0)))
-            .cast("long")
-            .alias("w"),
-        )
-        .filter(F.col("w") > 0)
+    # deletion cycle: support decrements against the persisted store,
+    # netted once (the merge is checkpointed, so the deleted-slice
+    # pair-gen runs once for the kill test, the weight rewrite and the
+    # attribution kernel's marked-set references)
+    updated_edges, _born, removed = _edge_apply(
+        store,
+        _weighted_pairs_from_baskets(bk.filter(_tri_deleted_flag("k"))).select(
+            "pa", "pb", (-F.col("w")).alias("d")
+        ),
     )
     destroyed, _t0_deg = _attributed_delta_counts(
         removed, store.select("pa", "pb"), broadcast_marked=False
     )
-    updated_tri = (
-        read_current(spark, root, "tri_store", tri.schema)
-        .join(destroyed, "node", "left")
-        .select(
-            "node",
-            (F.col("tri_cnt") - F.coalesce(F.col("td"), F.lit(0)))
-            .cast("long")
-            .alias("tri_cnt"),
-        )
-        .filter(F.col("tri_cnt") > 0)
-    )
+    updated_tri = _tri_net(
+        read_current(spark, root, "tri_store", tri.schema),
+        None,
+        tri_removed=(-1, destroyed),
+    ).select("node", "tri_cnt")
     # both rewrites derive from v1 (the t0 graph) and flip together
     publish_version(
         root,

@@ -12,6 +12,11 @@ via the deterministic byte-level feature path.
 
 The reference has no binary processing; this is the training-pipeline
 extension layer (flagged extension, not parity).
+
+The perceptual-hash pair store is maintained (insert q252, delete q253,
+upsert q254, stream q255, vacuum q256) by one
+:func:`~.zset.pair_apply` with 16-bit chunks as keys and ``hamming`` as
+score.
 """
 
 from __future__ import annotations
@@ -465,48 +470,47 @@ def payload_phash(with_payload: DataFrame) -> DataFrame:
     return with_payload.mapInPandas(phash, schema=PHASH_SCHEMA)
 
 
-def _chunk_exploded(ph: DataFrame, side: str) -> DataFrame:
-    """One join side of the chunk equi-join: each signature row exploded
-    to its ``PHASH_CHUNKS`` (ci, cv) bucket keys, chunk columns carried
-    for the exact hamming rerank."""
-    return (
-        ph.select(
-            F.col("doc_id").alias(f"doc_{side}"),
-            *[F.col(f"c{c}").alias(f"c{c}{side}") for c in range(PHASH_CHUNKS)],
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(c).alias("ci"), F.col(f"c{c}").alias("cv")
-                        )
-                        for c in range(PHASH_CHUNKS)
-                    ]
-                )
-            ).alias("ch"),
-        )
-        .select("*", "ch.ci", "ch.cv")
-        .drop("ch")
-    )
+def _phash_keys(ph: DataFrame) -> DataFrame:
+    """The chunk equi-join's bucket keys: each signature row exploded to
+    its ``PHASH_CHUNKS`` (ci, cv) keys, the chunk columns kept for the
+    exact hamming rerank (:func:`~.zset.pair_apply`'s ``keys``)."""
+    return ph.select(
+        *ph.columns,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(c).alias("ci"), F.col(f"c{c}").alias("cv"))
+                    for c in range(PHASH_CHUNKS)
+                ]
+            )
+        ).alias("ch"),
+    ).select(*ph.columns, "ch.ci", "ch.cv")
 
 
-def _phash_hamming() -> "F.Column":
-    return sum(
-        F.bit_count(F.col(f"c{c}a").bitwiseXOR(F.col(f"c{c}b")))
+def _hamming(pairs: DataFrame) -> DataFrame:
+    """:func:`~.zset.pair_apply`'s score: exact hamming distance over
+    the four chunks of both sides (``bit_count(a ^ b)`` — JVM
+    built-ins, no Python), kept at <= ``PHASH_HAM_MAX``."""
+    ham = sum(
+        F.bit_count(F.col(f"c{c}_a").bitwiseXOR(F.col(f"c{c}_b")))
         for c in range(PHASH_CHUNKS)
+    )
+    return pairs.withColumn("hamming", ham).filter(
+        F.col("hamming") <= PHASH_HAM_MAX
     )
 
 
 def _pairs_from_phash(ph: DataFrame) -> DataFrame:
     """Chunk equi-join over a signature set: candidates share at least
     one 16-bit chunk (pigeonhole-complete for hamming <=
-    ``PHASH_HAM_MAX``), scored by exact hamming distance over the four
-    chunks (``bit_count(a ^ b)`` — JVM built-ins, no Python)."""
-    a, b = _chunk_exploded(ph, "a"), _chunk_exploded(ph, "b")
+    ``PHASH_HAM_MAX``), scored by :func:`_hamming`."""
+    from .zset import side
+
+    keyed = _phash_keys(ph)
+    a, b = side(keyed, "a", ["ci", "cv"]), side(keyed, "b", ["ci", "cv"])
     return (
-        a.join(b, ["ci", "cv"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", _phash_hamming().alias("hamming"))
-        .filter(F.col("hamming") <= PHASH_HAM_MAX)
+        _hamming(a.join(b, ["ci", "cv"]).filter(F.col("doc_a") < F.col("doc_b")))
+        .select("doc_a", "doc_b", "hamming")
         .distinct()
     )
 
@@ -552,38 +556,22 @@ def incremental_phash_pairs(
     discipline; the reference has no multimodal store)."""
     from ..checkpoints import local_checkpoint
     from .dedup import _incr_delta_flag
+    from .zset import pair_apply
 
     delta = _incr_delta_flag()
-    base = with_payload.filter(~delta)
-    batch = with_payload.filter(delta)
     ph_base = (
         phash_store
         if phash_store is not None
-        else local_checkpoint(payload_phash(base), eager=False)
+        else local_checkpoint(payload_phash(with_payload.filter(~delta)), eager=False)
     )
-    ph_batch = local_checkpoint(payload_phash(batch), eager=False)
-    if pair_store is not None:
-        carried = pair_store.select("doc_a", "doc_b", "hamming")
-    else:
-        carried = _pairs_from_phash(ph_base)
-    d = _chunk_exploded(ph_batch, "a")
-    x = _chunk_exploded(ph_base.unionByName(ph_batch), "b")
-    fresh = (
-        d.join(x, ["ci", "cv"])
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .select(
-            F.least("doc_a", "doc_b").alias("pa"),
-            F.greatest("doc_a", "doc_b").alias("pb"),
-            _phash_hamming().alias("hamming"),
-        )
-        .filter(F.col("hamming") <= PHASH_HAM_MAX)
-        .select(
-            F.col("pa").alias("doc_a"), F.col("pb").alias("doc_b"), "hamming"
-        )
-        .distinct()
+    ph_batch = local_checkpoint(payload_phash(with_payload.filter(delta)), eager=False)
+    carried = (
+        pair_store.select("doc_a", "doc_b", "hamming")
+        if pair_store is not None
+        else _pairs_from_phash(ph_base)
     )
-    return carried.withColumn("src", F.lit("carried")).unionByName(
-        fresh.withColumn("src", F.lit("fresh"))
+    return pair_apply(
+        ph_base.unionByName(ph_batch), carried, None, ph_batch, _phash_keys, _hamming
     )
 
 
@@ -714,26 +702,19 @@ def delete_aware_phash_pairs(
     no chunk join.  Reference anchor: extension of q143
     (``hw3/hw3.py:125-172`` refresh discipline)."""
     from .dedup import _incr_deleted_flag
+    from .zset import pair_apply
 
     if pair_store is None:
         pair_store = _pairs_from_phash(payload_phash(with_payload))
-    if deleted_ids is None:
-        return pair_store.filter(
-            ~_incr_deleted_flag("doc_a") & ~_incr_deleted_flag("doc_b")
-        ).select("doc_a", "doc_b", "hamming")
-    return (
-        pair_store.join(
-            deleted_ids.select(F.col(deleted_ids.columns[0]).alias("doc_a")),
-            "doc_a",
-            "left_anti",
-        )
-        .join(
-            deleted_ids.select(F.col(deleted_ids.columns[0]).alias("doc_b")),
-            "doc_b",
-            "left_anti",
-        )
-        .select("doc_a", "doc_b", "hamming")
-    )
+    gone = _incr_deleted_flag if deleted_ids is None else deleted_ids
+    return pair_apply(
+        None,
+        pair_store.select("doc_a", "doc_b", "hamming"),
+        gone,
+        None,
+        _phash_keys,
+        _hamming,
+    ).drop("src")
 
 
 def delete_aware_phash_pairs_sql(table: str = "documents", max_len: int = 4096) -> str:
@@ -786,50 +767,34 @@ def upsert_aware_phash_pairs(
     |changed|-sided against 16-bit bucket keys.  Reference anchor:
     extension of q143 (``hw3/hw3.py:125-172`` refresh discipline)."""
     from ..checkpoints import local_checkpoint
-    from .dedup import INCR_UPD_SUFFIX, _incr_updated_flag
+    from .dedup import _incr_updated_flag, _revised
+    from .zset import pair_apply
 
     changed = _incr_updated_flag()
-    t1 = docs.withColumn(
-        "text",
-        F.when(changed, F.concat(F.col("text"), F.lit(INCR_UPD_SUFFIX)))
-        .otherwise(F.col("text")),
-    )
     if pair_store is None:
         pair_store = _pairs_from_phash(
             payload_phash(with_binary_payload(docs))
         )
-    carried = pair_store.filter(
-        ~_incr_updated_flag("doc_a") & ~_incr_updated_flag("doc_b")
-    ).select("doc_a", "doc_b", "hamming")
     ph_unchanged = (
         phash_store.filter(~changed)
         if phash_store is not None
         else payload_phash(with_binary_payload(docs.filter(~changed)))
     )
     ph_changed = local_checkpoint(
-        payload_phash(with_binary_payload(t1.filter(changed))), eager=False
+        payload_phash(with_binary_payload(_revised(docs).filter(changed))),
+        eager=False,
     )
     ph_t1 = local_checkpoint(
         ph_unchanged.unionByName(ph_changed), eager=False
     )
-    d = _chunk_exploded(ph_changed, "a")
-    x = _chunk_exploded(ph_t1, "b")
-    fresh = (
-        d.join(x, ["ci", "cv"])
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .select(
-            F.least("doc_a", "doc_b").alias("pa"),
-            F.greatest("doc_a", "doc_b").alias("pb"),
-            _phash_hamming().alias("hamming"),
-        )
-        .filter(F.col("hamming") <= PHASH_HAM_MAX)
-        .select(
-            F.col("pa").alias("doc_a"), F.col("pb").alias("doc_b"), "hamming"
-        )
-        .distinct()
-    )
-    return carried.withColumn("src", F.lit("carried")).unionByName(
-        fresh.withColumn("src", F.lit("refreshed"))
+    return pair_apply(
+        ph_t1,
+        pair_store.select("doc_a", "doc_b", "hamming"),
+        _incr_updated_flag,
+        ph_changed,
+        _phash_keys,
+        _hamming,
+        fresh="refreshed",
     )
 
 

@@ -931,12 +931,9 @@ STREAM_LSH_BATCHES = 3  # documents arrive as 3 hash-sliced micro-batches
 
 
 def _stream_lsh_batch_flag(id_col: str = "doc_id"):
-    from ..functions.hashing import portable_hash64
+    from ..functions.hashing import hash_bucket
 
-    return (
-        portable_hash64(F.col(id_col).cast("string"), salt="slsh")
-        % STREAM_LSH_BATCHES
-    )
+    return hash_bucket(id_col, "slsh", STREAM_LSH_BATCHES)
 
 
 def stream_incremental_lsh_pairs(
@@ -965,44 +962,55 @@ def stream_incremental_lsh_pairs(
     Reference anchor: ``hw3/hw3.py:125-172`` (extension — the reference
     has zero streaming)."""
     from ..operators import dedup as DD
+
+    return _stream_pairs(
+        spark,
+        sf_dir,
+        "sig",
+        DD.minhash_signatures,
+        DD._lsh_keys,
+        DD._sig_match(threshold),
+        "bdm_stream_lsh_",
+    )
+
+
+def _stream_pairs(spark, sf_dir, sink, sign, keys, score, prefix) -> DataFrame:
+    """The stream both pair indexes run (q230 LSH, q255 phash): the
+    documents arrive as ``STREAM_LSH_BATCHES`` hash-sliced micro-batches
+    (salt "slsh"); each trigger appends ``sign(batch)`` to the signature
+    sink ``sink`` and emits :func:`~..operators.zset.pair_apply`'s fresh
+    pairs with no carried store — the batch against store ∪ batch —
+    stamped ``first_seen``."""
+    from ..operators.zset import pair_apply
     from ..staging import staging_dir
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    first_seen = F.greatest(
+        _stream_lsh_batch_flag("doc_a"), _stream_lsh_batch_flag("doc_b")
+    ).cast("bigint")
 
     def handle(t: Trigger) -> dict[str, Output]:
         def pairs() -> DataFrame:
             # the batch's signatures, read back from their staged write:
-            # signed once, shared by both band sides and the filter
-            sig_new = t.staged("sig")
-            store = t.read("sig")
-            all_sig = sig_new if store is None else store.unionByName(sig_new)
-            bands_new = DD.signature_bands(sig_new).alias("d")
-            bands_all = DD.signature_bands(all_sig).alias("x")
-            fresh = (
-                bands_new.join(bands_all, ["band", "bh"])
-                .filter(F.col("d.doc_id") != F.col("x.doc_id"))
-                .select(
-                    F.least(F.col("d.doc_id"), F.col("x.doc_id")).alias("doc_a"),
-                    F.greatest(F.col("d.doc_id"), F.col("x.doc_id")).alias("doc_b"),
-                )
-                .distinct()
-            )
-            first_seen = F.greatest(
-                _stream_lsh_batch_flag("doc_a"), _stream_lsh_batch_flag("doc_b")
-            ).cast("bigint")
-            out = DD.filter_pairs_by_signature(fresh, all_sig, threshold).withColumn(
-                "first_seen", first_seen
+            # signed once per trigger
+            new = t.staged(sink)
+            store = t.read(sink)
+            sig = new if store is None else store.unionByName(new)
+            out = (
+                pair_apply(sig, None, None, new, keys, score)
+                .drop("src")
+                .withColumn("first_seen", first_seen)
             )
             # exactly-once emission: a pair surfaces in its later endpoint's batch
             return t.observe(out, bad_first_seen=count_off(F.col("first_seen"), t.bid))
 
-        return {"sig": DD.minhash_signatures(t.batch), "pairs": pairs}
+        return {sink: sign(t.batch), "pairs": pairs}
 
     stream = run_staged_stream(
         docs,
         _stream_lsh_batch_flag(),
         STREAM_LSH_BATCHES,
-        staging_dir(prefix="bdm_stream_lsh_"),
+        staging_dir(prefix=prefix),
         handle,
     )
     return stream.read("pairs")
@@ -1192,12 +1200,9 @@ STREAM_TRI_BATCHES = 3  # orders arrive as 3 hash-sliced micro-batches
 
 
 def _stream_tri_batch_flag(col: str = "l_orderkey"):
-    from ..functions.hashing import portable_hash64
+    from ..functions.hashing import hash_bucket
 
-    return (
-        portable_hash64(F.col(col).cast("string"), salt="stri")
-        % STREAM_TRI_BATCHES
-    )
+    return hash_bucket(col, "stri", STREAM_TRI_BATCHES)
 
 
 def _stream_tri_batch_sql(col: str) -> str:
@@ -1271,13 +1276,7 @@ def stream_incremental_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         staging_dir(prefix="bdm_stream_tri_"),
         handle,
     )
-    edges = stream.read("edges")
-    deg = (
-        edges.select(F.col("pa").alias("node"))
-        .unionByName(edges.select(F.col("pb").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("deg"))
-    )
+    deg = GR._edge_degrees(stream.read("edges"))
     contrib = stream.read("contrib")
     bucket = lambda b: F.sum(  # noqa: E731
         F.when(F.col("arrived") == b, F.col("td")).otherwise(0)
@@ -1346,48 +1345,16 @@ def stream_incremental_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     Reference anchor: extension of q143 (the reference has zero
     streaming and no multimodal store)."""
     from ..operators import multimodal as MM
-    from ..staging import staging_dir
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def handle(t: Trigger) -> dict[str, Output]:
-        def pairs() -> DataFrame:
-            # the batch's fingerprints, read back from their staged write:
-            # the Arrow kernel runs once per trigger
-            ph_new = t.staged("phash")
-            store = t.read("phash")
-            ph_all = ph_new if store is None else store.unionByName(ph_new)
-            d = MM._chunk_exploded(ph_new, "a")
-            x = MM._chunk_exploded(ph_all, "b")
-            first_seen = F.greatest(
-                _stream_lsh_batch_flag("doc_a"), _stream_lsh_batch_flag("doc_b")
-            ).cast("bigint")
-            out = (
-                d.join(x, ["ci", "cv"])
-                .filter(F.col("doc_a") != F.col("doc_b"))
-                .select(
-                    F.least("doc_a", "doc_b").alias("pa"),
-                    F.greatest("doc_a", "doc_b").alias("pb"),
-                    MM._phash_hamming().alias("hamming"),
-                )
-                .filter(F.col("hamming") <= MM.PHASH_HAM_MAX)
-                .select(F.col("pa").alias("doc_a"), F.col("pb").alias("doc_b"), "hamming")
-                .distinct()
-                .withColumn("first_seen", first_seen)
-            )
-            # exactly-once emission: a pair surfaces in its later endpoint's batch
-            return t.observe(out, bad_first_seen=count_off(F.col("first_seen"), t.bid))
-
-        return {"phash": MM.payload_phash(MM.with_binary_payload(t.batch)), "pairs": pairs}
-
-    stream = run_staged_stream(
-        docs,
-        _stream_lsh_batch_flag(),
-        STREAM_LSH_BATCHES,
-        staging_dir(prefix="bdm_stream_phash_"),
-        handle,
+    return _stream_pairs(
+        spark,
+        sf_dir,
+        "phash",
+        lambda batch: MM.payload_phash(MM.with_binary_payload(batch)),
+        MM._phash_keys,
+        MM._hamming,
+        "bdm_stream_phash_",
     )
-    return stream.read("pairs")
 
 
 def stream_incremental_phash_pairs_sql() -> str:

@@ -34,6 +34,18 @@ both first-run JIT/codegen cost and the first read of the measured
 fixture, which would otherwise land on whichever variant goes first in
 rep 0.
 
+Each (variant, query, rep) runs under its own job group.  Beside the
+wall-time medians the tool reports that run's work counters, read from
+Spark's status store the way ``perfbench/tracing.py`` reads them: jobs,
+stages, tasks, shuffle read and write bytes, input bytes and spilled
+bytes.  The jobs of a stream the query starts run in a job group named
+by the stream's run id, which a ``StreamingQueryListener`` collects, so
+a streaming query's triggers count too.  Counters are deterministic for
+a fixed plan and fixture up to adaptive execution's runtime choices
+(an A/A run shows which move); ``work_diff`` lists, per query, every
+counter whose median differs between the variants, and ``work_raw``
+holds each rep's counters.
+
 An A/A run (both roots at the same commit) gives the noise floor.
 """
 import argparse
@@ -43,6 +55,9 @@ import os
 import statistics
 import sys
 import time
+
+from py4j.protocol import Py4JJavaError
+from pyspark.sql.streaming import StreamingQueryListener
 
 PKG = "bigdatamining_graduate_spark"
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -64,6 +79,77 @@ def fresh_package(root: str, roots: set[str]):
     return queries, importlib.import_module(f"{PKG}.checkpoints")
 
 
+COUNTERS = (
+    "jobs",
+    "stages",
+    "tasks",
+    "shuffle_read_bytes",
+    "shuffle_write_bytes",
+    "input_bytes",
+    "spill_bytes",
+)
+
+
+class StreamRuns(StreamingQueryListener):
+    """Run ids of the streams started while a query is built; a stream's
+    micro-batch jobs run in the job group named by its run id."""
+
+    def __init__(self):
+        self.started: list[str] = []
+        self.done: set[str] = set()
+
+    def onQueryStarted(self, event):
+        self.started.append(str(event.runId))
+
+    def onQueryProgress(self, event):
+        pass
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        self.done.add(str(event.runId))
+
+    def take(self, timeout_s: float = 30.0) -> list[str]:
+        """The run ids started since the last call, once each stream's
+        termination event has arrived (its jobs precede it on the bus)."""
+        runs, self.started = self.started, []
+        deadline = time.monotonic() + timeout_s
+        while not self.done.issuperset(runs) and time.monotonic() < deadline:
+            time.sleep(0.01)
+        return runs
+
+
+def work_counters(sc, groups: list[str]) -> dict[str, int]:
+    """Status-store work of every job in ``groups``: skipped stages (a
+    reused shuffle) are not counted, as in ``perfbench/tracing.py``."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    jobs = [j for g in groups for j in tracker.getJobIdsForGroup(g)]
+    stages = set()
+    for j in jobs:
+        info = tracker.getJobInfo(j)
+        if info is not None:
+            stages.update(info.stageIds)
+    out = dict.fromkeys(COUNTERS, 0)
+    out["jobs"] = len(jobs)
+    for sid in stages:
+        try:
+            sd = store.lastStageAttempt(sid)
+        except Py4JJavaError:  # never attempted
+            continue
+        if sd.status().toString() == "SKIPPED":
+            continue
+        out["stages"] += 1
+        out["tasks"] += sd.numCompleteTasks()
+        out["shuffle_read_bytes"] += sd.shuffleReadBytes()
+        out["shuffle_write_bytes"] += sd.shuffleWriteBytes()
+        out["input_bytes"] += sd.inputBytes()
+        out["spill_bytes"] += sd.memoryBytesSpilled() + sd.diskBytesSpilled()
+    return out
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("old_root")
@@ -81,8 +167,12 @@ def main() -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    runs = StreamRuns()
+    spark.streams.addListener(runs)
 
     res = {v: {n: [] for n in args.names} for v in variants}
+    work = {v: {n: [] for n in args.names} for v in variants}
     for v in variants:  # untimed first runs on the measured fixture
         QM, CK = fresh_package(variants[v], roots)
         for n in args.names:
@@ -93,16 +183,37 @@ def main() -> None:
         for v in order:
             QM, CK = fresh_package(variants[v], roots)
             for n in args.names:
-                spark.sparkContext.setJobDescription(f"ab[{v}] rep{rep}: {n}")
+                group = f"ab-{v}-{rep}-{n}"
+                sc.setJobGroup(group, f"ab[{v}] rep{rep}: {n}")
+                runs.take(0)
                 t0 = time.perf_counter()
                 QM.QUERIES[n](spark, args.sf).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 dt = time.perf_counter() - t0
+                sc.setLocalProperty("spark.jobGroup.id", None)
                 CK.release_checkpoints()
                 res[v][n].append(round(dt, 2))
+                work[v][n].append(work_counters(sc, [group, *runs.take()]))
+    spark.streams.removeListener(runs)
     out = {v: {n: statistics.median(ts) for n, ts in d.items()} for v, d in res.items()}
-    print(json.dumps({"roots": variants, "medians": out, "raw": res}))
+    work_med = {
+        v: {n: {c: statistics.median(w[c] for w in ws) for c in COUNTERS} for n, ws in d.items()}
+        for v, d in work.items()
+    }
+    work_diff = {
+        n: {c: [work_med["old"][n][c], work_med["new"][n][c]] for c in COUNTERS
+            if work_med["old"][n][c] != work_med["new"][n][c]}
+        for n in args.names
+    }
+    print(json.dumps({
+        "roots": variants,
+        "medians": out,
+        "work": work_med,
+        "work_diff": {n: d for n, d in work_diff.items() if d},
+        "raw": res,
+        "work_raw": work,
+    }))
 
 
 if __name__ == "__main__":
