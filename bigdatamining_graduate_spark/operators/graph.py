@@ -848,8 +848,8 @@ def _edge_apply(store: DataFrame, delta: DataFrame):
     edges whose support crosses 0 upward or down to it.  Arrivals are
     d > 0, erasures d < 0, a revision both; an edge set nets at unit
     support.  Only the delta's edges are merged — a delta-sized join,
-    checkpointed, that born and dead read; t1 is the store without
-    them plus their survivors."""
+    checkpointed; born and dead are checkpointed too, as the
+    attribution kernel reads its marked set several times."""
     touched = local_checkpoint(
         delta.join(store, ["pa", "pb"], "left").select(
             "pa",
@@ -860,22 +860,16 @@ def _edge_apply(store: DataFrame, delta: DataFrame):
         eager=False,
     )
     t1 = (
-        store.join(touched.select("pa", "pb"), ["pa", "pb"], "left_anti")
-        .select("pa", "pb", "w")
-        .unionByName(
-            touched.filter(F.col("w1") > 0).select(
-                "pa", "pb", F.col("w1").cast("long").alias("w")
-            )
-        )
+        store.join(touched.select("pa", "pb", "w1"), ["pa", "pb"], "left")
+        .select("pa", "pb", F.coalesce("w1", "w").cast("long").alias("w"))
+        .filter(F.col("w") > 0)
     )
-    born = touched.filter((F.col("w0") == 0) & (F.col("w1") > 0)).select("pa", "pb")
-    dead = touched.filter((F.col("w0") > 0) & (F.col("w1") <= 0)).select("pa", "pb")
-    return t1, born, dead
 
+    def crossing(cond) -> DataFrame:
+        return local_checkpoint(touched.filter(cond).select("pa", "pb"), eager=False)
 
-def _unit(edges: DataFrame, name: str) -> DataFrame:
-    """A canonical edge SET as unit support (column ``name``)."""
-    return edges.select("pa", "pb", F.lit(1).cast("long").alias(name))
+    w0, w1 = F.col("w0"), F.col("w1")
+    return t1, crossing((w0 == 0) & (w1 > 0)), crossing((w0 > 0) & (w1 <= 0))
 
 
 def _edge_degrees(edges: DataFrame) -> DataFrame:
@@ -970,11 +964,13 @@ def incremental_triangles(
         if tri_store is not None
         else pairs_triangle_counts(base_pairs).select("node", "tri_cnt")
     )
-    full_edges, e_new, _dead = _edge_apply(
-        _unit(base_pairs, "w"),
-        _unit(_copurchase_pairs(lineitem.filter(delta)), "d"),
+    unit = F.lit(1).cast("long")  # support 1: the stores are edge sets
+    _t1, e_new, _dead = _edge_apply(
+        base_pairs.withColumn("w", unit),
+        _copurchase_pairs(lineitem.filter(delta)).withColumn("d", unit),
     )
-    tri_new, deg = _attributed_delta_counts(e_new, full_edges)
+    # arrivals only add edges: t1 = store ∪ born, no store-sized join
+    tri_new, deg = _attributed_delta_counts(e_new, base_pairs.unionByName(e_new))
     return _tri_net(carried, deg, tri_new=(1, tri_new))
 
 
