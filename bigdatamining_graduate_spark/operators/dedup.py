@@ -568,23 +568,26 @@ def components_apply(
     """The one maintenance step of the near-dup COMPONENT store: the t0
     labeling (doc_id, component) advanced to (doc_id, component, csize)
     without re-running connected components over the full pair graph.
-    Components holding a ``gone`` doc (a predicate over ``doc_id``)
-    re-close over their surviving members and the t0 ``pairs`` among
-    them — a deletion can SPLIT a component; ``added`` docs enter as
+    The t0 ``pairs`` touching a ``gone`` doc (a predicate over
+    ``doc_id``) drop, so the components holding one re-close over
+    their members and the surviving pairs among them — a deletion can
+    SPLIT a component, and each gone doc comes out a singleton (the
+    deleting caller then drops it); ``added`` docs enter as
     singletons; the result then closes under the ``fresh`` pairs on the
     CONTRACTION graph (current labels as nodes, fresh pairs mapped
     through them as edges).  The t1 pair graph is the surviving pairs ∪
     fresh, so this equals a full recompute; the work is bounded by the
     components touching a gone doc plus |labels| + |fresh|.  q228
-    passes no ``gone``, q229 no ``fresh``, q232 both (a revised doc is
-    gone and added)."""
+    passes no ``gone``, q229 no ``fresh``, q232 both (a revised doc
+    loses its t0 pairs and keeps its place as a singleton)."""
     labels = labels.select("doc_id", "component")
     if gone is not None:
         hit = labels.filter(gone).select("component").distinct()
-        aff = labels.filter(~gone).join(hit, "component").select("doc_id")
+        aff = labels.join(hit, "component").select("doc_id")
+        live = aff.filter(~gone)
         aff_pairs = pairs.join(
-            aff.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_semi"
-        ).join(aff.select(F.col("doc_id").alias("doc_b")), "doc_b", "left_semi")
+            live.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_semi"
+        ).join(live.select(F.col("doc_id").alias("doc_b")), "doc_b", "left_semi")
         reclosed = neardup_components(aff, aff_pairs).select("doc_id", "component")
         labels = (
             labels.join(hit, "component", "left_anti")
@@ -832,11 +835,7 @@ def upsert_aware_components(
             docs, threshold, pair_store=pair_store
         ).filter(F.col("src") == "refreshed")
     return components_apply(
-        prev_labels,
-        pair_store,
-        gone=changed,
-        added=prev_labels.filter(changed).select("doc_id"),
-        fresh=fresh_pairs.select("doc_a", "doc_b"),
+        prev_labels, pair_store, gone=changed, fresh=fresh_pairs.select("doc_a", "doc_b")
     )
 
 
@@ -889,7 +888,7 @@ def delete_aware_components(
     """
     deleted = _incr_deleted_flag() if deleted_flag is None else deleted_flag
     prev_labels, pair_store = _t0_components(docs, threshold, prev_labels, pair_store)
-    return components_apply(prev_labels, pair_store, gone=deleted)
+    return components_apply(prev_labels, pair_store, gone=deleted).filter(~deleted)
 
 
 def delete_aware_components_sql(threshold: float) -> str:

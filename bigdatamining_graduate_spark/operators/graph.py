@@ -920,7 +920,8 @@ def incremental_triangles(
     arrival algebra is exact: every co-purchase edge comes from some
     order, and each order is base xor batch, so the new-edge set is
     pairs(batch orders) ∖ edge-store — the born edges of the unit-
-    support net (:func:`_edge_apply`), and full edges = store ∪ new.  (Support > 1 would additionally merge per-edge order
+    support net (:func:`_edge_apply`), and full edges = store ∪ new.
+    (Support > 1 would additionally merge per-edge order
     counts — additive, the q243 subtractability class — not modeled
     here.)
 
@@ -1221,8 +1222,8 @@ def upsert_aware_triangles(
 
     The per-edge support delta derives from the REVISED orders only
     (c_new − c_old per canonical pair — |revised|-bounded, never a
-    re-pairing of the corpus); one full-outer merge against the store
-    nets the weights.  Triangle maintenance runs BOTH q247's and
+    re-pairing of the corpus); the support net (:func:`_edge_apply`)
+    merges only the delta's edges into the store.  Triangle maintenance runs BOTH q247's and
     q246's kernels in the same pass: destroyed = t0 triangles touching
     ≥ 1 removed edge (attributed over the t0 adjacency), created = t1
     triangles touching ≥ 1 added edge (attributed over the t1
@@ -1240,8 +1241,8 @@ def upsert_aware_triangles(
     the delta algebra, not just the totals.  Output: (node, deg,
     tri_cnt, tri_created, tri_destroyed), nodes in ≥ 1 t1 triangle.
 
-    Scale: delta is |revised-order pairs|; the merge is one store-
-    keyed full-outer join; both kernels are per-marked-edge
+    Scale: delta is |revised-order pairs|; the net is one delta-sized
+    join against the store; both kernels are per-marked-edge
     O(deg(u) + deg(v)) intersections (AQE picks the probe strategy —
     the q247 broadcast caveat applies to both directions).  Reference
     anchor: extends q110/q246/q247 (Suri & Vassilvitskii WWW'11,
