@@ -1093,6 +1093,24 @@ def _t0_graph(lineitem, edge_store, tri_store, flag):
     return store, sliced, tri_store.select("node", "tri_cnt")
 
 
+def _erase_orders(store: DataFrame, erased: DataFrame, carried: DataFrame):
+    """The erasure net of q247 and q250's vacuum: the erased orders'
+    (k, ps) baskets lower the weighted ``store``'s support
+    (:func:`_edge_apply`).  Returns (the t1 store, per-node (node,
+    tri_cnt, tri_removed) = ``carried`` − destroyed), the destroyed
+    triangles counted in the t0 graph they lived in."""
+    t1, _born, dead = _edge_apply(
+        store,
+        _weighted_pairs_from_baskets(erased).select(
+            "pa", "pb", (-F.col("w")).alias("d")
+        ),
+    )
+    destroyed, _t0_deg = _attributed_delta_counts(
+        dead, store.select("pa", "pb"), broadcast_marked=False
+    )
+    return t1, _tri_net(carried, None, tri_removed=(-1, destroyed))
+
+
 def delete_aware_triangles(
     lineitem: DataFrame,
     edge_store: DataFrame | None = None,
@@ -1126,20 +1144,10 @@ def delete_aware_triangles(
     store, cd_src, carried = _t0_graph(
         lineitem, edge_store, tri_store, _tri_deleted_flag
     )
-    survivors, _born, removed = _edge_apply(
-        store,
-        _weighted_pairs_from_baskets(cd_src).select(
-            "pa", "pb", (-F.col("w")).alias("d")
-        ),
-    )
-    # destroyed triangles counted in the t0 graph (the graph they lived
-    # in); the helper's degrees are t0 degrees — discarded, q247's deg
-    # comes from the SURVIVING edges
-    destroyed, _t0_deg = _attributed_delta_counts(
-        removed, store.select("pa", "pb"), broadcast_marked=False
-    )
-    return _tri_net(
-        carried, _edge_degrees(survivors), tri_removed=(-1, destroyed)
+    survivors, tri = _erase_orders(store, cd_src, carried)
+    # q247's deg comes from the SURVIVING edges
+    return tri.join(_edge_degrees(survivors), "node").select(
+        "node", "deg", "tri_cnt", "tri_removed"
     )
 
 
@@ -1428,24 +1436,16 @@ def vacuumed_triangle_refresh(
     write_store_version(tri.repartition(8), root, "tri_store", 1)
     commit_version(root, 1)
 
-    # deletion cycle: support decrements against the persisted store,
-    # netted once (the merge is checkpointed, so the deleted-slice
-    # pair-gen runs once for the kill test, the weight rewrite and the
-    # attribution kernel's marked-set references)
-    updated_edges, _born, removed = _edge_apply(
+    # deletion cycle: q247's net against the persisted stores (the
+    # merge is checkpointed, so the deleted-slice pair-gen runs once for
+    # the kill test, the weight rewrite and the attribution kernel's
+    # marked-set references)
+    updated_edges, updated_tri = _erase_orders(
         store,
-        _weighted_pairs_from_baskets(bk.filter(_tri_deleted_flag("k"))).select(
-            "pa", "pb", (-F.col("w")).alias("d")
-        ),
-    )
-    destroyed, _t0_deg = _attributed_delta_counts(
-        removed, store.select("pa", "pb"), broadcast_marked=False
-    )
-    updated_tri = _tri_net(
+        bk.filter(_tri_deleted_flag("k")),
         read_current(spark, root, "tri_store", tri.schema),
-        None,
-        tri_removed=(-1, destroyed),
-    ).select("node", "tri_cnt")
+    )
+    updated_tri = updated_tri.select("node", "tri_cnt")
     # both rewrites derive from v1 (the t0 graph) and flip together
     publish_version(
         root,
