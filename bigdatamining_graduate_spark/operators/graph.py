@@ -1231,8 +1231,8 @@ def upsert_aware_triangles(
     The per-edge support delta derives from the REVISED orders only
     (c_new − c_old per canonical pair — |revised|-bounded, never a
     re-pairing of the corpus); the support net (:func:`_edge_apply`)
-    merges only the delta's edges into the store.  Triangle maintenance runs BOTH q247's and
-    q246's kernels in the same pass: destroyed = t0 triangles touching
+    merges only the delta's edges into the store.  Triangle
+    maintenance runs BOTH q247's and q246's kernels in the same pass: destroyed = t0 triangles touching
     ≥ 1 removed edge (attributed over the t0 adjacency), created = t1
     triangles touching ≥ 1 added edge (attributed over the t1
     adjacency) — the two sets are provably disjoint (a destroyed
