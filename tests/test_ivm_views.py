@@ -256,6 +256,25 @@ def test_session_store_roundtrip(spark):
     )
 
 
+def test_delete_session_store_roundtrip(spark):
+    """q283 through a PERSISTED t0 session view: the store written and
+    read back gives the in-plan delete-aware result."""
+    from bigdatamining_graduate_spark.sources.catalog import load_table
+    from bigdatamining_graduate_spark.staging import staging_dir
+
+    ev = load_table(spark, SF_SMOKE, "events")
+    stage = staging_dir(prefix="bdm_sess_del_roundtrip_")
+    store_path = f"{stage}/session_store"
+    SN.full_sessions_derived(ev).write.parquet(store_path)
+    injected = SN.delete_aware_sessions(
+        ev, session_store=spark.read.parquet(store_path)
+    )
+    derived = SN.delete_aware_sessions(ev)
+    assert sorted(map(tuple, injected.collect())) == sorted(
+        map(tuple, derived.collect())
+    )
+
+
 def test_native_session_window_compose_hazard_still_present(spark):
     """Pins the Catalyst hazard that forced full_sessions_derived: an
     anti-join on (user_id, session_start_us) composed over the NATIVE

@@ -63,6 +63,21 @@ def test_index_store_roundtrip(spark, tmp_path):
     assert _key(roundtrip) == _key(LX.incremental_bm25(docs))
 
 
+def test_delete_store_roundtrip(spark, tmp_path):
+    """q243 through a PERSISTED t0 index: the dl/tf stores of the whole
+    corpus written, read back and tombstoned give the in-plan
+    delete-aware result."""
+    docs = _docs(spark)
+    LX.doc_lengths(docs).write.parquet(str(tmp_path / "dl"))
+    LX.term_postings(docs).write.parquet(str(tmp_path / "tf"))
+    roundtrip = LX.delete_aware_bm25(
+        docs,
+        dl_store=spark.read.parquet(str(tmp_path / "dl")),
+        tf_store=spark.read.parquet(str(tmp_path / "tf")),
+    )
+    assert _key(roundtrip) == _key(LX.delete_aware_bm25(docs))
+
+
 def test_delete_rescores_survivors(spark):
     """The design-pinning test: after deletion the top-20 must equal
     the full rebuild over the remaining corpus — and at least one
