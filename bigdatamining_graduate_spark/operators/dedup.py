@@ -374,6 +374,13 @@ def lsh_candidate_pairs(sig: DataFrame, threshold: float) -> DataFrame:
     ReusedExchange across the branches; round-5 scans audit).  Blocks are
     registered with the checkpoint ledger; the caller frees them via
     ``checkpoints.release_checkpoints()`` after consuming the result."""
+    return _lsh_t0(sig, threshold)[1]
+
+
+def _lsh_t0(sig: DataFrame, threshold: float) -> tuple[DataFrame, DataFrame]:
+    """The one t0 build of the LSH stores: the signature store ``sig``
+    checkpointed once, and its pair store (doc_a, doc_b, sig_match) —
+    the banded self-join of :func:`lsh_candidate_pairs`."""
     sig = local_checkpoint(sig, eager=False)
     bands = signature_bands(sig)
     a, b = bands.alias("a"), bands.alias("b")
@@ -383,7 +390,7 @@ def lsh_candidate_pairs(sig: DataFrame, threshold: float) -> DataFrame:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    return score_pairs(cand, sig, _sig_match(threshold))
+    return sig, score_pairs(cand, sig, _sig_match(threshold))
 
 
 def minhash_lsh_pairs_sql(threshold: float) -> str:
@@ -463,21 +470,14 @@ def _signed_slices(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     )
 
 
-def incremental_lsh_pairs(
-    docs: DataFrame,
-    threshold: float,
-    base_sig: DataFrame | None = None,
-    carried_pairs: DataFrame | None = None,
-) -> DataFrame:
+def incremental_lsh_pairs(docs: DataFrame, threshold: float) -> DataFrame:
     """Incremental near-dup maintenance — the daily-crawl-refresh shape a
     100 TB pipeline hits: an INCOMING batch (deterministic hash slice,
     20%) arrives against an EXISTING MinHash signature store. Only the
-    new documents are signed and banded; candidate pairs split into
+    new documents are banded; candidate pairs split into
 
-    * ``carried`` — base×base pairs, the PREVIOUS run's output, reused
-      verbatim (at scale: read back from the persisted pair store —
-      never recomputed; the store-roundtrip test proves the read-back
-      path gives the identical result), and
+    * ``carried`` — base×base pairs, the t0 pair store, reused verbatim
+      (:func:`_lsh_t0` over the base slice's signatures), and
     * ``fresh``   — pairs with ≥1 batch side: the batch's bands
       equi-joined against the FULL band table (store ∪ batch).
 
@@ -488,39 +488,40 @@ def incremental_lsh_pairs(
     the component closure over merged pairs == closure over full pairs
     (the q203/q209 "incremental == full" discipline applied to q26/q71,
     VERDICT r7 #6). Returns (doc_a, doc_b, sig_match, src).  The split
-    is :func:`~.zset.pair_apply` with nothing gone.
+    is :func:`~.zset.pair_apply` with nothing gone; a read-back store
+    takes the same step through :func:`_lsh_refresh`.
 
     Scale: the batch band table is |batch|-sized; both pair joins are
-    bucket-key equi-joins (never all-pairs); the only store-sized
-    inputs are one signature-store scan (re-signing nothing) and the
-    carried-pair read. Reference anchor: scales the LSH candidate-pair
-    pipeline of ``hw3/hw3.py:125-172`` to continuous arrival.
-
-    ``base_sig`` / ``carried_pairs`` inject a PERSISTED store (the
-    roundtrip test); by default both are derived in-plan from ``docs``.
+    bucket-key equi-joins (never all-pairs). Reference anchor: scales
+    the LSH candidate-pair pipeline of ``hw3/hw3.py:125-172`` to
+    continuous arrival.
     """
-    if base_sig is None:
-        sig, base_sig, batch_sig = _signed_slices(docs)
-    else:
-        # persisted-store path: sign ONLY the batch; the store is read,
-        # never re-signed
-        batch_sig = local_checkpoint(
-            minhash_signatures(docs.filter(_incr_delta_flag())), eager=False
-        )
-        sig = base_sig.unionByName(batch_sig)
-    score = _sig_match(threshold)
-    if carried_pairs is None:
-        # the t0 store: every base row arriving into an empty store
-        carried_pairs = pair_apply(
-            base_sig, None, None, base_sig, _lsh_keys, score
-        ).drop("src")
-    else:
-        carried_pairs = carried_pairs.select("doc_a", "doc_b")
-    return pair_apply(sig, carried_pairs, None, batch_sig, _lsh_keys, score)
+    sig, base_sig, batch_sig = _signed_slices(docs)
+    carried = _lsh_t0(base_sig, threshold)[1]
+    return pair_apply(
+        sig, carried, None, batch_sig, _lsh_keys, _sig_match(threshold)
+    )
+
+
+def _lsh_refresh(
+    sig_store: DataFrame, pair_store: DataFrame, batch: DataFrame, threshold: float
+) -> DataFrame:
+    """The insert step over persisted LSH stores (q235 q267 q271): sign
+    ONLY the arriving ``batch`` docs and :func:`~.zset.pair_apply` them
+    against the stores read back — the store is read, never re-signed."""
+    batch_sig = local_checkpoint(minhash_signatures(batch), eager=False)
+    return pair_apply(
+        sig_store.unionByName(batch_sig),
+        pair_store,
+        None,
+        batch_sig,
+        _lsh_keys,
+        _sig_match(threshold),
+    )
 
 
 def incremental_lsh_pairs_sql(threshold: float) -> str:
-    """DuckDB twin of :func:`incremental_lsh_pairs` (in-plan store)."""
+    """DuckDB twin of :func:`incremental_lsh_pairs`."""
     mins = _minhash_mins_sql()
     flag = (
         f"({portable_hash64_sql('cast(doc_id as varchar)', 'ilsh')}"
@@ -631,11 +632,7 @@ def components_apply(
     )
 
 
-def incremental_components(
-    docs: DataFrame,
-    threshold: float,
-    base_labels: DataFrame | None = None,
-) -> DataFrame:
+def incremental_components(docs: DataFrame, threshold: float) -> DataFrame:
     """Incremental near-dup COMPONENT maintenance — the label-store
     counterpart of :func:`incremental_lsh_pairs` (q71's refresh shape):
     given the previous run's component labeling of the BASE corpus and
@@ -657,20 +654,17 @@ def incremental_components(
     The equality claim is DRIVER-CHECKED, not just unit-tested: q228's
     DuckDB oracle is the FULL recursive-CTE closure over carried ∪
     fresh pairs, so the round's hash-match IS the merge-equals-
-    recompute proof at sf0.01 (the q203/q209 discipline).
-
-    ``base_labels`` injects a PERSISTED label store (doc_id, component)
-    for the roundtrip test; by default it is derived in-plan by running
-    :func:`neardup_components` over the base slice only.
+    recompute proof at sf0.01 (the q203/q209 discipline).  The t0
+    label store is :func:`neardup_components` over the base slice's
+    :func:`_lsh_t0` pairs.
     """
     delta = _incr_delta_flag()
     # one signing pass feeds the base-labels derivation AND the fresh
     # pairs (round 11, guide §1.2)
     sig, base_sig, batch_sig = _signed_slices(docs)
-    if base_labels is None:
-        base_labels = neardup_components(
-            docs.filter(~delta), lsh_candidate_pairs(base_sig, threshold)
-        )
+    base_labels = neardup_components(
+        docs.filter(~delta), _lsh_t0(base_sig, threshold)[1]
+    )
     fresh = pair_apply(
         sig, None, None, batch_sig, _lsh_keys, _sig_match(threshold)
     ).select("doc_a", "doc_b")
@@ -702,11 +696,18 @@ def _revised(docs: DataFrame) -> DataFrame:
     )
 
 
-def upsert_aware_lsh_pairs(
-    docs: DataFrame,
-    threshold: float,
-    pair_store: DataFrame | None = None,
-) -> DataFrame:
+def _revised_sig(sig0: DataFrame, docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(t1 signatures, the revised slice's signatures) of the q231/q232
+    revision: the t0 signature store minus the revised docs, plus their
+    re-signed t1 text — only the revised slice is signed again."""
+    changed = _incr_updated_flag()
+    revised = local_checkpoint(
+        minhash_signatures(_revised(docs.filter(changed))), eager=False
+    )
+    return sig0.filter(~changed).unionByName(revised), revised
+
+
+def upsert_aware_lsh_pairs(docs: DataFrame, threshold: float) -> DataFrame:
     """UPSERT-side near-dup maintenance — the crawl-refresh shape where
     pages CHANGE content between snapshots (neither pure arrival q227
     nor pure deletion q229): a deterministic 10% slice of documents is
@@ -727,19 +728,19 @@ def upsert_aware_lsh_pairs(
     Output: (doc_a, doc_b, sig_match, src) with src ∈
     {'carried','refreshed'}.
 
-    Scale: re-signing is O(|changed|); the stale-pair drop is two
-    hash-slice anti-filters on the pair store; the only fresh band join
-    is |changed|-sided.  ``pair_store`` injects the persisted t0 pairs
-    (roundtrip test); default derives them in-plan.
+    Scale: every doc is signed once — the t0 stores (:func:`_lsh_t0`)
+    sign the t0 corpus, the t1 signature table reuses them and signs
+    only the changed slice (:func:`_revised_sig`); the stale-pair drop
+    is two hash-slice anti-filters on the pair store; the only fresh
+    band join is |changed|-sided.
     """
-    if pair_store is None:
-        pair_store = lsh_candidate_pairs(minhash_signatures(docs), threshold)
-    sig_t1 = local_checkpoint(minhash_signatures(_revised(docs)), eager=False)
+    sig0, pairs0 = _lsh_t0(minhash_signatures(docs), threshold)
+    sig1, revised = _revised_sig(sig0, docs)
     return pair_apply(
-        sig_t1,
-        pair_store,
+        sig1,
+        pairs0,
         _incr_updated_flag,
-        sig_t1.filter(_incr_updated_flag()),
+        revised,
         _lsh_keys,
         _sig_match(threshold),
         fresh="refreshed",
@@ -780,30 +781,17 @@ def upsert_aware_lsh_pairs_sql(threshold: float) -> str:
     """
 
 
-def _t0_components(docs, threshold, prev_labels, pair_store):
-    """The t0 label and pair stores of q229/q232, checkpointed: the
-    injected ones, else derived in-plan from ``docs``."""
-    if pair_store is None:
-        pair_store = lsh_candidate_pairs(
-            minhash_signatures(docs), threshold
-        ).select("doc_a", "doc_b")
-    pair_store = local_checkpoint(pair_store, eager=False)
-    if prev_labels is None:
-        prev_labels = neardup_components(docs, pair_store)
-    return (
-        local_checkpoint(prev_labels.select("doc_id", "component"), eager=False),
-        pair_store,
-    )
+def _t0_components(docs: DataFrame, threshold: float):
+    """The t0 stores of q229/q232, checkpointed: (signatures, labels
+    (doc_id, component), bare (doc_a, doc_b) pairs), all from one
+    :func:`_lsh_t0` signing pass over ``docs``."""
+    sig, pairs = _lsh_t0(minhash_signatures(docs), threshold)
+    pairs = local_checkpoint(pairs.select("doc_a", "doc_b"), eager=False)
+    labels = neardup_components(docs, pairs).select("doc_id", "component")
+    return sig, local_checkpoint(labels, eager=False), pairs
 
 
-def upsert_aware_components(
-    docs: DataFrame,
-    threshold: float,
-    prev_labels: DataFrame | None = None,
-    pair_store: DataFrame | None = None,
-    fresh_pairs: DataFrame | None = None,
-    changed_flag=None,
-) -> DataFrame:
+def upsert_aware_components(docs: DataFrame, threshold: float) -> DataFrame:
     """Component maintenance under CONTENT CHANGE — the general
     maintenance step, because an update is a delete-then-insert on the
     pair graph: a changed doc loses every stale edge (its component may
@@ -824,19 +812,16 @@ def upsert_aware_components(
     components of (docs, carried), phase 2 closes them under fresh.
     The DuckDB oracle is the FULL recursive closure over the t1 pair
     set, so the driver hash-match proves the two-phase maintenance ==
-    full recompute each round.  ``prev_labels`` / ``pair_store`` inject
-    the persisted t0 state (roundtrip test); ``fresh_pairs`` /
-    ``changed_flag`` inject a crafted change set (the split+merge unit
-    test)."""
-    changed = _incr_updated_flag() if changed_flag is None else changed_flag
-    prev_labels, pair_store = _t0_components(docs, threshold, prev_labels, pair_store)
-    if fresh_pairs is None:
-        fresh_pairs = upsert_aware_lsh_pairs(
-            docs, threshold, pair_store=pair_store
-        ).filter(F.col("src") == "refreshed")
-    return components_apply(
-        prev_labels, pair_store, gone=changed, fresh=fresh_pairs.select("doc_a", "doc_b")
-    )
+    full recompute each round.  Both phases are one
+    :func:`components_apply`; the fresh pairs are q231's
+    :func:`~.zset.pair_apply` without a store, over the t1 signatures
+    :func:`_revised_sig` derives from the t0 ones."""
+    sig0, labels, pairs = _t0_components(docs, threshold)
+    sig1, revised = _revised_sig(sig0, docs)
+    fresh = pair_apply(
+        sig1, None, None, revised, _lsh_keys, _sig_match(threshold)
+    ).select("doc_a", "doc_b")
+    return components_apply(labels, pairs, gone=_incr_updated_flag(), fresh=fresh)
 
 
 def upsert_aware_components_sql(threshold: float) -> str:
@@ -857,13 +842,7 @@ def _incr_deleted_flag(id_col: str = "doc_id"):
     return hash_bucket(id_col, "idel", INCR_DEL_BUCKETS) == 0
 
 
-def delete_aware_components(
-    docs: DataFrame,
-    threshold: float,
-    prev_labels: DataFrame | None = None,
-    pair_store: DataFrame | None = None,
-    deleted_flag=None,
-) -> DataFrame:
+def delete_aware_components(docs: DataFrame, threshold: float) -> DataFrame:
     """Deletion-side incremental component maintenance — the tombstone /
     takedown shape (GDPR erasure, robots.txt retro-opt-out) that
     insert-only maintenance (q227/q228) cannot express: removing a
@@ -879,16 +858,12 @@ def delete_aware_components(
 
     The DuckDB oracle is the FULL closure over the remaining corpus, so
     the driver's hash-match proves bounded-recompute == full-recompute
-    each round (same discipline as q228).  ``prev_labels`` /
-    ``pair_store`` inject the persisted previous state (roundtrip
-    test); ``deleted_flag`` injects a custom deletion predicate (the
-    bridge-split unit test — the fixture's natural dup clusters are
-    pairs, which shrink but never split); defaults derive from ``docs``
-    and the deterministic hash slice.
+    each round (same discipline as q228).  The step is
+    :func:`components_apply` with the deletion slice gone.
     """
-    deleted = _incr_deleted_flag() if deleted_flag is None else deleted_flag
-    prev_labels, pair_store = _t0_components(docs, threshold, prev_labels, pair_store)
-    return components_apply(prev_labels, pair_store, gone=deleted).filter(~deleted)
+    deleted = _incr_deleted_flag()
+    _sig, labels, pairs = _t0_components(docs, threshold)
+    return components_apply(labels, pairs, gone=deleted).filter(~deleted)
 
 
 def delete_aware_components_sql(threshold: float) -> str:
@@ -1432,8 +1407,8 @@ def vacuumed_refresh_pairs(
     accretion a per-batch refresh loop produces), apply a deletion
     cycle (the q229 tombstone slice), VACUUM both stores (tombstoned
     rows dropped, files compacted via :func:`vacuum_parquet_store`),
-    then run the NEXT insert refresh (q227's incremental path) reading
-    the VACUUMED stores back from parquet.  The DuckDB oracle is the
+    then run the NEXT insert refresh (q227's step, :func:`_lsh_refresh`)
+    reading the VACUUMED stores back from parquet.  The DuckDB oracle is the
     full incremental recompute over the remaining corpus, so the driver
     hash-match proves vacuumed-store refresh == recompute — dead rows
     and file layout are physically gone with zero semantic drift.
@@ -1462,11 +1437,10 @@ def _publish_t0_stores(
     loop leaves, 1 a compacted store).  Returns the stores' schemas."""
     from ..sources.publish import publish_version
 
-    sig_t0 = local_checkpoint(
-        minhash_signatures(docs.filter(~_incr_delta_flag())), eager=False
+    sig_t0, pairs_t0 = _lsh_t0(
+        minhash_signatures(docs.filter(~_incr_delta_flag())), threshold
     )
-    pairs_t0 = lsh_candidate_pairs(sig_t0, threshold).select("doc_a", "doc_b")
-    stores = {"sig_store": sig_t0, "pair_store": pairs_t0}
+    stores = {"sig_store": sig_t0, "pair_store": pairs_t0.select("doc_a", "doc_b")}
     publish_version(
         root,
         1,
@@ -1585,11 +1559,11 @@ def _refresh_after_deletion(
     from ..sources.publish import read_current
 
     root, schema = _publish_deletion_cycle(spark, docs, threshold, root, files)
-    return incremental_lsh_pairs(
-        docs.filter(~_incr_deleted_flag()),
+    return _lsh_refresh(
+        read_current(spark, root, "sig_store", schema["sig_store"]),
+        read_current(spark, root, "pair_store", schema["pair_store"]),
+        docs.filter(~_incr_deleted_flag() & _incr_delta_flag()),
         threshold,
-        base_sig=read_current(spark, root, "sig_store", schema["sig_store"]),
-        carried_pairs=read_current(spark, root, "pair_store", schema["pair_store"]),
     )
 
 
@@ -1842,6 +1816,6 @@ def triggered_vacuum_refresh(
     pair_read = read_current(spark, root, "pair_store", schema["pair_store"])
     if "pair_store" not in fired:
         pair_read = drop_touching(pair_read, tombstones)
-    return incremental_lsh_pairs(
-        remaining, threshold, base_sig=sig_read, carried_pairs=pair_read
+    return _lsh_refresh(
+        sig_read, pair_read, remaining.filter(_incr_delta_flag()), threshold
     )

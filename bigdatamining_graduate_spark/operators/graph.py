@@ -31,7 +31,10 @@ stream q248, vacuum q250, upsert q270) is one signed-support net,
 :func:`_edge_apply`: an edge is born or dies when its support crosses 0.
 The per-node triangle counts then net through :func:`_tri_net`
 (carried − destroyed + created), the changed triangles counted by the
-attribution kernel :func:`_attributed_delta_counts`.
+attribution kernel :func:`_attributed_delta_counts`.  Each cell is one
+step over its t0 stores — :func:`_tri_insert` (q246, q250),
+:func:`_tri_erase` (q247) and :func:`_tri_revise` (q270), the latter
+two over :func:`_t0_graph`'s weighted build.
 """
 
 from __future__ import annotations
@@ -909,14 +912,10 @@ def _tri_net(
     return out.join(deg, "node").select("node", "deg", "tri_cnt", *deltas)
 
 
-def incremental_triangles(
-    lineitem: DataFrame,
-    edge_store: DataFrame | None = None,
-    tri_store: DataFrame | None = None,
-) -> DataFrame:
+def incremental_triangles(lineitem: DataFrame) -> DataFrame:
     """Incremental per-node TRIANGLE-count maintenance under edge
-    arrival (q246): a 20% slice of orders arrives against a persisted
-    edge store and per-node triangle-count store.  At support 1 the
+    arrival (q246): a 20% slice of orders arrives against the t0 edge
+    store and per-node triangle-count store.  At support 1 the
     arrival algebra is exact: every co-purchase edge comes from some
     order, and each order is base xor batch, so the new-edge set is
     pairs(batch orders) ∖ edge-store — the born edges of the unit-
@@ -951,27 +950,32 @@ def incremental_triangles(
     algorithm per Suri & Vassilvitskii WWW'11 adapted to deltas."""
     delta = _tri_delta_flag()
     base_pairs = local_checkpoint(
-        edge_store
-        if edge_store is not None
-        else _copurchase_pairs(lineitem.filter(~delta)),
-        eager=False,
+        _copurchase_pairs(lineitem.filter(~delta)), eager=False
     )
     # the q250 store-derivation trick: the carried triangle counts come
     # FROM the materialized edge store (one adjacency closure), never by
     # re-pairing the corpus a second time (measured on q250: one whole
     # pair-gen shuffle saved; applied here round 11)
-    carried = (
-        tri_store
-        if tri_store is not None
-        else pairs_triangle_counts(base_pairs).select("node", "tri_cnt")
+    return _tri_insert(
+        base_pairs,
+        pairs_triangle_counts(base_pairs).select("node", "tri_cnt"),
+        _copurchase_pairs(lineitem.filter(delta)),
     )
+
+
+def _tri_insert(
+    edges: DataFrame, carried: DataFrame, batch: DataFrame
+) -> DataFrame:
+    """The insert step of the graph stores (q246, q250): the ``batch``
+    co-purchase edges (pa, pb) net into the edge set ``edges`` at unit
+    support, and the triangles they close add to the ``carried``
+    per-node counts.  Output: (node, deg, tri_cnt, tri_new)."""
     unit = F.lit(1).cast("long")  # support 1: the stores are edge sets
     _t1, e_new, _dead = _edge_apply(
-        base_pairs.withColumn("w", unit),
-        _copurchase_pairs(lineitem.filter(delta)).withColumn("d", unit),
+        edges.withColumn("w", unit), batch.withColumn("d", unit)
     )
     # arrivals only add edges: t1 = store ∪ born, no store-sized join
-    tri_new, deg = _attributed_delta_counts(e_new, base_pairs.unionByName(e_new))
+    tri_new, deg = _attributed_delta_counts(e_new, edges.unionByName(e_new))
     return _tri_net(carried, deg, tri_new=(1, tri_new))
 
 
@@ -1068,29 +1072,21 @@ def _weighted_pairs_from_baskets(bk: DataFrame) -> DataFrame:
     )
 
 
-def _t0_graph(lineitem, edge_store, tri_store, flag):
+def _t0_graph(lineitem, flag):
     """(weighted edge store, the flagged orders' baskets, carried
     per-node counts) at t0 for q247/q270, the stores checkpointed.
 
-    In-plan, ONE corpus grouping serves the weighted store AND the
-    slice (round 12, guide §1.2/§2.4: every order-slice flag is a
-    function of the order key, so the slice's baskets are a filter over
-    the checkpointed grouping, not a second scan and shuffle of the 10%
+    ONE corpus grouping serves the weighted store AND the slice (round
+    12, guide §1.2/§2.4: every order-slice flag is a function of the
+    order key, so the slice's baskets are a filter over the
+    checkpointed grouping, not a second scan and shuffle of the 10%
     slice).  The carried counts derive from the materialized weighted
     store (the q250 trick — no second corpus pairing; see
     incremental_triangles)."""
-    if edge_store is None:
-        bk = local_checkpoint(_grouped_baskets(_kp(lineitem)), eager=False)
-        store = local_checkpoint(_weighted_pairs_from_baskets(bk), eager=False)
-        sliced = bk.filter(flag("k"))
-    else:
-        store = local_checkpoint(edge_store, eager=False)
-        sliced = local_checkpoint(
-            _grouped_baskets(_kp(lineitem.filter(flag()))), eager=False
-        )
-    if tri_store is None:
-        tri_store = pairs_triangle_counts(store.select("pa", "pb"))
-    return store, sliced, tri_store.select("node", "tri_cnt")
+    bk = local_checkpoint(_grouped_baskets(_kp(lineitem)), eager=False)
+    store = local_checkpoint(_weighted_pairs_from_baskets(bk), eager=False)
+    carried = pairs_triangle_counts(store.select("pa", "pb"))
+    return store, bk.filter(flag("k")), carried.select("node", "tri_cnt")
 
 
 def _erase_orders(store: DataFrame, erased: DataFrame, carried: DataFrame):
@@ -1111,11 +1107,7 @@ def _erase_orders(store: DataFrame, erased: DataFrame, carried: DataFrame):
     return t1, _tri_net(carried, None, tri_removed=(-1, destroyed))
 
 
-def delete_aware_triangles(
-    lineitem: DataFrame,
-    edge_store: DataFrame | None = None,
-    tri_store: DataFrame | None = None,
-) -> DataFrame:
+def delete_aware_triangles(lineitem: DataFrame) -> DataFrame:
     """Deletion-side triangle maintenance (q247) — the takedown shape
     on the graph family (GDPR erasure of orders): a deterministic 10%
     order slice is erased.  Unlike the vector/lexical stores, an edge
@@ -1141,10 +1133,15 @@ def delete_aware_triangles(
 
     Scale: O(|deleted-order pairs|) + store-sized joins + per-removed-
     edge intersections; the corpus-sized closure never re-runs."""
-    store, cd_src, carried = _t0_graph(
-        lineitem, edge_store, tri_store, _tri_deleted_flag
-    )
-    survivors, tri = _erase_orders(store, cd_src, carried)
+    return _tri_erase(*_t0_graph(lineitem, _tri_deleted_flag))
+
+
+def _tri_erase(store: DataFrame, erased: DataFrame, carried: DataFrame) -> DataFrame:
+    """The delete step of the graph stores (q247): the ``erased``
+    orders' (k, ps) baskets net out of the weighted ``store``
+    (:func:`_erase_orders`).  Output: (node, deg, tri_cnt,
+    tri_removed)."""
+    survivors, tri = _erase_orders(store, erased, carried)
     # q247's deg comes from the SURVIVING edges
     return tri.join(_edge_degrees(survivors), "node").select(
         "node", "deg", "tri_cnt", "tri_removed"
@@ -1214,11 +1211,7 @@ def _op_t1(lineitem: DataFrame) -> DataFrame:
     return op.select("k", remapped.alias("p"))
 
 
-def upsert_aware_triangles(
-    lineitem: DataFrame,
-    edge_store: DataFrame | None = None,
-    tri_store: DataFrame | None = None,
-) -> DataFrame:
+def upsert_aware_triangles(lineitem: DataFrame) -> DataFrame:
     """UPSERT-side triangle maintenance (q270 — VERDICT r10 #5, the
     graph family's missing arrival shape: q246 insert / q247 delete /
     q248 stream / q250 vacuum existed; this is order-content
@@ -1255,9 +1248,15 @@ def upsert_aware_triangles(
     the q247 broadcast caveat applies to both directions).  Reference
     anchor: extends q110/q246/q247 (Suri & Vassilvitskii WWW'11,
     adapted to bidirectional deltas)."""
-    store, rev_bk, carried = _t0_graph(
-        lineitem, edge_store, tri_store, _tri_revised_flag
-    )
+    return _tri_revise(*_t0_graph(lineitem, _tri_revised_flag))
+
+
+def _tri_revise(store: DataFrame, rev_bk: DataFrame, carried: DataFrame) -> DataFrame:
+    """The upsert step of the graph stores (q270): the revised orders'
+    t0 (k, ps) baskets ``rev_bk`` and their t1 remap net their support
+    change into the weighted ``store``; the destroyed and created
+    triangles net into the ``carried`` counts.  Output: (node, deg,
+    tri_cnt, tri_created, tri_destroyed)."""
     c_old = _weighted_pairs_from_baskets(rev_bk).select(
         "pa", "pb", F.col("w").alias("co")
     )
@@ -1390,8 +1389,8 @@ def vacuumed_triangle_refresh(
     with zero-support edges physically dropped, triangle counts
     decremented by the exact destroyed-triangle attribution, both
     rewritten compacted and committed together as v2 — and the NEXT
-    arrival refresh (q246's incremental path) runs reading the vacuumed
-    stores back from parquet.
+    arrival refresh (q246's step, :func:`_tri_insert`) runs reading the
+    vacuumed stores back from parquet.
 
     The DuckDB oracle runs the FULL q110 pipeline over the post-delete
     corpus AND over the post-delete base, emitting tri_new = full −
@@ -1454,13 +1453,15 @@ def vacuumed_triangle_refresh(
     )
 
     # the NEXT arrival refresh, off the vacuumed stores
-    remaining = lineitem.filter(delta | ~deleted)
-    return incremental_triangles(
-        remaining,
-        edge_store=read_current(
-            spark, root, "edge_store", updated_edges.schema
-        ).select("pa", "pb"),
-        tri_store=read_current(spark, root, "tri_store", updated_tri.schema),
+    return _tri_insert(
+        local_checkpoint(
+            read_current(spark, root, "edge_store", updated_edges.schema).select(
+                "pa", "pb"
+            ),
+            eager=False,
+        ),
+        read_current(spark, root, "tri_store", updated_tri.schema),
+        _copurchase_pairs(lineitem.filter(delta)),
     )
 
 

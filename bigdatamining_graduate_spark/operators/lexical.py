@@ -25,6 +25,10 @@ fixed-term filter prunes the postings read to the query terms' lists.
 surviving documents' scores CHANGE (idf/avgdl shift), so a
 carry-the-scores design would be provably wrong, not just slower.
 
+Every cell is one map-shaped step, :func:`postings_apply`: the t0 dl/tf
+stores (:func:`_postings`, the one t0 build) minus the gone docs'
+postings, plus the postings of the added docs' tokens.
+
 Arrival slices reuse the corpus-wide conventions (``dedup`` salts
 "ilsh" / "idel"): one crawl-batch event refreshes the LSH store, the
 label store, AND the inverted index consistently.
@@ -119,18 +123,39 @@ def _bm25_from_stores(dl: DataFrame, tf: DataFrame) -> DataFrame:
     )
 
 
-def incremental_bm25(
-    docs: DataFrame,
-    dl_store: DataFrame | None = None,
-    tf_store: DataFrame | None = None,
-) -> DataFrame:
+def _postings(docs: DataFrame, tf_rows=_tf_from_tokens) -> tuple[DataFrame, DataFrame]:
+    """The dl and tf store rows of ``docs`` off ONE checkpointed token
+    projection — the t0 build of every cell, and the added rows of
+    :func:`postings_apply`.  ``tf_rows`` picks the postings vocabulary
+    (the query terms, or every token for q269)."""
+    tok = local_checkpoint(_doc_tokens(docs), eager=False)
+    return _dl_from_tokens(tok), tf_rows(tok)
+
+
+def postings_apply(
+    dl: DataFrame, tf: DataFrame, gone, added, tf_rows=_tf_from_tokens
+) -> tuple[DataFrame, DataFrame]:
+    """The one maintenance step of the inverted index: each store minus
+    the postings of the ``gone`` docs (a ``doc_id`` predicate, or None),
+    plus the postings of the ``added`` docs (or None), tokenized once.
+    Postings are per-document, so this map-shaped delta is exact; the
+    scores are never stored (module docstring)."""
+    if gone is not None:
+        dl, tf = dl.filter(~gone), tf.filter(~gone)
+    if added is not None:
+        add_dl, add_tf = _postings(added, tf_rows)
+        dl, tf = dl.unionByName(add_dl), tf.unionByName(add_tf)
+    return dl, tf
+
+
+def incremental_bm25(docs: DataFrame) -> DataFrame:
     """INSERT-side inverted-index maintenance (q242): the q227 arrival
     batch (20% hash slice, salt "ilsh" — the same crawl event that
-    refreshes the LSH store) lands against a persisted dl/tf index.
-    Only the batch is tokenized; base postings are read from the store
-    verbatim (insert-only batches have disjoint doc_ids, so the merge
-    is a pure union — no per-key reconciliation).  Scores then derive
-    from the MERGED stores, so the corpus-global statistics every
+    refreshes the LSH store) lands against the t0 dl/tf index.
+    Only the batch is tokenized; base postings are carried from the
+    store verbatim (insert-only batches have disjoint doc_ids, so the
+    merge is a pure union — no per-key reconciliation).  Scores then
+    derive from the MERGED stores, so the corpus-global statistics every
     document's score depends on (N, avgdl, df) are exact for the new
     corpus — the reason the stores hold postings, not scores.
 
@@ -138,29 +163,15 @@ def incremental_bm25(
     (q106's pipeline on the whole corpus), so the driver hash-match
     proves maintained-index search == full-rebuild search every round.
 
-    ``dl_store`` / ``tf_store`` inject the persisted index (roundtrip
-    test); defaults derive in-plan from the base slice.
-
     Scale: refresh is O(|batch| tokens); query-time work is the query
     terms' posting lists + one avgdl aggregate over the dl store (a
     per-doc stat table, materialized once per snapshot)."""
     delta = _incr_delta_flag()
     # one documents scan per slice: dl and tf derive from a shared
-    # checkpointed token projection (the q63 single-scan discipline);
-    # on the persisted-store path only the batch is ever tokenized
-    batch_tok = local_checkpoint(
-        _doc_tokens(docs.filter(delta)), eager=False
+    # checkpointed token projection (the q63 single-scan discipline)
+    dl, tf = postings_apply(
+        *_postings(docs.filter(~delta)), None, docs.filter(delta)
     )
-    if dl_store is None or tf_store is None:
-        base_tok = local_checkpoint(
-            _doc_tokens(docs.filter(~delta)), eager=False
-        )
-    dl = (
-        dl_store if dl_store is not None else _dl_from_tokens(base_tok)
-    ).unionByName(_dl_from_tokens(batch_tok))
-    tf = (
-        tf_store if tf_store is not None else _tf_from_tokens(base_tok)
-    ).unionByName(_tf_from_tokens(batch_tok))
     return _bm25_from_stores(dl, tf).select(
         "doc_id",
         "bm25",
@@ -168,11 +179,7 @@ def incremental_bm25(
     )
 
 
-def delete_aware_bm25(
-    docs: DataFrame,
-    dl_store: DataFrame | None = None,
-    tf_store: DataFrame | None = None,
-) -> DataFrame:
+def delete_aware_bm25(docs: DataFrame) -> DataFrame:
     """DELETE-side inverted-index maintenance (q243): the q229
     tombstone slice (10%, salt "idel") is erased.  Postings are
     tombstoned by one anti-filter per store (at scale: anti-joins
@@ -190,15 +197,7 @@ def delete_aware_bm25(
     full-rebuild search.
 
     Scale: two anti-filters + the same query-time work as q242."""
-    deleted = _incr_deleted_flag()
-    if dl_store is None or tf_store is None:
-        tok = local_checkpoint(_doc_tokens(docs), eager=False)
-    dl = (
-        dl_store if dl_store is not None else _dl_from_tokens(tok)
-    ).filter(~deleted)
-    tf = (
-        tf_store if tf_store is not None else _tf_from_tokens(tok)
-    ).filter(~deleted)
+    dl, tf = postings_apply(*_postings(docs), _incr_deleted_flag(), None)
     return _bm25_from_stores(dl, tf)
 
 
@@ -280,11 +279,7 @@ def delete_aware_bm25_sql() -> str:
     return _bm25_sql(f"NOT {deleted}")
 
 
-def upsert_aware_bm25(
-    docs: DataFrame,
-    dl_store: DataFrame | None = None,
-    tf_store: DataFrame | None = None,
-) -> DataFrame:
+def upsert_aware_bm25(docs: DataFrame) -> DataFrame:
     """UPSERT-side inverted-index maintenance (q244) — q231's
     content-change shape on the lexical index: the deterministic 10%
     revision slice (salt "iupd"; suffix sentence appended, the same t1
@@ -304,28 +299,17 @@ def upsert_aware_bm25(
     Output: top-20 (doc_id, bm25, src ∈ {carried, refreshed}).
 
     Scale: re-tokenizing is O(|changed|); the stale drop is one
-    hash-slice anti-filter per store."""
-    from .dedup import INCR_UPD_SUFFIX, _incr_updated_flag
+    hash-slice anti-filter per store.  The postings are row-local, so
+    the t0 build reads only the unchanged docs — the rows the step keeps
+    — and the changed docs are tokenized once, in their t1 text."""
+    from .dedup import _revised, _incr_updated_flag
 
     changed = _incr_updated_flag()
-    t1_changed = docs.filter(changed).withColumn(
-        "text", F.concat(F.col("text"), F.lit(INCR_UPD_SUFFIX))
+    dl, tf = postings_apply(
+        *_postings(docs.filter(~changed)),
+        changed,
+        _revised(docs.filter(changed)),
     )
-    chg_tok = local_checkpoint(_doc_tokens(t1_changed), eager=False)
-    if dl_store is None or tf_store is None:
-        base_tok = local_checkpoint(
-            _doc_tokens(docs.filter(~changed)), eager=False
-        )
-    dl = (
-        dl_store.filter(~changed)
-        if dl_store is not None
-        else _dl_from_tokens(base_tok)
-    ).unionByName(_dl_from_tokens(chg_tok))
-    tf = (
-        tf_store.filter(~changed)
-        if tf_store is not None
-        else _tf_from_tokens(base_tok)
-    ).unionByName(_tf_from_tokens(chg_tok))
     return _bm25_from_stores(dl, tf).select(
         "doc_id",
         "bm25",
@@ -472,7 +456,8 @@ def vacuumed_bm25_refresh(
     (the q229 tombstone slice, salt "idel"), VACUUM both stores —
     tombstoned postings anti-joined out, files compacted, both
     committed with one pointer flip — then run the NEXT q242 insert
-    refresh reading the VACUUMED stores back from parquet, with the
+    refresh (:func:`postings_apply`) reading the VACUUMED stores back
+    from parquet, with the
     SERVING read still pruned to the query terms' posting lists.
 
     The compaction detail that matters: the tf store's rewrite is
@@ -501,8 +486,7 @@ def vacuumed_bm25_refresh(
 
     delta = _incr_delta_flag()
     deleted = _incr_deleted_flag()
-    t0_tok = local_checkpoint(_doc_tokens(docs.filter(~delta)), eager=False)
-    dl0, tf0 = _dl_from_tokens(t0_tok), _tf_all_from_tokens(t0_tok)
+    dl0, tf0 = _postings(docs.filter(~delta), _tf_all_from_tokens)
     # accretion: many small files per store (what a refresh loop leaves)
     t0_stores = {"dl_store": dl0.repartition(8), "tf_store": tf0.repartitionByRange(8, "token")}
     publish_version(root, 1, t0_stores)
@@ -516,22 +500,19 @@ def vacuumed_bm25_refresh(
     )
     # next insert refresh off the vacuumed stores: only the surviving
     # batch is ever tokenized
-    batch_tok = local_checkpoint(
-        _doc_tokens(docs.filter(delta & ~deleted)), eager=False
+    dl, tf_all = postings_apply(
+        read_current(spark, root, "dl_store", dl0.schema),
+        read_current(spark, root, "tf_store", tf0.schema),
+        None,
+        docs.filter(delta & ~deleted),
+        _tf_all_from_tokens,
     )
-    dl = read_current(spark, root, "dl_store", dl0.schema).unionByName(
-        _dl_from_tokens(batch_tok)
+    vocab_row = tf_all.agg(
+        F.countDistinct("token").cast("long").alias("vocab_size")
     )
-    tf_store = read_current(spark, root, "tf_store", tf0.schema)
-    batch_tf = _tf_all_from_tokens(batch_tok)
-    vocab_row = (
-        tf_store.unionByName(batch_tf)
-        .agg(F.countDistinct("token").cast("long").alias("vocab_size"))
-    )
-    # the serving read: the store side prunes at the parquet scan
-    tf = tf_store.filter(F.col("token").isin(*BM25_TERMS)).unionByName(
-        batch_tf.filter(F.col("token").isin(*BM25_TERMS))
-    )
+    # the serving read: the filter reaches each union side, so the
+    # store side prunes at the parquet scan
+    tf = tf_all.filter(F.col("token").isin(*BM25_TERMS))
     return (
         _bm25_from_stores(dl, tf)
         .crossJoin(F.broadcast(vocab_row))

@@ -16,7 +16,7 @@ extension layer (flagged extension, not parity).
 The perceptual-hash pair store is maintained (insert q252, delete q253,
 upsert q254, stream q255, vacuum q256) by one
 :func:`~.zset.pair_apply` with 16-bit chunks as keys and ``hamming`` as
-score.
+score, over the t0 stores of one build, :func:`_phash_t0`.
 """
 
 from __future__ import annotations
@@ -515,6 +515,17 @@ def _pairs_from_phash(ph: DataFrame) -> DataFrame:
     )
 
 
+def _phash_t0(with_payload: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The one t0 build of the phash stores: the signature store of
+    ``with_payload`` fingerprinted once (checkpointed — the chunk join
+    reads it on both sides) and its pair store (doc_a, doc_b,
+    hamming)."""
+    from ..checkpoints import local_checkpoint
+
+    ph = local_checkpoint(payload_phash(with_payload), eager=False)
+    return ph, _pairs_from_phash(ph)
+
+
 def phash_pairs(with_payload: DataFrame) -> DataFrame:
     """Near-duplicate payload pairs by perceptual hash (fingerprint +
     :func:`_pairs_from_phash` chunk join).
@@ -526,17 +537,13 @@ def phash_pairs(with_payload: DataFrame) -> DataFrame:
     return _pairs_from_phash(payload_phash(with_payload))
 
 
-def incremental_phash_pairs(
-    with_payload: DataFrame,
-    phash_store: DataFrame | None = None,
-    pair_store: DataFrame | None = None,
-) -> DataFrame:
+def incremental_phash_pairs(with_payload: DataFrame) -> DataFrame:
     """Incremental maintenance for the perceptual-hash near-dup store
     (q252 — the q227 insert shape on the LAST dedup surface without an
     incremental cell, VERDICT r9 next-round #6): the 20% arrival batch
     (salt "ilsh" — the same crawl event that refreshes the LSH,
-    component, and inverted-index stores) lands against a persisted
-    signature store (doc_id, c0..c3) and pair store.  ONLY the batch's
+    component, and inverted-index stores) lands against the t0
+    signature store (doc_id, c0..c3) and pair store (:func:`_phash_t0`).  ONLY the batch's
     payloads run the Arrow-batched fingerprint kernel; base signatures
     and the t0 pair set are read from the stores verbatim.  Fresh
     candidates are the batch signatures chunk-equi-joined against store
@@ -546,32 +553,39 @@ def incremental_phash_pairs(
 
     The DuckDB oracle IS that full recompute with per-pair provenance
     (fresh ⇔ either endpoint is a batch doc) — the driver hash-match
-    proves the maintained store every round.  Store roundtrip is pinned
-    in ``tests/test_incremental_lsh.py``.
+    proves the maintained store every round.  A read-back store takes
+    the same step (:func:`_phash_refresh`, q256).
 
     Scale: fingerprinting is O(|batch| payload bytes); the fresh join
     is batch-sided (|batch|·chunks rows against the store's bucket
     keys); the t0 pair set never recomputes.  Reference anchor:
     extension of q143 (``hw3/hw3.py:125-172`` for the refresh
     discipline; the reference has no multimodal store)."""
-    from ..checkpoints import local_checkpoint
     from .dedup import _incr_delta_flag
-    from .zset import pair_apply
 
     delta = _incr_delta_flag()
-    ph_base = (
-        phash_store
-        if phash_store is not None
-        else local_checkpoint(payload_phash(with_payload.filter(~delta)), eager=False)
+    return _phash_refresh(
+        *_phash_t0(with_payload.filter(~delta)), with_payload.filter(delta)
     )
-    ph_batch = local_checkpoint(payload_phash(with_payload.filter(delta)), eager=False)
-    carried = (
-        pair_store.select("doc_a", "doc_b", "hamming")
-        if pair_store is not None
-        else _pairs_from_phash(ph_base)
-    )
+
+
+def _phash_refresh(
+    ph_store: DataFrame, pair_store: DataFrame, batch: DataFrame
+) -> DataFrame:
+    """The insert step of the phash stores (q252, q256): fingerprint
+    ONLY the arriving ``batch`` payloads and :func:`~.zset.pair_apply`
+    them against the signature and pair stores."""
+    from ..checkpoints import local_checkpoint
+    from .zset import pair_apply
+
+    ph_batch = local_checkpoint(payload_phash(batch), eager=False)
     return pair_apply(
-        ph_base.unionByName(ph_batch), carried, None, ph_batch, _phash_keys, _hamming
+        ph_store.unionByName(ph_batch),
+        pair_store.select("doc_a", "doc_b", "hamming"),
+        None,
+        ph_batch,
+        _phash_keys,
+        _hamming,
     )
 
 
@@ -676,11 +690,7 @@ def phash_pairs_sql(
     """
 
 
-def delete_aware_phash_pairs(
-    with_payload: DataFrame,
-    pair_store: DataFrame | None = None,
-    deleted_ids: DataFrame | None = None,
-) -> DataFrame:
+def delete_aware_phash_pairs(with_payload: DataFrame) -> DataFrame:
     """Deletion-side maintenance for the phash near-dup store (q253 —
     the q229 tombstone shape on the multimodal surface): the 10%
     deletion slice (salt "idel" — the same takedown event that prunes
@@ -694,9 +704,8 @@ def delete_aware_phash_pairs(
 
     The DuckDB oracle is the FULL phash recompute over the remaining
     corpus, so the driver hash-match proves filter == recompute every
-    round.  ``pair_store`` injects the persisted t0 pairs (roundtrip
-    test); ``deleted_ids`` injects a crafted tombstone set (unit test);
-    defaults derive in-plan from the hash slice.
+    round.  The step is :func:`~.zset.pair_apply` over the
+    :func:`_phash_t0` pair store with the deletion slice gone.
 
     Scale: O(|store|) anti-join on scalar ids — no fingerprint kernel,
     no chunk join.  Reference anchor: extension of q143
@@ -704,16 +713,9 @@ def delete_aware_phash_pairs(
     from .dedup import _incr_deleted_flag
     from .zset import pair_apply
 
-    if pair_store is None:
-        pair_store = _pairs_from_phash(payload_phash(with_payload))
-    gone = _incr_deleted_flag if deleted_ids is None else deleted_ids
+    _ph, pairs = _phash_t0(with_payload)
     return pair_apply(
-        None,
-        pair_store.select("doc_a", "doc_b", "hamming"),
-        gone,
-        None,
-        _phash_keys,
-        _hamming,
+        None, pairs, _incr_deleted_flag, None, _phash_keys, _hamming
     ).drop("src")
 
 
@@ -734,11 +736,7 @@ def delete_aware_phash_pairs_sql(table: str = "documents", max_len: int = 4096) 
     return phash_pairs_sql(remaining, max_len)
 
 
-def upsert_aware_phash_pairs(
-    docs: DataFrame,
-    phash_store: DataFrame | None = None,
-    pair_store: DataFrame | None = None,
-) -> DataFrame:
+def upsert_aware_phash_pairs(docs: DataFrame) -> DataFrame:
     """UPSERT-side maintenance for the phash near-dup store (q254 —
     the q231 crawl-refresh shape on the multimodal surface): the 10%
     revision slice (salt "iupd", the suffix sentence of q231 — payload
@@ -759,36 +757,36 @@ def upsert_aware_phash_pairs(
     carried ∪ fresh provably equals the full q143 recompute over the
     t1 corpus, and the DuckDB oracle IS that recompute with the same
     carried/refreshed provenance — the driver hash-match is the proof.
-    ``phash_store`` / ``pair_store`` inject the persisted t0 state
-    (roundtrip test); defaults derive in-plan.
 
-    Scale: re-fingerprinting is O(|changed| payload bytes); the stale
+    Scale: every payload is fingerprinted once — the t0 stores
+    (:func:`_phash_t0`) fingerprint the t0 corpus, the t1 signature
+    table reuses them and re-fingerprints only the changed slice
+    (O(|changed| payload bytes)); the stale
     drop is two hash-slice anti-filters; the fresh join is
     |changed|-sided against 16-bit bucket keys.  Reference anchor:
     extension of q143 (``hw3/hw3.py:125-172`` refresh discipline)."""
+    return _phash_revise(*_phash_t0(with_binary_payload(docs)), docs)
+
+
+def _phash_revise(
+    ph_store: DataFrame, pair_store: DataFrame, docs: DataFrame
+) -> DataFrame:
+    """The upsert step of the phash stores (q254): the t1 signature
+    table is ``ph_store`` minus the revised slice plus the slice's
+    re-fingerprinted t1 payloads, and :func:`~.zset.pair_apply` drops
+    every stored pair touching a revised doc and joins the revised
+    signatures against the t1 table."""
     from ..checkpoints import local_checkpoint
     from .dedup import _incr_updated_flag, _revised
     from .zset import pair_apply
 
     changed = _incr_updated_flag()
-    if pair_store is None:
-        pair_store = _pairs_from_phash(
-            payload_phash(with_binary_payload(docs))
-        )
-    ph_unchanged = (
-        phash_store.filter(~changed)
-        if phash_store is not None
-        else payload_phash(with_binary_payload(docs.filter(~changed)))
-    )
     ph_changed = local_checkpoint(
-        payload_phash(with_binary_payload(_revised(docs).filter(changed))),
+        payload_phash(with_binary_payload(_revised(docs.filter(changed)))),
         eager=False,
     )
-    ph_t1 = local_checkpoint(
-        ph_unchanged.unionByName(ph_changed), eager=False
-    )
     return pair_apply(
-        ph_t1,
+        ph_store.filter(~changed).unionByName(ph_changed),
         pair_store.select("doc_a", "doc_b", "hamming"),
         _incr_updated_flag,
         ph_changed,
@@ -837,8 +835,9 @@ def vacuumed_phash_refresh(
     cycle (the q229 tombstone slice), VACUUM both stores
     (:func:`~bigdatamining_graduate_spark.operators.dedup.vacuum_parquet_store`:
     tombstoned rows anti-joined out, files compacted, committed),
-    then run the NEXT insert refresh (q252's incremental path) reading
-    the VACUUMED stores back from parquet.
+    then run the NEXT insert refresh (q252's step,
+    :func:`_phash_refresh`) reading the VACUUMED stores back from
+    parquet.
 
     Store algebra making the identity exact: the t0 corpus is the
     non-delta slice (q252's convention); chunk collisions and hamming
@@ -854,7 +853,6 @@ def vacuumed_phash_refresh(
     compaction cadence; the refresh stays O(|batch| payload bytes);
     the corpus never re-fingerprints.  Reference anchor: extension of
     q143."""
-    from ..checkpoints import local_checkpoint
     from ..sources.publish import publish_version, read_current
     from ..staging import staging_dir
     from .dedup import (
@@ -864,12 +862,8 @@ def vacuumed_phash_refresh(
     )
 
     root = stage_dir or staging_dir(prefix="bdm_phash_vacuum_")
-    remaining = docs.filter(~_incr_deleted_flag())
-    t0 = docs.filter(~_incr_delta_flag())
-    ph_t0 = local_checkpoint(
-        payload_phash(with_binary_payload(t0)), eager=False
-    )
-    pairs_t0 = _pairs_from_phash(ph_t0)
+    delta = _incr_delta_flag()
+    ph_t0, pairs_t0 = _phash_t0(with_binary_payload(docs.filter(~delta)))
     # simulate refresh-loop accretion: many small files per store
     publish_version(
         root,
@@ -883,10 +877,10 @@ def vacuumed_phash_refresh(
         {"phash_store": ("doc_id",), "pair_store": ("doc_a", "doc_b")},
         tombstones,
     )
-    return incremental_phash_pairs(
-        with_binary_payload(remaining),
-        phash_store=read_current(spark, root, "phash_store", ph_t0.schema),
-        pair_store=read_current(spark, root, "pair_store", pairs_t0.schema),
+    return _phash_refresh(
+        read_current(spark, root, "phash_store", ph_t0.schema),
+        read_current(spark, root, "pair_store", pairs_t0.schema),
+        with_binary_payload(docs.filter(~_incr_deleted_flag() & delta)),
     )
 
 

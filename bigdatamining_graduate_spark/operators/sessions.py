@@ -34,7 +34,9 @@ and the brand-new user (no seed at all).
 Scale: one shuffle on user_id serves the history sessionization (at
 100 TB the session store is persisted — here it is derived in-plan as
 the driver-contract stand-in); the merge pass shuffles only seed +
-batch rows.  Reference parity: extension; the reference has no
+batch rows.  Each cell is one step over its t0 session view:
+:func:`merge_sessions_step` (insert, q282/q284) and
+:func:`delete_sessions_step` (q283).  Reference parity: extension; the reference has no
 sessionization (``hw2``'s time rollups are fixed calendar buckets).
 
 OPTIMIZER HAZARD (why the in-plan store uses the derived island pass,
@@ -197,15 +199,12 @@ def merge_sessions_step(s0: DataFrame, batch_rows: DataFrame) -> DataFrame:
     return carried.select(*cols).unionByName(merged.select(*cols))
 
 
-def merge_incremental_sessions(
-    ev: DataFrame, session_store: DataFrame | None = None
-) -> DataFrame:
+def merge_incremental_sessions(ev: DataFrame) -> DataFrame:
     """q282: merge the post-frontier batch into the stored session view
-    from each affected user's final session only.  ``session_store``
-    injects the persisted pre-frontier view (roundtrip test); default
-    derives it in-plan (via the compose-safe island pass — NOT the
-    native ``session_window``; see the optimizer hazard in the module
-    docstring)."""
+    from each affected user's final session only
+    (:func:`merge_sessions_step`).  The t0 view derives in-plan via the
+    compose-safe island pass — NOT the native ``session_window``; see
+    the optimizer hazard in the module docstring."""
     from ..checkpoints import local_checkpoint
 
     tus = F.unix_micros("ts")
@@ -227,12 +226,7 @@ def merge_incremental_sessions(
     # the in-plan stand-in once instead of re-sessionizing per consumer
     # (the q258 recomputed-subtree discipline, pinned by the scan
     # ratchet)
-    s0 = local_checkpoint(
-        session_store
-        if session_store is not None
-        else _sessions_from_rows(hist),
-        eager=False,
-    )
+    s0 = local_checkpoint(_sessions_from_rows(hist), eager=False)
     return merge_sessions_step(
         s0, batch.select("user_id", "tus", "event_id")
     )
@@ -283,18 +277,14 @@ def merge_incremental_sessions_sql(table: str = "events") -> str:
 
 # -- delete shape (q283) ------------------------------------------------------
 
-from ..functions.hashing import portable_hash64, portable_hash64_sql  # noqa: E402
+from ..functions.hashing import hash_bucket, portable_hash64_sql  # noqa: E402
 
 SESS_BUCKETS = 10
 SESS_DEL_BUCKET = 0  # salt "sdel": bucket 0 of events retracted (10%)
 
 
 def deleted_flag(col: str = "event_id"):
-    return (
-        portable_hash64(F.col(col).cast("string"), salt="sdel")
-        % SESS_BUCKETS
-        == SESS_DEL_BUCKET
-    )
+    return hash_bucket(col, "sdel", SESS_BUCKETS) == SESS_DEL_BUCKET
 
 
 def deleted_sql(col: str = "event_id") -> str:
@@ -302,9 +292,7 @@ def deleted_sql(col: str = "event_id") -> str:
     return f"(({h} % {SESS_BUCKETS}) = {SESS_DEL_BUCKET})"
 
 
-def delete_aware_sessions(
-    ev: DataFrame, session_store: DataFrame | None = None
-) -> DataFrame:
+def delete_aware_sessions(ev: DataFrame) -> DataFrame:
     """q283 — the DELETE shape on the session store, and the reason
     sessions need their own deletion rule: retracting an event can
     SPLIT a session in two (the deleted event was the only bridge
@@ -313,7 +301,8 @@ def delete_aware_sessions(
     per-user independence (the q268 erasure property): sessions never
     cross users, so the maintenance re-islands ONLY the affected users'
     surviving events (|affected-users' events|-sized) while every other
-    user's sessions carry verbatim from the store.
+    user's sessions carry verbatim from the store
+    (:func:`delete_sessions_step`).
 
     The DuckDB oracle re-sessionizes the surviving corpus with
     ``rederived``/``carried`` provenance, so the driver hash-match
@@ -322,34 +311,41 @@ def delete_aware_sessions(
     bridge-split discipline applied to time instead of graphs).
 
     Scale: O(|store| anti-join + |affected users' events|) per deletion
-    cycle; unaffected users never re-sessionize.  ``session_store``
-    injects the persisted t0 view (roundtrip test).
+    cycle; unaffected users never re-sessionize.
 
     One projected pass over the corpus (round 12, guide §1.2/§2.3)
     carries the deletion flag as a column and serves the affected-user
-    derivation, the in-plan store stand-in, and the surviving-rows
+    derivation, the in-plan t0 view, and the surviving-rows
     re-derivation (6 scans → 1)."""
     from ..checkpoints import local_checkpoint
 
-    tus = F.unix_micros("ts")
-    rows = local_checkpoint(
-        ev.select(
-            "user_id",
-            tus.alias("tus"),
-            "event_id",
-            deleted_flag().alias("__d"),
-        ),
-        eager=False,
+    rows = local_checkpoint(_event_rows(ev), eager=False)
+    s0 = local_checkpoint(_sessions_from_rows(rows), eager=False)
+    return delete_sessions_step(s0, rows)
+
+
+def _event_rows(ev: DataFrame) -> DataFrame:
+    """(user_id, tus, event_id, __d): the events projected for the
+    island pass, with the q283 deletion flag as column ``__d``."""
+    return ev.select(
+        "user_id",
+        F.unix_micros("ts").alias("tus"),
+        "event_id",
+        deleted_flag().alias("__d"),
     )
+
+
+def delete_sessions_step(s0: DataFrame, rows: DataFrame) -> DataFrame:
+    """ONE delete step: ``s0`` is the stored session view, ``rows`` the
+    t0 events (:func:`_event_rows`) with the retracted ones flagged
+    ``__d``.  Every user with a retracted event re-islands its
+    surviving events (``rederived``); every other user's sessions carry
+    from ``s0``."""
+    from ..checkpoints import local_checkpoint
+
     # consumed twice (carried anti-join + surviving semi-join)
     affected = local_checkpoint(
         rows.filter(F.col("__d")).select("user_id").distinct(),
-        eager=False,
-    )
-    s0 = local_checkpoint(
-        session_store
-        if session_store is not None
-        else _sessions_from_rows(rows),
         eager=False,
     )
     carried = s0.join(affected, "user_id", "left_anti").withColumn(

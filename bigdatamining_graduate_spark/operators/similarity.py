@@ -595,13 +595,9 @@ _IVF_DELTA_SALT = "iivfd"
 def _ivf_delta_flag(id_col: str = "vec_id"):
     """True for vectors in the INCOMING batch (deterministic 20% hash
     slice — the q227 arrival convention on the embeddings table)."""
-    from ..functions.hashing import portable_hash64
+    from ..functions.hashing import hash_bucket
 
-    return (
-        portable_hash64(F.col(id_col).cast("string"), salt=_IVF_DELTA_SALT)
-        % IVF_P_BUCKETS
-        >= IVF_P_HIST
-    )
+    return hash_bucket(id_col, _IVF_DELTA_SALT, IVF_P_BUCKETS) >= IVF_P_HIST
 
 
 def _ivf_delta_sql(col: str = "vec_id") -> str:
@@ -738,18 +734,56 @@ def ivf_assign(emb: DataFrame, stats: DataFrame, seeds: DataFrame) -> DataFrame:
     )
 
 
-def incremental_ivf_assign(
-    embeddings: DataFrame,
-    stats_store: DataFrame | None = None,
-    seed_store: DataFrame | None = None,
-    base_assign: DataFrame | None = None,
+def _ivf_t0(base: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The one t0 build of the IVF index over ``base``: (stats, seeds,
+    postings (vec_id, cell, d2)) with the quantizer frozen on ``base``.
+    The quantizer frames are tiny (1 row / n_cells rows) but feed every
+    assignment subtree — checkpointed, so the corpus is scanned once
+    per side, not once per reference (the q63 recomputed-subtree
+    trap)."""
+    from ..checkpoints import local_checkpoint
+
+    stats = local_checkpoint(ivf_quant_stats(base), eager=False)
+    seeds = local_checkpoint(ivf_seeds(base, stats), eager=False)
+    return stats, seeds, ivf_assign(base, stats, seeds)
+
+
+def ivf_apply(
+    stats: DataFrame,
+    seeds: DataFrame,
+    assign: DataFrame,
+    gone,
+    added,
+    fresh: str = "fresh",
 ) -> DataFrame:
+    """The one maintenance step of the IVF postings: the stored
+    ``assign`` minus the ``gone`` vectors (a ``vec_id`` predicate, or
+    None), plus the ``added`` vectors (or None) assigned under the
+    stored quantizer ``stats``/``seeds`` with src ``fresh``.  A store
+    row keeps its ``src``; a store without one reads as ``carried``.
+    Assignment is per-row under a frozen quantizer, so this map-shaped
+    delta equals assigning the whole t1 corpus.  Output: (vec_id, cell,
+    d2, src)."""
+    if "src" not in assign.columns:
+        assign = assign.withColumn("src", F.lit("carried"))
+    kept = assign.select("vec_id", "cell", "d2", "src")
+    if gone is not None:
+        kept = kept.filter(~gone)
+    if added is None:
+        return kept
+    return kept.unionByName(
+        ivf_assign(added, stats, seeds).withColumn("src", F.lit(fresh))
+    )
+
+
+def incremental_ivf_assign(embeddings: DataFrame) -> DataFrame:
     """Incremental IVF index maintenance — the q227 discipline reaching
     the vector store (VERDICT r8 missing #1): an incoming batch (20%
     hash slice) arrives against an EXISTING index.  The quantizer
-    (frozen stats + seed centroids) is READ from the persisted store,
-    never refit; base assignments are CARRIED verbatim; only the batch
-    is quantized and assigned — O(|batch|·k) with the centroids as a
+    (frozen stats + seed centroids) is READ from the t0 index
+    (:func:`_ivf_t0`), never refit; base assignments are CARRIED
+    verbatim; only the batch is quantized and assigned
+    (:func:`ivf_apply`) — O(|batch|·k) with the centroids as a
     broadcast, zero full-corpus work.
 
     carried ∪ fresh provably equals assigning the WHOLE corpus under
@@ -760,39 +794,10 @@ def incremental_ivf_assign(
     :func:`ivf_retrain_trigger` (q234) flags drift, and the recall
     gate in ``tests/test_incremental_ivf.py`` proves maintained-index
     recall ≥ refit-index recall − ε against brute-force ground truth.
-
-    ``stats_store`` / ``seed_store`` / ``base_assign`` inject the
-    persisted index (roundtrip test); defaults derive in-plan from the
-    base slice.  Output: (vec_id, cell, d2, src)."""
-    from ..checkpoints import local_checkpoint
-
+    Output: (vec_id, cell, d2, src)."""
     delta = _ivf_delta_flag()
-    base = embeddings.filter(~delta)
-    # the quantizer frames are tiny (1 row / n_cells rows) but feed BOTH
-    # the carried and fresh assignment subtrees — checkpoint them so the
-    # corpus is scanned once per side, not once per reference (the q63
-    # recomputed-subtree trap; the persisted-store path reads parquet
-    # and needs no checkpoint)
-    stats = (
-        stats_store
-        if stats_store is not None
-        else local_checkpoint(ivf_quant_stats(base), eager=False)
-    )
-    seeds = (
-        seed_store
-        if seed_store is not None
-        else local_checkpoint(ivf_seeds(base, stats), eager=False)
-    )
-    carried = (
-        base_assign
-        if base_assign is not None
-        else ivf_assign(base, stats, seeds)
-    ).select("vec_id", "cell", "d2")
-    fresh = ivf_assign(embeddings.filter(delta), stats, seeds).select(
-        "vec_id", "cell", "d2"
-    )
-    return carried.withColumn("src", F.lit("carried")).unionByName(
-        fresh.withColumn("src", F.lit("fresh"))
+    return ivf_apply(
+        *_ivf_t0(embeddings.filter(~delta)), None, embeddings.filter(delta)
     )
 
 
@@ -877,9 +882,15 @@ IVF_DRIFT_DEN = 4
 IVF_LOAD_FACTOR = 2
 
 
-def ivf_retrain_trigger(embeddings: DataFrame, assign: DataFrame | None = None) -> DataFrame:
+def ivf_retrain_trigger(embeddings: DataFrame) -> DataFrame:
     """The PERIODIC-RETRAIN signal for the maintained IVF index (q234):
-    per-cell drift audit over the maintained assignment.  Two exact
+    :func:`_retrain_audit` over q233's maintained assignment."""
+    return _retrain_audit(incremental_ivf_assign(embeddings))
+
+
+def _retrain_audit(a: DataFrame) -> DataFrame:
+    """Per-cell drift audit over a maintained assignment ``a`` (vec_id,
+    cell, d2, src).  Two exact
     integer conditions (no float division — the q200 decimal
     discipline, promoted to decimal(38,0) before every multiply):
 
@@ -896,7 +907,6 @@ def ivf_retrain_trigger(embeddings: DataFrame, assign: DataFrame | None = None) 
     Scale: input is the assignment table (one row per vector); the
     audit is ONE groupBy(cell) with map-side combine to ≤ n_cells rows.
     """
-    a = assign if assign is not None else incremental_ivf_assign(embeddings)
     dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     per_cell = a.groupBy("cell").agg(
         F.sum(F.when(F.col("src") == "carried", 1).otherwise(0))
@@ -985,20 +995,13 @@ def portable_ivf_search(
     exact float cosine on the original vectors (standard IVF: quantize
     to generate candidates, never to score).  Float output → gate-
     checked (recall vs brute force), not oracled."""
-    from ..checkpoints import local_checkpoint
-
     if refit:
-        stats = local_checkpoint(ivf_quant_stats(embeddings), eager=False)
-        seeds = local_checkpoint(ivf_seeds(embeddings, stats), eager=False)
-        assigned = ivf_assign(embeddings, stats, seeds).withColumn(
-            "src", F.lit("rebuilt")
-        )
+        stats, seeds, assign = _ivf_t0(embeddings)
+        assigned = assign.withColumn("src", F.lit("rebuilt"))
     else:
         delta = _ivf_delta_flag()
-        base = embeddings.filter(~delta)
-        stats = local_checkpoint(ivf_quant_stats(base), eager=False)
-        seeds = local_checkpoint(ivf_seeds(base, stats), eager=False)
-        assigned = incremental_ivf_assign(embeddings, stats, seeds)
+        stats, seeds, assign = _ivf_t0(embeddings.filter(~delta))
+        assigned = ivf_apply(stats, seeds, assign, None, embeddings.filter(delta))
     return ivf_search_index(
         embeddings, stats, seeds, assigned, query_pred, k=k, nprobe=nprobe
     )
@@ -1136,13 +1139,9 @@ _IVF_UPD_SALT = "iivfu"
 def _ivf_deleted_flag(id_col: str = "vec_id"):
     """True for vectors DELETED from the corpus (deterministic 10% hash
     slice, own salt — independent of the q233 batch split)."""
-    from ..functions.hashing import portable_hash64
+    from ..functions.hashing import hash_bucket
 
-    return (
-        portable_hash64(F.col(id_col).cast("string"), salt=_IVF_DEL_SALT)
-        % IVF_DEL_BUCKETS
-        == 0
-    )
+    return hash_bucket(id_col, _IVF_DEL_SALT, IVF_DEL_BUCKETS) == 0
 
 
 def _ivf_deleted_sql(col: str = "vec_id") -> str:
@@ -1157,13 +1156,9 @@ def _ivf_deleted_sql(col: str = "vec_id") -> str:
 def _ivf_updated_flag(id_col: str = "vec_id"):
     """True for vectors whose EMBEDDING changed between snapshots (a
     re-embedding run over a 10% slice — deterministic hash, own salt)."""
-    from ..functions.hashing import portable_hash64
+    from ..functions.hashing import hash_bucket
 
-    return (
-        portable_hash64(F.col(id_col).cast("string"), salt=_IVF_UPD_SALT)
-        % IVF_UPD_BUCKETS
-        == 0
-    )
+    return hash_bucket(id_col, _IVF_UPD_SALT, IVF_UPD_BUCKETS) == 0
 
 
 def _ivf_updated_sql(col: str = "vec_id") -> str:
@@ -1175,10 +1170,7 @@ def _ivf_updated_sql(col: str = "vec_id") -> str:
     )
 
 
-def delete_aware_ivf_assign(
-    embeddings: DataFrame,
-    assign_store: DataFrame | None = None,
-) -> DataFrame:
+def delete_aware_ivf_assign(embeddings: DataFrame) -> DataFrame:
     """Deletion-side IVF index maintenance — the tombstone / takedown
     shape (q229's discipline on the vector store): a deterministic 10%
     slice of vectors is erased from the corpus.  Because assignment is
@@ -1193,21 +1185,24 @@ def delete_aware_ivf_assign(
 
     The DuckDB oracle is the full frozen assignment of the REMAINING
     corpus, so the driver hash-match proves tombstone-filter == full
-    recompute every round.  ``assign_store`` injects the persisted
-    postings table (roundtrip test); default derives it in-plan via
-    :func:`incremental_ivf_assign`.  Output: (vec_id, cell, d2, src,
-    cell_n).
+    recompute every round.  The store is q233's maintained index; the
+    step is :func:`ivf_apply` with the tombstone slice gone.  Output:
+    (vec_id, cell, d2, src, cell_n).
 
     Scale: one anti-filter over the postings table; zero vector math,
     zero shuffles beyond the cell_n window (n_cells-bounded per
     partition)."""
-    maintained = (
-        assign_store
-        if assign_store is not None
-        else incremental_ivf_assign(embeddings)
-    ).select("vec_id", "cell", "d2", "src")
-    survivors = maintained.filter(~_ivf_deleted_flag())
-    return survivors.select(
+    return _with_cell_n(
+        ivf_apply(
+            None, None, incremental_ivf_assign(embeddings), _ivf_deleted_flag(), None
+        )
+    )
+
+
+def _with_cell_n(assign: DataFrame) -> DataFrame:
+    """``assign`` with each cell's occupancy ``cell_n`` — the
+    postings-list size the search planner reads (q236)."""
+    return assign.select(
         "vec_id",
         "cell",
         "d2",
@@ -1244,12 +1239,7 @@ def ivf_t1_embeddings(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def upsert_aware_ivf_assign(
-    embeddings: DataFrame,
-    stats_store: DataFrame | None = None,
-    seed_store: DataFrame | None = None,
-    assign_store: DataFrame | None = None,
-) -> DataFrame:
+def upsert_aware_ivf_assign(embeddings: DataFrame) -> DataFrame:
     """Upsert-side IVF index maintenance — the RE-EMBEDDING refresh
     shape (q231's discipline on the vector store): an embedding-model
     update re-encodes a deterministic 10% slice of vectors between
@@ -1272,35 +1262,16 @@ def upsert_aware_ivf_assign(
     arrivals get); whether accumulated re-embedding drift warrants a
     refit is q234's measured trigger, not an assumption.
 
-    ``stats_store`` / ``seed_store`` / ``assign_store`` inject the
-    persisted index (roundtrip test); defaults derive in-plan from the
-    t0 corpus.  Output: (vec_id, cell, d2, src ∈ {carried, refreshed}).
+    The t0 index is :func:`_ivf_t0` over the t0 corpus; the step is
+    :func:`ivf_apply` with the changed slice both gone and added.
+    Output: (vec_id, cell, d2, src ∈ {carried, refreshed}).
     """
-    from ..checkpoints import local_checkpoint
-
-    stats = (
-        stats_store
-        if stats_store is not None
-        else local_checkpoint(ivf_quant_stats(embeddings), eager=False)
-    )
-    seeds = (
-        seed_store
-        if seed_store is not None
-        else local_checkpoint(ivf_seeds(embeddings, stats), eager=False)
-    )
-    carried = (
-        assign_store
-        if assign_store is not None
-        else ivf_assign(embeddings, stats, seeds)
-    ).select("vec_id", "cell", "d2")
-    changed_t1 = ivf_t1_embeddings(embeddings).filter(_ivf_updated_flag())
-    refreshed = ivf_assign(changed_t1, stats, seeds).select(
-        "vec_id", "cell", "d2"
-    )
-    return (
-        carried.filter(~_ivf_updated_flag())
-        .withColumn("src", F.lit("carried"))
-        .unionByName(refreshed.withColumn("src", F.lit("refreshed")))
+    changed = _ivf_updated_flag()
+    return ivf_apply(
+        *_ivf_t0(embeddings),
+        changed,
+        ivf_t1_embeddings(embeddings).filter(changed),
+        fresh="refreshed",
     )
 
 
@@ -1385,8 +1356,8 @@ def vacuumed_ivf_refresh(
     cycle (the 10% tombstone slice), the postings store is VACUUMED
     (tombstoned rows physically dropped, files rewritten compacted and
     committed by :func:`..operators.dedup.vacuum_parquet_store`), and
-    the NEXT insert refresh (q233's incremental path)
-    runs reading the vacuumed index back from parquet.
+    the NEXT insert refresh (q233's step, :func:`ivf_apply`) runs
+    reading the vacuumed index back from parquet.
 
     The DuckDB oracle is the full frozen assignment over the remaining
     corpus, so the driver hash-match proves vacuumed-index refresh ==
@@ -1399,17 +1370,14 @@ def vacuumed_ivf_refresh(
 
     Scale: vacuum is one postings scan + anti-join + one write on the
     compaction cadence; the refresh itself stays O(|batch|·k)."""
-    from ..checkpoints import local_checkpoint
     from ..sources.publish import publish_version, read_current
     from ..staging import staging_dir
     from .dedup import vacuum_parquet_store
 
     root = stage_dir or staging_dir(prefix="bdm_ivf_vacuum_")
-    base = embeddings.filter(~_ivf_delta_flag())
-    stats = local_checkpoint(ivf_quant_stats(base), eager=False)
-    seeds = local_checkpoint(ivf_seeds(base, stats), eager=False)
+    delta = _ivf_delta_flag()
+    stats, seeds, assign = _ivf_t0(embeddings.filter(~delta))
     # simulate refresh-loop accretion: the postings table as 8 small files
-    assign = ivf_assign(base, stats, seeds)
     publish_version(
         root,
         1,
@@ -1421,12 +1389,12 @@ def vacuumed_ivf_refresh(
     )
     tombstones = embeddings.filter(_ivf_deleted_flag()).select("vec_id")
     vacuum_parquet_store(spark, root, {"assign_store": ("vec_id",)}, tombstones)
-    remaining = embeddings.filter(~_ivf_deleted_flag())
-    return incremental_ivf_assign(
-        remaining,
-        stats_store=read_current(spark, root, "stats_store", stats.schema),
-        seed_store=read_current(spark, root, "seed_store", seeds.schema),
-        base_assign=read_current(spark, root, "assign_store", assign.schema),
+    return ivf_apply(
+        read_current(spark, root, "stats_store", stats.schema),
+        read_current(spark, root, "seed_store", seeds.schema),
+        read_current(spark, root, "assign_store", assign.schema),
+        None,
+        embeddings.filter(~_ivf_deleted_flag() & delta),
     )
 
 
@@ -1467,12 +1435,9 @@ IVF_DRIFT_SHIFT = 2.0
 def _ivf_wave2_flag(id_col: str = "vec_id"):
     """True for the SECOND arrival wave (the half of the q233 delta
     slice that lands after the retrain swap)."""
-    from ..functions.hashing import portable_hash64
+    from ..functions.hashing import hash_bucket
 
-    return (
-        portable_hash64(F.col(id_col).cast("string"), salt=_IVF_WAVE_SALT) % 2
-        == 1
-    ) & _ivf_delta_flag(id_col)
+    return (hash_bucket(id_col, _IVF_WAVE_SALT, 2) == 1) & _ivf_delta_flag(id_col)
 
 
 def _ivf_wave2_sql(col: str = "vec_id") -> str:
@@ -1554,49 +1519,35 @@ def retrained_ivf_refresh(
     wave1 = cur.filter(delta & ~wave2)
     wave2_df = cur.filter(wave2)
 
-    def assigned(df, stats, seeds, src):
-        return ivf_assign(df, stats, seeds).withColumn("src", F.lit(src))
-
     # 1.+2. v1: the t0 index (quantizer frozen on the base corpus) with
     # the wave-1 refresh under that frozen quantizer in its postings
-    stats = local_checkpoint(ivf_quant_stats(base), eager=False)
-    seeds = local_checkpoint(ivf_seeds(base, stats), eager=False)
-    carried = assigned(base, stats, seeds, "carried")
+    stats, seeds, carried = _ivf_t0(base)
+    v1 = ivf_apply(stats, seeds, carried, None, wave1)
     publish_version(
-        root,
-        1,
-        {
-            "stats_store": stats,
-            "seed_store": seeds,
-            "assign_store": carried.unionByName(assigned(wave1, stats, seeds, "fresh")),
-        },
+        root, 1, {"stats_store": stats, "seed_store": seeds, "assign_store": v1}
     )
 
     # 3. the trigger, read off the maintained store; ≤ n_cells rows collect
-    maintained = read_current(spark, root, "assign_store", carried.schema)
-    flags = ivf_retrain_trigger(cur, assign=maintained).collect()
+    maintained = read_current(spark, root, "assign_store", v1.schema)
+    flags = _retrain_audit(maintained).collect()
     fired = any(r["retrain"] == 1 for r in flags)
 
     if fired:
         # 4. refit over the current corpus: all three stores in v2
         corpus1 = local_checkpoint(base.unionByName(wave1), eager=False)
-        stats = local_checkpoint(ivf_quant_stats(corpus1), eager=False)
-        seeds = local_checkpoint(ivf_seeds(corpus1, stats), eager=False)
+        stats, seeds, refit = _ivf_t0(corpus1)
         v2 = {
             "stats_store": stats.coalesce(1),
             "seed_store": seeds.coalesce(1),
-            "assign_store": assigned(corpus1, stats, seeds, "refit").coalesce(1),
+            "assign_store": refit.withColumn("src", F.lit("refit")).coalesce(1),
         }
     else:
         # no refit: v2 rewrites the postings and keeps the v1 quantizer
         v2 = {"assign_store": maintained}
     # 5. wave-2 refresh under the quantizer v2 holds, committed with it
-    fresh2 = assigned(wave2_df, stats, seeds, "fresh")
-    v2["assign_store"] = v2["assign_store"].unionByName(fresh2)
+    v2["assign_store"] = ivf_apply(stats, seeds, v2["assign_store"], None, wave2_df)
     publish_version(root, 2, v2)
-    return read_current(spark, root, "assign_store", carried.schema).select(
-        "vec_id", "cell", "d2", "src"
-    )
+    return read_current(spark, root, "assign_store", v1.schema)
 
 
 def retrained_ivf_refresh_sql() -> str:

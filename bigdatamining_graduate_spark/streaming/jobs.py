@@ -1043,12 +1043,9 @@ STREAM_IVF_BATCHES = 3  # embeddings arrive as 3 hash-sliced micro-batches
 
 
 def _stream_ivf_batch_flag(id_col: str = "vec_id"):
-    from ..functions.hashing import portable_hash64
+    from ..functions.hashing import hash_bucket
 
-    return (
-        portable_hash64(F.col(id_col).cast("string"), salt="sivf")
-        % STREAM_IVF_BATCHES
-    )
+    return hash_bucket(id_col, "sivf", STREAM_IVF_BATCHES)
 
 
 def _stream_ivf_batch_sql(col: str) -> str:
@@ -1155,19 +1152,18 @@ def stream_incremental_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delta stores is the same shape.  Reference anchor:
     ``FinalProject/BDM_Final.py`` TF-IDF (extension — the reference
     has zero streaming and no persisted index)."""
-    from ..checkpoints import local_checkpoint
     from ..operators import lexical as LX
     from ..staging import staging_dir
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
     def handle(t: Trigger) -> dict[str, Output]:
-        # consumed by BOTH index writes — one tokenization per trigger
-        tok = local_checkpoint(LX._doc_tokens(t.batch), eager=False)
+        # one tokenization per trigger feeds BOTH index writes
+        dl, tf = LX._postings(t.batch)
         off = count_off(_stream_lsh_batch_flag(), t.bid)
         return {
-            "dl": t.observe(LX._dl_from_tokens(tok), bad_dl_slice=off),
-            "tf": t.observe(LX._tf_from_tokens(tok), bad_tf_slice=off),
+            "dl": t.observe(dl, bad_dl_slice=off),
+            "tf": t.observe(tf, bad_tf_slice=off),
         }
 
     stream = run_staged_stream(

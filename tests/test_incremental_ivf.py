@@ -75,11 +75,12 @@ def test_index_store_roundtrip(spark, tmp_path):
     stats.write.parquet(str(tmp_path / "stats"))
     seeds.write.parquet(str(tmp_path / "seeds"))
     base_assign.write.parquet(str(tmp_path / "assign"))
-    roundtrip = S.incremental_ivf_assign(
-        emb,
-        stats_store=spark.read.parquet(str(tmp_path / "stats")),
-        seed_store=spark.read.parquet(str(tmp_path / "seeds")),
-        base_assign=spark.read.parquet(str(tmp_path / "assign")),
+    roundtrip = S.ivf_apply(
+        spark.read.parquet(str(tmp_path / "stats")),
+        spark.read.parquet(str(tmp_path / "seeds")),
+        spark.read.parquet(str(tmp_path / "assign")),
+        None,
+        emb.filter(S._ivf_delta_flag()),
     )
     assert _key(roundtrip) == _key(S.incremental_ivf_assign(emb))
 
@@ -117,13 +118,13 @@ def test_maintained_recall_within_eps_of_refit(spark):
 
 def test_retrain_trigger_fires_on_drifted_batch(spark):
     """q234 is all-zero on the i.i.d. fixture (expected); a genuinely
-    shifted batch must trip it.  Inject an assignment table whose fresh
+    shifted batch must trip it.  Audit a crafted assignment table whose fresh
     rows (a) land 2x farther from their centroids than the base mean
     (drift) and (b) pile onto one cell (overload)."""
     emb = _emb(spark)
     honest = S.incremental_ivf_assign(emb)
     assert (
-        S.ivf_retrain_trigger(emb, assign=honest)
+        S._retrain_audit(honest)
         .agg(F.sum("retrain"))
         .collect()[0][0]
         == 0
@@ -135,7 +136,7 @@ def test_retrain_trigger_fires_on_drifted_batch(spark):
         "cell",
         F.when(F.col("src") == "fresh", F.lit(0)).otherwise(F.col("cell")),
     )
-    flags = S.ivf_retrain_trigger(emb, assign=drifted)
+    flags = S._retrain_audit(drifted)
     row0 = flags.filter(F.col("cell") == 0).collect()[0]
     assert row0.overload == 1  # every fresh vector landed in cell 0
     assert row0.drift == 1  # and 3x the distance trips the 5/4 bar
@@ -183,8 +184,12 @@ def test_delete_aware_store_roundtrip(spark, tmp_path):
     assignment, read it back, tombstone-filter — byte-equal to in-plan."""
     emb = _emb(spark)
     S.incremental_ivf_assign(emb).write.parquet(str(tmp_path / "assign"))
-    roundtrip = S.delete_aware_ivf_assign(
-        emb, assign_store=spark.read.parquet(str(tmp_path / "assign"))
+    roundtrip = S.ivf_apply(
+        None,
+        None,
+        spark.read.parquet(str(tmp_path / "assign")),
+        S._ivf_deleted_flag(),
+        None,
     )
     assert _key(roundtrip) == _key(S.delete_aware_ivf_assign(emb))
 
@@ -229,11 +234,13 @@ def test_upsert_aware_store_roundtrip(spark, tmp_path):
     stats.write.parquet(str(tmp_path / "stats"))
     seeds.write.parquet(str(tmp_path / "seeds"))
     S.ivf_assign(emb, stats, seeds).write.parquet(str(tmp_path / "assign"))
-    roundtrip = S.upsert_aware_ivf_assign(
-        emb,
-        stats_store=spark.read.parquet(str(tmp_path / "stats")),
-        seed_store=spark.read.parquet(str(tmp_path / "seeds")),
-        assign_store=spark.read.parquet(str(tmp_path / "assign")),
+    roundtrip = S.ivf_apply(
+        spark.read.parquet(str(tmp_path / "stats")),
+        spark.read.parquet(str(tmp_path / "seeds")),
+        spark.read.parquet(str(tmp_path / "assign")),
+        S._ivf_updated_flag(),
+        S.ivf_t1_embeddings(emb).filter(S._ivf_updated_flag()),
+        fresh="refreshed",
     )
     assert _key(roundtrip) == _key(S.upsert_aware_ivf_assign(emb))
 
@@ -361,7 +368,7 @@ def test_retrain_trigger_fires_on_drifted_arrival(spark):
         )
     )
     fired = (
-        S.ivf_retrain_trigger(cur, assign=maintained)
+        S._retrain_audit(maintained)
         .agg(F.sum("retrain"))
         .collect()[0][0]
     )

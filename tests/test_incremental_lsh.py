@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bigdatamining_graduate_spark.operators import dedup as DD
+from bigdatamining_graduate_spark.operators.zset import pair_apply
 
 from .conftest import SF_SMOKE
 
@@ -66,11 +67,11 @@ def test_store_roundtrip_equals_full(spark, tmp_path):
         "doc_a", "doc_b"
     ).write.mode("overwrite").parquet(pair_store)
 
-    merged = DD.incremental_lsh_pairs(
-        docs,
+    merged = DD._lsh_refresh(
+        spark.read.parquet(sig_store),
+        spark.read.parquet(pair_store),
+        docs.filter(DD._incr_delta_flag()),
         THRESH,
-        base_sig=spark.read.parquet(sig_store),
-        carried_pairs=spark.read.parquet(pair_store),
     )
     full = DD.lsh_candidate_pairs(DD.minhash_signatures(docs), THRESH)
     assert _pairs_key(merged) == _pairs_key(full)
@@ -113,12 +114,12 @@ def test_delete_aware_store_roundtrip(spark, tmp_path):
     )
     pairs.write.mode("overwrite").parquet(pair_store)
 
-    inc = DD.delete_aware_components(
-        docs,
-        THRESH,
-        prev_labels=spark.read.parquet(lbl_store),
-        pair_store=spark.read.parquet(pair_store),
-    )
+    deleted = DD._incr_deleted_flag()
+    inc = DD.components_apply(
+        spark.read.parquet(lbl_store),
+        spark.read.parquet(pair_store),
+        gone=deleted,
+    ).filter(~deleted)
     remaining = docs.filter(~DD._incr_deleted_flag())
     full_pairs = DD.lsh_candidate_pairs(
         DD.minhash_signatures(remaining), THRESH
@@ -141,9 +142,6 @@ def test_delete_aware_bridge_split(spark):
     touch F."""
     from pyspark.sql import functions as F
 
-    docs = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 4, 5, 6)], "doc_id: long"
-    )
     prev = spark.createDataFrame(
         [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 6)],
         "doc_id: long, component: long",
@@ -151,13 +149,8 @@ def test_delete_aware_bridge_split(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (4, 5)], "doc_a: long, doc_b: long"
     )
-    out = DD.delete_aware_components(
-        docs,
-        THRESH,
-        prev_labels=prev,
-        pair_store=pairs,
-        deleted_flag=F.col("doc_id") == 2,
-    )
+    gone = F.col("doc_id") == 2
+    out = DD.components_apply(prev, pairs, gone=gone).filter(~gone)
     got = sorted((r.doc_id, r.component, r.csize) for r in out.collect())
     assert got == [
         (1, 1, 1),  # split off
@@ -184,8 +177,15 @@ def test_upsert_aware_store_roundtrip(spark, tmp_path):
     store = str(tmp_path / "t0_pairs")
     t0_pairs.write.mode("overwrite").parquet(store)
 
-    inc = DD.upsert_aware_lsh_pairs(
-        docs, THRESH, pair_store=spark.read.parquet(store)
+    sig1, revised = DD._revised_sig(DD.minhash_signatures(docs), docs)
+    inc = pair_apply(
+        sig1,
+        spark.read.parquet(store),
+        DD._incr_updated_flag,
+        revised,
+        DD._lsh_keys,
+        DD._sig_match(THRESH),
+        fresh="refreshed",
     )
     t1 = docs.withColumn(
         "text",
@@ -226,9 +226,6 @@ def test_upsert_components_split_and_merge(spark):
     fresh edge (2,4) appears.  Expected t1: {1}, {3}, {2,4,5}, {6}."""
     from pyspark.sql import functions as F
 
-    docs = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 4, 5, 6)], "doc_id: long"
-    )
     prev = spark.createDataFrame(
         [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 6)],
         "doc_id: long, component: long",
@@ -237,13 +234,8 @@ def test_upsert_components_split_and_merge(spark):
         [(1, 2), (2, 3), (4, 5)], "doc_a: long, doc_b: long"
     )
     fresh = spark.createDataFrame([(2, 4)], "doc_a: long, doc_b: long")
-    out = DD.upsert_aware_components(
-        docs,
-        THRESH,
-        prev_labels=prev,
-        pair_store=pairs,
-        fresh_pairs=fresh,
-        changed_flag=F.col("doc_id") == 2,
+    out = DD.components_apply(
+        prev, pairs, gone=F.col("doc_id") == 2, fresh=fresh
     )
     got = sorted((r.doc_id, r.component, r.csize) for r in out.collect())
     assert got == [
@@ -272,11 +264,15 @@ def test_upsert_components_store_roundtrip(spark, tmp_path):
     prev.write.mode("overwrite").parquet(lbl_store)
     pairs.write.mode("overwrite").parquet(pair_store)
 
-    inc = DD.upsert_aware_components(
-        docs,
-        THRESH,
-        prev_labels=spark.read.parquet(lbl_store),
-        pair_store=spark.read.parquet(pair_store),
+    sig1, revised = DD._revised_sig(DD.minhash_signatures(docs), docs)
+    fresh = pair_apply(
+        sig1, None, None, revised, DD._lsh_keys, DD._sig_match(THRESH)
+    ).select("doc_a", "doc_b")
+    inc = DD.components_apply(
+        spark.read.parquet(lbl_store),
+        spark.read.parquet(pair_store),
+        gone=DD._incr_updated_flag(),
+        fresh=fresh,
     )
     t1 = docs.withColumn(
         "text",
@@ -313,8 +309,14 @@ def test_incremental_components_label_store_roundtrip(spark, tmp_path):
         "doc_id", "component"
     ).write.mode("overwrite").parquet(store)
 
-    inc = DD.incremental_components(
-        docs, THRESH, base_labels=spark.read.parquet(store)
+    sig, _base_sig, batch_sig = DD._signed_slices(docs)
+    fresh = pair_apply(
+        sig, None, None, batch_sig, DD._lsh_keys, DD._sig_match(THRESH)
+    ).select("doc_a", "doc_b")
+    inc = DD.components_apply(
+        spark.read.parquet(store),
+        added=docs.filter(DD._incr_delta_flag()).select("doc_id"),
+        fresh=fresh,
     )
     full_pairs = DD.lsh_candidate_pairs(DD.minhash_signatures(docs), THRESH)
     full = DD.neardup_components(docs, full_pairs)
@@ -424,10 +426,10 @@ def test_incremental_phash_equals_full_and_store_roundtrip(spark, tmp_path):
     base = wp.filter(~delta)
     MM.payload_phash(base).write.parquet(str(tmp_path / "ph"))
     MM.phash_pairs(base).write.parquet(str(tmp_path / "pairs"))
-    roundtrip = MM.incremental_phash_pairs(
-        wp,
-        phash_store=spark.read.parquet(str(tmp_path / "ph")),
-        pair_store=spark.read.parquet(str(tmp_path / "pairs")),
+    roundtrip = MM._phash_refresh(
+        spark.read.parquet(str(tmp_path / "ph")),
+        spark.read.parquet(str(tmp_path / "pairs")),
+        wp.filter(delta),
     )
     assert sorted(
         (r.doc_a, r.doc_b, r.hamming, r.src) for r in roundtrip.collect()
@@ -472,8 +474,8 @@ def test_delete_aware_phash_filter_equals_recompute(spark, tmp_path):
     """q253: the two anti-filters on the persisted pair store equal the
     full recompute over the remaining corpus (chunk collisions and
     hamming are pairwise — deletions never add or rescore pairs), the
-    deletion genuinely drops pairs, and the injected-tombstone path
-    kills exactly the pairs touching the tombstoned doc."""
+    deletion genuinely drops pairs, and the step (``pair_apply``) over a
+    crafted tombstone set kills exactly the pairs touching that doc."""
     from bigdatamining_graduate_spark.operators import multimodal as MM
     from bigdatamining_graduate_spark.plans.queries import ORACLE, QUERIES
 
@@ -498,13 +500,16 @@ def test_delete_aware_phash_filter_equals_recompute(spark, tmp_path):
     exp = [p for p in t0 if p[0] not in deleted and p[1] not in deleted]
     assert got == exp
 
-    # injected tombstone: kill one known pair's endpoint, others intact
+    # crafted tombstone: kill one known pair's endpoint, others intact
     victim = t0[0][0]
     store = MM.phash_pairs(wp)
-    pruned = MM.delete_aware_phash_pairs(
-        wp,
-        pair_store=store,
-        deleted_ids=spark.createDataFrame([(victim,)], ["doc_id"]),
+    pruned = pair_apply(
+        None,
+        store,
+        spark.createDataFrame([(victim,)], ["doc_id"]),
+        None,
+        MM._phash_keys,
+        MM._hamming,
     )
     got2 = sorted((r.doc_a, r.doc_b, r.hamming) for r in pruned.collect())
     assert got2 == [p for p in t0 if victim not in (p[0], p[1])]
@@ -579,10 +584,10 @@ def test_upsert_aware_phash_equals_full_and_store_roundtrip(spark, tmp_path):
     wp0 = MM.with_binary_payload(docs)
     MM.payload_phash(wp0).write.parquet(str(tmp_path / "ph"))
     MM.phash_pairs(wp0).write.parquet(str(tmp_path / "pairs"))
-    roundtrip = MM.upsert_aware_phash_pairs(
+    roundtrip = MM._phash_revise(
+        spark.read.parquet(str(tmp_path / "ph")),
+        spark.read.parquet(str(tmp_path / "pairs")),
         docs,
-        phash_store=spark.read.parquet(str(tmp_path / "ph")),
-        pair_store=spark.read.parquet(str(tmp_path / "pairs")),
     )
     assert sorted(
         (r.doc_a, r.doc_b, r.hamming, r.src) for r in roundtrip.collect()

@@ -64,7 +64,6 @@ slice_st = st.sets(st.integers(1, N_NODES), max_size=4)
 @given(edges=edge_st, deleted=slice_st)
 def test_delete_aware_matches_union_find(spark, edges, deleted):
     nodes = list(range(1, N_NODES + 1))
-    docs = spark.createDataFrame([(n,) for n in nodes], "doc_id: long")
     prev = spark.createDataFrame(
         _union_find(nodes, edges), "doc_id: long, component: long, csize: long"
     ).select("doc_id", "component")
@@ -72,13 +71,8 @@ def test_delete_aware_matches_union_find(spark, edges, deleted):
         list(edges) or [(None, None)],
         "doc_a: long, doc_b: long",
     ).dropna()
-    out = DD.delete_aware_components(
-        docs,
-        0.5,
-        prev_labels=prev,
-        pair_store=pairs,
-        deleted_flag=F.col("doc_id").isin(list(deleted) or [-1]),
-    )
+    gone = F.col("doc_id").isin(list(deleted) or [-1])
+    out = DD.components_apply(prev, pairs, gone=gone).filter(~gone)
     remaining = [n for n in nodes if n not in deleted]
     kept_edges = [
         (a, b) for a, b in edges if a not in deleted and b not in deleted
@@ -101,7 +95,6 @@ def test_upsert_components_match_union_find(spark, edges, changed, fresh):
     docs re-band)."""
     nodes = list(range(1, N_NODES + 1))
     fresh = {e for e in fresh if e[0] in changed or e[1] in changed}
-    docs = spark.createDataFrame([(n,) for n in nodes], "doc_id: long")
     prev = spark.createDataFrame(
         _union_find(nodes, edges), "doc_id: long, component: long, csize: long"
     ).select("doc_id", "component")
@@ -111,13 +104,11 @@ def test_upsert_components_match_union_find(spark, edges, changed, fresh):
     fresh_df = spark.createDataFrame(
         list(fresh) or [(None, None)], "doc_a: long, doc_b: long"
     ).dropna()
-    out = DD.upsert_aware_components(
-        docs,
-        0.5,
-        prev_labels=prev,
-        pair_store=pairs,
-        fresh_pairs=fresh_df,
-        changed_flag=F.col("doc_id").isin(list(changed) or [-1]),
+    out = DD.components_apply(
+        prev,
+        pairs,
+        gone=F.col("doc_id").isin(list(changed) or [-1]),
+        fresh=fresh_df,
     )
     carried = [
         (a, b) for a, b in edges if a not in changed and b not in changed

@@ -64,10 +64,10 @@ def test_store_roundtrip(spark, tmp_path):
     G.triangle_counts(base_li).select("node", "tri_cnt").write.parquet(
         str(tmp_path / "tris")
     )
-    roundtrip = G.incremental_triangles(
-        li,
-        edge_store=spark.read.parquet(str(tmp_path / "edges")),
-        tri_store=spark.read.parquet(str(tmp_path / "tris")),
+    roundtrip = G._tri_insert(
+        spark.read.parquet(str(tmp_path / "edges")),
+        spark.read.parquet(str(tmp_path / "tris")),
+        G._copurchase_pairs(li.filter(G._tri_delta_flag())),
     )
     assert _key(roundtrip) == _key(G.incremental_triangles(li))
 
@@ -141,10 +141,10 @@ def test_delete_aware_store_roundtrip_weighted(spark, tmp_path):
     G.triangle_counts(li).select("node", "tri_cnt").write.parquet(
         str(tmp_path / "tris")
     )
-    roundtrip = G.delete_aware_triangles(
-        li,
-        edge_store=spark.read.parquet(str(tmp_path / "edges")),
-        tri_store=spark.read.parquet(str(tmp_path / "tris")),
+    roundtrip = G._tri_erase(
+        spark.read.parquet(str(tmp_path / "edges")),
+        G._grouped_baskets(G._kp(li.filter(G._tri_deleted_flag()))),
+        spark.read.parquet(str(tmp_path / "tris")),
     )
     direct = G.delete_aware_triangles(li)
     key = lambda df: sorted(  # noqa: E731
@@ -321,10 +321,10 @@ def test_upsert_aware_store_roundtrip_weighted(spark, tmp_path):
     G.pairs_triangle_counts(edges.select("pa", "pb")).select(
         "node", "tri_cnt"
     ).write.parquet(str(tmp_path / "tris"))
-    roundtrip = G.upsert_aware_triangles(
-        li,
-        edge_store=spark.read.parquet(str(tmp_path / "edges")),
-        tri_store=spark.read.parquet(str(tmp_path / "tris")),
+    roundtrip = G._tri_revise(
+        spark.read.parquet(str(tmp_path / "edges")),
+        G._grouped_baskets(G._kp(li.filter(G._tri_revised_flag()))),
+        spark.read.parquet(str(tmp_path / "tris")),
     )
     key = lambda df: sorted(  # noqa: E731
         (r.node, r.deg, r.tri_cnt, r.tri_created, r.tri_destroyed)

@@ -247,8 +247,14 @@ def test_session_store_roundtrip(spark):
     stage = staging_dir(prefix="bdm_sess_roundtrip_")
     store_path = f"{stage}/session_store"
     SN.full_sessions_derived(hist).write.parquet(store_path)
-    injected = SN.merge_incremental_sessions(
-        ev, session_store=spark.read.parquet(store_path)
+    rows = ev.select("user_id", tus.alias("tus"), "event_id").crossJoin(
+        F.broadcast(fr)
+    )
+    injected = SN.merge_sessions_step(
+        spark.read.parquet(store_path),
+        rows.filter(F.col("tus") >= F.col("frontier")).select(
+            "user_id", "tus", "event_id"
+        ),
     )
     derived = SN.merge_incremental_sessions(ev)
     assert sorted(map(tuple, injected.collect())) == sorted(
@@ -266,8 +272,8 @@ def test_delete_session_store_roundtrip(spark):
     stage = staging_dir(prefix="bdm_sess_del_roundtrip_")
     store_path = f"{stage}/session_store"
     SN.full_sessions_derived(ev).write.parquet(store_path)
-    injected = SN.delete_aware_sessions(
-        ev, session_store=spark.read.parquet(store_path)
+    injected = SN.delete_sessions_step(
+        spark.read.parquet(store_path), SN._event_rows(ev)
     )
     derived = SN.delete_aware_sessions(ev)
     assert sorted(map(tuple, injected.collect())) == sorted(

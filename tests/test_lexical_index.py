@@ -55,10 +55,13 @@ def test_index_store_roundtrip(spark, tmp_path):
     base = docs.filter(~_incr_delta_flag())
     LX.doc_lengths(base).write.parquet(str(tmp_path / "dl"))
     LX.term_postings(base).write.parquet(str(tmp_path / "tf"))
-    roundtrip = LX.incremental_bm25(
-        docs,
-        dl_store=spark.read.parquet(str(tmp_path / "dl")),
-        tf_store=spark.read.parquet(str(tmp_path / "tf")),
+    roundtrip = LX._bm25_from_stores(
+        *LX.postings_apply(
+            spark.read.parquet(str(tmp_path / "dl")),
+            spark.read.parquet(str(tmp_path / "tf")),
+            None,
+            docs.filter(_incr_delta_flag()),
+        )
     )
     assert _key(roundtrip) == _key(LX.incremental_bm25(docs))
 
@@ -70,10 +73,13 @@ def test_delete_store_roundtrip(spark, tmp_path):
     docs = _docs(spark)
     LX.doc_lengths(docs).write.parquet(str(tmp_path / "dl"))
     LX.term_postings(docs).write.parquet(str(tmp_path / "tf"))
-    roundtrip = LX.delete_aware_bm25(
-        docs,
-        dl_store=spark.read.parquet(str(tmp_path / "dl")),
-        tf_store=spark.read.parquet(str(tmp_path / "tf")),
+    roundtrip = LX._bm25_from_stores(
+        *LX.postings_apply(
+            spark.read.parquet(str(tmp_path / "dl")),
+            spark.read.parquet(str(tmp_path / "tf")),
+            _incr_deleted_flag(),
+            None,
+        )
     )
     assert _key(roundtrip) == _key(LX.delete_aware_bm25(docs))
 
@@ -162,10 +168,13 @@ def test_upsert_rescores_and_tf_identical_but_dl_moves(spark, tmp_path):
     # (c) persisted-store roundtrip
     LX.doc_lengths(docs).write.parquet(str(tmp_path / "dl"))
     LX.term_postings(docs).write.parquet(str(tmp_path / "tf"))
-    roundtrip = LX.upsert_aware_bm25(
-        docs,
-        dl_store=spark.read.parquet(str(tmp_path / "dl")),
-        tf_store=spark.read.parquet(str(tmp_path / "tf")),
+    roundtrip = LX._bm25_from_stores(
+        *LX.postings_apply(
+            spark.read.parquet(str(tmp_path / "dl")),
+            spark.read.parquet(str(tmp_path / "tf")),
+            _incr_updated_flag(),
+            t1.filter(_incr_updated_flag()),
+        )
     )
     assert _key(roundtrip) == _key(out)
     # (d) the dl-only change moved at least one score

@@ -84,13 +84,13 @@ def test_vacuumed_refresh_equals_unvacuumed_and_recompute(spark, tmp_path):
     sig_t0 = DD.minhash_signatures(t0)
     pairs_t0 = DD.lsh_candidate_pairs(sig_t0, THRESH).select("doc_a", "doc_b")
     deleted = DD._incr_deleted_flag()
-    unvac = DD.incremental_lsh_pairs(
-        remaining,
-        THRESH,
-        base_sig=sig_t0.filter(~deleted),
-        carried_pairs=pairs_t0.filter(
+    unvac = DD._lsh_refresh(
+        sig_t0.filter(~deleted),
+        pairs_t0.filter(
             ~DD._incr_deleted_flag("doc_a") & ~DD._incr_deleted_flag("doc_b")
         ),
+        remaining.filter(DD._incr_delta_flag()),
+        THRESH,
     )
     # in-plan recompute over the remaining corpus
     recompute = DD.incremental_lsh_pairs(remaining, THRESH)

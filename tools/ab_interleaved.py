@@ -44,7 +44,11 @@ a streaming query's triggers count too.  Counters are deterministic for
 a fixed plan and fixture up to adaptive execution's runtime choices
 (an A/A run shows which move); ``work_diff`` lists, per query, every
 counter whose median differs between the variants, and ``work_raw``
-holds each rep's counters.
+holds each rep's counters.  ``work_rise`` lists, per query, every
+counter whose smallest value over the new variant's reps is above its
+largest value over the old variant's reps — a rise no rep of the old
+code reaches, which adaptive-execution noise between reps does not
+produce alone.
 
 An A/A run (both roots at the same commit) gives the noise floor.
 """
@@ -206,11 +210,18 @@ def main() -> None:
             if work_med["old"][n][c] != work_med["new"][n][c]}
         for n in args.names
     }
+    work_rise = {
+        n: {c: [max(w[c] for w in work["old"][n]), min(w[c] for w in work["new"][n])]
+            for c in COUNTERS
+            if min(w[c] for w in work["new"][n]) > max(w[c] for w in work["old"][n])}
+        for n in args.names
+    }
     print(json.dumps({
         "roots": variants,
         "medians": out,
         "work": work_med,
         "work_diff": {n: d for n, d in work_diff.items() if d},
+        "work_rise": {n: d for n, d in work_rise.items() if d},
         "raw": res,
         "work_raw": work,
     }))
