@@ -374,13 +374,6 @@ def lsh_candidate_pairs(sig: DataFrame, threshold: float) -> DataFrame:
     ReusedExchange across the branches; round-5 scans audit).  Blocks are
     registered with the checkpoint ledger; the caller frees them via
     ``checkpoints.release_checkpoints()`` after consuming the result."""
-    return _lsh_t0(sig, threshold)[1]
-
-
-def _lsh_t0(sig: DataFrame, threshold: float) -> tuple[DataFrame, DataFrame]:
-    """The one t0 build of the LSH stores: the signature store ``sig``
-    checkpointed once, and its pair store (doc_a, doc_b, sig_match) —
-    the banded self-join of :func:`lsh_candidate_pairs`."""
     sig = local_checkpoint(sig, eager=False)
     bands = signature_bands(sig)
     a, b = bands.alias("a"), bands.alias("b")
@@ -390,7 +383,7 @@ def _lsh_t0(sig: DataFrame, threshold: float) -> tuple[DataFrame, DataFrame]:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    return sig, score_pairs(cand, sig, _sig_match(threshold))
+    return score_pairs(cand, sig, _sig_match(threshold))
 
 
 def minhash_lsh_pairs_sql(threshold: float) -> str:
@@ -470,6 +463,21 @@ def _signed_slices(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     )
 
 
+def _signed(docs: DataFrame) -> DataFrame:
+    """``docs``' MinHash signatures, checkpointed: the pair joins and
+    lookups downstream all read the same blocks."""
+    return local_checkpoint(minhash_signatures(docs), eager=False)
+
+
+def _lsh_t0(sig: DataFrame, threshold: float) -> DataFrame:
+    """The one t0 build of the LSH pair store (doc_a, doc_b, sig_match)
+    from its signature store ``sig``: every row arriving into an empty
+    store — :func:`~.zset.pair_apply` with no store and ``sig`` added."""
+    return pair_apply(
+        sig, None, None, sig, _lsh_keys, _sig_match(threshold)
+    ).drop("src")
+
+
 def incremental_lsh_pairs(docs: DataFrame, threshold: float) -> DataFrame:
     """Incremental near-dup maintenance — the daily-crawl-refresh shape a
     100 TB pipeline hits: an INCOMING batch (deterministic hash slice,
@@ -497,9 +505,13 @@ def incremental_lsh_pairs(docs: DataFrame, threshold: float) -> DataFrame:
     continuous arrival.
     """
     sig, base_sig, batch_sig = _signed_slices(docs)
-    carried = _lsh_t0(base_sig, threshold)[1]
     return pair_apply(
-        sig, carried, None, batch_sig, _lsh_keys, _sig_match(threshold)
+        sig,
+        _lsh_t0(base_sig, threshold),
+        None,
+        batch_sig,
+        _lsh_keys,
+        _sig_match(threshold),
     )
 
 
@@ -509,7 +521,7 @@ def _lsh_refresh(
     """The insert step over persisted LSH stores (q235 q267 q271): sign
     ONLY the arriving ``batch`` docs and :func:`~.zset.pair_apply` them
     against the stores read back — the store is read, never re-signed."""
-    batch_sig = local_checkpoint(minhash_signatures(batch), eager=False)
+    batch_sig = _signed(batch)
     return pair_apply(
         sig_store.unionByName(batch_sig),
         pair_store,
@@ -663,7 +675,7 @@ def incremental_components(docs: DataFrame, threshold: float) -> DataFrame:
     # pairs (round 11, guide §1.2)
     sig, base_sig, batch_sig = _signed_slices(docs)
     base_labels = neardup_components(
-        docs.filter(~delta), _lsh_t0(base_sig, threshold)[1]
+        docs.filter(~delta), _lsh_t0(base_sig, threshold)
     )
     fresh = pair_apply(
         sig, None, None, batch_sig, _lsh_keys, _sig_match(threshold)
@@ -701,9 +713,7 @@ def _revised_sig(sig0: DataFrame, docs: DataFrame) -> tuple[DataFrame, DataFrame
     revision: the t0 signature store minus the revised docs, plus their
     re-signed t1 text — only the revised slice is signed again."""
     changed = _incr_updated_flag()
-    revised = local_checkpoint(
-        minhash_signatures(_revised(docs.filter(changed))), eager=False
-    )
+    revised = _signed(_revised(docs.filter(changed)))
     return sig0.filter(~changed).unionByName(revised), revised
 
 
@@ -728,17 +738,17 @@ def upsert_aware_lsh_pairs(docs: DataFrame, threshold: float) -> DataFrame:
     Output: (doc_a, doc_b, sig_match, src) with src ∈
     {'carried','refreshed'}.
 
-    Scale: every doc is signed once — the t0 stores (:func:`_lsh_t0`)
-    sign the t0 corpus, the t1 signature table reuses them and signs
-    only the changed slice (:func:`_revised_sig`); the stale-pair drop
+    Scale: every doc is signed once — the t0 signature store signs the
+    t0 corpus, the t1 signature table reuses it and signs only the
+    changed slice (:func:`_revised_sig`); the stale-pair drop
     is two hash-slice anti-filters on the pair store; the only fresh
     band join is |changed|-sided.
     """
-    sig0, pairs0 = _lsh_t0(minhash_signatures(docs), threshold)
+    sig0 = _signed(docs)
     sig1, revised = _revised_sig(sig0, docs)
     return pair_apply(
         sig1,
-        pairs0,
+        _lsh_t0(sig0, threshold),
         _incr_updated_flag,
         revised,
         _lsh_keys,
@@ -783,10 +793,12 @@ def upsert_aware_lsh_pairs_sql(threshold: float) -> str:
 
 def _t0_components(docs: DataFrame, threshold: float):
     """The t0 stores of q229/q232, checkpointed: (signatures, labels
-    (doc_id, component), bare (doc_a, doc_b) pairs), all from one
-    :func:`_lsh_t0` signing pass over ``docs``."""
-    sig, pairs = _lsh_t0(minhash_signatures(docs), threshold)
-    pairs = local_checkpoint(pairs.select("doc_a", "doc_b"), eager=False)
+    (doc_id, component), bare (doc_a, doc_b) pairs :func:`_lsh_t0`),
+    all from one signing pass over ``docs``."""
+    sig = _signed(docs)
+    pairs = local_checkpoint(
+        _lsh_t0(sig, threshold).select("doc_a", "doc_b"), eager=False
+    )
     labels = neardup_components(docs, pairs).select("doc_id", "component")
     return sig, local_checkpoint(labels, eager=False), pairs
 
@@ -1437,10 +1449,9 @@ def _publish_t0_stores(
     loop leaves, 1 a compacted store).  Returns the stores' schemas."""
     from ..sources.publish import publish_version
 
-    sig_t0, pairs_t0 = _lsh_t0(
-        minhash_signatures(docs.filter(~_incr_delta_flag())), threshold
-    )
-    stores = {"sig_store": sig_t0, "pair_store": pairs_t0.select("doc_a", "doc_b")}
+    sig_t0 = _signed(docs.filter(~_incr_delta_flag()))
+    pairs_t0 = _lsh_t0(sig_t0, threshold).select("doc_a", "doc_b")
+    stores = {"sig_store": sig_t0, "pair_store": pairs_t0}
     publish_version(
         root,
         1,
@@ -1606,10 +1617,7 @@ def gc_published_refresh(
     # sign the arrival batch ONCE (round 11, guide §1.2): the same
     # checkpointed signature table feeds the refresh and the v3
     # signature-store publish
-    sig_batch = local_checkpoint(
-        minhash_signatures(remaining.filter(_incr_delta_flag())),
-        eager=False,
-    )
+    sig_batch = _signed(remaining.filter(_incr_delta_flag()))
     sig_v3 = read_version(
         spark, root, "sig_store", 2, schema["sig_store"]
     ).unionByName(sig_batch)

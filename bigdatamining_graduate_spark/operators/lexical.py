@@ -302,7 +302,7 @@ def upsert_aware_bm25(docs: DataFrame) -> DataFrame:
     hash-slice anti-filter per store.  The postings are row-local, so
     the t0 build reads only the unchanged docs — the rows the step keeps
     — and the changed docs are tokenized once, in their t1 text."""
-    from .dedup import _revised, _incr_updated_flag
+    from .dedup import _incr_updated_flag, _revised
 
     changed = _incr_updated_flag()
     dl, tf = postings_apply(

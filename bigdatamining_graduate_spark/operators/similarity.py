@@ -581,6 +581,10 @@ def hard_negatives_sql(query_pred_sql: str, k: int = 3) -> str:
 # * cell assignment = argmin over seeds of the integer code-space L2,
 #   tie-broken toward the smaller cell id.
 #
+# Every maintained cell (insert q233, delete q236, upsert q237, vacuum
+# q239, retrain q249) is one step, :func:`ivf_apply`, over a t0 index
+# from one build, :func:`_ivf_t0`.
+#
 # Reference anchor: ``hw3/hw3.py:125-172`` (the pipeline whose LSH half
 # q227 scales); extension — the reference has no vector index at all.
 
