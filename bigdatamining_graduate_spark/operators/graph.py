@@ -1136,7 +1136,9 @@ def delete_aware_triangles(lineitem: DataFrame) -> DataFrame:
     return _tri_erase(*_t0_graph(lineitem, _tri_deleted_flag))
 
 
-def _tri_erase(store: DataFrame, erased: DataFrame, carried: DataFrame) -> DataFrame:
+def _tri_erase(
+    store: DataFrame, erased: DataFrame, carried: DataFrame
+) -> DataFrame:
     """The delete step of the graph stores (q247): the ``erased``
     orders' (k, ps) baskets net out of the weighted ``store``
     (:func:`_erase_orders`).  Output: (node, deg, tri_cnt,
@@ -1251,7 +1253,9 @@ def upsert_aware_triangles(lineitem: DataFrame) -> DataFrame:
     return _tri_revise(*_t0_graph(lineitem, _tri_revised_flag))
 
 
-def _tri_revise(store: DataFrame, rev_bk: DataFrame, carried: DataFrame) -> DataFrame:
+def _tri_revise(
+    store: DataFrame, rev_bk: DataFrame, carried: DataFrame
+) -> DataFrame:
     """The upsert step of the graph stores (q270): the revised orders'
     t0 (k, ps) baskets ``rev_bk`` and their t1 remap net their support
     change into the weighted ``store``; the destroyed and created
@@ -1455,9 +1459,8 @@ def vacuumed_triangle_refresh(
     # the NEXT arrival refresh, off the vacuumed stores
     return _tri_insert(
         local_checkpoint(
-            read_current(spark, root, "edge_store", updated_edges.schema).select(
-                "pa", "pb"
-            ),
+            read_current(spark, root, "edge_store", updated_edges.schema)
+            .select("pa", "pb"),
             eager=False,
         ),
         read_current(spark, root, "tri_store", updated_tri.schema),

@@ -543,9 +543,10 @@ def incremental_phash_pairs(with_payload: DataFrame) -> DataFrame:
     incremental cell, VERDICT r9 next-round #6): the 20% arrival batch
     (salt "ilsh" — the same crawl event that refreshes the LSH,
     component, and inverted-index stores) lands against the t0
-    signature store (doc_id, c0..c3) and pair store (:func:`_phash_t0`).  ONLY the batch's
-    payloads run the Arrow-batched fingerprint kernel; base signatures
-    and the t0 pair set are read from the stores verbatim.  Fresh
+    signature store (doc_id, c0..c3) and pair store
+    (:func:`_phash_t0`).  ONLY the batch's payloads run the
+    Arrow-batched fingerprint kernel; base signatures and the t0 pair
+    set are read from the stores verbatim.  Fresh
     candidates are the batch signatures chunk-equi-joined against store
     ∪ batch (canonicalized least/greatest), scored by the exact chunk
     hamming — the only new pairs possible are those touching ≥ 1 batch
@@ -761,9 +762,9 @@ def upsert_aware_phash_pairs(docs: DataFrame) -> DataFrame:
     Scale: every payload is fingerprinted once — the t0 stores
     (:func:`_phash_t0`) fingerprint the t0 corpus, the t1 signature
     table reuses them and re-fingerprints only the changed slice
-    (O(|changed| payload bytes)); the stale
-    drop is two hash-slice anti-filters; the fresh join is
-    |changed|-sided against 16-bit bucket keys.  Reference anchor:
+    (O(|changed| payload bytes)); the stale drop is two hash-slice
+    anti-filters; the fresh join is |changed|-sided against 16-bit
+    bucket keys.  Reference anchor:
     extension of q143 (``hw3/hw3.py:125-172`` refresh discipline)."""
     return _phash_revise(*_phash_t0(with_binary_payload(docs)), docs)
 

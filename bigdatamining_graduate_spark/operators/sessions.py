@@ -36,8 +36,9 @@ Scale: one shuffle on user_id serves the history sessionization (at
 the driver-contract stand-in); the merge pass shuffles only seed +
 batch rows.  Each cell is one step over its t0 session view:
 :func:`merge_sessions_step` (insert, q282/q284) and
-:func:`delete_sessions_step` (q283).  Reference parity: extension; the reference has no
-sessionization (``hw2``'s time rollups are fixed calendar buckets).
+:func:`delete_sessions_step` (q283).  Reference parity: extension;
+the reference has no sessionization (``hw2``'s time rollups are fixed
+calendar buckets).
 
 OPTIMIZER HAZARD (why the in-plan store uses the derived island pass,
 not the native API): composing a ``groupBy(session_window(...), ...)``

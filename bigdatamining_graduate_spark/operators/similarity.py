@@ -1196,17 +1196,10 @@ def delete_aware_ivf_assign(embeddings: DataFrame) -> DataFrame:
     Scale: one anti-filter over the postings table; zero vector math,
     zero shuffles beyond the cell_n window (n_cells-bounded per
     partition)."""
-    return _with_cell_n(
-        ivf_apply(
-            None, None, incremental_ivf_assign(embeddings), _ivf_deleted_flag(), None
-        )
+    survivors = ivf_apply(
+        None, None, incremental_ivf_assign(embeddings), _ivf_deleted_flag(), None
     )
-
-
-def _with_cell_n(assign: DataFrame) -> DataFrame:
-    """``assign`` with each cell's occupancy ``cell_n`` — the
-    postings-list size the search planner reads (q236)."""
-    return assign.select(
+    return survivors.select(
         "vec_id",
         "cell",
         "d2",
